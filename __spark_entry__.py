@@ -39,8 +39,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # canonical contract order — the driver verifies a bounded prefix per
-    # round, so committed SURVEY §2 keys come first (registry.py policy)
+    # contract order — the driver verifies a bounded prefix per round, so
+    # the order is derived from its committed results (registry.py)
     return {k: spec.builder for k, spec in ordered_registry().items()}
 
 

@@ -2596,8 +2596,15 @@ def q_ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # per-task dense-intermediate budget of the exact-pairs kernel: the
-# batch x block dot matrix is capped at this many bytes (r20 #4)
+# batch x block dot matrix is capped at this many bytes
 _PAIRS_BLOCK_BYTES = 64 * 1024 * 1024
+
+
+def _pairs_block_rows(batch_rows: int) -> int:
+    """Build-side rows per dot block, so that the float64
+    ``batch_rows x block`` matrix fits ``_PAIRS_BLOCK_BYTES`` (at least
+    one row, for batches past 8M rows)."""
+    return max(1, _PAIRS_BLOCK_BYTES // (8 * batch_rows))
 
 
 def _exact_pairs_kernel(sf_dir: str, tau: float):
@@ -2677,7 +2684,7 @@ def _exact_pairs_kernel(sf_dir: str, tau: float):
             for d in range(dims):  # left-to-right fold
                 xacc += X[:, d] * X[:, d]
             xn = np.sqrt(xacc)
-            blk = max(1024, _PAIRS_BLOCK_BYTES // (8 * len(ids)))
+            blk = _pairs_block_rows(len(ids))
             parts = []
             for b0 in range(0, n_all, blk):
                 b1 = min(b0 + blk, n_all)

@@ -15,6 +15,9 @@ Hash-match hygiene (SURVEY.md §7.5) enforced by convention here:
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -32,421 +35,44 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# ---------------------------------------------------------------------------
-# Canonical contract order. The external driver verifies registry keys in
-# iteration order with a bounded per-round window (50 keys/round), so
-# iteration order is part of the contract, not an accident of module
-# import order.
-#
-# Rotation policy (round-agnostic, enforced by
-# tests/test_registry_contract.py::test_window_policy): the window is
-# chosen from driver results of rounds STRICTLY OLDER than WINDOW_ROUND —
-# (1) every key that failed its most recent driver check comes first,
-# (2) then keys never driver-checked, (3) driver-green keys last. Results
-# from WINDOW_ROUND itself (or newer) are input for the NEXT rotation,
-# not this one — that keeps the policy test stable when the driver drops
-# a fresh CORRECTNESS file mid-round.
-#
-# Rotation arithmetic (VERDICT r10 "What's wrong" #2): the window is
-# 50 slots and recent rounds add ~14 new keys each, so a stale block
-# larger than ~36 keys cannot be fully retired in one round — expect a
-# small remainder to carry one extra round (r10 left 10 r05 keys for
-# r11). That is the policy working, not a rotation bug.
-#
-# Round-17 rotation (VERDICT r16 "Next round" #1): at rotation time
-# all 343 keys had a driver row, all green at latest check — no
-# failures, none never-checked. The order is green keys
-# stalest-proof-first: new round-17 keys are inserted at the very top
-# as they land (unchecked keys outrank stale-green ones), then the 43
-# keys whose latest evidence is r10 (the oldest block), then the
-# oldest r11 keys fill the remaining window slots; the remainder
-# follows in latest-check order (r11, r12, r13, r14, r15, r16).
-# Window arithmetic: 43 + 7 = 50, so this round caps NEW keys at 7 —
-# any more would push r10-stale keys out of the window and leave
-# evidence older than r11, violating the r16 prescription.
-# ---------------------------------------------------------------------------
-
-# The round whose driver window this ordering was built for. The policy
-# test derives green/failed sets only from CORRECTNESS_r0N.json with
-# N < WINDOW_ROUND; bump this whenever CANONICAL_ORDER is re-rotated.
-WINDOW_ROUND = 18
-
-CANONICAL_ORDER: list[str] = [
-    # -- round-18 additions (never driver-checked) enter the window
-    #    first --
-    "q_sim_ivfpq_production_recall",
-    "q_multimodal_audio_vorbis",
-    "q_multimodal_png16",
-    # -- last driver check: r11 --
-    "q_stream_dedup_incremental",
-    "q_sim_binary_hamming_multiword",
-    "src_netcdf4_regionref_v3_scan",
-    "q_stream_topk_windowed",
-    "q_time_downsample_m4",
-    "q_text_perplexity_filter",
-    "snk_netcdf4_write_regionref",
-    "src_netcdf4_bigendian_scan",
-    "q_sample_dedup_aware",
-    "q_dedup_prefix_truncation",
-    "q_stream_dim_join",
-    "q_stream_join_outer",
-    "q_agg_bitmap_distinct",
-    "q_agg_bitmap_jaccard",
-    "q_agg_cms_portable",
-    "q_agg_hll_portable",
-    "q_agg_mode",
-    "q_agg_string_agg",
-    "q_basket_pairs",
-    "q_fn_bitwise",
-    "src_netcdf_uint64_scan",
-    "src_netcdf3_cf_cal_scan",
-    "q_emb_matryoshka",
-    "q_emb_centroids",
-    "src_netcdf4_multifile_scan",
-    "src_netcdf3_dir_tail",
-    "q_fn_datetime_advanced",
-    "q_funnel_attribution_decay",
-    "q_geo_grid_knn",
-    "q_graph_label_prop",
-    "q_join_asof_nearest",
-    "q_ml_decision_stump",
-    "q_ols_by_group",
-    "q_privacy_k_anonymity",
-    "q_time_anomaly_spc",
-    "q_win_ewma_dyadic",
-    "q_win_longest_streak",
-    "q_win_rolling_median",
-    "q_win_running_distinct",
-    "q_win_sliding_distinct",
-    "src_netcdf_char_scan",
-    "q_join_cross",
-    "q_sort_multikey_nulls",
-    "q_topk_global",
-    "q_union_all",
-    "q_union_distinct",
-    "q_intersect",
-    "q_except",
-    "q_fn_string",
-    "q_fn_date",
-    # -- last driver check: r12 --
-    "q_text_perplexity_crosstrain",
-    "src_netcdf4_szip_scan",
-    "src_netcdf4_compound_string_scan",
-    "q_dedup_prefix_segmented",
-    "snk_netcdf4_write_szip",
-    "q_text_classifier_score",
-    "q_stream_quality_gate",
-    "src_netcdf4_points_v2_scan",
-    "q_sim_mips_topk",
-    "q_multimodal_patchify",
-    "q_join_asof_tolerance",
-    "q_pipeline_curation",
-    "q_sample_token_budget",
-    "src_hdf5_foreign_scan",
-    "q_dedup_cross_corpus",
-    "q_join_asof_forward",
-    "q_join_lateral_topn",
-    "src_netcdf4_enum_scan",
-    "src_netcdf4_opaque_scan",
-    "src_netcdf_packed_scan",
-    "q_text_ngram_novelty",
-    "snk_netcdf4_write_enum_opaque",
-    "q_agg_weighted_percentile",
-    "q_validate_referential",
-    "q_multimodal_audio_resample",
-    "q_report_waiting_orders",
-    "q_sample_shard_rendezvous",
-    "q_ml_naive_bayes",
-    "q_fn_xml",
-    "src_netcdf_describe",
-    "snk_netcdf4_write_dir",
-    "q_win_drawdown",
-    "q_report_idle_rich_customers",
-    "q_stream_distinct_bitmap",
-    "q_text_entropy",
-    "q_dedup_minhash_calibration",
-    "q_fn_math",
-    "q_fn_cond",
-    "q_fn_array",
-    "q_fn_map",
-    "q_fn_json",
-    "q_multimodal_bundle",
-    "q_pivot_lang_source",
-    "q_agg_percentiles",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_embed_cosine",
-    "q_dedup_cc_clusters",
-    "q_join_range_bucketed",
-    "q_sim_knn_blocked",
-    "q_fn_variant",
-    # -- last driver check: r13 --
-    "q_dedup_substring_spans",
-    "q_text_pii_scrub",
-    "q_stream_pipeline_curation",
-    "src_netcdf4_compound_ref_scan",
-    "q_dedup_substring_maximal",
-    "src_netcdf4_compound_regref_scan",
-    "q_dedup_substring_cross_corpus",
-    "q_dedup_substring_fingerprint",
-    "q_multimodal_features",
-    "src_parquet_scan",
-    "src_netcdf_chunked_scan",
-    "src_netcdf_stream_tail",
-    "snk_chunked_write",
-    "q_filter_hyperslab",
-    "src_netcdf_string_scan",
-    "q_win_rank_topk_group",
-    "q_win_running_sum",
-    "q_win_sliding_frame",
-    "q_win_range_frame",
-    "q_win_lead_lag",
-    "q_win_ntile_pct",
-    "q_win_first_last",
-    "q_udf_row",
-    "q_udf_pandas",
-    "q_udaf_pandas",
-    "q_udtf_split",
-    "q_map_in_arrow",
-    "q_text_stats",
-    "q_text_tfidf_top",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_stream_dedup",
-    "q_stream_watermark_late",
-    "q_stream_stateful_custom",
-    "q_agg_approx_distinct",
-    "q_dedup_near_minhash",
-    "q_dedup_simhash",
-    "q_sim_lsh_ann",
-    "q_project_rename_cast",
-    "q_filter_predicates",
-    "q_join_inner_hash",
-    "q_join_left_outer",
-    "q_join_full_outer",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_broadcast_star",
-    "q_join_theta_range",
-    "q_join_asof",
-    "q_agg_groupby_sum",
-    # -- last driver check: r14 --
-    "q_dedup_substring_rewrite",
-    "q_dedup_substring_winnow",
-    "q_pipeline_curation_full",
-    "q_stream_pipeline_curation_full",
-    "q_dedup_substring_rewrite_anchored",
-    "q_dedup_substring_decontam_rewrite",
-    "q_agg_having",
-    "q_agg_distinct",
-    "q_agg_rollup",
-    "q_agg_cube",
-    "q_agg_grouping_sets",
-    "q_agg_stats",
-    "q_agg_collect",
-    "q_dedup_exact",
-    "q_sim_knn_cosine",
-    "q_sim_threshold_pairs",
-    "q_sim_threshold_lsh",
-    "q_dedup_cc_lsh",
-    "q_dedup_semantic",
-    "q_text_langid",
-    "src_netcdf3_arrow_tail",
-    "src_netcdf4_arrow_tail",
-    "snk_netcdf4_write_deflate",
-    "src_netcdf_vlen_scan",
-    "src_netcdf3_arrow_dir_tail",
-    "src_netcdf_arrow_tail",
-    "q_agg_sum_wide",
-    "q_text_quality",
-    "q_text_tokens",
-    "q_text_fingerprint",
-    "q_text_contamination",
-    "q_text_unigram_logprob",
-    "q_text_repetition",
-    "q_text_pii_redact",
-    "q_multimodal_image_decode",
-    "q_sample_hash_split",
-    "q_sample_stratified",
-    "snk_parquet_partitioned",
-    "snk_partition_overwrite",
-    "snk_compact_small_files",
-    "snk_clustered_sort",
-    "src_netcdf3_scan",
-    "q_agg_histogram_equidepth_approx",
-    "q_graph_jaccard_neighbors",
-    "q_hierarchy_flatten",
-    "q_agg_histogram_equidepth",
-    "q_sim_ivf_ann",
-    "q_sim_pq_codes",
-    "q_ml_knn_classify",
-    "q_sample_per_group",
-    # -- last driver check: r15 --
-    "q_sample_budget_decontam",
-    "q_stream_pipeline_curation_rewrite",
-    "q_dedup_substring_decontam_anchored",
-    "src_orc_ingest",
-    "q_pipeline_curation_surgical",
-    "q_dedup_substring_rewrite_bucketed",
-    "q_multimodal_qoi_decode",
-    "q_multimodal_gif_frames",
-    "q_multimodal_audio_g711",
-    "q_chunk_context_windows",
-    "q_text_vocab_pairs",
-    "q_text_collocation_lift",
-    "q_pack_sequences",
-    "q_pipeline_pretrain",
-    "q_text_boilerplate",
-    "q_multimodal_resize",
-    "q_multimodal_frame_sample",
-    "snk_zorder",
-    "src_jsonl_ingest",
-    "src_csv_ingest",
-    "q_join_bucketed",
-    "q_ml_kmeans",
-    "q_dedup_ngram_spans",
-    "q_dedup_keep_best",
-    "q_sample_weighted",
-    "q_sample_mixture",
-    "q_sample_topk_hash",
-    "q_text_sentence_split",
-    "q_text_inverted_index",
-    "snk_netcdf4_write_vlen",
-    "q_sim_pq_adc",
-    "q_emb_pca_project",
-    "q_text_bpe_apply",
-    "q_emb_pca_power",
-    "q_text_bpe_merges",
-    "src_netcdf4_dense_wide_scan",
-    "src_netcdf4_dir_tail",
-    "src_netcdf4_arrow_dir_tail",
-    "src_netcdf_compound_scan",
-    "snk_netcdf4_write_compound",
-    "src_netcdf_vlen_compound_scan",
-    "q_stream_dedup_minhash",
-    "q_agg_heavy_hitters_sketch",
-    "q_agg_heavy_hitters",
-    "q_agg_histogram",
-    "q_hierarchy_rollup",
-    "q_multimodal_audio_decode",
-    "q_multimodal_png_decode",
-    "q_report_volume_shipping",
-    "q_report_promo_share",
-    # -- last driver check: r16 --
-    "q_multimodal_jpeg_decode",
-    "q_sim_ivfpq_recall",
-    "q_stream_dedup_substring_anchored",
-    "q_sim_pq_train_codebook",
-    "q_sim_pq_trained_recall",
-    "q_multimodal_jpeg_progressive",
-    "q_sim_ivf_nprobe_sweep",
-    "q_multimodal_decode_dispatch",
-    "q_multimodal_audio_flac",
-    "q_multimodal_tiff_decode",
-    "q_multimodal_video_mjpeg",
-    "q_stream_dedup_substring_ttl",
-    "q_multimodal_audio_dispatch",
-    "q_multimodal_phash_cross_container",
-    "q_report_nation_profit",
-    "q_geo_heatmap_grid",
-    "q_funnel_conversion",
-    "q_time_resample_ffill",
-    "q_outlier_mad",
-    "q_unpivot_melt",
-    "q_sessionize_gap",
-    "q_validate_constraints",
-    "q_table_diff",
-    "q_agg_incremental_merge",
-    "q_report_top_returns",
-    "q_report_market_share",
-    "q_join_point_in_time",
-    "q_rollup_time_hierarchy",
-    "q_join_bloom_pruned",
-    "q_cdc_apply",
-    "q_graph_bfs_reach",
-    "q_ab_experiment",
-    "q_agg_filtered",
-    "q_drift_report",
-    "q_event_transitions",
-    "q_funnel_attribution",
-    "q_interval_merge",
-    "q_join_interval_overlap",
-    "q_join_salted_skew",
-    "src_netcdf4_scan",
-    "snk_netcdf4_write",
-    "src_netcdf4_stream_tail",
-    "src_netcdf3_cdf5_scan",
-    "src_netcdf3_cf_scan",
-    "q_dedup_containment",
-    "q_dedup_image_phash",
-    "q_emb_int8_quantize",
-    "q_text_bigram_logprob",
-    "q_dedup_lines",
-    "q_curriculum_order",
-    # -- last driver check: r17 --
-    "q_sim_ivfpq_trained_recall",
-    "q_dedup_semantic_trained",
-    "q_multimodal_tiff_g4",
-    "q_multimodal_audio_adpcm",
-    "q_multimodal_tiff_tiled",
-    "q_multimodal_scanned_archive",
-    "q_sim_ivf_train_coarse",
-    "q_multimodal_audio_vad",
-    "q_sample_temperature",
-    "snk_netcdf3_write",
-    "src_netcdf3_stream_tail",
-    "src_netcdf3_multifile_scan",
-    "q_dedup_url_canonical",
-    "q_rfm_segments",
-    "q_union_schema_evolution",
-    "q_win_gap_interpolate",
-    "q_agg_hll_setops",
-    "q_subquery_scalar",
-    "q_subquery_scalar_corr",
-    "q_subquery_exists",
-    "q_subquery_in",
-    "q_stream_join",
-    "q_join_skew_salted",
-    "q_agg_median_mode",
-    "q_stream_upsert",
-    "q_merge_scd1",
-    "q_fn_url",
-    "q_agg_sketches",
-    "q_merge_scd2",
-    "q_graph_pagerank",
-    "q_retention_cohort",
-    "q_profile_columns",
-    "q_graph_triangles",
-    "q_join_fuzzy_levenshtein",
-    "q_win_pattern_burst",
-    "q_agg_corr_matrix",
-    "src_netcdf4_regionref_scan",
-    "q_stream_dedup_minhash_ttl",
-    "q_sim_ivfpq_adc",
-    "src_netcdf4_fletcher_scan",
-    "src_netcdf3_union_schema_scan",
-    "src_netcdf4_union_schema_scan",
-    "src_netcdf3_union_dir_tail",
-    "src_netcdf4_union_dir_tail",
-    "q_text_hashed_ngram_features",
-    "q_sim_binary_hamming",
-    "src_netcdf4_cf_scan",
-    "q_dedup_minhash_incremental",
-    "src_netcdf4_userblock_scan",
-    "src_netcdf4_fill_scan",
-]
+# Repository root: the driver's per-round results live next to the package
+# as CORRECTNESS_r<N>.json ({key: {"hash_match": bool, ...}}).
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_CORRECTNESS = re.compile(r"CORRECTNESS_r(\d+)\.json$")
 
 
-def ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY in canonical contract order (unlisted keys append last)."""
-    out: dict[str, QuerySpec] = {}
-    for k in CANONICAL_ORDER:
-        if k in REGISTRY:
-            out[k] = REGISTRY[k]
-    for k, spec in REGISTRY.items():
-        if k not in out:
-            out[k] = spec
+def latest_checks(repo: str = _REPO) -> dict[str, tuple[int, bool]]:
+    """{key: (round, green)} of each key's most recent driver check."""
+    rounds = sorted(
+        (int(m.group(1)), f)
+        for f in os.listdir(repo)
+        if (m := _CORRECTNESS.match(f))
+    )
+    out: dict[str, tuple[int, bool]] = {}
+    for rnd, f in rounds:
+        with open(os.path.join(repo, f)) as fh:
+            for k, v in json.load(fh).items():
+                out[k] = (rnd, v.get("hash_match") is True)
     return out
+
+
+def ordered_registry(repo: str = _REPO) -> dict[str, QuerySpec]:
+    """REGISTRY in contract order. The external driver verifies keys in
+    iteration order within a bounded per-round window, so the order is
+    derived from its committed results: keys that failed their latest
+    check first, then keys never checked, then green keys with the
+    stalest check first; registration order breaks ties. Without
+    results the order is registration order."""
+    checks = latest_checks(repo)
+
+    def rank(key: str) -> tuple[int, int]:
+        if key not in checks:
+            return 1, 0
+        rnd, green = checks[key]
+        return (2, rnd) if green else (0, 0)
+
+    # sorted() is stable: registration order breaks ties
+    return {k: REGISTRY[k] for k in sorted(REGISTRY, key=rank)}
 
 
 def register(key: str, oracle: str | None = None, doc: str = ""):

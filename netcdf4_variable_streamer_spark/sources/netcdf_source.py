@@ -13,8 +13,9 @@ DataSource API:
   blocks of `chunk_lines` and emits chunk files; `commit` assigns global
   line offsets and publishes them into the meta sidecar atomically
   (task files are invisible until job commit).
-- A14 append/tail      → ``simpleStreamReader``: offset = current extent
-  of the UNLIMITED dim; each microbatch reads [start, extent).
+- A14 append/tail      → ``streamReader``: offset = current extent of
+  the UNLIMITED dim; each microbatch's chunks are read as Arrow batches
+  masked to [start, extent).
 
 100 TB posture: partitions() is O(#chunks) metadata work on the driver;
 data reads are per-chunk Arrow batches on executors; pruned chunks are
@@ -44,7 +45,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -328,41 +328,6 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
                     pass
 
 
-class NetCDFChunkStreamReader(SimpleDataSourceStreamReader):
-    """Tail-follow a growing store (reference A14): the offset is the
-    current extent of the UNLIMITED dim."""
-
-    def __init__(self, path: str, schema: StructType):
-        self.path = path
-        self.columns = [f.name for f in schema.fields]
-
-    def initialOffset(self) -> dict:
-        return {"line": 0}
-
-    def _rows_between(self, lo: int, hi: int):
-        # materialized (not a generator): the runner pickles the prefetched
-        # rows for microbatch replay
-        out = []
-        store = ChunkStore.open(self.path)
-        for c in store.list_chunks():
-            if c.start + c.n_lines <= lo or c.start >= hi:
-                continue
-            tbl = store.read_chunk(c, columns=self.columns)
-            idx = tbl.column(f"{store.streamed_dim}_idx").to_numpy()
-            mask = (idx >= lo) & (idx < hi)
-            for row in tbl.filter(pa.array(mask)).to_pylist():
-                out.append(tuple(row[c_] for c_ in self.columns))
-        return out
-
-    def read(self, start: dict):
-        store = ChunkStore.open(self.path)
-        end = {"line": store.extent}
-        return self._rows_between(start["line"], end["line"]), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return self._rows_between(start["line"], end["line"])
-
-
 @dataclass
 class ChunkTailPartition(InputPartition):
     """One Arrow-tail task: a bundled run of chunk files plus the
@@ -376,11 +341,8 @@ class ChunkTailPartition(InputPartition):
 
 
 class NetCDFChunkArrowStreamReader(DataSourceStreamReader):
-    """Partition-planned Arrow tail of a growing chunk store —
-    ``option("tail_reader", "arrow")``, completing the Arrow-tail
-    family across all stream sources (netcdf3/netcdf4 files and
-    directories, and the chunk store). Offset = UNLIMITED-dim extent
-    exactly like the Simple reader; each microbatch's surviving chunks
+    """Partition-planned Arrow tail of a growing chunk store. Offset =
+    UNLIMITED-dim extent; each microbatch's surviving chunks
     bundle into ~equal-line tasks (the batch scan's one-wave policy)
     that executors read as Arrow RecordBatches, masked to the offset
     window. Driver work per trigger is the chunk LISTING — metadata,
@@ -474,27 +436,10 @@ class NetCDFChunkDataSource(DataSource):
         return NetCDFChunkWriter(self.options["path"], schema, overwrite)
 
     def streamReader(self, schema: StructType):
-        # the partition-planned Arrow tail is the DEFAULT (round 9:
-        # measured ~constant drain latency at any tail delta while the
-        # Simple reader is linear-in-rows — crossover ~1e5 rows per
-        # trigger, and below it the difference is trigger-overhead
-        # noise); tail_reader=simple opts back into the Simple reader
-        # via PySparkNotImplementedError -> simpleStreamReader (the
-        # documented pyspark dispatch in datasource_internal)
-        if str(self.options.get("tail_reader", "arrow")).lower() == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         tp = self.options.get("tail_partitions")
         return NetCDFChunkArrowStreamReader(
             self.options["path"], schema, int(tp) if tp else None
         )
-
-    def simpleStreamReader(self, schema: StructType):
-        return NetCDFChunkStreamReader(self.options["path"], schema)
 
 
 def register(spark) -> None:

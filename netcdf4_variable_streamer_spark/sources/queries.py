@@ -220,42 +220,6 @@ def snk_chunked_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "src_netcdf_stream_tail",
-    oracle=f"""
-WITH {_GRID_CTE.format(T=GRID_T)}
-SELECT t AS time_idx,
-       COUNT(*) AS n_cells,
-       {SQL_DSUM('temperature')} AS sum_temp
-FROM g GROUP BY t
-""",
-    doc="Tail-follow of the growing streamed dim (reference A14) as a "
-        "Structured Streaming source: offset = UNLIMITED-dim extent; "
-        "availableNow run drains the current extent into a memory sink. "
-        "Oracle: per-line closed-form aggregates of the full extent.",
-)
-def src_netcdf_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.streaming.queries import (
-        run_to_completion,
-    )
-
-    path = ensure_grid()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDFChunkDataSource)
-    stream = (
-        spark.readStream.format(FORMAT_NAME)
-        .option("path", path)
-        .option("tail_reader", "simple")  # this key PROVES the Simple
-        # reader (arrow is the default since round 9)
-        .load()
-    )
-    agg = stream.groupBy("time_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        dsum(F.col("temperature").cast("double")).alias("sum_temp"),
-    )
-    return run_to_completion(agg, output_mode="complete")
-
-
-@register(
     "src_netcdf_arrow_tail",
     oracle=f"""
 WITH {_GRID_CTE.format(T=GRID_T)}
@@ -264,14 +228,13 @@ SELECT t AS time_idx,
        {SQL_DSUM('temperature')} AS sum_temp
 FROM g GROUP BY t
 """,
-    doc="Partition-planned Arrow tail of the growing CHUNK STORE "
-        "(round 8, completing the Arrow-tail family across all four "
-        "stream sources): tail_reader=arrow keeps the Simple reader's "
-        "extent offset but bundles each microbatch's surviving chunks "
-        "into ~equal-line executor tasks (the batch scan's one-wave "
-        "policy) read as Arrow RecordBatches masked to the offset "
-        "window. Same fixture, same oracle as src_netcdf_stream_tail "
-        "— the parity this key proves.",
+    doc="Tail-follow of the growing CHUNK STORE (reference A14) as a "
+        "Structured Streaming source: the offset is the UNLIMITED-dim "
+        "extent; each microbatch's surviving chunks bundle into "
+        "~equal-line executor tasks (the batch scan's one-wave policy) "
+        "read as Arrow RecordBatches masked to the offset window. "
+        "availableNow drains the current extent into a memory sink. "
+        "Oracle: per-line closed-form aggregates of the full extent.",
 )
 def src_netcdf_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from netcdf4_variable_streamer_spark.streaming.queries import (
@@ -284,7 +247,6 @@ def src_netcdf_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format(FORMAT_NAME)
         .option("path", path)
-        .option("tail_reader", "arrow")
         .load()
     )
     agg = stream.groupBy("time_idx").agg(
@@ -441,7 +403,7 @@ def src_netcdf3_multifile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "src_netcdf3_stream_tail",
+    "src_netcdf3_arrow_tail",
     oracle=f"""
 WITH {_GRID_CTE.format(T=64)}
 SELECT t AS time_idx,
@@ -453,62 +415,12 @@ FROM g GROUP BY t
         "classic format): the stream offset is the header's numrecs "
         "field — append_records pwrites the record bytes FIRST and "
         "patches numrecs LAST, so a concurrent tail never reads a "
-        "half-published record; each microbatch reads exactly the "
-        "records [prev_numrecs, numrecs) by closed-form byte offsets. "
+        "half-published record. Each microbatch's [prev_numrecs, "
+        "numrecs) range splits into contiguous runs that executors "
+        "read as Arrow RecordBatches through the batch scan's column "
+        "builder (driver work per trigger: one KB-sized header read). "
         "availableNow drains a 64-record grid file into per-line "
-        "aggregates; the oracle regenerates them in SQL. Together with "
-        "src_netcdf3_scan and snk_netcdf3_write this completes the "
-        "real-.nc surface: batch scan, distributed write, append, and "
-        "streaming tail.",
-)
-def src_netcdf3_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
-    from netcdf4_variable_streamer_spark.streaming.queries import (
-        run_to_completion,
-    )
-
-    path = ensure_nc3(
-        path=os.path.join(SCRATCH, "grid_tail_64.nc"), t_total=64
-    )
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF3DataSource)
-    stream = (
-        spark.readStream.format(FORMAT3_NAME)
-        .option("path", path)
-        .option("tail_reader", "simple")  # this key PROVES the Simple
-        # reader (arrow is the default since round 9)
-        .load()
-    )
-    agg = stream.groupBy("time_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        dsum(F.col("temperature").cast("double")).alias("sum_temp"),
-    )
-    return run_to_completion(agg, output_mode="complete")
-
-
-@register(
-    "src_netcdf3_arrow_tail",
-    oracle=f"""
-WITH {_GRID_CTE.format(T=64)}
-SELECT t AS time_idx,
-       COUNT(*) AS n_cells,
-       {SQL_DSUM('temperature')} AS sum_temp
-FROM g GROUP BY t
-""",
-    doc="Partition-planned Arrow-batched tail (VERDICT r7 'Next round' "
-        "#3): option tail_reader=arrow selects a DataSourceStreamReader "
-        "whose microbatches SPLIT the [prev_numrecs, numrecs) record "
-        "range into contiguous runs that executors read as Arrow "
-        "RecordBatches through the batch scan's column builder — the "
-        "high-ingest-rate posture (driver work per trigger is one "
-        "KB-sized header read; no per-row Python objects). Offset "
-        "semantics and results are identical to the default Simple "
-        "tail (src_netcdf3_stream_tail reads the same fixture against "
-        "the same oracle), which is exactly the parity this key "
-        "proves.",
+        "aggregates; the oracle regenerates them in SQL.",
 )
 def src_netcdf3_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
@@ -527,52 +439,6 @@ def src_netcdf3_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format(FORMAT3_NAME)
         .option("path", path)
-        .option("tail_reader", "arrow")
-        .load()
-    )
-    agg = stream.groupBy("time_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        dsum(F.col("temperature").cast("double")).alias("sum_temp"),
-    )
-    return run_to_completion(agg, output_mode="complete")
-
-
-@register(
-    "src_netcdf3_dir_tail",
-    oracle=f"""
-WITH {_GRID_CTE.format(T=GRID_T)}
-SELECT t AS time_idx,
-       COUNT(*) AS n_cells,
-       {SQL_DSUM('temperature')} AS sum_temp
-FROM g GROUP BY t
-""",
-    doc="Tail-follow of a GROWING DIRECTORY of .nc archive files "
-        "(round 5) — the capacity-chunked pattern for unbounded "
-        "streams: members freeze once a later member exists, only the "
-        "sort-last member grows, and the stream offset pins every "
-        "member's record count so replays are exact; global record "
-        "indexes come from frozen-member prefix sums. availableNow "
-        "drains the three-member grid directory (the same members the "
-        "batch multifile scan reads) into per-line aggregates the "
-        "oracle regenerates in SQL.",
-)
-def src_netcdf3_dir_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
-    from netcdf4_variable_streamer_spark.streaming.queries import (
-        run_to_completion,
-    )
-
-    path = ensure_nc3_multifile()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF3DataSource)
-    stream = (
-        spark.readStream.format(FORMAT3_NAME)
-        .option("path", path)
-        .option("tail_reader", "simple")  # this key PROVES the Simple
-        # reader (arrow is the default since round 9)
         .load()
     )
     agg = stream.groupBy("time_idx").agg(
@@ -591,15 +457,16 @@ SELECT t AS time_idx,
        {SQL_DSUM('temperature')} AS sum_temp
 FROM g GROUP BY t
 """,
-    doc="Partition-planned Arrow tail over the GROWING archive "
-        "DIRECTORY (round 8): tail_reader=arrow on a directory selects "
-        "a DataSourceStreamReader with the Simple dir tail's exact "
-        "offset shape (pinned per-member record counts, freeze "
-        "invariant enforced at plan time) whose per-member deltas "
-        "split into executor-read Arrow RecordBatches with globalized "
-        "record indexes — fixing the linear-in-rows driver drain the "
-        "round-8 SCALE measurements flagged on the Simple dir reader. "
-        "Same members, same oracle as src_netcdf3_dir_tail.",
+    doc="Tail-follow of a GROWING DIRECTORY of .nc archive files — the "
+        "capacity-chunked pattern for unbounded streams: members "
+        "freeze once a later member exists, only the sort-last member "
+        "grows, and the offset pins every member's record count (the "
+        "freeze invariant is enforced at plan time). Per-member deltas "
+        "split into executor-read Arrow RecordBatches whose global "
+        "record indexes come from frozen-member prefix sums. "
+        "availableNow drains the three-member grid directory (the "
+        "batch multifile scan's members) into per-line aggregates the "
+        "oracle regenerates in SQL.",
 )
 def src_netcdf3_arrow_dir_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
@@ -616,7 +483,6 @@ def src_netcdf3_arrow_dir_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format(FORMAT3_NAME)
         .option("path", path)
-        .option("tail_reader", "arrow")
         .load()
     )
     agg = stream.groupBy("time_idx").agg(
@@ -2647,56 +2513,6 @@ def ensure_nc4_tail(path: str | None = None, t_total: int = 64) -> str:
 
 
 @register(
-    "src_netcdf4_stream_tail",
-    oracle=f"""
-WITH {_GRID_CTE.format(T=64)}
-SELECT t AS time_idx,
-       COUNT(*) AS n_cells,
-       {SQL_DSUM('temperature')} AS sum_temp
-FROM g GROUP BY t
-""",
-    doc="Tail-follow of a REAL growing NetCDF-4 file (reference A14 on "
-        "the HDF5 container, round 4): HDF5 stores each dataset's "
-        "current shape in its dataspace message at a fixed file "
-        "offset, so create_netcdf4_tail preallocates one-record-per-"
-        "chunk capacity at extent 0 and append_records_nc4 publishes "
-        "k records as pwrite(chunks) + one 8-byte extent patch per "
-        "dataset, LAST — a concurrent tail never reads a half-"
-        "published record, exactly the classic format's numrecs-patch "
-        "story. The stream offset is the current extent; availableNow "
-        "drains the 64-record file (grown via two appends) into "
-        "per-line aggregates the closed-form oracle regenerates. "
-        "Growth beyond capacity is refused loudly (B-tree rewrite "
-        "territory) — unbounded archives chunk into capacity-sized "
-        "files and use the directory dataset.",
-)
-def src_netcdf4_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        FORMAT4_NAME,
-        NetCDF4DataSource,
-    )
-    from netcdf4_variable_streamer_spark.streaming.queries import (
-        run_to_completion,
-    )
-
-    path = ensure_nc4_tail()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF4DataSource)
-    stream = (
-        spark.readStream.format(FORMAT4_NAME)
-        .option("path", path)
-        .option("tail_reader", "simple")  # this key PROVES the Simple
-        # reader (arrow is the default since round 9)
-        .load()
-    )
-    agg = stream.groupBy("time_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        dsum(F.col("temperature").cast("double")).alias("sum_temp"),
-    )
-    return run_to_completion(agg, output_mode="complete")
-
-
-@register(
     "src_netcdf4_arrow_tail",
     oracle=f"""
 WITH {_GRID_CTE.format(T=64)}
@@ -2705,15 +2521,16 @@ SELECT t AS time_idx,
        {SQL_DSUM('temperature')} AS sum_temp
 FROM g GROUP BY t
 """,
-    doc="Partition-planned Arrow-batched tail on the HDF5 container "
-        "(VERDICT r7 'Next round' #3, twin of src_netcdf3_arrow_tail): "
-        "option tail_reader=arrow selects a DataSourceStreamReader "
-        "whose offset is the published dataspace extent and whose "
-        "microbatches split the record range into executor-read Arrow "
-        "RecordBatches — O(1) driver metadata per trigger, no per-row "
-        "Python objects. Reads the same grown tail fixture against "
-        "the same oracle as the default Simple tail, proving the two "
-        "readers result-identical.",
+    doc="Tail-follow of a REAL growing NetCDF-4 file (reference A14 on "
+        "the HDF5 container): create_netcdf4_tail preallocates "
+        "one-record-per-chunk capacity at extent 0 and "
+        "append_records_nc4 publishes k records as pwrite(chunks) + "
+        "one 8-byte dataspace-extent patch per dataset, LAST — a "
+        "concurrent tail never reads a half-published record. The "
+        "offset is the current extent; microbatches split the record "
+        "range into executor-read Arrow RecordBatches. availableNow "
+        "drains the 64-record file (grown via two appends) into "
+        "per-line aggregates the closed-form oracle regenerates.",
 )
 def src_netcdf4_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
@@ -2730,54 +2547,6 @@ def src_netcdf4_arrow_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format(FORMAT4_NAME)
         .option("path", path)
-        .option("tail_reader", "arrow")
-        .load()
-    )
-    agg = stream.groupBy("time_idx").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        dsum(F.col("temperature").cast("double")).alias("sum_temp"),
-    )
-    return run_to_completion(agg, output_mode="complete")
-
-
-@register(
-    "src_netcdf4_dir_tail",
-    oracle=f"""
-WITH {_GRID_CTE.format(T=GRID_T)}
-SELECT t AS time_idx,
-       COUNT(*) AS n_cells,
-       {SQL_DSUM('temperature')} AS sum_temp
-FROM g GROUP BY t
-""",
-    doc="Tail-follow of a GROWING DIRECTORY of NetCDF-4 archive files "
-        "(round 9; HDF5-container twin of src_netcdf3_dir_tail): "
-        "members freeze once a later member exists, only the sort-last "
-        "member grows, offsets pin every member's record count for "
-        "exact replay, and frozen members' counts carry forward across "
-        "triggers through the stat-guarded FrozenMemberCounts cache — "
-        "O(1) header reads per trigger however many members the "
-        "archive has accumulated. availableNow drains the three-member "
-        "mixed-libver .nc4 directory (the same members the batch "
-        "multifile scan reads, middle one libver='latest') into "
-        "per-line aggregates the oracle regenerates in SQL.",
-)
-def src_netcdf4_dir_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        FORMAT4_NAME,
-        NetCDF4DataSource,
-    )
-    from netcdf4_variable_streamer_spark.streaming.queries import (
-        run_to_completion,
-    )
-
-    path = ensure_nc4_multifile()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF4DataSource)
-    stream = (
-        spark.readStream.format(FORMAT4_NAME)
-        .option("path", path)
-        .option("tail_reader", "simple")  # this key PROVES the Simple
-        # reader (arrow is the default since round 9)
         .load()
     )
     agg = stream.groupBy("time_idx").agg(
@@ -2796,18 +2565,15 @@ SELECT t AS time_idx,
        {SQL_DSUM('temperature')} AS sum_temp
 FROM g GROUP BY t
 """,
-    doc="Partition-planned Arrow tail over the GROWING NetCDF-4 "
-        "archive DIRECTORY (VERDICT r8 'Next round' #3; HDF5 twin of "
-        "src_netcdf3_arrow_dir_tail): tail_reader=arrow on a directory "
-        "selects a DataSourceStreamReader with the Simple dir tail's "
-        "exact offset shape (pinned per-member counts, freeze "
-        "invariant enforced at plan time, O(1) header reads per "
-        "trigger via the frozen-member cache) whose per-member deltas "
-        "split into executor-read Arrow RecordBatches with globalized "
-        "record indexes — the high-ingest-rate posture for unbounded "
-        "HDF5 archives. Same mixed-libver members, same oracle as "
-        "src_netcdf4_dir_tail, proving the two readers "
-        "result-identical.",
+    doc="Tail-follow of a GROWING DIRECTORY of NetCDF-4 archive files: "
+        "the offset protocol of src_netcdf3_arrow_dir_tail (pinned "
+        "per-member counts, freeze invariant enforced at plan time), "
+        "with frozen members' counts carried across triggers by the "
+        "stat-guarded FrozenMemberCounts cache — O(1) header reads "
+        "per trigger however many members the archive holds. "
+        "availableNow drains the three-member mixed-libver .nc4 "
+        "directory (middle member libver='latest') into per-line "
+        "aggregates the oracle regenerates in SQL.",
 )
 def src_netcdf4_arrow_dir_tail(
     spark: SparkSession, sf_dir: str
@@ -2826,7 +2592,6 @@ def src_netcdf4_arrow_dir_tail(
     stream = (
         spark.readStream.format(FORMAT4_NAME)
         .option("path", path)
-        .option("tail_reader", "arrow")
         .load()
     )
     agg = stream.groupBy("time_idx").agg(

@@ -1,6 +1,6 @@
 """Driver-side frozen-member header cache for directory tail streams.
 
-The directory tail protocol (classic + NetCDF-4, Simple + Arrow) pins
+The directory tail protocol (classic + NetCDF-4, records_source) pins
 every archive member's record count in the offset and enforces the
 freeze invariant: once a member has a sort-later successor it never
 changes again. Before round 9 every trigger nevertheless re-opened and

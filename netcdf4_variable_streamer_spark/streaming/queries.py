@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import traceback
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -121,14 +122,13 @@ def _overlap_jobs(*thunks) -> None:
     for th in threads:
         th.join()
     if errs:
-        # surface every sibling failure, not just the first (ADVICE
-        # r19): the first error propagates, the rest ride along as
-        # explicitly chained context
-        first, rest = errs[0], errs[1:]
-        if rest:
-            raise first from ExceptionGroup(
-                f"{len(rest)} sibling overlapped write(s) also failed",
-                rest,
+        # the first error propagates with its own cause chain intact;
+        # every sibling failure rides along as a note with its traceback
+        first = errs[0]
+        for e in errs[1:]:
+            first.add_note(
+                "sibling overlapped write also failed:\n"
+                + "".join(traceback.format_exception(e))
             )
         raise first
 

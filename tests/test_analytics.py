@@ -57,7 +57,7 @@ NEW_KEYS = [
     "src_netcdf3_scan", "q_agg_histogram_equidepth_approx",
     "snk_netcdf3_write", "q_hierarchy_rollup", "q_dedup_url_canonical",
     "q_multimodal_audio_decode", "q_multimodal_png_decode",
-    "src_netcdf3_stream_tail", "src_netcdf3_multifile_scan",
+    "src_netcdf3_arrow_tail", "src_netcdf3_multifile_scan",
     "q_report_volume_shipping", "q_report_promo_share",
     "q_report_nation_profit", "q_agg_hll_setops", "q_geo_heatmap_grid",
     # round 9

@@ -23,6 +23,7 @@ from netcdf4_variable_streamer_spark.sources.netcdf_source import (
     NetCDFChunkReader,
 )
 from netcdf4_variable_streamer_spark.sources import queries as srcq
+from tests import record_cases
 
 SCRATCH = srcq.SCRATCH
 
@@ -251,12 +252,6 @@ def test_scan_queries(check):
     assert (box["t_min"] == 17).all() and (box["t_max"] == 92).all()
 
 
-def test_stream_tail(check):
-    pdf = check("src_netcdf_stream_tail")
-    assert len(pdf) == srcq.GRID_T
-    assert (pdf["n_cells"] == srcq.GRID_Y * srcq.GRID_X).all()
-
-
 def test_stream_tail_picks_up_appends(spark):
     """True tail-follow: a second microbatch sees only appended lines."""
     path = _tmp()
@@ -275,24 +270,21 @@ def test_stream_tail_picks_up_appends(spark):
         schema = (
             spark.read.format(FORMAT_NAME).option("path", path).load().schema
         )
-        r = NetCDFChunkStreamReaderForTest = None
-        from netcdf4_variable_streamer_spark.sources.netcdf_source import (
-            NetCDFChunkStreamReader,
-        )
-
-        sr = NetCDFChunkStreamReader(path, schema)
-        rows1, off1 = sr.read(sr.initialOffset())
-        assert off1 == {"line": 3} and len(list(rows1)) == 12
+        sr = NetCDFChunkDataSource({"path": path}).streamReader(schema)
+        off0 = sr.initialOffset()
+        off1 = sr.latestOffset()
+        assert off1 == {"line": 3}
+        assert len(record_cases.tail_rows(sr, off0, off1)) == 12
         store2 = ChunkStore.open(path)
         store2.append_block(
             {"temperature": np.full((2, 2, 2), 2, np.float32),
              "humidity": np.ones((2, 2, 2), np.float32)}
         )
-        rows2, off2 = sr.read(off1)
-        rows2 = list(rows2)
+        off2 = sr.latestOffset()
+        rows2 = record_cases.tail_rows(sr, off1, off2)
         assert off2 == {"line": 5} and len(rows2) == 8
         # replay between offsets returns the same rows (exactly-once)
-        replay = list(sr.readBetweenOffsets(off1, off2))
+        replay = record_cases.tail_rows(sr, off1, off2)
         assert sorted(replay) == sorted(rows2)
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -494,10 +486,10 @@ def test_a10_transposed_axis_roundtrip(tmp_path):
 
 
 def test_arrow_stream_tail_protocol(spark):
-    """Chunk-store Arrow tail (tail_reader=arrow): extent offsets,
-    chunk-bundled partitions, Arrow rows masked to the offset window —
-    value-identical to the Simple reader, including a microbatch whose
-    window splits a chunk."""
+    """Chunk-store Arrow tail: extent offsets, chunk-bundled
+    partitions, Arrow rows masked to the offset window — value-identical
+    to the batch scan, including a microbatch whose window splits a
+    chunk."""
     path = _tmp()
     try:
         ChunkStore.create(
@@ -515,7 +507,6 @@ def test_arrow_stream_tail_protocol(spark):
         )
         from netcdf4_variable_streamer_spark.sources.netcdf_source import (
             NetCDFChunkArrowStreamReader,
-            NetCDFChunkStreamReader,
         )
 
         ar = NetCDFChunkArrowStreamReader(path, schema, target_partitions=2)
@@ -534,10 +525,8 @@ def test_arrow_stream_tail_protocol(spark):
             return out
 
         got = rows(ar.initialOffset(), off1)
-        sr = NetCDFChunkStreamReader(path, schema)
-        want, off_s = sr.read(sr.initialOffset())
-        assert off_s == off1
-        assert sorted(got) == sorted(list(want))
+        want = spark.read.format(FORMAT_NAME).option("path", path).load()
+        assert sorted(got) == sorted(tuple(r) for r in want.collect())
         assert ar.partitions(off1, off1) == []
 
         # append 3 more lines: the delta window [6, 9) splits the
@@ -568,13 +557,9 @@ def test_in_filter_prunes_record_range(spark):
     points-v2 scan key), and the full plan stays row-correct."""
     from pyspark.sql.datasource import In
 
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        NetCDF3Reader,
-    )
     from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
         FORMAT4_NAME,
         NetCDF4DataSource,
-        NetCDF4Reader,
     )
 
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
@@ -585,7 +570,7 @@ def test_in_filter_prunes_record_range(spark):
     schema4 = (
         spark.read.format(FORMAT4_NAME).option("path", p4).load().schema
     )
-    r = NetCDF4Reader(p4, schema4)
+    r = NetCDF4DataSource({"path": p4}).reader(schema4)
     out = list(r.pushFilters([In(("time_idx",), (9, 4, 30))]))
     assert len(out) == 1  # returned for row-level re-check
     assert (r.lo, r.hi) == (4, 31)
@@ -601,7 +586,7 @@ def test_in_filter_prunes_record_range(spark):
     schema3 = (
         spark.read.format(FORMAT3_NAME).option("path", p3).load().schema
     )
-    r3 = NetCDF3Reader(p3, schema3)
+    r3 = NetCDF3DataSource({"path": p3}).reader(schema3)
     assert len(list(r3.pushFilters([In(("time_idx",), (12, 7))]))) == 1
     assert (r3.lo, r3.hi) == (7, 13)
 

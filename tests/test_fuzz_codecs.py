@@ -1414,14 +1414,14 @@ def test_fletcher32_detects_corruption(tmp_path):
 )
 def test_union_schema_fuzz(tmp_path_factory, seed, n_members, n_vars):
     """Union-schema directory datasets over RANDOM member variable
-    subsets: the NetCDF3Reader's union read must equal a manual
+    subsets: the NetCDF-3 source's union read must equal a manual
     per-member union (name-aligned, NULL-filled) for arbitrary
     evolution patterns — including variables that appear, disappear,
     and reappear across members."""
+    import pyarrow as pa
+
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        _spark_schema_union,
-        _arrow_batches,
-        _resolve_members,
+        NetCDF3DataSource,
     )
 
     rng = np.random.RandomState(seed)
@@ -1455,14 +1455,16 @@ def test_union_schema_fuzz(tmp_path_factory, seed, n_members, n_vars):
             else:
                 expected[nm].extend([None] * (n * 2))
         off += n
-    members = _resolve_members(d)
-    ddl = _spark_schema_union(members)
-    cols = [p.split(" ")[0] for p in ddl.split(", ")]
-    col_types = dict(p.split(" ", 1) for p in ddl.split(", "))
+    members = NetCDF3DataSource.members(d)
+    ddl = NetCDF3DataSource.union_schema(members)
+    decls = [p.split(" ", 1) for p in ddl.split(", ")]
+    cols = [nm.strip("`") for nm, _t in decls]
+    arrow = {"long": pa.int64(), "int": pa.int32()}
+    col_pa = {nm.strip("`"): arrow[t] for nm, t in decls}
     got: dict[str, list] = {nm: [] for nm in sorted(ever)}
     for path, n, o in members:
-        for batch in _arrow_batches(
-            path, cols, 0, n, o, col_types=col_types
+        for batch in NetCDF3DataSource.arrow_batches(
+            path, cols, 0, n, o, col_pa=col_pa
         ):
             tbl = batch.to_pydict()
             for nm in got:
@@ -2554,7 +2556,7 @@ def test_mask_and_scale_roundtrip_hypothesis(
         write_netcdf3,
     )
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        _arrow_batches,
+        NetCDF3DataSource,
     )
 
     rng = np.random.RandomState(seed)
@@ -2589,7 +2591,9 @@ def test_mask_and_scale_roundtrip_hypothesis(
     )
     tbl = pa.Table.from_batches(
         list(
-            _arrow_batches(p, ["t_idx", "x"], 0, n, mask_and_scale=True)
+            NetCDF3DataSource.arrow_batches(
+                p, ["t_idx", "x"], 0, n, mask_and_scale=True
+            )
         )
     )
     got = tbl["x"].to_pylist()

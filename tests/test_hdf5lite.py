@@ -24,6 +24,10 @@ from netcdf4_variable_streamer_spark.sources.hdf5lite import (
     write_hdf5,
     write_netcdf4,
 )
+from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
+    NetCDF4DataSource,
+)
+from tests import record_cases
 
 
 def _golden_minimal() -> bytes:
@@ -292,16 +296,7 @@ def test_spark_scan_and_pushdown(spark, tmp_path):
         .astype(np.float32)
     )
     np.testing.assert_array_equal(got, temp[17].reshape(-1))
-    # fresh load per query (the safe pattern — see module docstring)
-    load = lambda: (  # noqa: E731
-        spark.read.format(FORMAT4_NAME).option("path", path).load()
-    )
-    full = load().rdd.getNumPartitions()
-    fresh = load()
-    pruned = fresh.filter(
-        (fresh.time_idx >= 40) & (fresh.time_idx < 44)
-    ).rdd.getNumPartitions()
-    assert pruned < full, (full, pruned)
+    record_cases.pushdown_prunes_records(spark, "netcdf4", path, "time_idx")
 
 
 def test_pushdown_fresh_load_is_safe(spark, tmp_path):
@@ -386,8 +381,6 @@ def test_nc4_tail_append_and_stream(spark, tmp_path):
     )
     from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
         FORMAT4_NAME,
-        NetCDF4DataSource,
-        NetCDF4StreamReader,
     )
 
     path = os.path.join(tmp_path, "tail.nc4")
@@ -403,15 +396,17 @@ def test_nc4_tail_append_and_stream(spark, tmp_path):
     schema = (
         spark.read.format(FORMAT4_NAME).option("path", path).load().schema
     )
-    sr = NetCDF4StreamReader(path, schema)
-    rows1, off1 = sr.read(sr.initialOffset())
-    assert off1 == {"rec": 3} and len(list(rows1)) == 6
+    tail = record_cases.tail(FORMAT4_NAME, path, schema)
+    off0 = tail.initialOffset()
+    off1 = tail.latestOffset()
+    assert off1 == {"rec": 3}
+    assert len(record_cases.tail_rows(tail, off0, off1)) == 6
     assert append_records_nc4(path, {"v": a[3:5]}) == 5
-    rows2, off2 = sr.read(off1)
-    rows2 = list(rows2)
+    off2 = tail.latestOffset()
+    rows2 = record_cases.tail_rows(tail, off1, off2)
     assert off2 == {"rec": 5} and len(rows2) == 4
     assert {r[-1] for r in rows2} == {6.0, 7.0, 8.0, 9.0}
-    replay = list(sr.readBetweenOffsets(off1, off2))
+    replay = record_cases.tail_rows(tail, off1, off2)
     assert sorted(replay) == sorted(rows2)
     # batch rescan sees the grown extent
     assert (
@@ -422,11 +417,6 @@ def test_nc4_tail_append_and_stream(spark, tmp_path):
     # past capacity: the B-tree rewrite grows the file transparently
     # (test_nc4_tail_grows_past_capacity covers the data round trip)
     assert append_records_nc4(path, {"v": a[:1]}) == 7
-
-
-def test_src_netcdf4_stream_tail_oracle(check):
-    pdf = check("src_netcdf4_stream_tail")
-    assert len(pdf) == 64
 
 
 def test_nc4_directory_dataset(spark, tmp_path):
@@ -1679,78 +1669,7 @@ def test_src_netcdf4_multifile_scan_oracle(check):
 
 
 def test_nc4_dir_tail_stream_protocol(tmp_path):
-    """NetCDF-4 directory tail: same freeze-invariant protocol as the
-    classic one — growth of the newest member plus new members between
-    batches, continuing global indexes, exact replay."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from netcdf4_variable_streamer_spark.sources.hdf5lite import (
-        append_records_nc4,
-        create_netcdf4_tail,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        NetCDF4DirStreamReader,
-    )
-
-    d = os.path.join(tmp_path, "arch4")
-    os.makedirs(d)
-
-    def mk(i, n):
-        p = os.path.join(d, f"part-{i}.nc4")
-        create_netcdf4_tail(
-            p,
-            dims={"t": None, "x": 2},
-            variables={"v": ("float64", ("t", "x"))},
-            capacity=4,
-        )
-        append_records_nc4(
-            p, {"v": np.arange(n * 2, dtype=np.float64).reshape(n, 2)}
-        )
-        return p
-
-    p0 = mk(0, 3)
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("x_idx", IntegerType()),
-            StructField("v", DoubleType()),
-        ]
-    )
-    sr = NetCDF4DirStreamReader(d, schema)
-    rows1, off1 = sr.read(sr.initialOffset())
-    assert off1 == {"files": ["part-0.nc4"], "counts": [3]}
-    append_records_nc4(p0, {"v": np.array([[7.0, 8.0]])})
-    mk(1, 2)
-    rows2, off2 = sr.read(off1)
-    assert off2 == {
-        "files": ["part-0.nc4", "part-1.nc4"],
-        "counts": [4, 2],
-    }
-    assert sorted(set(r[0] for r in rows2)) == [3, 4, 5]
-    assert sorted(sr.readBetweenOffsets(off1, off2)) == sorted(rows2)
-    assert sorted(sr.readBetweenOffsets(sr.initialOffset(), off1)) == sorted(
-        rows1
-    )
-    # freeze invariant is ENFORCED: a pinned non-last member must not
-    # grow (its new records would collide with part-1's global indexes)
-    append_records_nc4(p0, {"v": np.array([[9.0, 9.0]])})
-    with pytest.raises(ValueError, match="frozen member grew"):
-        sr.read(off2)
-    # shrink of a frozen member is named as such, and a shrink of the
-    # newest pinned member is rejected rather than streaming lo > hi
-    mk(0, 2)
-    with pytest.raises(ValueError, match="frozen member shrank"):
-        sr.read(off2)
-    mk(0, 4)
-    mk(1, 1)
-    with pytest.raises(ValueError, match="pinned member shrank"):
-        sr.read(off2)
+    record_cases.dir_tail_freeze_and_replay("netcdf4", tmp_path)
 
 
 def test_fixed_string_dataset_roundtrip(tmp_path):
@@ -1775,11 +1694,6 @@ def test_nc4_char_variable_scan(tmp_path):
     from netcdf4_variable_streamer_spark.sources.hdf5lite import (
         write_netcdf4,
     )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        _spark_schema,
-        _stream_rows4,
-    )
-
     p = os.path.join(tmp_path, "chars.nc4")
     lab = np.zeros((3, 2, 6), dtype="S1")
     texts = {}
@@ -1799,9 +1713,14 @@ def test_nc4_char_variable_scan(tmp_path):
         data={"v": v, "label": lab},
     )
     view = NetCDF4View(p)
-    schema = _spark_schema(view)
+    schema = NetCDF4DataSource.file_schema(view)
     assert "`label` string" in schema and "s_idx" not in schema
-    rows = _stream_rows4(p, ["t_idx", "y_idx", "v", "label"], 0, 3)
+    cols = ["t_idx", "y_idx", "v", "label"]
+    rows = [
+        tuple(r[c] for c in cols)
+        for b in NetCDF4DataSource.arrow_batches(p, cols, 0, 3)
+        for r in b.to_pylist()
+    ]
     assert len(rows) == 6
     for t_idx, y_idx, vv, label in rows:
         assert label == texts[(t_idx, y_idx)]
@@ -2086,74 +2005,12 @@ def test_src_netcdf_string_scan_oracle(check):
 
 
 def test_nc4_arrow_tail_protocol(spark, tmp_path):
-    """Partition-planned Arrow tail on the HDF5 container
-    (tail_reader=arrow): latestOffset is the published dataspace
-    extent, partitions() splits the microbatch range, read() yields
-    Arrow RecordBatches with rows identical to the Simple tail's."""
-    from netcdf4_variable_streamer_spark.sources.hdf5lite import (
-        append_records_nc4,
-        create_netcdf4_tail,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        FORMAT4_NAME,
-        NetCDF4ArrowStreamReader,
-        NetCDF4DataSource,
-        NetCDF4StreamReader,
-    )
-
-    path = os.path.join(tmp_path, "atail.nc4")
-    create_netcdf4_tail(
-        path,
-        dims={"t": None, "x": 2},
-        variables={"v": ("float32", ("t", "x"))},
-        capacity=16,
-    )
-    append_records_nc4(
-        path, {"v": np.arange(12, dtype=np.float32).reshape(6, 2)}
-    )
-    spark.dataSource.register(NetCDF4DataSource)
-    schema = (
-        spark.read.format(FORMAT4_NAME).option("path", path).load().schema
-    )
-    ar = NetCDF4ArrowStreamReader(path, schema, target_partitions=3)
-    assert ar.initialOffset() == {"rec": 0}
-    off1 = ar.latestOffset()
-    assert off1 == {"rec": 6}
-    parts = ar.partitions(ar.initialOffset(), off1)
-    assert [(p.lo, p.hi) for p in parts] == [(0, 2), (2, 4), (4, 6)]
-    assert ar.partitions(off1, off1) == []
-
-    def arrow_rows(reader, start, end):
-        rows = []
-        for p in reader.partitions(start, end):
-            for rb in reader.read(p):
-                rows.extend(
-                    tuple(r[c] for c in reader.columns)
-                    for r in rb.to_pylist()
-                )
-        return rows
-
-    got = arrow_rows(ar, ar.initialOffset(), off1)
-    sr = NetCDF4StreamReader(path, schema)
-    want, off_s = sr.read(sr.initialOffset())
-    assert off_s == off1
-    assert sorted(got, key=str) == sorted(list(want), key=str)
-
-    # appended records arrive as the next microbatch
-    append_records_nc4(path, {"v": np.full((3, 2), 7, dtype=np.float32)})
-    off2 = ar.latestOffset()
-    assert off2 == {"rec": 9}
-    got2 = arrow_rows(ar, off1, off2)
-    assert len(got2) == 6 and all(r[-1] == 7.0 for r in got2)
-    assert {r[0] for r in got2} == {6, 7, 8}
-
-    with pytest.raises(ValueError, match="single NetCDF-4 file"):
-        NetCDF4ArrowStreamReader(str(tmp_path), schema)
+    record_cases.arrow_tail_protocol(spark, "netcdf4", tmp_path)
 
 
 def test_src_netcdf4_arrow_tail_oracle(check):
     """The NC4 Arrow tail through a real availableNow streaming query
-    matches the same DuckDB oracle as the Simple tail."""
+    matches the DuckDB oracle."""
     pdf = check("src_netcdf4_arrow_tail")
     assert len(pdf) == 64
     assert int(pdf["n_cells"].sum()) == 64 * 32 * 32
@@ -2391,89 +2248,14 @@ def test_src_netcdf_vlen_scan_oracle(check):
 
 
 def test_nc4_arrow_dir_tail_protocol(spark, tmp_path):
-    """The NetCDF-4 Arrow directory tail mirrors the classic one:
-    pinned-count offsets, freeze enforcement at plan time, globalized
-    record indexes, row parity with the Simple dir reader.
-
-    (The ``spark`` fixture is load-bearing even though unreferenced:
-    ``_parse_datatype_string`` needs an active SparkContext.)"""
-    from netcdf4_variable_streamer_spark.sources.hdf5lite import (
-        append_records_nc4,
-        create_netcdf4_tail,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        NetCDF4ArrowDirStreamReader,
-        NetCDF4DirStreamReader,
-        _spark_schema,
-    )
-    from pyspark.sql.types import _parse_datatype_string
-
-    d = os.path.join(tmp_path, "arch4")
-    os.makedirs(d)
-
-    def mk(i, n):
-        p = os.path.join(d, f"part-{i}.nc4")
-        create_netcdf4_tail(
-            p,
-            dims={"t": None, "x": 2},
-            variables={"v": ("float32", ("t", "x"))},
-            capacity=8,
-        )
-        append_records_nc4(
-            p, {"v": np.arange(n * 2, dtype=np.float32).reshape(n, 2)}
-        )
-        return p
-
-    mk(0, 3)
-    mk(1, 2)
-    schema = _parse_datatype_string(
-        _spark_schema(NetCDF4View(os.path.join(d, "part-0.nc4")))
-    )
-    ar = NetCDF4ArrowDirStreamReader(d, schema, target_partitions=3)
-    off1 = ar.latestOffset()
-    assert off1["counts"] == [3, 2]
-
-    def rows(start, end):
-        out = []
-        for p in ar.partitions(start, end):
-            for rb in ar.read(p):
-                out.extend(
-                    tuple(r[c] for c in ar.columns)
-                    for r in rb.to_pylist()
-                )
-        return out
-
-    got = rows(ar.initialOffset(), off1)
-    sr = NetCDF4DirStreamReader(d, schema)
-    want, off_s = sr.read(ar.initialOffset())
-    assert off_s == off1
-    assert sorted(got) == sorted(list(want))
-    assert {r[0] for r in got} == set(range(5))
-
-    append_records_nc4(
-        os.path.join(d, "part-1.nc4"),
-        {"v": np.full((2, 2), 9, dtype=np.float32)},
-    )
-    off2 = ar.latestOffset()
-    got2 = rows(off1, off2)
-    assert {r[0] for r in got2} == {5, 6}
-    append_records_nc4(
-        os.path.join(d, "part-0.nc4"),
-        {"v": np.full((1, 2), 1, dtype=np.float32)},
-    )
-    with pytest.raises(ValueError, match="frozen member grew"):
-        ar.partitions(off2, ar.latestOffset())
+    record_cases.arrow_dir_tail_protocol(spark, "netcdf4", tmp_path)
 
 
 def test_vlen_sequence_stream_tail(spark, tmp_path):
-    """NC_VLEN record variables flow through BOTH tail readers: the
-    Simple reader's row tuples carry python lists, the Arrow reader's
-    RecordBatches carry list cells — identical values."""
+    """NC_VLEN record variables flow through the streaming tail: its
+    RecordBatches carry list cells equal to the written vectors."""
     from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
         FORMAT4_NAME,
-        NetCDF4ArrowStreamReader,
-        NetCDF4DataSource,
-        NetCDF4StreamReader,
     )
 
     t = 10
@@ -2492,20 +2274,13 @@ def test_vlen_sequence_stream_tail(spark, tmp_path):
     schema = (
         spark.read.format(FORMAT4_NAME).option("path", p).load().schema
     )
-    sr = NetCDF4StreamReader(p, schema)
-    rows, off = sr.read(sr.initialOffset())
-    rows = list(rows)
-    assert off == {"rec": t} and len(rows) == t
+    tail = record_cases.tail(FORMAT4_NAME, p, schema, tail_partitions=2)
+    off = tail.latestOffset()
+    assert off == {"rec": t}
+    rows = record_cases.tail_rows(tail, tail.initialOffset(), off)
+    assert len(rows) == t
     for r in rows:
         assert r[1] == cells[r[0]].tolist()
-    ar = NetCDF4ArrowStreamReader(p, schema, target_partitions=2)
-    got = []
-    for part in ar.partitions(ar.initialOffset(), ar.latestOffset()):
-        for rb in ar.read(part):
-            got.extend(
-                tuple(x[c] for c in ar.columns) for x in rb.to_pylist()
-            )
-    assert sorted(got) == sorted(rows)
 
 
 def test_vlen_numeric_attribute_roundtrip(tmp_path):
@@ -2545,10 +2320,6 @@ def test_vlen_u8_base_refuses_spark_mapping(tmp_path):
     from netcdf4_variable_streamer_spark.sources.hdf5lite import (
         write_netcdf4,
     )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        _spark_schema,
-    )
-
     cells = np.empty((3,), dtype=object)
     for i in range(3):
         cells[i] = np.arange(i + 1, dtype=np.uint64) + 2**63
@@ -2565,7 +2336,7 @@ def test_vlen_u8_base_refuses_spark_mapping(tmp_path):
     assert int(got[2][0]) == 2**63
     # ...but the Spark schema refuses the lossy mapping
     with pytest.raises(ValueError, match="no Spark array mapping"):
-        _spark_schema(NetCDF4View(p))
+        NetCDF4DataSource.file_schema(NetCDF4View(p))
 
 
 def test_two_phase_compressed_write_libver_latest(tmp_path):
@@ -2597,11 +2368,6 @@ def test_two_phase_compressed_write_libver_latest(tmp_path):
     view = NetCDF4View(p)
     np.testing.assert_array_equal(view.read_records("v"), v)
     np.testing.assert_array_equal(view.read_records("v", 3, 9), v[3:9])
-
-
-def test_src_netcdf4_dir_tail_oracle(check):
-    pdf = check("src_netcdf4_dir_tail")
-    assert len(pdf) == 128  # all three mixed-libver members drained
 
 
 def test_src_netcdf4_arrow_dir_tail_oracle(check):
@@ -2818,20 +2584,14 @@ def test_snk_netcdf4_write_compound_oracle(check):
 
 
 def test_compound_stream_tails(spark, tmp_path):
-    """NC_COMPOUND record variables flow through BOTH tail readers —
-    the Arrow reader (the default) delivers struct cells in
-    RecordBatches, the Simple reader delivers python dicts pyspark
-    converts to Rows — with identical values."""
-    from pyspark.sql.types import _parse_datatype_string
-
+    """NC_COMPOUND record variables flow through the streaming tail: its
+    RecordBatches carry struct cells equal to the batch scan's rows."""
     from netcdf4_variable_streamer_spark.sources.hdf5lite import (
         append_records_nc4,
         create_netcdf4_tail,
     )
     from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        NetCDF4ArrowStreamReader,
-        NetCDF4StreamReader,
-        _spark_schema,
+        FORMAT4_NAME,
     )
 
     dt = np.dtype([("a", "<f4"), ("k", "<i2"), ("tag", "S3")])
@@ -2848,29 +2608,22 @@ def test_compound_stream_tails(spark, tmp_path):
             blk[t, s] = (t + s * 0.5, t * 3 - s, b"x%d" % ((t + s) % 4))
     append_records_nc4(p, {"obs": blk})
 
-    schema = _parse_datatype_string(_spark_schema(NetCDF4View(p)))
-    assert "obs" in [f.name for f in schema.fields]
-
-    ar = NetCDF4ArrowStreamReader(p, schema, target_partitions=2)
-    got_a = []
-    end = ar.latestOffset()
+    spark.dataSource.register(NetCDF4DataSource)
+    df = spark.read.format(FORMAT4_NAME).option("path", p).load()
+    assert "obs" in df.columns
+    tail = record_cases.tail(FORMAT4_NAME, p, df.schema, tail_partitions=2)
+    end = tail.latestOffset()
     assert end == {"rec": 5}
-    for part in ar.partitions(ar.initialOffset(), end):
-        for rb in ar.read(part):
-            got_a.extend(
-                (r["t_idx"], r["s_idx"], r["obs"]["a"], r["obs"]["k"],
-                 r["obs"]["tag"])
-                for r in rb.to_pylist()
-            )
-    sr = NetCDF4StreamReader(p, schema)
-    rows_s, off_s = sr.read(sr.initialOffset())
-    assert off_s == {"rec": 5}
-    got_s = [
-        (r[0], r[1], r[2]["a"], r[2]["k"], r[2]["tag"]) for r in rows_s
+    got = [
+        (t, s, o["a"], o["k"], o["tag"])
+        for t, s, o in record_cases.tail_rows(tail, tail.initialOffset(), end)
     ]
-    assert sorted(got_a) == sorted(got_s)
-    assert len(got_a) == 10
-    assert (0, 1, 0.5, -1, "x1") in got_a
+    want = [
+        (r.t_idx, r.s_idx, r.obs.a, r.obs.k, r.obs.tag) for r in df.collect()
+    ]
+    assert sorted(got) == sorted(want)
+    assert len(got) == 10
+    assert (0, 1, 0.5, -1, "x1") in got
 
 
 def test_vlen_compound_roundtrip(tmp_path):
@@ -3328,45 +3081,11 @@ def test_src_netcdf4_fill_scan_oracle(check):
 
 
 def test_nc4_union_schema_strict_refuses_and_union_reads(spark):
-    """NC4 directory union mode: strict refuses the evolving archive
-    naming the option; union surfaces typed NULL strings for the
-    pre-evolution member."""
-    from netcdf4_variable_streamer_spark.session import (
-        apply_runtime_confs,
-    )
     from netcdf4_variable_streamer_spark.sources import queries as srcq
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        FORMAT4_NAME,
-        NetCDF4DataSource,
-    )
 
-    path = srcq.ensure_nc4_evolving()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF4DataSource)
-    with pytest.raises(Exception, match="schema_evolution=union"):
-        (
-            spark.read.format(FORMAT4_NAME)
-            .option("path", path)
-            .load()
-            .count()
-        )
-    from pyspark.sql import functions as F
-
-    df = (
-        spark.read.format(FORMAT4_NAME)
-        .option("path", path)
-        .option("schema_evolution", "union")
-        .load()
+    record_cases.union_strict_then_null_fill(
+        spark, "netcdf4", srcq.ensure_nc4_evolving(), "t_idx", 24, "name"
     )
-    row = (
-        df.filter(F.col("t_idx") < 24)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("name").alias("n_name"),
-        )
-        .collect()[0]
-    )
-    assert row.n == 24 * 4 and row.n_name == 0
 
 
 def test_object_reference_dataset_roundtrip(tmp_path):
@@ -4459,10 +4178,10 @@ def test_vlen_of_enum_dataset_refuses(tmp_path, monkeypatch):
     assert hl.HDF5File(p).read("v").tolist() == list(range(6))
 
 
-def test_enum_opaque_simple_tail(spark, tmp_path):
-    """The Simple (row-based) streaming tail handles NC_ENUM (base
-    integers) and NC_OPAQUE (bytes) record variables — the row path's
-    twin of the Arrow scan's zero-copy binary build."""
+def test_enum_opaque_stream_tail(spark, tmp_path):
+    """The streaming tail handles NC_ENUM (base integers) and NC_OPAQUE
+    (bytes, through the zero-copy binary build) record variables in a
+    real availableNow query."""
     from pyspark.sql import functions as F
 
     from netcdf4_variable_streamer_spark.sources.hdf5lite import (
@@ -4492,7 +4211,6 @@ def test_enum_opaque_simple_tail(spark, tmp_path):
     st = (
         spark.readStream.format(FORMAT4_NAME)
         .option("path", p)
-        .option("tail_reader", "simple")
         .load()
     )
     q = (
@@ -4558,7 +4276,7 @@ def test_mask_scale_float32_attrs(tmp_path):
         NetCDF3File,
         write_netcdf3,
     )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
+    from netcdf4_variable_streamer_spark.sources.records_source import (
         _mask_scale,
     )
 

@@ -2851,3 +2851,19 @@ def test_tiff_fillorder2_roundtrip_and_tag_honored():
         decode_tiff(bytes(f2))
     with _pytest.raises(ValueError, match="fill_order"):
         encode_tiff(rgb, fill_order=0)
+
+
+def test_exact_pairs_block_fits_budget():
+    """The kernel's dense dot block (float64, batch rows x block rows)
+    stays within ``_PAIRS_BLOCK_BYTES`` at the default 10000-row Arrow
+    batch, where the former 1024-row floor gave 78 MB per block."""
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _PAIRS_BLOCK_BYTES,
+        _pairs_block_rows,
+    )
+
+    for rows in (256, 8192, 10_000, 100_000):
+        blk = _pairs_block_rows(rows)
+        assert blk >= 1
+        assert 8 * rows * blk <= _PAIRS_BLOCK_BYTES, (rows, blk)
+    assert _pairs_block_rows(256) == 32768  # small batches: one block

@@ -21,6 +21,10 @@ from netcdf4_variable_streamer_spark.sources.netcdf3 import (
     NetCDF3File,
     write_netcdf3,
 )
+from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
+    NetCDF3DataSource,
+)
+from tests import record_cases
 
 
 def _golden_minimal() -> bytes:
@@ -405,19 +409,8 @@ def test_spark_scan_matches_source_arrays(spark, nc3_grid):
 
 
 def test_spark_scan_pushdown_prunes_records(spark, nc3_grid):
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
-
     path, _ = nc3_grid
-    spark.dataSource.register(NetCDF3DataSource)
-    base = spark.read.format(FORMAT3_NAME).option("path", path).load()
-    full = base.rdd.getNumPartitions()
-    pruned = base.filter(
-        (base.time_idx >= 40) & (base.time_idx < 44)
-    ).rdd.getNumPartitions()
-    assert pruned < full, (full, pruned)
+    record_cases.pushdown_prunes_records(spark, "netcdf3", path, "time_idx")
 
 
 def test_src_netcdf3_scan_oracle(check):
@@ -445,8 +438,6 @@ def test_nc3_append_and_tail(spark, tmp_path):
     )
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
         FORMAT3_NAME,
-        NetCDF3DataSource,
-        NetCDF3StreamReader,
     )
 
     path = os.path.join(tmp_path, "tail.nc")
@@ -458,19 +449,21 @@ def test_nc3_append_and_tail(spark, tmp_path):
     )
     spark.dataSource.register(NetCDF3DataSource)
     schema = spark.read.format(FORMAT3_NAME).option("path", path).load().schema
-    sr = NetCDF3StreamReader(path, schema)
-    rows1, off1 = sr.read(sr.initialOffset())
-    assert off1 == {"rec": 3} and len(list(rows1)) == 6
+    tail = record_cases.tail(FORMAT3_NAME, path, schema)
+    off0 = tail.initialOffset()
+    off1 = tail.latestOffset()
+    assert off1 == {"rec": 3}
+    assert len(record_cases.tail_rows(tail, off0, off1)) == 6
     new_total = append_records(
         path, {"v": np.full((2, 2), 9, dtype=np.float32)}
     )
     assert new_total == 5
     assert NetCDF3File(path).numrecs == 5
-    rows2, off2 = sr.read(off1)
-    rows2 = list(rows2)
+    off2 = tail.latestOffset()
+    rows2 = record_cases.tail_rows(tail, off1, off2)
     assert off2 == {"rec": 5} and len(rows2) == 4
     assert all(r[-1] == 9.0 for r in rows2)
-    replay = list(sr.readBetweenOffsets(off1, off2))
+    replay = record_cases.tail_rows(tail, off1, off2)
     assert sorted(replay) == sorted(rows2)
     # batch rescan sees the grown extent too
     assert (
@@ -511,8 +504,6 @@ def test_fill_value_maps_to_null(spark, tmp_path):
 
     from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
         FORMAT3_NAME,
-        NetCDF3DataSource,
-        NetCDF3StreamReader,
     )
 
     path = os.path.join(tmp_path, "fill.nc")
@@ -542,9 +533,10 @@ def test_fill_value_maps_to_null(spark, tmp_path):
     assert agg["n"] == 4 and agg["mn"] == 1.5
 
     # streaming tail honors the mask too
-    sr = NetCDF3StreamReader(path, df.schema)
-    rows, off = sr.read(sr.initialOffset())
+    tail = record_cases.tail(FORMAT3_NAME, path, df.schema)
+    off = tail.latestOffset()
     assert off == {"rec": 3}
+    rows = record_cases.tail_rows(tail, tail.initialOffset(), off)
     vcol = [r[2] for r in rows]  # (t_idx, x_idx, v, w)
     assert vcol.count(None) == 2
 
@@ -717,97 +709,22 @@ def test_src_netcdf3_cf_cal_scan_oracle(check):
 
 
 def test_dir_tail_stream_protocol(tmp_path):
-    """Directory-tail offset protocol: growth of the newest member and
-    NEW members between batches; global indexes continue across the
-    member boundary; readBetweenOffsets replays exactly."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from netcdf4_variable_streamer_spark.sources.netcdf3 import (
-        append_records,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        NetCDF3DirStreamReader,
-    )
-
-    d = os.path.join(tmp_path, "arch")
-    os.makedirs(d)
-
-    def mk(i, n):
-        write_netcdf3(
-            os.path.join(d, f"part-{i}.nc"),
-            dims={"t": None, "x": 2},
-            variables={"v": ("int32", ("t", "x"))},
-            data={"v": np.arange(n * 2, dtype=np.int32).reshape(n, 2)},
-        )
-
-    mk(0, 3)
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("x_idx", IntegerType()),
-            StructField("v", IntegerType()),
-        ]
-    )
-    sr = NetCDF3DirStreamReader(d, schema)
-    off0 = sr.initialOffset()
-    rows1, off1 = sr.read(off0)
-    assert off1 == {"files": ["part-0.nc"], "counts": [3]}
-    append_records(
-        os.path.join(d, "part-0.nc"),
-        {"v": np.array([[7, 8]], dtype=np.int32)},
-    )
-    mk(1, 2)
-    rows2, off2 = sr.read(off1)
-    assert off2 == {
-        "files": ["part-0.nc", "part-1.nc"],
-        "counts": [4, 2],
-    }
-    assert sorted(set(r[0] for r in rows2)) == [3, 4, 5]
-    assert sorted(sr.readBetweenOffsets(off1, off2)) == sorted(rows2)
-    assert sorted(sr.readBetweenOffsets(off0, off1)) == sorted(rows1)
-    rows3, off3 = sr.read(off2)
-    assert rows3 == [] and off3 == off2  # idle batch: no rows, same offset
-    # freeze invariant is ENFORCED, not assumed: a member that already
-    # had a pinned successor must not grow — its new records would be
-    # assigned global indexes that collide with part-1's
-    append_records(
-        os.path.join(d, "part-0.nc"),
-        {"v": np.array([[9, 9]], dtype=np.int32)},
-    )
-    with pytest.raises(ValueError, match="frozen member grew"):
-        sr.read(off2)
-    # ...and must not SHRINK either (truncation/replacement): the
-    # error names the actual direction, not a misleading "grew"
-    mk(0, 2)
-    with pytest.raises(ValueError, match="frozen member shrank"):
-        sr.read(off2)
-    # the newest pinned member may grow but a shrink below its pinned
-    # count is rejected instead of silently streaming lo > hi
-    mk(0, 4)
-    mk(1, 1)
-    with pytest.raises(ValueError, match="pinned member shrank"):
-        sr.read(off2)
+    record_cases.dir_tail_freeze_and_replay("netcdf3", tmp_path)
 
 
-def test_src_netcdf3_dir_tail_oracle(check):
-    pdf = check("src_netcdf3_dir_tail")
-    assert len(pdf) == 128  # all three members drained
+def _scan_rows(path: str, columns: list, lo: int, hi: int) -> list:
+    """Rows of records [lo, hi) as the batch scan's executors build them."""
+    return [
+        tuple(r[c] for c in columns)
+        for b in NetCDF3DataSource.arrow_batches(path, columns, lo, hi)
+        for r in b.to_pylist()
+    ]
 
 
 def test_char_variable_roundtrip(tmp_path):
     """NC_CHAR record variable (SURVEY §1.2 row S1): the trailing char
     dim collapses into a StringType value, trailing-NUL padding
     stripped; the numeric sibling is unaffected."""
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        _spark_schema,
-        _stream_rows,
-    )
-
     p = os.path.join(tmp_path, "chars.nc")
     lab = np.zeros((4, 2, 6), dtype="S1")
     texts = {}
@@ -829,10 +746,10 @@ def test_char_variable_roundtrip(tmp_path):
     nc = NetCDF3File(p)
     assert nc.variables["label"].nc_type == 2
     # schema: the char dim does NOT surface as an s_idx column
-    assert _spark_schema(nc) == (
-        "t_idx long, y_idx int, v float, label string"
+    assert NetCDF3DataSource.file_schema(nc) == (
+        "t_idx long, y_idx int, `v` float, `label` string"
     )
-    rows = _stream_rows(p, ["t_idx", "y_idx", "v", "label"], 0, 4)
+    rows = _scan_rows(p, ["t_idx", "y_idx", "v", "label"], 0, 4)
     assert len(rows) == 8
     for t_idx, y_idx, vv, label in rows:
         assert label == texts[(t_idx, y_idx)]
@@ -843,11 +760,6 @@ def test_char_only_record_variable(tmp_path):
     """A char-only record variable msg(t, s): effective per-record
     shape is scalar — one string per record, no index columns beyond
     t_idx."""
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        _spark_schema,
-        _stream_rows,
-    )
-
     p = os.path.join(tmp_path, "msgs.nc")
     msgs = ["alpha", "b", "ccc"]
     lab = np.zeros((3, 8), dtype="S1")
@@ -860,8 +772,8 @@ def test_char_only_record_variable(tmp_path):
         data={"msg": lab},
     )
     nc = NetCDF3File(p)
-    assert _spark_schema(nc) == "t_idx long, msg string"
-    rows = _stream_rows(p, ["t_idx", "msg"], 0, 3)
+    assert NetCDF3DataSource.file_schema(nc) == "t_idx long, `msg` string"
+    rows = _scan_rows(p, ["t_idx", "msg"], 0, 3)
     assert rows == [(0, "alpha"), (1, "b"), (2, "ccc")]
 
 
@@ -876,167 +788,19 @@ def test_src_netcdf_char_scan_oracle(check):
 
 
 def test_nc3_arrow_tail_protocol(spark, tmp_path):
-    """Partition-planned Arrow tail (tail_reader=arrow): latestOffset
-    is the header's numrecs, partitions() splits the microbatch range
-    into contiguous record runs, read() yields Arrow RecordBatches —
-    and the rows decode exactly like the Simple tail's (parity on
-    values, fill-NULLs, and global record indexes)."""
-    from netcdf4_variable_streamer_spark.sources.netcdf3 import (
-        append_records,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3ArrowStreamReader,
-        NetCDF3DataSource,
-        NetCDF3StreamReader,
-    )
-
-    path = os.path.join(tmp_path, "atail.nc")
-    v = np.arange(12, dtype=np.float32).reshape(6, 2)
-    v[2, 1] = -999.0
-    write_netcdf3(
-        path,
-        dims={"t": None, "x": 2},
-        variables={"v": ("float32", ("t", "x"))},
-        data={"v": v},
-        var_attrs={"v": {"_FillValue": np.float32(-999.0)}},
-    )
-    spark.dataSource.register(NetCDF3DataSource)
-    schema = (
-        spark.read.format(FORMAT3_NAME).option("path", path).load().schema
-    )
-    ar = NetCDF3ArrowStreamReader(path, schema, target_partitions=3)
-    assert ar.initialOffset() == {"rec": 0}
-    off1 = ar.latestOffset()
-    assert off1 == {"rec": 6}
-    parts = ar.partitions(ar.initialOffset(), off1)
-    assert len(parts) == 3
-    assert [(p.lo, p.hi) for p in parts] == [(0, 2), (2, 4), (4, 6)]
-    assert ar.partitions(off1, off1) == []
-
-    def arrow_rows(reader, start, end):
-        rows = []
-        for p in reader.partitions(start, end):
-            for rb in reader.read(p):
-                rows.extend(
-                    tuple(r[c] for c in reader.columns)
-                    for r in rb.to_pylist()
-                )
-        return rows
-
-    got = arrow_rows(ar, ar.initialOffset(), off1)
-    sr = NetCDF3StreamReader(path, schema)
-    want, off_s = sr.read(sr.initialOffset())
-    assert off_s == off1
-    assert sorted(got, key=str) == sorted(list(want), key=str)
-    assert any(r[-1] is None for r in got)  # fill -> NULL in Arrow too
-
-    # appended records arrive as the next microbatch, same as Simple
-    append_records(path, {"v": np.full((2, 2), 9, dtype=np.float32)})
-    off2 = ar.latestOffset()
-    assert off2 == {"rec": 8}
-    got2 = arrow_rows(ar, off1, off2)
-    assert len(got2) == 4 and all(r[-1] == 9.0 for r in got2)
-    assert {r[0] for r in got2} == {6, 7}
-
-    # directory archives refuse the arrow tail with a pointer
-    with pytest.raises(ValueError, match="single .nc file"):
-        NetCDF3ArrowStreamReader(str(tmp_path), schema)
+    record_cases.arrow_tail_protocol(spark, "netcdf3", tmp_path)
 
 
 def test_src_netcdf3_arrow_tail_oracle(check):
     """The Arrow tail through a real availableNow streaming query
-    matches the same DuckDB oracle as the Simple tail — the two
-    readers are result-identical by construction."""
+    matches the DuckDB oracle."""
     pdf = check("src_netcdf3_arrow_tail")
     assert len(pdf) == 64
     assert int(pdf["n_cells"].sum()) == 64 * 32 * 32
 
 
-def test_arrow_dir_tail_protocol(tmp_path):
-    """Arrow directory tail: same pinned-count offsets and freeze
-    enforcement as the Simple dir reader, with microbatch deltas split
-    into executor partitions whose Arrow rows carry GLOBAL record
-    indexes across member boundaries."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from netcdf4_variable_streamer_spark.sources.netcdf3 import (
-        append_records,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        NetCDF3ArrowDirStreamReader,
-        NetCDF3DirStreamReader,
-    )
-
-    d = os.path.join(tmp_path, "arch")
-    os.makedirs(d)
-
-    def mk(i, n):
-        write_netcdf3(
-            os.path.join(d, f"part-{i}.nc"),
-            dims={"t": None, "x": 2},
-            variables={"v": ("int32", ("t", "x"))},
-            data={"v": np.arange(n * 2, dtype=np.int32).reshape(n, 2)},
-        )
-
-    mk(0, 3)
-    mk(1, 2)
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("x_idx", IntegerType()),
-            StructField("v", IntegerType()),
-        ]
-    )
-    ar = NetCDF3ArrowDirStreamReader(d, schema, target_partitions=3)
-    off0 = ar.initialOffset()
-    off1 = ar.latestOffset()
-    assert off1 == {
-        "files": ["part-0.nc", "part-1.nc"],
-        "counts": [3, 2],
-    }
-
-    def rows(start, end):
-        out = []
-        for p in ar.partitions(start, end):
-            for rb in ar.read(p):
-                out.extend(
-                    tuple(r[c] for c in ar.columns)
-                    for r in rb.to_pylist()
-                )
-        return out
-
-    got = rows(off0, off1)
-    sr = NetCDF3DirStreamReader(d, schema)
-    want, off_s = sr.read(off0)
-    assert off_s == off1
-    assert sorted(got) == sorted(list(want))
-    assert {r[0] for r in got} == set(range(5))  # global indexes
-
-    # newest member grows + a new member appears: delta only
-    append_records(
-        os.path.join(d, "part-1.nc"),
-        {"v": np.array([[7, 8]], dtype=np.int32)},
-    )
-    mk(2, 2)
-    off2 = ar.latestOffset()
-    assert off2["counts"] == [3, 3, 2]
-    got2 = rows(off1, off2)
-    assert {r[0] for r in got2} == {5, 6, 7}
-    assert ar.partitions(off2, off2) == []
-
-    # freeze invariant enforced at plan time
-    append_records(
-        os.path.join(d, "part-0.nc"),
-        {"v": np.array([[9, 9]], dtype=np.int32)},
-    )
-    with pytest.raises(ValueError, match="frozen member grew"):
-        ar.partitions(off2, ar.latestOffset())
+def test_arrow_dir_tail_protocol(spark, tmp_path):
+    record_cases.arrow_dir_tail_protocol(spark, "netcdf3", tmp_path)
 
 
 def test_src_netcdf3_arrow_dir_tail_oracle(check):
@@ -1051,19 +815,8 @@ def test_dir_tail_header_reads_flat(tmp_path):
     CONSTANT (exactly 1: the growing newest member) as the archive
     grows 3 -> 30 members — while the freeze invariant stays enforced
     (a mutated frozen member is re-read and rejected)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from netcdf4_variable_streamer_spark.sources.netcdf3 import (
         append_records,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        NetCDF3ArrowDirStreamReader,
-        NetCDF3DirStreamReader,
     )
 
     d = os.path.join(tmp_path, "arch")
@@ -1077,67 +830,53 @@ def test_dir_tail_header_reads_flat(tmp_path):
             data={"v": np.arange(n * 2, dtype=np.int32).reshape(n, 2)},
         )
 
-    schema = StructType(
-        [
-            StructField("t_idx", LongType()),
-            StructField("x_idx", IntegerType()),
-            StructField("v", IntegerType()),
-        ]
-    )
+    mk(0, 2)
+    mk(1, 2)
+    mk(2, 2)
+    sr = record_cases.tail("netcdf3", d)
+    reads = []
+    inner = sr._pinned._read_count
+    sr._pinned._read_count = lambda p: (
+        reads.append(p),
+        inner(p),
+    )[1]
 
-    for cls in (NetCDF3DirStreamReader, NetCDF3ArrowDirStreamReader):
-        for f in os.listdir(d):
-            os.remove(os.path.join(d, f))
-        mk(0, 2)
-        mk(1, 2)
-        mk(2, 2)
-        sr = cls(d, schema)
-        reads = []
-        inner = sr._pinned._read_count
-        sr._pinned._read_count = lambda p: (
-            reads.append(p),
-            inner(p),
-        )[1]
+    def trigger(start):
+        end = sr.latestOffset()
+        sr.partitions(start, end)
+        return end
 
-        def trigger(start):
-            if hasattr(sr, "latestOffset"):
-                end = sr.latestOffset()
-                list(sr.partitions(start, end))
-            else:
-                _, end = sr.read(start)
-            return end
-
-        off = trigger(sr.initialOffset())
-        first_reads = len(reads)
-        assert first_reads == 3  # cold cache: one read per member
-        per_trigger = []
-        for i in range(3, 30):
-            mk(i, 2)
-            n0 = len(reads)
-            off = trigger(off)
-            per_trigger.append(len(reads) - n0)
-        assert off["counts"] == [2] * 30
-        # each trigger reads the NEW member (freezing the previous
-        # newest, one read) plus the current newest: constant 2, never
-        # growing with member count
-        assert per_trigger == [2] * 27, per_trigger
-        assert sr._pinned.header_reads(d, off["files"]) == 1
-        # quiet trigger (no growth at all): exactly ONE header read
+    off = trigger(sr.initialOffset())
+    first_reads = len(reads)
+    assert first_reads == 3  # cold cache: one read per member
+    per_trigger = []
+    for i in range(3, 30):
+        mk(i, 2)
         n0 = len(reads)
+        off = trigger(off)
+        per_trigger.append(len(reads) - n0)
+    assert off["counts"] == [2] * 30
+    # each trigger reads the NEW member (freezing the previous
+    # newest, one read) plus the current newest: constant 2, never
+    # growing with member count
+    assert per_trigger == [2] * 27, per_trigger
+    assert sr._pinned.header_reads(d, off["files"]) == 1
+    # quiet trigger (no growth at all): exactly ONE header read
+    n0 = len(reads)
+    trigger(off)
+    assert len(reads) - n0 == 1
+    # the invariant is still enforced, not assumed: mutate a
+    # frozen member and the stat guard forces a re-read + reject
+    append_records(
+        os.path.join(d, "part-00.nc"),
+        {"v": np.array([[9, 9]], dtype=np.int32)},
+    )
+    # header_reads must PREDICT that re-read (ADVICE r9 #2): the
+    # member is cached but its stat signature flipped, so the
+    # observability number counts it as a read, not a hit
+    assert sr._pinned.header_reads(d, off["files"]) == 2
+    with pytest.raises(ValueError, match="frozen member grew"):
         trigger(off)
-        assert len(reads) - n0 == 1
-        # the invariant is still enforced, not assumed: mutate a
-        # frozen member and the stat guard forces a re-read + reject
-        append_records(
-            os.path.join(d, "part-00.nc"),
-            {"v": np.array([[9, 9]], dtype=np.int32)},
-        )
-        # header_reads must PREDICT that re-read (ADVICE r9 #2): the
-        # member is cached but its stat signature flipped, so the
-        # observability number counts it as a read, not a hit
-        assert sr._pinned.header_reads(d, off["files"]) == 2
-        with pytest.raises(ValueError, match="frozen member grew"):
-            trigger(off)
 
 
 def test_frozen_cache_invalidates_on_inode_flip(tmp_path):
@@ -1194,49 +933,12 @@ def test_union_schema_scan_oracle(check):
 
 
 def test_union_schema_strict_mode_refuses(spark):
-    """The default strict mode must refuse the evolving directory
-    loudly, naming the union option; union mode must read it with
-    name-aligned NULL fill."""
-    import pytest as _pytest
-
-    from netcdf4_variable_streamer_spark.session import (
-        apply_runtime_confs,
-    )
     from netcdf4_variable_streamer_spark.sources import queries as srcq
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
 
-    path = srcq.ensure_nc3_evolving()
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF3DataSource)
-    with _pytest.raises(Exception, match="schema_evolution=union"):
-        (
-            spark.read.format(FORMAT3_NAME)
-            .option("path", path)
-            .load()
-            .count()
-        )
-    df = (
-        spark.read.format(FORMAT3_NAME)
-        .option("path", path)
-        .option("schema_evolution", "union")
-        .load()
+    record_cases.union_strict_then_null_fill(
+        spark, "netcdf3", srcq.ensure_nc3_evolving(), "time_idx", 32,
+        "humidity",
     )
-    assert "humidity" in df.columns
-    from pyspark.sql import functions as F
-
-    row = (
-        df.filter(F.col("time_idx") < 32)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("humidity").alias("n_hum"),
-            F.count("temperature").alias("n_temp"),
-        )
-        .collect()[0]
-    )
-    assert row.n > 0 and row.n_hum == 0 and row.n_temp == row.n
 
 
 def test_union_schema_conflicting_signature_refuses(tmp_path, spark):
@@ -1277,45 +979,6 @@ def test_union_schema_conflicting_signature_refuses(tmp_path, spark):
         )
 
 
-def test_union_simple_tail_refuses(spark):
-    """schema_evolution=union with tail_reader=simple must refuse
-    loudly — the Simple dir reader has no typed-NULL machinery."""
-    from netcdf4_variable_streamer_spark.session import (
-        apply_runtime_confs,
-    )
-    from netcdf4_variable_streamer_spark.sources import queries as srcq
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
-
-    apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF3DataSource)
-    stream = (
-        spark.readStream.format(FORMAT3_NAME)
-        .option("path", srcq.ensure_nc3_evolving())
-        .option("schema_evolution", "union")
-        .option("tail_reader", "simple")
-        .load()
-    )
-    with pytest.raises(Exception, match="Arrow tail"):
-        import tempfile
-        import uuid
-
-        (
-            stream.writeStream.format("memory")
-            .queryName(f"u{uuid.uuid4().hex[:8]}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="ckpt_"),
-            )
-            .start()
-            .awaitTermination()
-        )
-
-
 def test_union_dir_tail_follows_evolution_live(tmp_path, spark):
     """The union dir tail must follow an archive EVOLVING between
     triggers: batch 1 drains a v-only member; a new member carrying
@@ -1329,9 +992,6 @@ def test_union_dir_tail_follows_evolution_live(tmp_path, spark):
     )
     from netcdf4_variable_streamer_spark.sources.netcdf3 import (
         write_netcdf3 as _w,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        NetCDF3ArrowDirStreamReader,
     )
     from pyspark.sql.types import (
         IntegerType,
@@ -1356,7 +1016,7 @@ def test_union_dir_tail_follows_evolution_live(tmp_path, spark):
             StructField("w", IntegerType()),
         ]
     )
-    sr = NetCDF3ArrowDirStreamReader(d, schema, union_schema=True)
+    sr = record_cases.tail("netcdf3", d, schema, schema_evolution="union")
     start = sr.initialOffset()
     end1 = sr.latestOffset()
     rows1 = [
@@ -1402,7 +1062,7 @@ def test_mask_scale_helpers():
     range's endpoints per the NUG)."""
     from types import SimpleNamespace
 
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
+    from netcdf4_variable_streamer_spark.sources.records_source import (
         _invalid_mask,
         _mask_scale,
     )
@@ -1457,10 +1117,6 @@ def test_mask_scale_cf_time_precedence(tmp_path):
         NetCDF3File,
         write_netcdf3,
     )
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        _spark_schema,
-    )
-
     p = os.path.join(tmp_path, "both.nc")
     write_netcdf3(
         p,
@@ -1475,11 +1131,15 @@ def test_mask_scale_cf_time_precedence(tmp_path):
         },
     )
     nc = NetCDF3File(p)
-    ddl = _spark_schema(nc, decode_cf_time=True, mask_and_scale=True)
-    assert "when timestamp_ntz" in ddl
+    ddl = NetCDF3DataSource.file_schema(
+        nc, decode_cf_time=True, mask_and_scale=True
+    )
+    assert "`when` timestamp_ntz" in ddl
     # without CF decode, the packing applies
-    ddl2 = _spark_schema(nc, decode_cf_time=False, mask_and_scale=True)
-    assert "when double" in ddl2
+    ddl2 = NetCDF3DataSource.file_schema(
+        nc, decode_cf_time=False, mask_and_scale=True
+    )
+    assert "`when` double" in ddl2
 
 
 def test_mask_scale_tail_refusal(spark, tmp_path):
@@ -1522,6 +1182,19 @@ def test_mask_scale_tail_refusal(spark, tmp_path):
         finally:
             if q is not None:
                 q.stop()
+
+
+@pytest.mark.parametrize("option", ["decode_cf_time", "mask_and_scale"])
+@pytest.mark.parametrize("fmt", ["netcdf3", "netcdf4"])
+def test_tail_refuses_batch_only_option(tmp_path, fmt, option):
+    """decode_cf_time and mask_and_scale change the declared schema but
+    the tail emits raw numbers, so both containers' tails refuse them
+    when the stream starts, naming the option."""
+    _source, ext, write, _append = record_cases.ADAPTERS[fmt]
+    path = os.path.join(tmp_path, "raw" + ext)
+    write(path, record_cases.records(2))
+    with pytest.raises(ValueError, match=f"{option} is a batch-scan"):
+        record_cases.tail(fmt, path, **{option: "true"})
 
 
 def test_mask_scale_unpacked_values(spark, tmp_path):

@@ -648,48 +648,18 @@ def test_round10_source_keys_prune_partitions(spark):
         apply_runtime_confs,
     )
     from netcdf4_variable_streamer_spark.sources import queries as srcq
-    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
-        FORMAT3_NAME,
-        NetCDF3DataSource,
-    )
-    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
-        FORMAT4_NAME,
-        NetCDF4DataSource,
-    )
+    from tests.record_cases import pushdown_prunes_records
 
     apply_runtime_confs(spark)
-    spark.dataSource.register(NetCDF3DataSource)
-    spark.dataSource.register(NetCDF4DataSource)
+    union = {"schema_evolution": "union"}
     cases = [
-        (FORMAT4_NAME, srcq.ensure_nc4_userblock(), "time_idx", {}),
-        (FORMAT4_NAME, srcq.ensure_nc4_fletcher(), "time_idx", {}),
-        (
-            FORMAT3_NAME,
-            srcq.ensure_nc3_evolving(),
-            "time_idx",
-            {"schema_evolution": "union"},
-        ),
-        (
-            FORMAT4_NAME,
-            srcq.ensure_nc4_evolving(),
-            "t_idx",
-            {"schema_evolution": "union"},
-        ),
+        ("netcdf4", srcq.ensure_nc4_userblock(), "time_idx", {}),
+        ("netcdf4", srcq.ensure_nc4_fletcher(), "time_idx", {}),
+        ("netcdf3", srcq.ensure_nc3_evolving(), "time_idx", union),
+        ("netcdf4", srcq.ensure_nc4_evolving(), "t_idx", union),
     ]
     for fmt, path, idx, opts in cases:
-        rd = spark.read.format(fmt).option("path", path)
-        for k, v in opts.items():
-            rd = rd.option(k, v)
-        base = rd.load()
-        full = base.rdd.getNumPartitions()
-        from pyspark.sql import functions as F
-
-        pruned = (
-            rd.load()
-            .filter((F.col(idx) >= 0) & (F.col(idx) < 4))
-            .rdd.getNumPartitions()
-        )
-        assert pruned < full, (path, full, pruned)
+        pushdown_prunes_records(spark, fmt, path, idx, **opts)
 
 
 def test_binary_hamming_broadcast_no_python(spark):

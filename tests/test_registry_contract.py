@@ -1,14 +1,15 @@
 """Registry/doc drift guards (VERDICT r2 "Next round" #7).
 
 The driver's correctness window is the first 50 keys of
-``ordered_registry()``, so CANONICAL_ORDER is part of the external
-contract. These tests pin it to the actual registry (no dangling names,
-no unlisted keys, no duplicates) and pin every doc's claimed key count
-to ``len(REGISTRY)`` so the 188-vs-191 drift class cannot recur.
+``ordered_registry()``, so that order is part of the external contract.
+It is derived from the committed CORRECTNESS_r*.json files; these tests
+check it against the policy, and pin every doc's claimed key count to
+``len(REGISTRY)`` so the 188-vs-191 drift class cannot recur.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -16,9 +17,7 @@ import netcdf4_variable_streamer_spark.operators  # noqa: F401
 import netcdf4_variable_streamer_spark.sources  # noqa: F401
 import netcdf4_variable_streamer_spark.streaming  # noqa: F401
 from netcdf4_variable_streamer_spark.registry import (
-    CANONICAL_ORDER,
     REGISTRY,
-    WINDOW_ROUND,
     ordered_registry,
 )
 
@@ -26,62 +25,58 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_canonical_order_is_exactly_the_registry():
-    assert len(set(CANONICAL_ORDER)) == len(CANONICAL_ORDER), "duplicates"
-    missing = set(REGISTRY) - set(CANONICAL_ORDER)
-    dangling = set(CANONICAL_ORDER) - set(REGISTRY)
-    assert not missing, f"registered but unordered: {sorted(missing)}"
-    assert not dangling, f"ordered but unregistered: {sorted(dangling)}"
-    assert list(ordered_registry()) == CANONICAL_ORDER
+    """The contract order is a permutation of the registry, and the
+    same on every call."""
+    order = list(ordered_registry())
+    assert sorted(order) == sorted(REGISTRY)
+    assert len(set(order)) == len(order), "duplicates"
+    assert list(ordered_registry()) == order
+
+
+def _latest_checks() -> dict[str, tuple[int, bool]]:
+    """{key: (round, hash_match)} of each key's most recent check."""
+    pat = re.compile(r"CORRECTNESS_r(\d+)\.json$")
+    latest: dict[str, tuple[int, bool]] = {}
+    for fname in os.listdir(REPO):
+        m = pat.match(fname)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        with open(os.path.join(REPO, fname)) as f:
+            for k, v in json.load(f).items():
+                if k not in latest or latest[k][0] < rnd:
+                    latest[k] = (rnd, v.get("hash_match") is True)
+    return latest
 
 
 def test_window_policy():
-    """Round-agnostic rotation policy (VERDICT r4 "What's wrong" #1): the
-    50-key window must (a) re-check every key that FAILED its most recent
-    driver check, and (b) waste no slot on a driver-green key while a
-    never-checked key waits outside the window.
+    """The derived order follows the rotation policy over every
+    committed driver result: keys that FAILED their most recent check
+    come first, then never-checked keys, then green keys with the
+    stalest check first; registration order breaks ties."""
+    latest = _latest_checks()
+    position = {k: i for i, k in enumerate(REGISTRY)}
 
-    Only driver rounds STRICTLY OLDER than ``WINDOW_ROUND`` count: the
-    ordering was rotated with that information, and a fresh CORRECTNESS
-    drop from the current round must not retro-invalidate it (the round-4
-    version of this test failed the suite on its own success)."""
-    import json
+    def group(k):
+        if k not in latest:
+            return 1
+        return 2 if latest[k][1] else 0
 
-    green: set[str] = set()
-    failed: set[str] = set()
-    pat = re.compile(r"CORRECTNESS_r(\d+)\.json$")
-    for fname in sorted(os.listdir(REPO)):
-        m = pat.match(fname)
-        if not m or int(m.group(1)) >= WINDOW_ROUND:
+    order = list(ordered_registry())
+    for a, b in zip(order, order[1:]):
+        ga, gb = group(a), group(b)
+        assert ga <= gb, f"{a} (group {ga}) before {b} (group {gb})"
+        if ga != gb:
             continue
-        with open(os.path.join(REPO, fname)) as f:
-            for k, v in json.load(f).items():
-                if v.get("hash_match") is True:
-                    green.add(k)
-                    failed.discard(k)
-                else:
-                    failed.add(k)
-                    green.discard(k)
-    window = CANONICAL_ORDER[:50]
-    missing = [k for k in failed if k not in window]
-    assert not missing, f"known driver failures left out of window: {missing}"
-    unchecked = [k for k in CANONICAL_ORDER if k not in green | failed]
-    if any(k not in window for k in unchecked):
-        stale = [k for k in window if k in green]
-        assert not stale, (
-            f"window wastes slots on driver-green keys: {stale}"
-        )
-    # WINDOW_ROUND must not lag a CORRECTNESS file the rotation should
-    # have consumed by more than one round (the file for WINDOW_ROUND
-    # itself may legitimately appear while the round is in flight).
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(REPO)
-        if (m := pat.match(f))
-    ]
-    assert WINDOW_ROUND >= max(rounds), (
-        f"CANONICAL_ORDER rotated for r{WINDOW_ROUND} but newer driver "
-        f"results exist (r{max(rounds)}) — re-rotate and bump WINDOW_ROUND"
-    )
+        ra = latest[a][0] if ga == 2 else 0
+        rb = latest[b][0] if gb == 2 else 0
+        assert ra <= rb, f"green {a} (r{ra}) before staler {b} (r{rb})"
+        if ra == rb:
+            assert position[a] < position[b], f"tie {a}, {b} not stable"
+
+
+def test_order_without_results_is_registration_order(tmp_path):
+    assert list(ordered_registry(str(tmp_path))) == list(REGISTRY)
 
 
 def test_doc_key_counts_match_registry():

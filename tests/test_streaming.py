@@ -1589,3 +1589,28 @@ def test_substring_ttl_replay_safe(spark, tmp_path):
     import shutil
 
     shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_overlap_jobs_keeps_cause_and_reports_siblings():
+    """When overlapped writes fail, the first error propagates with its
+    own cause chain intact, and every sibling failure is reported with
+    it. Pure threads, no Spark job."""
+    import time
+
+    root = KeyError("root cause")
+
+    def first():
+        try:
+            raise root
+        except KeyError as e:
+            raise ValueError("first write failed") from e
+
+    def second():
+        time.sleep(0.2)  # fails after the first one
+        raise RuntimeError("second write failed")
+
+    with pytest.raises(ValueError, match="first write failed") as ei:
+        sq._overlap_jobs(first, second)
+    assert ei.value.__cause__ is root
+    notes = "\n".join(getattr(ei.value, "__notes__", []))
+    assert "RuntimeError: second write failed" in notes
