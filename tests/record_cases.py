@@ -45,26 +45,29 @@ SCHEMA = StructType(
 )
 
 
-def _write3(path: str, v: np.ndarray) -> None:
+def _write3(path: str, v: np.ndarray, var_attrs=None) -> None:
     write_netcdf3(
         path,
         dims={"t": None, "x": 2},
         variables={"v": ("float32", ("t", "x"))},
         data={"v": v},
+        var_attrs=var_attrs,
     )
 
 
-def _write4(path: str, v: np.ndarray) -> None:
+def _write4(path: str, v: np.ndarray, var_attrs=None) -> None:
     create_netcdf4_tail(
         path,
         dims={"t": None, "x": 2},
         variables={"v": ("float32", ("t", "x"))},
         capacity=16,
+        var_attrs=var_attrs,
     )
     append_records_nc4(path, {"v": v})
 
 
-# format -> (DataSource, file extension, write(path, v), append(path, v))
+# format -> (DataSource, file extension, write(path, v[, var_attrs]),
+# append(path, v))
 ADAPTERS = {
     "netcdf3": (
         NetCDF3DataSource, ".nc", _write3,
@@ -107,11 +110,14 @@ def batch_rows(spark, fmt: str, path: str) -> list[tuple]:
 
 def arrow_tail_protocol(spark, fmt: str, tmp_path) -> None:
     """File tail: the offset is the published record count, a microbatch
-    splits into contiguous record runs, its rows equal the batch scan's,
-    and appended records arrive as the next microbatch."""
+    splits into contiguous record runs, its rows equal the batch scan's
+    (a ``_FillValue`` cell reads as NULL), and appended records arrive
+    as the next microbatch."""
     _source, ext, write, append = ADAPTERS[fmt]
     path = os.path.join(tmp_path, "atail" + ext)
-    write(path, records(6))
+    v = records(6)
+    v[2, 1] = -999.0
+    write(path, v, {"v": {"_FillValue": np.float32(-999.0)}})
     ft = tail(fmt, path, tail_partitions=3)
     assert ft.initialOffset() == {"rec": 0}
     off1 = ft.latestOffset()
@@ -120,7 +126,9 @@ def arrow_tail_protocol(spark, fmt: str, tmp_path) -> None:
     assert [(p.lo, p.hi) for p in parts] == [(0, 2), (2, 4), (4, 6)]
     assert ft.partitions(off1, off1) == []
     got = tail_rows(ft, ft.initialOffset(), off1)
-    assert sorted(got) == sorted(batch_rows(spark, fmt, path))
+    want = batch_rows(spark, fmt, path)
+    assert sorted(got, key=str) == sorted(want, key=str)
+    assert [r[:2] for r in got if r[-1] is None] == [(2, 1)]
 
     append(path, np.full((2, 2), 9, dtype=np.float32))
     off2 = ft.latestOffset()
@@ -203,11 +211,13 @@ def dir_tail_freeze_and_replay(fmt: str, tmp_path) -> None:
 
 
 def union_strict_then_null_fill(
-    spark, fmt: str, path: str, idx_col: str, n_old: int, var: str
+    spark, fmt: str, path: str, idx_col: str, n_old: int, cells: int,
+    var: str, kept: str,
 ) -> None:
     """An evolving directory (later members add ``var``): the default
     strict mode refuses naming the union option, and union mode reads
-    ``var`` as NULL on the ``n_old`` records that predate it."""
+    all ``n_old`` x ``cells`` cells of the records that predate ``var``,
+    with ``var`` NULL and ``kept`` (in every member) never NULL."""
     from pyspark.sql import functions as F
 
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
@@ -224,10 +234,15 @@ def union_strict_then_null_fill(
     )
     row = (
         df.filter(F.col(idx_col) < n_old)
-        .agg(F.count(F.lit(1)).alias("n"), F.count(var).alias("n_var"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(var).alias("n_var"),
+            F.count(kept).alias("n_kept"),
+        )
         .collect()[0]
     )
-    assert row.n > 0 and row.n_var == 0
+    assert row.n == n_old * cells
+    assert row.n_var == 0 and row.n_kept == row.n
 
 
 def pushdown_prunes_records(

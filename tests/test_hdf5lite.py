@@ -3084,7 +3084,8 @@ def test_nc4_union_schema_strict_refuses_and_union_reads(spark):
     from netcdf4_variable_streamer_spark.sources import queries as srcq
 
     record_cases.union_strict_then_null_fill(
-        spark, "netcdf4", srcq.ensure_nc4_evolving(), "t_idx", 24, "name"
+        spark, "netcdf4", srcq.ensure_nc4_evolving(), "t_idx", 24, 4,
+        "name", "v",
     )
 
 

@@ -937,7 +937,7 @@ def test_union_schema_strict_mode_refuses(spark):
 
     record_cases.union_strict_then_null_fill(
         spark, "netcdf3", srcq.ensure_nc3_evolving(), "time_idx", 32,
-        "humidity",
+        srcq.GRID_Y * srcq.GRID_X, "humidity", "temperature",
     )
 
 
