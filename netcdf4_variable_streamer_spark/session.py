@@ -25,11 +25,27 @@ RUNTIME_CONFS = {
     "spark.sql.python.filterPushdown.enabled": "true",
 }
 
+
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the box's physical RAM (``MemTotal``), capped at 16g; 16g
+    where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1])
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 BUILD_CONFS = {
     **RUNTIME_CONFS,
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.driver.memory": "16g",
+    "spark.driver.memory": _driver_memory(),
     "spark.ui.enabled": "false",
 }
 

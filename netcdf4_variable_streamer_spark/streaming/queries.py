@@ -133,42 +133,135 @@ def _overlap_jobs(*thunks) -> None:
         raise first
 
 
-def _backfill_premarker(
-    run_dir: str, prefix: str, tables: tuple
-) -> None:
-    """Backfill commit markers for a run_dir persisted by the
-    PRE-marker protocol (state tables written with no commit_v*): a
-    marker is minted for every version whose sibling tables are ALL
-    complete (parquet _SUCCESS present — the old protocol wrote them
-    before anything else could observe the version).
+def _versions(run_dir: str, prefix: str) -> list[int]:
+    """Ascending N of every ``{prefix}{N}`` entry in ``run_dir``.
+    Entries whose suffix is not a number (a torn ``commit_v``, an
+    external tool's ``commit_v2.tmp`` backup) are ignored."""
+    return sorted(
+        int(s)
+        for p in os.listdir(run_dir)
+        if p.startswith(prefix) and (s := p[len(prefix):]).isdigit()
+    )
 
-    Round 20 (ADVICE r19 #1): the scan runs ONLY when the run_dir has
-    no commit_v* at all — a genuinely pre-marker layout. A marker-era
-    run_dir reopened after a mid-batch crash can hold a NEWER version
-    whose ``{prefix}``/sibling pair completed while another overlapped
-    write (e.g. dec_v) tore; minting a marker for it would surface a
-    version with missing decisions to marker-keyed readers. Such
-    versions stay invisible and the replayed batch rewrites them
-    idempotently, exactly as the marker protocol intends."""
-    for _p in os.listdir(run_dir):
-        if _p.startswith("commit_v") and _p[len("commit_v"):].isdigit():
-            return
-    for _p in os.listdir(run_dir):
-        if not _p.startswith(f"{prefix}_v"):
-            continue
-        _v = _p[len(f"{prefix}_v"):]
-        if not _v.isdigit():
-            continue
-        if all(
-            os.path.exists(
-                os.path.join(run_dir, f"{_t}_v{_v}", "_SUCCESS")
-            )
-            for _t in tables
-        ):
-            with open(
-                os.path.join(run_dir, f"commit_v{_v}"), "w"
-            ):
-                pass
+
+# Once this many committed deltas lie after a loop's newest base, the
+# next batch writes a new base instead of a delta (compaction), so a
+# state read lists at most _COMPACT_AFTER + 1 directories.
+_COMPACT_AFTER = 16
+# Written into a loop's run_dir when the loop first opens it empty: its
+# versions are bases and deltas. A run_dir without it holds full
+# snapshots only.
+_DELTA_LAYOUT = "delta_layout"
+
+
+class VersionedState:
+    """The versioned parquet state of one foreachBatch loop.
+
+    Batch N writes each table ``t`` to ``{t}_v{N}`` with overwrite and
+    then its marker ``commit_v{N}``, strictly last. A version counts
+    only once its marker exists, so a crash mid-batch leaves it
+    invisible and the replayed batch rewrites it idempotently; a marker
+    naming a version whose tables are gone fails loudly on the read.
+
+    A batch usually writes a *delta*: only its own rows. Batch N reads
+    the newest committed *base* older than N plus every committed delta
+    after that base, in one multi-path parquet read per table. The read
+    takes the table's schema from a frame of the batch, so listing the
+    delta directories reads no footers. When _COMPACT_AFTER deltas lie
+    after the base, the batch writes a base instead (the whole state)
+    and its marker holds ``base``. The first batch's own rows are the
+    whole state, so it writes a base too. ``ledgers`` are small tables
+    that every batch rewrites whole; they are read from the newest
+    committed version alone.
+
+    A run_dir opened empty gets the _DELTA_LAYOUT file. A run_dir
+    without it holds full snapshots, written before deltas existed:
+    every committed version is a base and every batch writes one, so
+    it resumes with the same decisions. A run_dir with state tables but
+    no marker at all comes from the pre-marker protocol; a marker is
+    minted for every version whose tables are all complete (parquet
+    ``_SUCCESS`` present). That scan never runs once any marker exists:
+    a newer version whose tables completed while a sibling write tore
+    must stay invisible."""
+
+    def __init__(
+        self, spark: SparkSession, run_dir: str, tables: tuple,
+        ledgers: tuple = (),
+    ):
+        self.spark, self.run_dir, self.ledgers = spark, run_dir, ledgers
+        layout = os.path.join(run_dir, _DELTA_LAYOUT)
+        if not _versions(run_dir, "commit_v"):
+            old = _versions(run_dir, f"{tables[0]}_v")
+            if not old:
+                open(layout, "w").close()
+            for v in old:
+                if all(
+                    os.path.exists(self._path(t, v, "_SUCCESS"))
+                    for t in (*tables, *ledgers)
+                ):
+                    open(self._path("commit", v), "w").close()
+        self.deltas = os.path.exists(layout)
+        self.batch_id, self.read_versions, self.base = -1, [], True
+
+    def _path(self, table: str, version: int, *more: str) -> str:
+        return os.path.join(self.run_dir, f"{table}_v{version}", *more)
+
+    def _is_base(self, version: int) -> bool:
+        if not self.deltas:
+            return True
+        with open(self._path("commit", version)) as f:
+            return f.read() == "base"
+
+    def recover(self, batch_id: int) -> bool:
+        """Recover the committed state batch ``batch_id`` builds on;
+        True iff there is any."""
+        done = [
+            v for v in _versions(self.run_dir, "commit_v") if v < batch_id
+        ]
+        start = next(
+            (i for i in reversed(range(len(done))) if self._is_base(done[i])),
+            0,
+        )
+        self.batch_id, self.read_versions = batch_id, done[start:]
+        self.base = (
+            not self.deltas
+            or not done
+            or len(self.read_versions) > _COMPACT_AFTER
+        )
+        return bool(done)
+
+    def read(self, table: str, like: DataFrame) -> DataFrame:
+        """The recovered state of ``table``; ``like`` has its columns."""
+        versions = self.read_versions
+        if table in self.ledgers:
+            versions = versions[-1:]
+        return self.spark.read.schema(like.schema).parquet(
+            *(self._path(table, v) for v in versions)
+        )
+
+    def rows(self, prior: DataFrame | None, delta: DataFrame) -> DataFrame:
+        """What this batch writes for an append-only table."""
+        if self.base and prior is not None:
+            return prior.unionByName(delta)
+        return delta
+
+    def commit(self, frames: dict, *thunks) -> None:
+        """Write each ``{table: frame}`` to this batch's version,
+        overlapped with ``thunks``, then the marker."""
+        _overlap_jobs(
+            *thunks,
+            *(
+                lambda t=t, df=df: df.write.mode("overwrite").parquet(
+                    self._path(t, self.batch_id)
+                )
+                for t, df in frames.items()
+            ),
+        )
+        # a base marker must never be seen empty (that reads as a delta)
+        marker = self._path("commit", self.batch_id)
+        with open(marker + ".tmp", "w") as f:
+            f.write("base" if self.base else "")
+        os.replace(marker + ".tmp", marker)
 
 
 def run_to_completion(
@@ -1041,7 +1134,7 @@ def q_stream_dedup_minhash_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # foreachBatch incremental near-dedup — the production crawl loop
 # (VERDICT r10 "Next round" #4): each micro-batch PROBES the standing
 # LSH index built from every previous batch, emits its decision rows,
-# then MERGEs its own bands/shingles into the index state. Composes the
+# then APPENDS its own bands/shingles to the index state. Composes the
 # two-table API (operators.dedup.incremental_near_dedup) with the
 # foreachBatch upsert pattern above — end-to-end, this is the recurring
 # crawl pipeline whose per-batch cost is proportional to the batch.
@@ -1114,26 +1207,19 @@ def run_foreachbatch_incremental_dedup(
 
 
 def make_crawl_loop(spark: SparkSession, run_dir: str):
-    """The foreachBatch crawl closure + its batch counter. RESTART-SAFE
-    (VERDICT r11 #4): the in-memory ``state`` dict is only a cache — on
-    its first call (fresh process OR restart-from-checkpoint) the
-    closure recovers the newest committed index version STRICTLY OLDER
-    than the current batch from the versioned parquet paths on disk,
-    so a driver restart resumes with exactly the state the failed run
-    had committed. Decisions write to a PER-BATCH versioned directory
-    with overwrite, so a replayed micro-batch (failure after the state
-    write but before the checkpoint commit) is idempotent — the
-    exactly-once story is (versioned paths + overwrite), not the
-    checkpoint alone.
-
-    Round 15: state versions count only once their ``commit_v{N}``
-    marker exists — written LAST, after both the bands and shingle
-    tables — mirroring the curation loop's protocol (ADVICE r13 #3 /
-    r14 class): the old ``bands_v*``-keyed scan could select a
-    version whose sibling ``sh_v`` table a crash left missing (loud)
-    or mid-commit (silently partial under a v2 committer). Pre-marker
-    run_dirs backfill markers for every version whose bands/sh pair
-    is complete on first open."""
+    """The foreachBatch crawl closure + its batch counter. State is
+    the ``bands``/``sh`` index pair in a :class:`VersionedState`: each
+    batch probes the index committed by every earlier batch, then
+    writes only its own bands and shingles, so the bytes a batch writes
+    are proportional to the batch, not to the stream's age (apart from
+    a compacting batch every _COMPACT_AFTER + 1). RESTART-SAFE: nothing
+    is cached in memory — every call recovers the committed state
+    strictly older than its batch from disk, so a restarted driver (or
+    a fresh closure) resumes with exactly the state the failed run had
+    committed. Decisions write to ``dec_v{N}`` with overwrite, so a
+    replayed micro-batch is idempotent; the exactly-once story is
+    versioned paths + overwrite + marker last, not the checkpoint
+    alone."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
         MAX_BUCKET,
         _incremental_decisions,
@@ -1141,79 +1227,32 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
         _shingled,
     )
 
-    _backfill_premarker(run_dir, "bands", ("bands", "sh"))
-
-    state: dict[str, str] = {}
+    vs = VersionedState(spark, run_dir, ("bands", "sh"))
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        if not state:
-            prior = sorted(
-                int(s)
-                for p in os.listdir(run_dir)
-                if p.startswith("commit_v")
-                and (s := p[len("commit_v"):]).isdigit()
-                and int(s) < batch_id
-            )
-            if prior:
-                v = prior[-1]
-                state["bands"] = os.path.join(run_dir, f"bands_v{v}")
-                state["sh"] = os.path.join(run_dir, f"sh_v{v}")
         b = batch_df.select("doc_id", "text")
-        # the shingle/minhash pass is the batch's expensive map-side
-        # work and feeds THREE actions (decisions probe, bands write,
-        # sh write) — persist for the batch, unpersist at the end
-        # (round 19, guide §5; cache only, semantics unchanged)
+        # the shingle pass feeds the probe and both index writes
         batch_sh = _shingled(b, "doc_id", "text").persist()
         try:
-            new_sh = batch_sh
-            new_bands = _minhash_band_table(new_sh)
-            # the batch's three write actions (decisions, bands_v,
-            # sh_v) are independent jobs on independent paths —
-            # overlap them (round 19 session 3, guide §2.6) instead
-            # of serializing their tiny stages; the marker below
-            # still lands strictly after all three
-            writes = []
-            if state:
-                idx_bands = spark.read.parquet(state["bands"])
-                idx_sh = spark.read.parquet(state["sh"])
-                dec = _incremental_decisions(
-                    idx_bands, idx_sh, new_sh, b.select("doc_id"),
-                    qthr=6000, max_bucket=MAX_BUCKET,
-                )
-                writes.append(
-                    lambda df=dec: df.write.mode("overwrite").parquet(
-                        os.path.join(run_dir, f"dec_v{batch_id}")
-                    )
-                )
-                new_bands = idx_bands.unionByName(new_bands)
-                new_sh = idx_sh.unionByName(new_sh)
-            bands_dst = os.path.join(run_dir, f"bands_v{batch_id}")
-            sh_dst = os.path.join(run_dir, f"sh_v{batch_id}")
-            writes.append(
-                lambda df=new_bands: df.write.mode(
-                    "overwrite"
-                ).parquet(bands_dst)
-            )
-            writes.append(
-                lambda df=new_sh: df.write.mode("overwrite").parquet(
-                    sh_dst
-                )
-            )
-            _overlap_jobs(*writes)
-            # commit marker LAST: the version becomes recoverable
-            # only once both tables are fully on disk; a crash before
-            # this line makes the replayed batch recompute them
-            # idempotently
-            with open(
-                os.path.join(run_dir, f"commit_v{batch_id}"), "w"
-            ):
-                pass
-            state["bands"], state["sh"] = bands_dst, sh_dst
+            new_bands = _minhash_band_table(batch_sh)
+            frames = {"bands": new_bands, "sh": batch_sh}
+            if vs.recover(batch_id):
+                idx_bands = vs.read("bands", new_bands)
+                idx_sh = vs.read("sh", batch_sh)
+                frames = {
+                    "dec": _incremental_decisions(
+                        idx_bands, idx_sh, batch_sh, b.select("doc_id"),
+                        qthr=6000, max_bucket=MAX_BUCKET,
+                    ),
+                    "bands": vs.rows(idx_bands, new_bands),
+                    "sh": vs.rows(idx_sh, batch_sh),
+                }
+            vs.commit(frames)
         finally:
-            # unpersist even on a failed batch (ADVICE r19: no cache
-            # leak across failed batches in a long-lived session)
+            # unpersist even on a failed batch: no cache leak across
+            # failed batches in a long-lived session
             batch_sh.unpersist()
 
     return crawl, n_batches
@@ -1247,15 +1286,16 @@ def _stream_inc_oracle() -> str:
         "production crawl pipeline end-to-end: a 2-micro-batch "
         "documents stream (batch 1 = the standing corpus, batch 2 = "
         "the new crawl) drives a foreachBatch loop in which every "
-        "batch probes the PERSISTED index state (parquet band + "
-        "shingle tables merged by all prior batches) through the same "
+        "batch probes the PERSISTED index state (the parquet band + "
+        "shingle tables every prior batch committed) through the same "
         "_incremental_decisions core as the batch two-table API, then "
-        "merges its own bands in. Batch 2's decisions must therefore "
-        "equal the batch twin q_dedup_minhash_incremental exactly — "
-        "the oracle IS that query's SQL. State grows with the corpus "
-        "(the standing index), but per-batch compute is proportional "
-        "to the batch: the 100 TB recurring-crawl posture, where the "
-        "index is amortized across crawls and never recomputed. "
+        "appends only its own bands and shingles as a new delta. "
+        "Batch 2's decisions must therefore equal the batch twin "
+        "q_dedup_minhash_incremental exactly — the oracle IS that "
+        "query's SQL. Per-batch compute AND per-batch writes are "
+        "proportional to the batch (a base every 17th batch compacts "
+        "the deltas): the 100 TB recurring-crawl posture, where the "
+        "index is amortized across crawls and never rewritten. "
         "tests/test_streaming.py::test_incremental_dedup_crawl_loop "
         "additionally asserts batch-2-vs-batch-1 dedup decisions and "
         "stream == batch-twin equality.",
@@ -1275,19 +1315,20 @@ def q_stream_dedup_incremental(
 # span positions), probes the PERSISTED anchor index to flag docs,
 # recomputes exact spans over the flagged subset only, and cuts spans
 # matching the persisted span-cluster index — batch-proportional by
-# construction. State = two parquet tables grown per batch exactly
+# construction. State = two parquet tables appended per batch exactly
 # like the minhash loop's bands/shingles: `anch_vN` (the winnowed
 # anchor index) and `spcl_vN` (the distinct span-cluster set, the
-# exact-side index — the `sh` analogue), committed under the same
-# marker-last protocol with pre-marker backfill.
+# exact-side index — the `sh` analogue), in the same VersionedState.
 # ---------------------------------------------------------------------------
 
 
 def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
     """foreachBatch closure for anchored substring dedup — the
-    :func:`make_crawl_loop` protocol (versioned state + commit-marker-
-    last + idempotent per-batch decision overwrite + pre-marker
-    backfill) applied to the winnow-anchor index pair."""
+    :func:`make_crawl_loop` protocol (a :class:`VersionedState`, each
+    batch writing only its own rows; idempotent per-batch decision
+    overwrite) applied to the winnow-anchor index pair ``anch``/
+    ``spcl``. The span-cluster index stays a SET: a batch's ``spcl``
+    delta is its clusters minus the index."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
         _cap_excluded_cut,
         _rewrite_emit,
@@ -1295,39 +1336,20 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
         _winnow_anchors_of,
     )
 
-    _backfill_premarker(run_dir, "anch", ("anch", "spcl"))
-
-    state: dict[str, str] = {}
+    vs = VersionedState(spark, run_dir, ("anch", "spcl"))
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        if not state:
-            prior = sorted(
-                int(s)
-                for p in os.listdir(run_dir)
-                if p.startswith("commit_v")
-                and (s := p[len("commit_v"):]).isdigit()
-                and int(s) < batch_id
-            )
-            if prior:
-                v = prior[-1]
-                state["anch"] = os.path.join(run_dir, f"anch_v{v}")
-                state["spcl"] = os.path.join(run_dir, f"spcl_v{v}")
         b = batch_df.select("doc_id", "text")
-        # the winnow-anchor pass feeds the probe AND the anch_v write
-        # — persist for the batch (round 19, guide §5; cache only)
+        # the winnow-anchor pass feeds the probe AND the anch write
         b_anch = _winnow_anchors_of(b).persist()
-        batch_anch = b_anch
         try:
             b_spcl = _span_table(b).select("cluster").distinct()
-            # independent write actions on independent paths —
-            # overlapped (round 19 session 3, guide §2.6), marker
-            # still strictly last
-            writes = []
-            if state:
-                idx_anch = spark.read.parquet(state["anch"])
-                idx_spcl = spark.read.parquet(state["spcl"])
+            frames = {"anch": b_anch, "spcl": b_spcl}
+            if vs.recover(batch_id):
+                idx_anch = vs.read("anch", b_anch)
+                idx_spcl = vs.read("spcl", b_spcl)
                 flagged = (
                     b_anch.join(
                         F.broadcast(
@@ -1342,42 +1364,22 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
                     b.join(F.broadcast(flagged), "doc_id")
                 )
                 hits = fspans.join(idx_spcl, "cluster")
-                dec = _rewrite_emit(
-                    spark, "", _cap_excluded_cut(hits), docs=b
-                )
-                writes.append(
-                    lambda df=dec: df.write.mode("overwrite").parquet(
-                        os.path.join(run_dir, f"dec_v{batch_id}")
-                    )
-                )
-                b_anch = idx_anch.unionByName(b_anch)
-                # the cluster index must stay a SET: duplicate
-                # clusters would double-count hits in the
-                # frequent-n-gram cap
-                b_spcl = idx_spcl.unionByName(b_spcl).distinct()
-            anch_dst = os.path.join(run_dir, f"anch_v{batch_id}")
-            spcl_dst = os.path.join(run_dir, f"spcl_v{batch_id}")
-            writes.append(
-                lambda df=b_anch: df.write.mode("overwrite").parquet(
-                    anch_dst
-                )
-            )
-            writes.append(
-                lambda df=b_spcl: df.write.mode("overwrite").parquet(
-                    spcl_dst
-                )
-            )
-            _overlap_jobs(*writes)
-            # commit marker LAST (same exactly-once story as the
-            # minhash loop: versioned paths + overwrite + marker)
-            with open(
-                os.path.join(run_dir, f"commit_v{batch_id}"), "w"
-            ):
-                pass
-            state["anch"], state["spcl"] = anch_dst, spcl_dst
+                frames = {
+                    "dec": _rewrite_emit(
+                        spark, "", _cap_excluded_cut(hits), docs=b
+                    ),
+                    "anch": vs.rows(idx_anch, b_anch),
+                    # duplicate clusters would double-count hits in
+                    # the frequent-n-gram cap
+                    "spcl": vs.rows(
+                        idx_spcl,
+                        b_spcl.join(idx_spcl, "cluster", "left_anti"),
+                    ),
+                }
+            vs.commit(frames)
         finally:
-            # ADVICE r19: no cache leak across failed batches
-            batch_anch.unpersist()
+            # no cache leak across failed batches
+            b_anch.unpersist()
 
     return crawl, n_batches
 
@@ -1446,16 +1448,18 @@ def _stream_sxc_oracle() -> str:
         "probes the PERSISTED anchor index to flag its contaminated "
         "docs, (3) recomputes exact spans over the flagged subset "
         "only, (4) cuts spans matching the persisted span-cluster "
-        "index (minus the frequent-n-gram cap), and (5) merges its "
-        "anchors and clusters into the versioned parquet state under "
-        "the commit-marker-last protocol (idempotent decision "
+        "index (minus the frequent-n-gram cap), and (5) appends its "
+        "anchors and its clusters new to the index as a delta of the "
+        "versioned parquet state under the commit-marker-last "
+        "protocol (idempotent decision "
         "overwrite; pre-marker backfill; restart re-proven with the "
         "stage armed in tests/test_streaming.py::"
         "test_substring_crawl_loop_restart). Per-batch probe cost is "
         "proportional to the BATCH (batch anchors x broadcast index "
-        "clusters, exact spans over flagged docs only); state grows "
-        "with the corpus like the minhash index and is amortized "
-        "across crawls. A 2-batch run split at the decontam fixture "
+        "clusters, exact spans over flagged docs only), and so are "
+        "its writes: it adds only its own rows to the index, which is "
+        "amortized across crawls like the minhash index. A 2-batch "
+        "run split at the decontam fixture "
         "boundary must reproduce the batch twin "
         "q_dedup_substring_decontam_anchored EXACTLY — the oracle IS "
         "that key's SQL.",
@@ -1498,19 +1502,13 @@ def make_substring_ttl_loop(
 
     n_batches = [0]
 
-    def committed() -> list[int]:
-        return sorted(
-            int(s)
-            for p in os.listdir(run_dir)
-            if p.startswith("commit_b")
-            and (s := p[len("commit_b"):]).isdigit()
-        )
-
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         b = batch_df.select("doc_id", "text")
         retained = [
-            v for v in committed() if batch_id - ttl <= v < batch_id
+            v
+            for v in _versions(run_dir, "commit_b")
+            if batch_id - ttl <= v < batch_id
         ]
         # ONE winnow-anchor pass per batch: it feeds the probe branch
         # AND the anch_b index write — persist for the batch
@@ -1583,7 +1581,7 @@ def make_substring_ttl_loop(
             # unrecoverable (round-16 code-review finding,
             # replay-pinned in
             # tests/test_streaming.py::test_substring_ttl_replay_safe).
-            for v in committed():
+            for v in _versions(run_dir, "commit_b"):
                 if v < batch_id - ttl:
                     for t in ("anch", "spcl"):
                         shutil.rmtree(
@@ -1871,7 +1869,7 @@ def make_quality_gate(spark: SparkSession, run_dir: str):
             )
             spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy(
                 "w1"
-            ).agg(F.sum("c_bg").alias("c_u")).write.mode(
+            ).agg(F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")).write.mode(
                 "overwrite"
             ).parquet(os.path.join(run_dir, "ctx"))
             with open(lm_meta + ".tmp", "w") as f:
@@ -2059,12 +2057,14 @@ def make_curation_loop(
 ):
     """The composed foreachBatch closure + its batch counter. Restart-
     safe exactly like :func:`make_crawl_loop` / :func:`make_quality_
-    gate`: the in-memory state dict is only a cache — a fresh closure
-    recovers the newest committed hash-index/budget version strictly
-    older than the current batch from the versioned parquet paths, the
-    LM is the once-persisted lm.json + bgc/ctx parquet, and decisions
-    write to per-batch versioned paths with overwrite (idempotent
-    replay).
+    gate`: every batch recovers the committed hash index and budget
+    ledger strictly older than itself from a :class:`VersionedState`,
+    the LM is the once-persisted lm.json + bgc/ctx parquet, and
+    decisions write to per-batch versioned paths with overwrite
+    (idempotent replay). A crawl batch writes only the hashes its probe
+    found no match for, so the index stays a set and the bytes a batch
+    writes are proportional to the batch; the budget ledger has one
+    row per language and is rewritten whole every batch.
 
     ``decontam=True`` (round 14) inserts the span-level eval-
     decontamination stage between dedup and the quality gate: batch 0
@@ -2100,99 +2100,56 @@ def make_curation_loop(
         perplexity_lm,
     )
 
-    # A run_dir persisted by the pre-marker protocol (hashes_v*/
-    # budget_v* written by the old hashes-keyed scan, no commit_v*)
-    # would look version-less to the marker-keyed recovery below and
-    # send a crawl batch down the reference path, retraining the LM
-    # from crawl text (ADVICE r14). Backfill markers for complete
-    # pairs — but only in genuinely pre-marker layouts (ADVICE r19
-    # #1, see _backfill_premarker).
-    _backfill_premarker(run_dir, "hashes", ("hashes", "budget"))
-
-    state: dict[str, str] = {}
+    vs = VersionedState(spark, run_dir, ("hashes",), ledgers=("budget",))
     n_batches = [0]
 
     def curate(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         lm_meta = os.path.join(run_dir, "lm.json")
-        # A state version counts only once its commit marker exists —
-        # the marker is written LAST, after hashes_v/budget_v/dec_v, so
-        # recovery can never select a version whose sibling tables are
-        # missing or half-written (ADVICE r13 #3: the old scan keyed on
-        # hashes_v* alone and merely assumed budget_v existed). A crash
-        # between the state writes and the marker makes the version
-        # invisible; the replayed batch recomputes it idempotently.
-        # non-numeric suffixes (a torn "commit_v" with no digits, an
-        # external tool's "commit_v2.tmp" backup) are ignored, not
-        # crashed on — markers count only when the version number
-        # parses, mirroring the backfill scan's isdigit guard
-        # (fuzz round 8)
-        prior = sorted(
-            int(s)
-            for p in os.listdir(run_dir)
-            if p.startswith("commit_v")
-            and (s := p[len("commit_v"):]).isdigit()
-            and int(s) < batch_id
+        ledger = (
+            batch_df.select("lang")
+            .distinct()
+            .withColumn("used", F.lit(0).cast("long"))
         )
-        # reference path iff the LM is unpublished OR no state version
-        # strictly older than this batch exists — the latter catches a
-        # REPLAYED batch 0 after a crash between the atomic lm.json
-        # publish and the checkpoint commit: it must re-seed
-        # idempotently, never be scored as a crawl (round 13; a
-        # genuine crawl batch k always has hashes_v<k on disk)
-        if not os.path.exists(lm_meta) or not prior:
+        # reference path iff no state version strictly older than this
+        # batch exists OR the LM is unpublished — the former catches a
+        # REPLAYED batch 0 after a crash between the lm.json publish
+        # and the checkpoint commit: it must re-seed idempotently, never
+        # be scored as a crawl (a genuine crawl batch k always has a
+        # committed version < k on disk)
+        if not vs.recover(batch_id) or not os.path.exists(lm_meta):
             # reference batch: train + persist the LM, seed the hash
-            # index and the zeroed per-language budget ledger. The
-            # 4-5 table writes are independent jobs on independent
-            # paths — overlapped (round 19 session 3, guide §2.6);
-            # lm.json publishes after the LM tables are on disk and
-            # the commit marker still lands strictly LAST
+            # index and the zeroed per-language budget ledger, all
+            # overlapped; lm.json publishes after the LM tables are on
+            # disk and the commit marker still lands strictly LAST
             bgc, _ctx, vsz = perplexity_lm(batch_df)
-            h_dst = os.path.join(run_dir, f"hashes_v{batch_id}")
-            u_dst = os.path.join(run_dir, f"budget_v{batch_id}")
 
             def _write_lm() -> None:
                 # ONE thunk for both LM tables (the _overlap_jobs
                 # safety rule: they may not share live subtrees with
-                # a concurrent thunk), serial inside, overlapped with
-                # the HOF-free index/ledger seeds and the span-ref
-                # build. ctx is DERIVED from the just-written bgc —
-                # c_u(w1) = Σ_w2 c_bg(w1, w2) by definition (pinned
-                # in tests/test_llm_ops.py::
-                # test_ctx_derivable_from_bgc), turning the second
+                # a concurrent thunk), serial inside. ctx is DERIVED
+                # from the just-written bgc — c_u(w1) = Σ_w2 c_bg(w1,
+                # w2) by definition (pinned in tests/test_llm_ops.py::
+                # test_ctx_derivable_from_bgc), turning a second
                 # corpus-linear tokenize pass into a vocab-sized
-                # aggregate of the persisted table (guide §2.3/§5).
-                # Round 20 tried VERDICT r19 #3 (persist bgc, split
-                # into two cache-fed thunks, no read-back) and
-                # REVERTED it on measurement: the columnar-cache
-                # materialization costs more than the LM-sized
-                # parquet round-trip (curation 5.56 -> 6.9/6.5 s,
-                # quality_gate 1.73 -> 2.65 s min-of-3 at sf0.01
-                # with flat controls), and at scale both forms pay
-                # one LM-sized round-trip.
+                # aggregate of the persisted table. Persisting bgc and
+                # deriving ctx from the cache instead measured slower
+                # than this LM-sized parquet round-trip.
                 bgc.write.mode("overwrite").parquet(
                     os.path.join(run_dir, "bgc")
                 )
                 spark.read.parquet(
                     os.path.join(run_dir, "bgc")
                 ).groupBy("w1").agg(
-                    F.sum("c_bg").alias("c_u")
+                    F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
                 ).write.mode("overwrite").parquet(
                     os.path.join(run_dir, "ctx")
                 )
+                with open(lm_meta + ".tmp", "w") as f:
+                    json.dump({"vsz": vsz}, f)
+                os.replace(lm_meta + ".tmp", lm_meta)
 
-            writes = [
-                _write_lm,
-                lambda: batch_df.select(F.md5("text").alias("h"))
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(h_dst),
-                lambda: batch_df.select("lang")
-                .distinct()
-                .withColumn("used", F.lit(0).cast("long"))
-                .write.mode("overwrite")
-                .parquet(u_dst),
-            ]
+            writes = [_write_lm]
             if decontam:
                 # the reference span-hash set, persisted ONCE like
                 # the LM (the eval corpus is static; MB-scale)
@@ -2205,28 +2162,20 @@ def make_curation_loop(
                     .write.mode("overwrite")
                     .parquet(os.path.join(run_dir, "spanref"))
                 )
-            _overlap_jobs(*writes)
-            with open(lm_meta + ".tmp", "w") as f:
-                json.dump({"vsz": vsz}, f)
-            os.replace(lm_meta + ".tmp", lm_meta)
-            # commit marker last: the version is now recoverable
-            with open(
-                os.path.join(run_dir, f"commit_v{batch_id}"), "w"
-            ):
-                pass
-            state["hashes"], state["budget"] = h_dst, u_dst
+            vs.commit(
+                {
+                    "hashes": batch_df.select(
+                        F.md5("text").alias("h")
+                    ).distinct(),
+                    "budget": ledger,
+                },
+                *writes,
+            )
             return
-        if not state:  # fresh closure (restart): recover newest state
-            v = prior[-1]
-            state["hashes"] = os.path.join(run_dir, f"hashes_v{v}")
-            state["budget"] = os.path.join(run_dir, f"budget_v{v}")
         with open(lm_meta) as f:
             vsz = json.load(f)["vsz"]
         bgc = spark.read.parquet(os.path.join(run_dir, "bgc"))
         ctx = spark.read.parquet(os.path.join(run_dir, "ctx"))
-        idx = spark.read.parquet(state["hashes"])
-        used = spark.read.parquet(state["budget"])
-
         b = batch_df.select(
             "doc_id", "lang", "text",
             F.md5("text").alias("h"),
@@ -2234,6 +2183,8 @@ def make_curation_loop(
                 "size(filter(split(text, ' '), t -> t != ''))"
             ).cast("long").alias("n_tokens"),
         )
+        idx = vs.read("hashes", b.select("h"))
+        used = vs.read("budget", ledger)
         # stage 1: exact dedup against the standing index + in-batch
         # min-id keeper (16-byte keys; batch-proportional probe)
         wmin = Window.partitionBy("h")
@@ -2439,15 +2390,13 @@ def make_curation_loop(
                     "sampled"
                 ),
             )
-            # the batch's three write actions (decisions, hash-index,
-            # budget ledger) are independent jobs on independent paths —
-            # overlapped (round 19 session 3, guide §2.6); recovery keys
-            # off the commit marker alone, which still lands strictly
-            # LAST, so which sibling write a crash interrupts is
-            # immaterial (the replayed batch overwrites all idempotently)
-            h_dst = os.path.join(run_dir, f"hashes_v{batch_id}")
-            u_dst = os.path.join(run_dir, f"budget_v{batch_id}")
-            new_idx = idx.unionByName(b.select("h").distinct()).distinct()
+            # the hashes the probe found no match for, from the
+            # persisted b2: the index stays a set with no extra scan
+            new_h = (
+                b2.filter(F.col("in_idx").isNull() & F.col("h").isNotNull())
+                .select("h")
+                .distinct()
+            )
             batch_used = (
                 samp.filter(F.col("sampled"))
                 .groupBy("lang")
@@ -2460,17 +2409,13 @@ def make_curation_loop(
                     + F.coalesce(F.col("bu"), F.lit(0))
                 ).alias("used"),
             )
-            _overlap_jobs(
-                lambda: dec_out.write.mode("overwrite").parquet(
-                    os.path.join(run_dir, f"dec_v{batch_id}")
-                ),
-                lambda: new_idx.write.mode("overwrite").parquet(h_dst),
-                lambda: new_used.write.mode("overwrite").parquet(u_dst),
+            vs.commit(
+                {
+                    "dec": dec_out,
+                    "hashes": vs.rows(idx, new_h),
+                    "budget": new_used,
+                }
             )
-            # commit marker last: only now may recovery select this version
-            with open(os.path.join(run_dir, f"commit_v{batch_id}"), "w"):
-                pass
-            state["hashes"], state["budget"] = h_dst, u_dst
         finally:
             # unpersist every per-batch cache even on a
             # failed batch (ADVICE r19: no executor-cache
@@ -2675,17 +2620,19 @@ ORDER BY c.doc_id
         "survivors through the persisted LM with per-batch per-lang "
         "integer cutoffs, scores what remains with the hashed linear "
         "classifier and fills each language's REMAINING token budget "
-        "greedily best-first — then commits versioned hash-index and "
-        "budget state for the next batch. The oracle replays the "
+        "greedily best-first — then commits the hashes new to the "
+        "index as a delta, plus the |langs|-row budget ledger, for "
+        "the next batch. The oracle replays the "
         "whole 3-batch protocol declaratively (batch boundaries are "
         "doc_id ranges), so stream decisions — dedup verdicts, gate "
         "verdicts AND the cross-batch budget cut — must equal the "
         "batch computation exactly. The budget constant is chosen so "
         "the fixture exercises all three regimes: never cut, cut "
         "mid-batch-1, and cut in batch 2 against carried state. "
-        "100 TB: every stage is batch-proportional against "
-        "persisted, mergeable state; restart recovery is versioned-"
-        "path discovery, proven by the composed restart test.",
+        "100 TB: every stage, and every state write, is batch-"
+        "proportional against persisted, mergeable state; restart "
+        "recovery is committed-version discovery, proven by the "
+        "composed restart test.",
 )
 def q_stream_pipeline_curation(
     spark: SparkSession, sf_dir: str

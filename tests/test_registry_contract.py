@@ -128,3 +128,30 @@ def test_datasource_builders_apply_runtime_confs():
     assert not bad, (
         f"dataSource.register without apply_runtime_confs before it: {bad}"
     )
+
+
+def test_driver_memory_sized_to_box(tmp_path):
+    """spark.driver.memory is half the box's MemTotal, capped at 16g:
+    the session never asks for more heap than the box has."""
+    from netcdf4_variable_streamer_spark.session import (
+        BUILD_CONFS,
+        _driver_memory,
+    )
+
+    def mib(v: str) -> int:
+        return int(v[:-1]) * (1024 if v.endswith("g") else 1)
+
+    if os.path.exists("/proc/meminfo"):
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(x.split()[1]) for x in f if x.startswith("MemTotal:")
+            )
+        assert mib(BUILD_CONFS["spark.driver.memory"]) * 1024 <= total_kb
+    for total_gib, want_mib in ((64, 16384), (32, 16384), (8, 4096)):
+        meminfo = tmp_path / f"meminfo_{total_gib}"
+        meminfo.write_text(
+            f"MemTotal:       {total_gib * 1024 * 1024} kB\n"
+            "MemFree:        1024 kB\n"
+        )
+        assert mib(_driver_memory(str(meminfo))) == want_mib
+    assert _driver_memory(str(tmp_path / "missing")) == "16g"

@@ -1614,3 +1614,310 @@ def test_overlap_jobs_keeps_cause_and_reports_siblings():
     assert ei.value.__cause__ is root
     notes = "\n".join(getattr(ei.value, "__notes__", []))
     assert "RuntimeError: second write failed" in notes
+
+
+def test_derived_ctx_keeps_non_nullable_schema(spark, tmp_path):
+    """Both loops that derive the LM context table from the persisted
+    bigram counts write ``c_u`` as a non-nullable column, and the
+    streaming gate's decisions still equal the two-corpus oracle."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    feed = sq._docs_two_batch_stream_dir(
+        spark, SF_DIR, sq._GATE_SPLIT, columns=("doc_id", "text", "lang")
+    )
+    batches = [
+        spark.read.parquet(os.path.join(feed, f))
+        for f in ("0_index.parquet", "1_crawl.parquet")
+    ]
+    gate_dir, cur_dir = str(tmp_path / "gate"), str(tmp_path / "cur")
+    os.makedirs(gate_dir)
+    os.makedirs(cur_dir)
+    gate, _n = sq.make_quality_gate(spark, gate_dir)
+    gate(batches[0], 0)
+    gate(batches[1], 1)
+    curate, _n2 = sq.make_curation_loop(spark, cur_dir)
+    curate(batches[0], 0)
+    for run_dir in (gate_dir, cur_dir):
+        part = sorted(glob.glob(os.path.join(run_dir, "ctx", "*.parquet")))[0]
+        assert not pq.read_schema(part).field("c_u").nullable, run_dir
+    got = (
+        sq.read_crawl_decisions(spark, gate_dir).orderBy("doc_id").toPandas()
+    )
+    want = oracle_mod.connect(SF_DIR).execute(sq._gate_oracle()).df()
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert list(got["keep"]) == list(want["keep"])
+    assert list(got["avg_bigram_logprob"]) == list(want["avg_bigram_logprob"])
+    shutil.rmtree(feed, ignore_errors=True)
+
+
+def _state_digest(run_dir: str) -> dict:
+    """md5 of every parquet table under ``run_dir``, rows sorted."""
+    import hashlib
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for p in sorted(os.listdir(run_dir)):
+        if os.path.exists(os.path.join(run_dir, p, "_SUCCESS")):
+            pdf = pq.read_table(os.path.join(run_dir, p)).to_pandas()
+            pdf = pdf.astype(str).sort_values(list(pdf.columns))
+            out[p] = hashlib.md5(
+                pdf.to_csv(index=False).encode()
+            ).hexdigest()
+    return out
+
+
+def test_overlapped_writes_bit_stable(spark, tmp_path):
+    """The crawl and curation loops overlap their per-batch writes on
+    threads. Over createDataFrame batches (LocalRelation-style plans,
+    where concurrent planning of a shared higher-order-function subtree
+    was once nondeterministic) six trials of each loop give identical
+    decisions and identical state tables."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").to_pandas()
+
+    def frames(bounds, cols):
+        return [
+            spark.createDataFrame(
+                docs[(docs.doc_id >= lo) & (docs.doc_id < hi)][list(cols)]
+            )
+            for lo, hi in zip(bounds, bounds[1:])
+        ]
+
+    loops = (
+        (sq.make_crawl_loop, frames((0, 150, 300), ("doc_id", "text"))),
+        (
+            sq.make_curation_loop,
+            frames((0, 200, 300), ("doc_id", "text", "lang")),
+        ),
+    )
+    for make, batches in loops:
+        digests = []
+        for trial in range(6):
+            run_dir = str(tmp_path / f"{make.__name__}_{trial}")
+            os.makedirs(run_dir)
+            body, _n = make(spark, run_dir)
+            for i, b in enumerate(batches):
+                body(b, i)
+            digests.append(_state_digest(run_dir))
+            shutil.rmtree(run_dir)
+        assert any(k.startswith("dec_v") for k in digests[0])
+        assert all(d == digests[0] for d in digests), make.__name__
+
+
+# 20 micro-batches of 25 documents: crosses one compaction (batch 17)
+_LAYOUT_SPLITS = tuple(range(25, 500, 25))
+
+
+def _tree_bytes(path: str) -> int:
+    import os
+
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
+def _dec(spark, run_dir: str, batch_id: int):
+    import os
+
+    return (
+        spark.read.parquet(os.path.join(run_dir, f"dec_v{batch_id}"))
+        .orderBy("doc_id")
+        .toPandas()
+    )
+
+
+@pytest.fixture(scope="module")
+def crawl20(spark, tmp_path_factory):
+    """One uninterrupted 20-micro-batch crawl-loop stream: its feed
+    files, run_dir and the bytes each batch added under the run_dir."""
+    import os
+    import shutil
+    import types
+
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    feed = sq._docs_multi_batch_stream_dir(spark, SF_DIR, _LAYOUT_SPLITS)
+    files = [
+        os.path.join(feed, f"{i}_part.parquet")
+        for i in range(len(_LAYOUT_SPLITS) + 1)
+    ]
+    work = tmp_path_factory.mktemp("crawl20")
+    run_dir = str(work / "state")
+    os.makedirs(run_dir)
+    crawl, n = sq.make_crawl_loop(spark, run_dir)
+    written = []
+
+    def body(batch_df, batch_id):
+        before = _tree_bytes(run_dir)
+        crawl(batch_df, batch_id)
+        written.append(_tree_bytes(run_dir) - before)
+
+    q = (
+        spark.readStream.schema(spark.read.parquet(feed).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+        .writeStream.foreachBatch(body)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(work / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    assert n[0] == len(files)
+    yield types.SimpleNamespace(
+        feed=feed, files=files, run_dir=run_dir, written=written
+    )
+    shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_crawl_loop_state_writes_flat(spark, crawl20):
+    """Append-only crawl state: each batch writes only its own bands and
+    shingles, so a non-compacting batch late in the stream writes about
+    what an early one does; batch 17 (after 16 deltas) writes a base.
+    Every batch's decisions equal incremental_near_dedup of that batch
+    against all earlier ones."""
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pandas as pd
+
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        incremental_near_dedup,
+    )
+
+    run_dir, files, written = crawl20.run_dir, crawl20.files, crawl20.written
+    compacting = sq._COMPACT_AFTER + 1
+    assert os.path.exists(os.path.join(run_dir, sq._DELTA_LAYOUT))
+    for v in range(len(files)):
+        with open(os.path.join(run_dir, f"commit_v{v}")) as f:
+            assert (f.read() == "base") == (v in (0, compacting)), v
+    assert written[19] <= 1.5 * written[1], written
+    assert written[compacting] > 2 * written[19], written
+
+    def want(k):
+        return (
+            incremental_near_dedup(
+                spark.read.parquet(*files[:k]), spark.read.parquet(files[k])
+            )
+            .orderBy("doc_id")
+            .toPandas()
+        )
+
+    # independent batch queries, each bound by job latency: run 4 at once
+    with ThreadPoolExecutor(4) as pool:
+        wants = list(pool.map(want, range(1, len(files))))
+    n_dups = 0
+    for k, w in enumerate(wants, start=1):
+        got = _dec(spark, run_dir, k)
+        pd.testing.assert_frame_equal(got, w, obj=f"batch {k}")
+        n_dups += int(got["is_dup"].sum())
+    assert n_dups > 0
+
+
+def test_crawl_loop_replays_every_batch(
+    spark, crawl20, tmp_path, monkeypatch
+):
+    """Restart at every batch: the feed's files arrive one at a time,
+    and before each restart the checkpoint forgets that the previous
+    batch committed (a crash after its state was written). A fresh
+    closure on the same run_dir and checkpoint replays that batch, then
+    runs the new one. Compaction after 2 deltas puts a compacting batch
+    (3) among the replays; every batch's decisions equal the
+    uninterrupted run's, whose compaction cadence is 16."""
+    import os
+    import shutil
+
+    import pandas as pd
+
+    monkeypatch.setattr(sq, "_COMPACT_AFTER", 2)
+    files = crawl20.files[:5]
+    feed, run_dir = str(tmp_path / "feed"), str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(feed)
+    os.makedirs(run_dir)
+    schema = spark.read.parquet(files[0]).schema
+    for k, f in enumerate(files):
+        shutil.copy2(f, feed)
+        if k:
+            for c in (f"{k - 1}", f".{k - 1}.crc"):
+                p = os.path.join(ckpt, "commits", c)
+                if os.path.exists(p):
+                    os.remove(p)
+        crawl, n = sq.make_crawl_loop(spark, run_dir)
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+            .writeStream.foreachBatch(crawl)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.awaitTermination()
+        assert n[0] == (2 if k else 1), k
+    for v in range(len(files)):
+        with open(os.path.join(run_dir, f"commit_v{v}")) as f:
+            assert (f.read() == "base") == (v % 3 == 0), v
+    for k in range(1, len(files)):
+        pd.testing.assert_frame_equal(
+            _dec(spark, run_dir, k), _dec(spark, crawl20.run_dir, k),
+            obj=f"batch {k}",
+        )
+
+
+def test_crawl_loop_resumes_full_snapshot_layout(spark, crawl20, tmp_path):
+    """A run_dir in the full-snapshot layout (every committed version the
+    whole index, no layout file), built here by hand, resumes with the
+    same decisions and keeps writing full snapshots."""
+    import os
+
+    import pandas as pd
+
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        _minhash_band_table,
+        _shingled,
+    )
+
+    run_dir, files = str(tmp_path / "state"), crawl20.files
+    os.makedirs(run_dir)
+    for v in range(2):
+        sh = _shingled(spark.read.parquet(*files[: v + 1]), "doc_id", "text")
+        sh.write.parquet(os.path.join(run_dir, f"sh_v{v}"))
+        _minhash_band_table(sh).write.parquet(
+            os.path.join(run_dir, f"bands_v{v}")
+        )
+        open(os.path.join(run_dir, f"commit_v{v}"), "w").close()
+    crawl, _n = sq.make_crawl_loop(spark, run_dir)
+    for k in (2, 3):
+        crawl(spark.read.parquet(files[k]), k)
+        pd.testing.assert_frame_equal(
+            _dec(spark, run_dir, k), _dec(spark, crawl20.run_dir, k),
+            obj=f"batch {k}",
+        )
+    assert not os.path.exists(os.path.join(run_dir, sq._DELTA_LAYOUT))
+    # batch 3 wrote the whole index: the deltas of batches 0-3
+    for t in ("bands", "sh"):
+        whole = spark.read.parquet(
+            *(os.path.join(crawl20.run_dir, f"{t}_v{v}") for v in range(4))
+        )
+        assert spark.read.parquet(
+            os.path.join(run_dir, f"{t}_v3")
+        ).count() == whole.count() > 0
