@@ -746,10 +746,10 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sem_trained_oracle() -> str:
     from netcdf4_variable_streamer_spark.operators.similarity import (
-        _coarse_sql_ctes,
+        _sql_coarse_chain,
     )
 
-    parts, _ = _coarse_sql_ctes(_SEM_NLIST)
+    parts, _ = _sql_coarse_chain(_SEM_NLIST)
     ctes = ",\n".join(parts)
     return f"""
 WITH {ctes},
@@ -807,33 +807,22 @@ def q_dedup_semantic_trained(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from netcdf4_variable_streamer_spark.operators.similarity import (
-        _civf_chain,
+        _FULLVEC,
+        _coarse_chain,
         _dot,
+        _lloyd_assign,
+        _train_once,
         _with_norm,
     )
 
-    # this key re-checkpoints the cast assignment itself below (the
-    # r18 train-once contract), and consumes nothing else from the
-    # chain — chain-internal checkpoints would only add eager
-    # plannings (round 19, see _pqt_chain)
-    _, _, assign, _ = _civf_chain(
-        spark, sf_dir, nlist=_SEM_NLIST, ckpt=frozenset()
+    # the (vec_id, cluster) assignment feeds both sides of the
+    # within-cluster self-join; the centroids are read once
+    e, ccb = _coarse_chain(spark, sf_dir, nlist=_SEM_NLIST)
+    asg = _train_once(
+        _lloyd_assign(e, ccb, _FULLVEC).select(
+            "vec_id", F.col("cl").cast("long").alias("cluster_id")
+        )
     )
-    # Train ONCE: the (vec_id, cluster) assignment feeds both branches
-    # of the within-cluster self-join. localCheckpoint (lazy) cuts the
-    # lineage so the Lloyd subtree materializes exactly once by
-    # CONTRACT — before round 18 that dedup was only ReusedExchange
-    # luck, which AQE re-planning can and does break. Round-18
-    # re-measurement (count(), best-of-3, 500 → 5000 vectors): the 10×
-    # premium over the untrained twin is NOT double derivation — a
-    # single training chain alone scales 1.48 → 3.59 s while the whole
-    # untrained key runs 0.90 → 1.19 s — it is the O(N·nlist·dim)
-    # training pass itself, corpus-linear by construction. Eager
-    # checkpointing was measured SLOWER (extra blocking materialization
-    # per build: 2.35/7.24 s vs lazy 1.86/5.24 s), so lazy it is.
-    asg = assign.select(
-        "vec_id", F.col("cl").cast("long").alias("cluster_id")
-    ).localCheckpoint(eager=False)
     v = _with_norm(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"

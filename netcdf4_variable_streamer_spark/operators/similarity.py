@@ -23,6 +23,7 @@ the order immune to 1-ulp cross-engine drift, vec_id makes it total.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -489,6 +490,13 @@ def _fx64(col: Column) -> Column:
     )
 
 
+def _fx_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, fxv): the embeddings table in the shared fixed point."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _fx64(F.col("embedding")).alias("fxv")
+    )
+
+
 def _d2_span(a: str, b: str, lo: int | str, n: int) -> Column:
     """Integer squared L2 between ``n`` elements of two ARRAY<long>
     columns (by NAME) starting at 1-based offset ``lo`` — subspace
@@ -881,9 +889,7 @@ FROM rh
         "knob this key exists to measure.",
 )
 def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
+    e = _fx_embeddings(spark, sf_dir)
     _, _, assign, probe_rank = _ivf_coarse_chain(e)
     probes = probe_rank.filter(
         F.col("prn") <= _IVFPQ_NPROBE
@@ -1092,9 +1098,7 @@ FROM rh JOIN costs c ON c.np = rh.np
 def q_sim_ivf_nprobe_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
+    e = _fx_embeddings(spark, sf_dir)
     _, _, assign, pr = _ivf_coarse_chain(e)
     nps = spark.range(1).select(
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(4))).alias("np")
@@ -1159,43 +1163,59 @@ def q_sim_ivf_nprobe_sweep(
 
 
 # ---------------------------------------------------------------------------
-# Trained PQ codebooks (round 16) — making q_sim_pq_codes' promise
-# ("codebook training = q_ml_kmeans per subspace") real code: C=16
-# centroids per subspace trained with 2 deterministic Lloyd rounds in
-# the shared fixed-point arithmetic, then the recall lift the training
-# buys, measured against the same exact ground truth as
-# q_sim_ivfpq_recall.
+# Trained quantizers. One exact fixed-point Lloyd k-means (packed-MIN
+# argmin, FLOOR-mean update) trains every centroid table: the per-
+# subspace PQ codebooks below, the coarse IVF quantizer, the residual
+# PQ codebooks, SemDeDup's clusters and q_ml_kmeans. First the PQ
+# codebooks: C=16 centroids per subspace from 2 Lloyd rounds, then the
+# recall lift the training buys, measured against the same exact
+# ground truth as q_sim_ivfpq_recall.
 # ---------------------------------------------------------------------------
 
 _PQT_C = 16  # trained codebook size per subspace
 _PQT_ITERS = 2  # Lloyd rounds (the measured recall optimum at C=16)
-_PQT_PACK = 64  # packed-argmin base, > _PQT_C
+# Packed-argmin base of every trained quantizer: MIN(d2 * _PACK + id)
+# % _PACK picks the lowest-id nearest centroid for any id below _PACK;
+# the int64 bound on d2 * _PACK is the one _PROD_NLIST_CAP documents.
+_PACK = 1024
+
+
+class _Shape(NamedTuple):
+    """A Lloyd k-means layout: ``part`` is the group key beyond vec_id,
+    ``label`` the centroid-id column, ``vec`` the point-vector column
+    and ``width`` its length."""
+
+    part: tuple
+    label: str
+    vec: str
+    width: int
+
+
+_SUBSPACE = _Shape(("s",), "c", "sfx", 8)  # per-subspace PQ codebooks
+_FULLVEC = _Shape((), "cl", "fxv", 64)  # full-vector coarse quantizer
 
 
 def _train_once(df: DataFrame) -> DataFrame:
-    """Train-once plan contract (round 19, guide §3.3/§5; the round-18
-    SemDeDup precedent at ``operators/dedup.py``): lazy
-    ``localCheckpoint`` on a trained artifact (centroid table, codebook,
-    assignment) so every downstream plan branch reads the SAME
-    materialized result instead of re-deriving the Lloyd subtree —
-    before this, each reference (and each Lloyd iteration's lineage)
-    replayed the full training DAG, multiplying corpus passes.
-    ReusedExchange sometimes dedupes these by luck, but AQE re-planning
-    can and does break it; the checkpoint makes train-once a contract.
-    Lazy (not eager): eager measured slower on the SemDeDup twin
-    (extra blocking materialization per build). Results are
-    bit-identical — identical expressions, materialized once; all
-    downstream aggregations are order-independent integer ops."""
+    """Train-once plan contract: lazy ``localCheckpoint`` on a trained
+    artifact (centroid table, codebook, assignment) so every
+    downstream plan branch reads the SAME materialized result instead
+    of re-deriving the Lloyd subtree once per reference.
+    ReusedExchange sometimes dedupes these by luck, but AQE
+    re-planning can and does break it; the checkpoint makes train-once
+    a contract. Apply it only to artifacts consumed more than once: on
+    a single-consumer artifact it is pure overhead (measured +50% on
+    the linear training keys). Lazy, not eager: eager measured slower
+    (an extra blocking materialization per build). Results are
+    bit-identical — identical expressions, materialized once."""
     return df.localCheckpoint(eager=False)
 
 
 def _d2_sub(a: str, b: str, s: str = "s") -> Column:
     """Integer squared L2 between subspace ``s`` of full-vector ``a``
     (elements s*8+1 .. s*8+8) and the 8-element subvector ``b`` (all
-    by NAME) — the codebook-side distance of the PQ assign/LUT
-    stages. Unrolled codegen'd arithmetic emitted as one parsed SQL
-    string (round 19, see :func:`_d2_span`); same longs, same
-    addition order as the HOF it replaces."""
+    by NAME) — the codebook-side distance of the PQ LUT stages.
+    Unrolled codegen'd arithmetic emitted as one parsed SQL string
+    (see :func:`_d2_span`)."""
     terms = " + ".join(
         f"(element_at({a}, CAST({s} * 8 + {i} AS INT))"
         f" - element_at({b}, {i}))"
@@ -1206,81 +1226,51 @@ def _d2_sub(a: str, b: str, s: str = "s") -> Column:
     return F.expr(terms)
 
 
-def _pqt_assign(
-    e: DataFrame,
-    cb: DataFrame,
-    pack: int = _PQT_PACK,
-    carry: tuple = (),
+def _lloyd_assign(
+    pts: DataFrame, cents: DataFrame, shape: _Shape, carry: tuple = ()
 ) -> DataFrame:
-    """(vec_id, s, c): nearest trained centroid per subspace — integer
-    fixed-point distances, packed-MIN tie-break (centroid id asc).
-    ``pack`` must exceed the codebook size (64 for the 16-entry
-    codebooks; the production-shaped key passes 512 for 256).
-    Distances are unrolled codegen'd arithmetic (round 19, guide
-    §1.3/§4 — see :func:`_d2_span`); the groupBy argmin reduces
-    map-side (partial MIN), so the Exchange carries ~N(vec_id, s)
-    rows, not N x C.
+    """(vec_id, *part, label, *carry): each point's nearest centroid
+    (per subspace when ``part`` is ("s",)) — integer fixed-point
+    distances from ``pts``' ``vec`` to the broadcast ``cents``
+    (*part, label, cfx), packed-MIN argmin with the lowest centroid id
+    winning ties. Distances are the unrolled :func:`_d2_span`
+    arithmetic; the argmin reduces map-side (partial MIN), so the
+    Exchange carries one row per (vec_id, *part), not one per
+    centroid.
 
-    Round 20: the subspace frame carries the pre-sliced 8-long
-    subvector ``sfx`` instead of the full 64-long ``fxv`` (narrower
-    rows, guide §2.3), and ``carry`` names extra input columns that
-    are constant per (vec_id, s) group and ride through the aggregate
-    via ``min_by`` on the same packed key — so consumers that need
-    them (the Lloyd update's member vector, the code table's coarse
-    list id) no longer join back to the corpus (guide §2.4). min_by
-    is exact here: the packed keys are distinct within a group and
-    the carried value is identical on every row of the group."""
-    p = F.col("d2") * pack + F.col("c")
-    d = e.join(F.broadcast(cb), "s").select(
-        "vec_id",
-        "s",
-        "c",
-        _d2_span("sfx", "cfx", 1, 8).alias("d2"),
-        *carry,
-    )
-    return d.groupBy("vec_id", "s").agg(
-        (F.min(p) % pack).alias("c"),
+    ``carry`` names columns of the scored rows (point columns, or
+    ``d2`` itself) that ride through the argmin via ``min_by`` on the
+    same packed key, so consumers (the Lloyd update's member vector,
+    a code table's coarse list id) need no join back to the points.
+    min_by is exact: the packed keys are distinct within a group."""
+    part, label, vec, width = shape
+    scored = pts.join(
+        F.broadcast(cents), list(part) or F.lit(True)
+    ).withColumn("d2", _d2_span(vec, "cfx", 1, width))
+    p = F.col("d2") * _PACK + F.col(label)
+    return scored.groupBy("vec_id", *part).agg(
+        (F.min(p) % _PACK).alias(label),
         *[F.min_by(c, p).alias(c) for c in carry],
     )
 
 
-def _pqt_update(asg: DataFrame) -> DataFrame:
-    """Lloyd update: per (s, c, dim) fixed-point FLOOR-mean of member
-    subvectors, repacked to (s, c, cfx). Exact cross-engine: integer
-    sums, one correctly-rounded double division, FLOOR. Empty
-    clusters simply drop out (both engines see the same survivors).
-
-    Round 20 (guide §2.4): consumes the member subvector ``sfx`` that
-    :func:`_pqt_assign` carried through the argmin aggregate, so the
-    per-round join back to the corpus (one exchange at scale plus a
-    corpus re-scan per Lloyd round) is gone — assign and update now
-    share the one (vec_id, s)-keyed exchange. Same longs, same sums:
-    posexplode of sfx yields exactly the (dim, value) rows the old
-    explode(sequence)+element_at form produced.
-
-    Round 19: stays the dim explode + (s, c, j) aggregate +
-    array_sort re-collect. The "wide-sum" rewrite (8 per-dim SUM
-    columns in one hash aggregate) looked better on paper (§2.2:
-    Exchange carries |codebook| rows, not N x 8) but A/B-measured
-    2-3x SLOWER end-to-end on every training key (train_coarse
-    3.84 -> 1.24 s, semantic_trained 3.99 -> 1.67 s,
-    production_recall 10.4 -> 6.2 s when reverted; shared-session
-    min-of-2 noop runs at sf0.01): at these codebook shapes the
-    shuffle it saves is KB-scale while the wide aggregate's per-row
-    element_at fan-out and 65-field buffers cost more than the
-    Exchange ever did. Re-evaluate only with a measured win at a
-    larger nlist."""
-    per_dim = asg.select(
-        "s", "c", F.posexplode("sfx").alias("j", "v")
-    )
-    upd = per_dim.groupBy("s", "c", "j").agg(
-        F.floor(
-            F.sum("v").cast("double") / F.count(F.lit(1))
-        )
+def _lloyd_update(asg: DataFrame, shape: _Shape) -> DataFrame:
+    """(*part, label, cfx): per-centroid fixed-point FLOOR-mean of the
+    member vectors :func:`_lloyd_assign` carried — integer sums, one
+    correctly-rounded double division, FLOOR; a centroid that attracts
+    no points drops out. Kept as the per-dimension posexplode + (*part,
+    label, dim) aggregate + array_sort re-collect: the "wide-sum"
+    rewrite (one SUM column per dimension in a single hash aggregate)
+    saves only a KB-scale shuffle at these codebook shapes and was
+    measured 2-3x slower end to end on every training key."""
+    grp = (*shape.part, shape.label)
+    per_dim = asg.select(*grp, F.posexplode(shape.vec).alias("j", "v"))
+    upd = per_dim.groupBy(*grp, "j").agg(
+        F.floor(F.sum("v").cast("double") / F.count(F.lit(1)))
         .cast("long")
         .alias("v")
     )
-    return upd.groupBy("s", "c").agg(
+    return upd.groupBy(*grp).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "v"))),
             lambda x: x.getField("v"),
@@ -1288,120 +1278,154 @@ def _pqt_update(asg: DataFrame) -> DataFrame:
     )
 
 
+def _lloyd(
+    pts: DataFrame, cents: DataFrame, shape: _Shape, iters: int
+) -> DataFrame:
+    """The centroids after ``iters`` Lloyd rounds from ``cents``. Each
+    round is one corpus pass: assign and update share the one
+    (vec_id, *part)-keyed exchange. Nothing is checkpointed — the
+    in-loop iterates are strictly linear."""
+    for _ in range(iters):
+        asg = _lloyd_assign(pts, cents, shape, carry=(shape.vec,))
+        cents = _lloyd_update(asg, shape)
+    return cents
+
+
+def _subspaces(
+    pts: DataFrame, vec: str, n_init: int, keep: tuple = ()
+) -> tuple[DataFrame, DataFrame]:
+    """(sub, cb0): ``pts``' full vector ``vec`` split into its
+    ``_PQ_S`` subvectors — rows (vec_id, *keep, s, sfx) — and the
+    initial codebook (c, s, cfx): the first ``n_init`` points'
+    subvectors."""
+
+    def split(df: DataFrame, ids: list, out: str) -> DataFrame:
+        each_s = F.explode(F.array(*[F.lit(s) for s in range(_PQ_S)]))
+        return df.select(*ids, vec, each_s.alias("s")).select(
+            *ids, "s", F.slice(F.col(vec), F.col("s") * 8 + 1, 8).alias(out)
+        )
+
+    init = pts.filter(F.col("vec_id") < n_init).withColumnRenamed(
+        "vec_id", "c"
+    )
+    return split(pts, ["vec_id", *keep], "sfx"), split(init, ["c"], "cfx")
+
+
 def _pqt_chain(
-    spark: SparkSession,
-    sf_dir: str,
-    ckpt: frozenset = frozenset({"cb", "codes"}),
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(fxe, trained codebook, final codes) — the shared DAG of the
-    training and trained-recall keys. ``ckpt`` names the artifacts
-    the caller consumes more than once (train-once plan contract,
-    see the loop comment below)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
-    sub = e.select(
-        "vec_id",
-        "fxv",
-        F.explode(
-            F.array(*[F.lit(s) for s in range(_PQ_S)])
-        ).alias("s"),
-    ).select(
-        "vec_id",
-        "s",
-        F.slice(F.col("fxv"), F.col("s") * 8 + 1, 8).alias("sfx"),
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _PQT_C)
-        .select(
-            F.col("vec_id").alias("c"),
-            "fxv",
-            F.explode(
-                F.array(*[F.lit(s) for s in range(_PQ_S)])
-            ).alias("s"),
-        )
-        .select(
-            "s", "c", F.slice(F.col("fxv"), F.col("s") * 8 + 1, 8).alias("cfx")
-        )
-    )
-    for _ in range(_PQT_ITERS):
-        asg = _pqt_assign(sub, cb, carry=("sfx",))
-        cb = _pqt_update(asg)
-    # Checkpoint exactly what the CALLER's DAG consumes more than once
-    # (``ckpt``) — a checkpoint on a single-consumer artifact is pure
-    # overhead at every scale (eager plan + RDD materialization,
-    # measured +50% on the linear training keys), while one on a
-    # multi-consumer artifact saves a full corpus pass per extra
-    # reference. In-loop iterates are always strictly linear.
-    if "cb" in ckpt:
-        cb = _train_once(cb)
-    codes = _pqt_assign(sub, cb)
-    if "codes" in ckpt:
-        codes = _train_once(codes)
-    return e, cb, codes
+    """(fxe, subspace points, trained codebook): the shared DAG of the
+    PQ training and trained-recall keys. Nothing is checkpointed; each
+    caller applies :func:`_train_once` to what it reads twice."""
+    e = _fx_embeddings(spark, sf_dir)
+    sub, cb0 = _subspaces(e, "fxv", _PQT_C)
+    return e, sub, _lloyd(sub, cb0, _SUBSPACE, _PQT_ITERS)
 
 
-def _pqt_sql() -> str:
-    """DuckDB mirror of :func:`_pqt_chain` — the Lloyd rounds
-    unrolled as CTE pairs (assign, update), ending with ``cb{N}``
-    (the trained codebook) and ``tcodes`` (final assignments)."""
-    FX = _PQ_FX
+def _codebook_report(
+    cents: DataFrame, asg: DataFrame, shape: _Shape
+) -> DataFrame:
+    """(*part, label, n_members, cent_checksum): the trained centroids
+    with their final member counts and coordinate checksums — a
+    drifted mean, a wrong tie-break or a lost cluster all
+    hash-mismatch."""
+    grp = [*shape.part, shape.label]
+    members = asg.groupBy(*grp).agg(F.count(F.lit(1)).alias("n"))
+    return cents.join(members, grp, "left").select(
+        *[F.col(c).cast("int").alias(c) for c in shape.part],
+        F.col(shape.label).cast("long").alias(shape.label),
+        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(
+            "n_members"
+        ),
+        F.aggregate(
+            F.col("cfx"),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        ).alias("cent_checksum"),
+    )
 
-    def d2(efx: str, cfx: str) -> str:
-        a = f"{efx}[CAST(b.s * 8 + i AS INTEGER)]"
-        b = f"{cfx}[CAST(i AS INTEGER)]"
-        return (
-            f"CAST(LIST_SUM(LIST_TRANSFORM(generate_series(1, 8),"
-            f" i -> ({a} - {b}) * ({a} - {b}))) AS BIGINT)"
-        )
+
+_FXE_SQL = f"""fxe AS (
+  SELECT vec_id, LIST_TRANSFORM(generate_series(1, 64), i ->
+    CAST(FLOOR(CAST(embeddings.embedding[CAST(i AS INTEGER)]
+               AS DOUBLE) * {_PQ_FX}) AS BIGINT)) AS fxv
+  FROM embeddings
+)"""
+
+
+def _sql_lloyd(
+    pfx: str, pts: str, vec: str, shape: _Shape, iters: int, final: str
+) -> tuple[list[str], str]:
+    """(CTE parts, trained-centroid CTE name): the DuckDB Lloyd rounds
+    — ``iters`` unrolled (assign ``{pfx}asg{i}``, update ``{pfx}cb{i}``)
+    CTE pairs from the centroid CTE ``{pfx}cb0`` over the table
+    ``pts`` (vec_id, full vector ``vec``), then the final assignment
+    CTE ``final``. Centroid CTEs are (*part, label, cfx); with
+    ``part`` = ("s",) the point vector is read at offset s * width.
+    Integer distances, packed-MIN argmin, FLOOR mean."""
+    part, label, _, width = shape
+    key = "".join(f", {c}" for c in part)
+    cols = ", ".join([*part, label])
+    grp = ", ".join(f"a.{c}" for c in (*part, label))
+
+    def off(t: str) -> str:
+        return "".join(f"{t}.{c} * {width} + " for c in part)
 
     def assign(name: str, cb: str) -> str:
+        pi = f"p.{vec}[CAST({off('b')}i AS INTEGER)]"
+        ci = "b.cfx[CAST(i AS INTEGER)]"
+        bcols = ", ".join(f"b.{c}" for c in (*part, label))
         return f"""{name}_d AS (
-  SELECT e.vec_id, b.s, b.c, {d2('e.fxv', 'b.cfx')} AS d2
-  FROM fxe e, {cb} b
+  SELECT p.vec_id, {bcols},
+         CAST(LIST_SUM(LIST_TRANSFORM(generate_series(1, {width}),
+           i -> ({pi} - {ci})
+              * ({pi} - {ci}))) AS BIGINT) AS d2
+  FROM {pts} p, {cb} b
 ),
 {name} AS (
-  SELECT vec_id, s, MIN(d2 * {_PQT_PACK} + c) % {_PQT_PACK} AS c
-  FROM {name}_d GROUP BY vec_id, s
+  SELECT vec_id{key}, MIN(d2 * {_PACK} + {label}) % {_PACK} AS {label}
+  FROM {name}_d GROUP BY vec_id{key}
 )"""
 
     def update(name: str, asg: str) -> str:
         return f"""{name}_u AS (
-  SELECT a.s, a.c, j.range + 1 AS j,
+  SELECT {grp}, j.range + 1 AS j,
          CAST(FLOOR(CAST(SUM(
-           e.fxv[CAST(a.s * 8 + j.range + 1 AS INTEGER)]
+           p.{vec}[CAST({off('a')}j.range + 1 AS INTEGER)]
          ) AS DOUBLE) / COUNT(*)) AS BIGINT) AS v
-  FROM {asg} a JOIN fxe e USING (vec_id), range(0, 8) j
-  GROUP BY a.s, a.c, j.range
+  FROM {asg} a JOIN {pts} p USING (vec_id), range(0, {width}) j
+  GROUP BY {grp}, j.range
 ),
 {name} AS (
-  SELECT s, c, LIST(v ORDER BY j) AS cfx FROM {name}_u GROUP BY s, c
+  SELECT {cols}, LIST(v ORDER BY j) AS cfx FROM {name}_u GROUP BY {cols}
 )"""
 
-    parts = [
-        f"""fxe AS (
-  SELECT vec_id, LIST_TRANSFORM(generate_series(1, 64), i ->
-    CAST(FLOOR(CAST(embeddings.embedding[CAST(i AS INTEGER)]
-               AS DOUBLE) * {FX}) AS BIGINT)) AS fxv
-  FROM embeddings
-),
-cb0 AS (
-  SELECT s.range AS s, e.vec_id AS c,
+    parts, cb = [], f"{pfx}cb0"
+    for it in range(1, iters + 1):
+        parts.append(assign(f"{pfx}asg{it}", cb))
+        cb = f"{pfx}cb{it}"
+        parts.append(update(cb, f"{pfx}asg{it}"))
+    parts.append(assign(final, cb))
+    return parts, cb
+
+
+def _sql_subspace_init(name: str, pts: str, vec: str, n: int) -> str:
+    """DuckDB initial codebook CTE (s, c, cfx): the first ``n`` rows'
+    subvectors of ``pts``' full vector ``vec``."""
+    return f"""{name} AS (
+  SELECT s.range AS s, p.vec_id AS c,
          LIST_TRANSFORM(generate_series(1, 8), i ->
-           e.fxv[CAST(s.range * 8 + i AS INTEGER)]) AS cfx
-  FROM fxe e, range(0, {_PQ_S}) s WHERE e.vec_id < {_PQT_C}
+           p.{vec}[CAST(s.range * 8 + i AS INTEGER)]) AS cfx
+  FROM {pts} p, range(0, {_PQ_S}) s WHERE p.vec_id < {n}
 )"""
-    ]
-    cb = "cb0"
-    for it in range(1, _PQT_ITERS + 1):
-        parts.append(assign(f"asg{it}", cb))
-        cb = f"cb{it}"
-        parts.append(update(cb, f"asg{it}"))
-    parts.append(assign("tcodes", cb))
-    return ",\n".join(parts), cb
 
 
-_PQT_CTES, _PQT_CB = _pqt_sql()
+_PQT_LLOYD, _PQT_CB = _sql_lloyd(
+    "", "fxe", "fxv", _SUBSPACE, _PQT_ITERS, "tcodes"
+)
+_PQT_CTES = ",\n".join(
+    [_FXE_SQL, _sql_subspace_init("cb0", "fxe", "fxv", _PQT_C), *_PQT_LLOYD]
+)
 
 
 @register(
@@ -1440,24 +1464,11 @@ FROM {_PQT_CB} b LEFT JOIN members m ON m.s = b.s AND m.c = b.c
 def q_sim_pq_train_codebook(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # cb is consumed twice (the report join + the codes lineage);
-    # codes once — checkpoint cb only
-    _, cb, codes = _pqt_chain(spark, sf_dir, ckpt=frozenset({"cb"}))
-    members = codes.groupBy("s", "c").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return cb.join(members, ["s", "c"], "left").select(
-        F.col("s").cast("int").alias("s"),
-        F.col("c").cast("long").alias("c"),
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(
-            "n_members"
-        ),
-        F.aggregate(
-            F.col("cfx"),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("cent_checksum"),
-    )
+    # cb feeds the report join and the codes; codes is read once
+    _, sub, cb = _pqt_chain(spark, sf_dir)
+    cb = _train_once(cb)
+    codes = _lloyd_assign(sub, cb, _SUBSPACE)
+    return _codebook_report(cb, codes, _SUBSPACE)
 
 
 _PQT_RECALL_FLOOR = 0.15  # trained ADC floor; untrained sits ~0.08
@@ -1550,7 +1561,9 @@ FROM rh
 def q_sim_pq_trained_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e, cb, codes = _pqt_chain(spark, sf_dir)
+    e, sub, cb = _pqt_chain(spark, sf_dir)
+    cb = _train_once(cb)  # feeds the codes and the LUT
+    codes = _train_once(_lloyd_assign(sub, cb, _SUBSPACE))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("fxv").alias("qfx")
     )
@@ -1618,279 +1631,101 @@ _CIVF_NPROBE = 2  # coarse lists probed per query
 _CIVF_ITERS = 2  # coarse Lloyd rounds
 
 
-def _civf_assign(
-    e: DataFrame,
-    ccb: DataFrame,
-    pack: int = _PQT_PACK,
-    carry: tuple = (),
-) -> DataFrame:
-    """(vec_id, cl): nearest TRAINED coarse centroid — full-vector
-    fixed-point distances to the broadcast centroid table, packed-MIN
-    tie-break (centroid id asc). ``pack`` must exceed nlist (64
-    covers the 8/16-list chains; the production-shaped key passes
-    1024 for nlist up to 1023). Distances are unrolled codegen'd
-    arithmetic (round 19, guide §1.3/§4 — see :func:`_d2_span`); the
-    groupBy argmin reduces map-side (partial MIN), so the Exchange
-    carries ~N rows, not N x nlist.
-
-    Round 20: ``carry`` rides group-constant input columns through the
-    aggregate via ``min_by`` on the same packed key (exact: keys are
-    distinct within a group and the carried value is identical on
-    every row of the group) — the Lloyd update reads its member
-    vector straight off the assignment instead of joining back to the
-    corpus (guide §2.4)."""
-    p = F.col("d2") * pack + F.col("cl")
-    d = e.join(F.broadcast(ccb), F.lit(True)).select(
-        "vec_id",
-        "cl",
-        _d2_span("fxv", "cfx", 1, 64).alias("d2"),
-        *carry,
-    )
-    return d.groupBy("vec_id").agg(
-        (F.min(p) % pack).alias("cl"),
-        *[F.min_by(c, p).alias(c) for c in carry],
-    )
-
-
-def _civf_update(asg: DataFrame) -> DataFrame:
-    """Full-vector Lloyd update: per (cl, dim) fixed-point FLOOR-mean
-    of member vectors, repacked to (cl, cfx) — the 64-dim twin of
-    :func:`_pqt_update` (integer sums, one correctly-rounded double
-    division, FLOOR; empty clusters drop out identically).
-
-    Round 20 (guide §2.4): consumes the member vector ``fxv`` carried
-    through :func:`_civf_assign`'s argmin — no join back to the
-    corpus per round; posexplode(fxv) yields exactly the (dim, value)
-    rows the old explode(sequence)+element_at form produced.
-
-    Round 19: stays the dim explode + (cl, j) aggregate — the 64-SUM
-    wide-aggregate rewrite measured 2-3x slower end-to-end; see the
-    measured rationale on :func:`_pqt_update`."""
-    per_dim = asg.select(
-        "cl", F.posexplode("fxv").alias("j", "v")
-    )
-    upd = per_dim.groupBy("cl", "j").agg(
-        F.floor(F.sum("v").cast("double") / F.count(F.lit(1)))
-        .cast("long")
-        .alias("v")
-    )
-    return upd.groupBy("cl").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("j", "v"))),
-            lambda x: x.getField("v"),
-        ).alias("cfx")
-    )
-
-
-def _civf_chain(
+def _coarse_chain(
     spark: SparkSession,
     sf_dir: str,
     nlist: int = _CIVF_NLIST,
-    ckpt: frozenset = frozenset({"ccb", "assign"}),
-    recall_carry: bool = False,
-):
-    """(fxe, trained coarse centroids, assignment, probe_rank): the
-    trained twin of :func:`_ivf_coarse_chain` — same outputs, but the
-    centroid table comes out of ``_CIVF_ITERS`` full-vector Lloyd
-    rounds (init = first ``nlist`` vectors) instead of the raw
-    first-4-vectors fixture. ``nlist`` parameterizes the consumer:
-    8 for the trained IVF-PQ chain, 16 for SemDeDup clustering."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
+    iters: int = _CIVF_ITERS,
+) -> tuple[DataFrame, DataFrame]:
+    """(fxe, trained coarse centroids (cl, cfx)): ``iters`` full-vector
+    Lloyd rounds from the first ``nlist`` vectors — the trained twin
+    of :func:`_ivf_coarse_chain`'s raw first-4-vectors table. Nothing
+    is checkpointed; each caller applies :func:`_train_once` to what
+    it reads twice."""
+    e = _fx_embeddings(spark, sf_dir)
     ccb = e.filter(F.col("vec_id") < nlist).select(
         F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx")
     )
-    for _ in range(_CIVF_ITERS):
-        asg = _civf_assign(e, ccb, carry=("fxv",))
-        ccb = _civf_update(asg)
-    # checkpoint exactly the caller's multi-consumed artifacts
-    # (see the _pqt_chain loop comment for the measured rationale)
-    if "ccb" in ckpt:
-        ccb = _train_once(ccb)
-    # recall_carry (round 20, guide §2.4): the recall pipeline derives
-    # residuals from (assign x ccb) and query residuals from the probe
-    # table — carrying the member/query vectors through the argmin and
-    # the probe window lets _ivfpq_recall_frame build both WITHOUT
-    # joining back to the corpus (and drops the assign checkpoint: the
-    # carried assign has a single consumer, the res build, which IS
-    # checkpointed). Same values ride along; no arithmetic changes.
-    assign = _civf_assign(
-        e, ccb, carry=("fxv",) if recall_carry else ()
-    )
-    if "assign" in ckpt and not recall_carry:
-        assign = _train_once(assign)
+    return e, _lloyd(e, ccb, _FULLVEC, iters)
+
+
+def _probe_rank(e: DataFrame, ccb: DataFrame) -> DataFrame:
+    """(q_id, cl, d2, fxv, cfx, prn): each sampled query's coarse lists
+    ranked by (d2, cl). The query vector and the list centroid ride
+    along, so the residual LUT needs no join back to the corpus."""
     qd = (
         e.filter(F.col("vec_id") < N_QUERIES)
         .join(F.broadcast(ccb), F.lit(True))
         .select(
             F.col("vec_id").alias("q_id"),
             "cl",
-            _d2_span("fxv", "cfx", 1, 64).alias(
-                "d2"
-            ),
-            *(("fxv", "cfx") if recall_carry else ()),
+            _d2_span("fxv", "cfx", 1, 64).alias("d2"),
+            "fxv",
+            "cfx",
         )
     )
     wp = Window.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cl"))
-    probe_rank = qd.withColumn("prn", F.row_number().over(wp)).select(
-        "q_id",
-        "cl",
-        "prn",
-        *(("fxv", "cfx") if recall_carry else ()),
+    return qd.withColumn("prn", F.row_number().over(wp))
+
+
+def _sql_coarse_chain(nlist) -> tuple[list[str], str]:
+    """(CTE parts, final centroid-CTE name): the DuckDB coarse-training
+    prefix — ``fxe``, init ``ccb0``, ``_CIVF_ITERS`` Lloyd rounds and
+    the final assignment ``ca``. Shared by the IVF-PQ oracle
+    (nlist=8), the trained-SemDeDup oracle (nlist=16) and, with
+    ``nlist`` passed as a scalar-subquery STRING, the production-shaped
+    recall oracle whose nlist is data-derived."""
+    parts, ccb = _sql_lloyd(
+        "c", "fxe", "fxv", _FULLVEC, _CIVF_ITERS, "ca"
     )
-    return e, ccb, assign, probe_rank
-
-
-def _sql_d2full(a: str, b: str) -> str:
-    ai = f"{a}[CAST(i AS INTEGER)]"
-    bi = f"{b}[CAST(i AS INTEGER)]"
-    return (
-        f"CAST(LIST_SUM(LIST_TRANSFORM(generate_series(1, 64),"
-        f" i -> ({ai} - {bi}) * ({ai} - {bi}))) AS BIGINT)"
-    )
-
-
-def _coarse_sql_ctes(
-    nlist, pack: int = _PQT_PACK
-) -> tuple[list[str], str]:
-    """(CTE parts, final centroid-CTE name): the coarse-training
-    prefix of the trained-chain oracle — ``fxe``, init ``ccb0``,
-    ``_CIVF_ITERS`` unrolled (assign, update) pairs, and the final
-    assignment ``ca``. Shared by the IVF-PQ oracle (nlist=8), the
-    trained-SemDeDup oracle (nlist=16), and — with ``nlist`` passed
-    as a scalar-subquery STRING and ``pack=1024`` — the
-    production-shaped recall oracle whose nlist is data-derived."""
-    FX = _PQ_FX
-    d2full = _sql_d2full
-
-    def cassign(name: str, cb: str) -> str:
-        return f"""{name}_d AS (
-  SELECT f.vec_id, b.cl, {d2full('f.fxv', 'b.cfx')} AS d2
-  FROM fxe f, {cb} b
-),
-{name} AS (
-  SELECT vec_id, MIN(d2 * {pack} + cl) % {pack} AS cl
-  FROM {name}_d GROUP BY vec_id
-)"""
-
-    def cupdate(name: str, asg: str) -> str:
-        return f"""{name}_u AS (
-  SELECT a.cl, j.range + 1 AS j,
-         CAST(FLOOR(CAST(SUM(
-           e.fxv[CAST(j.range + 1 AS INTEGER)]
-         ) AS DOUBLE) / COUNT(*)) AS BIGINT) AS v
-  FROM {asg} a JOIN fxe e USING (vec_id), range(0, 64) j
-  GROUP BY a.cl, j.range
-),
-{name} AS (
-  SELECT cl, LIST(v ORDER BY j) AS cfx FROM {name}_u GROUP BY cl
-)"""
-
-    parts = [
-        f"""fxe AS (
-  SELECT vec_id, LIST_TRANSFORM(generate_series(1, 64), i ->
-    CAST(FLOOR(CAST(embeddings.embedding[CAST(i AS INTEGER)]
-               AS DOUBLE) * {FX}) AS BIGINT)) AS fxv
-  FROM embeddings
-),
-ccb0 AS (
+    init = f"""ccb0 AS (
   SELECT vec_id AS cl, fxv AS cfx FROM fxe
   WHERE vec_id < {nlist}
 )"""
-    ]
-    ccb = "ccb0"
-    for it in range(1, _CIVF_ITERS + 1):
-        parts.append(cassign(f"casg{it}", ccb))
-        ccb = f"ccb{it}"
-        parts.append(cupdate(ccb, f"casg{it}"))
-    parts.append(cassign("ca", ccb))
-    return parts, ccb
+    return [_FXE_SQL, init, *parts], ccb
 
 
 def _civf_sql_ctes(
     nlist=_CIVF_NLIST,
-    cpack: int = _PQT_PACK,
     pq_c: int = _PQT_C,
-    pq_pack: int = _PQT_PACK,
     nprobe=_CIVF_NPROBE,
     pre: tuple = (),
 ) -> tuple[str, str, str]:
     """DuckDB mirror of the trained IVF-PQ chain up to serving inputs:
-    the coarse prefix of :func:`_coarse_sql_ctes`, integer residuals
+    the coarse prefix of :func:`_sql_coarse_chain`, integer residuals
     ``res``, residual-PQ Lloyd rounds (``rcb0``→``rcbN``), final codes
-    ``tcodes``, and the probe table ``probes``. Defaults reproduce the
-    round-17 trained chain byte-for-byte; the production-shaped key
-    passes data-derived ``nlist``/``nprobe`` scalar-subquery strings
-    (with their ``params`` CTE in ``pre``), 256-entry codebooks and
-    the matching wider pack bases."""
-    d2full = _sql_d2full
-
-    def d2sub(r: str, c: str) -> str:
-        ri = f"{r}[CAST(b.s * 8 + i AS INTEGER)]"
-        ci = f"{c}[CAST(i AS INTEGER)]"
-        return (
-            f"CAST(LIST_SUM(LIST_TRANSFORM(generate_series(1, 8),"
-            f" i -> ({ri} - {ci}) * ({ri} - {ci}))) AS BIGINT)"
-        )
-
-    def rassign(name: str, cb: str) -> str:
-        return f"""{name}_d AS (
-  SELECT r.vec_id, b.s, b.c, {d2sub('r.rfx', 'b.cfx')} AS d2
-  FROM res r, {cb} b
-),
-{name} AS (
-  SELECT vec_id, s, MIN(d2 * {pq_pack} + c) % {pq_pack} AS c
-  FROM {name}_d GROUP BY vec_id, s
-)"""
-
-    def rupdate(name: str, asg: str) -> str:
-        return f"""{name}_u AS (
-  SELECT a.s, a.c, j.range + 1 AS j,
-         CAST(FLOOR(CAST(SUM(
-           r.rfx[CAST(a.s * 8 + j.range + 1 AS INTEGER)]
-         ) AS DOUBLE) / COUNT(*)) AS BIGINT) AS v
-  FROM {asg} a JOIN res r USING (vec_id), range(0, 8) j
-  GROUP BY a.s, a.c, j.range
-),
-{name} AS (
-  SELECT s, c, LIST(v ORDER BY j) AS cfx FROM {name}_u GROUP BY s, c
-)"""
-
-    parts, ccb = _coarse_sql_ctes(nlist, cpack)
-    parts = list(pre) + parts
-    parts.append(
+    ``tcodes``, and the probe table ``probes``. The production-shaped
+    key passes data-derived ``nlist``/``nprobe`` scalar-subquery
+    strings (with their ``params`` CTE in ``pre``) and 256-entry
+    codebooks."""
+    parts, ccb = _sql_coarse_chain(nlist)
+    rparts, rcb = _sql_lloyd(
+        "r", "res", "rfx", _SUBSPACE, _PQT_ITERS, "tcodes"
+    )
+    return ",\n".join([
+        *pre,
+        *parts,
         f"""res AS (
   SELECT f.vec_id, a.cl,
          LIST_TRANSFORM(generate_series(1, 64), i ->
            f.fxv[CAST(i AS INTEGER)] - c.cfx[CAST(i AS INTEGER)])
            AS rfx
   FROM fxe f JOIN ca a USING (vec_id) JOIN {ccb} c USING (cl)
-),
-rcb0 AS (
-  SELECT s.range AS s, r.vec_id AS c,
-         LIST_TRANSFORM(generate_series(1, 8), i ->
-           r.rfx[CAST(s.range * 8 + i AS INTEGER)]) AS cfx
-  FROM res r, range(0, {_PQ_S}) s WHERE r.vec_id < {pq_c}
-)"""
-    )
-    rcb = "rcb0"
-    for it in range(1, _PQT_ITERS + 1):
-        parts.append(rassign(f"rasg{it}", rcb))
-        rcb = f"rcb{it}"
-        parts.append(rupdate(rcb, f"rasg{it}"))
-    parts.append(rassign("tcodes", rcb))
-    parts.append(
+)""",
+        _sql_subspace_init("rcb0", "res", "rfx", pq_c),
+        *rparts,
         f"""pr AS (
   SELECT q_id, cl, ROW_NUMBER() OVER (
     PARTITION BY q_id ORDER BY d2, cl) AS prn
   FROM (SELECT f.vec_id AS q_id, b.cl,
-               {d2full('f.fxv', 'b.cfx')} AS d2
+               CAST(LIST_SUM(LIST_TRANSFORM(generate_series(1, 64),
+                 i -> (f.fxv[CAST(i AS INTEGER)] - b.cfx[CAST(i AS INTEGER)])
+                    * (f.fxv[CAST(i AS INTEGER)] - b.cfx[CAST(i AS INTEGER)])))
+                 AS BIGINT) AS d2
         FROM fxe f, {ccb} b WHERE f.vec_id < {N_QUERIES}) t
 ),
-probes AS (SELECT q_id, cl FROM pr WHERE prn <= {nprobe})"""
-    )
-    return ",\n".join(parts), ccb, rcb
+probes AS (SELECT q_id, cl FROM pr WHERE prn <= {nprobe})""",
+    ]), ccb, rcb
 
 
 _CIVF_CTES, _CIVF_CCB, _CIVF_RCB = _civf_sql_ctes()
@@ -1928,23 +1763,11 @@ FROM {_CIVF_CCB} b LEFT JOIN members m ON m.cl = b.cl
 def q_sim_ivf_train_coarse(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # ccb is consumed twice (the report join + the assign lineage);
-    # assign once — checkpoint ccb only
-    _, ccb, assign, _ = _civf_chain(
-        spark, sf_dir, ckpt=frozenset({"ccb"})
-    )
-    members = assign.groupBy("cl").agg(F.count(F.lit(1)).alias("n"))
-    return ccb.join(members, "cl", "left").select(
-        F.col("cl").cast("long").alias("cl"),
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias(
-            "n_members"
-        ),
-        F.aggregate(
-            F.col("cfx"),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("cent_checksum"),
-    )
+    # ccb feeds the report join and the assignment; assign is read once
+    e, ccb = _coarse_chain(spark, sf_dir)
+    ccb = _train_once(ccb)
+    assign = _lloyd_assign(e, ccb, _FULLVEC)
+    return _codebook_report(ccb, assign, _FULLVEC)
 
 
 # floors measured at sf0.01 (500 vectors, 20 queries) — see
@@ -2104,7 +1927,6 @@ def _ivfpq_recall_frame(
     assign: DataFrame,
     probes: DataFrame,
     pq_c: int,
-    pq_pack: int,
     m_exact: str,
     m_adc: str,
     exact_floor: float,
@@ -2134,43 +1956,12 @@ def _ivfpq_recall_frame(
         assign.join(F.broadcast(ccb), "cl")
         .select("vec_id", "cl", rfx.alias("rfx"))
     )
-    sub = res.select(
-        "vec_id",
-        "cl",
-        "rfx",
-        F.explode(
-            F.array(*[F.lit(s) for s in range(_PQ_S)])
-        ).alias("s"),
-    ).select(
-        "vec_id",
-        "cl",
-        "s",
-        F.slice(F.col("rfx"), F.col("s") * 8 + 1, 8).alias("sfx"),
-    )
-    rcb = (
-        res.filter(F.col("vec_id") < pq_c)
-        .select(
-            F.col("vec_id").alias("c"),
-            "rfx",
-            F.explode(
-                F.array(*[F.lit(s) for s in range(_PQ_S)])
-            ).alias("s"),
-        )
-        .select(
-            "s",
-            "c",
-            F.slice(F.col("rfx"), F.col("s") * 8 + 1, 8).alias("cfx"),
-        )
-    )
-    for _ in range(_PQT_ITERS):
-        asg = _pqt_assign(sub, rcb, pack=pq_pack, carry=("sfx",))
-        rcb = _pqt_update(asg)
+    sub, rcb = _subspaces(res, "rfx", pq_c, keep=("cl",))
     # the trained residual codebook feeds the final assign AND the
-    # per-query LUT; in-loop iterates stay linear (see _pqt_chain)
-    rcb = _train_once(rcb)
-    # cl rides through the argmin (carry) instead of a join back to
-    # res — one exchange less on the code table (r20, guide §2.4)
-    codes = _pqt_assign(sub, rcb, pack=pq_pack, carry=("cl",))
+    # per-query LUT
+    rcb = _train_once(_lloyd(sub, rcb, _SUBSPACE, _PQT_ITERS))
+    # cl rides through the argmin instead of a join back to res
+    codes = _lloyd_assign(sub, rcb, _SUBSPACE, carry=("cl",))
     qres = probes.select(
         "q_id",
         "cl",
@@ -2343,14 +2134,16 @@ WITH {_CIVF_CTES},
 def q_sim_ivfpq_trained_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e, ccb, assign, probe_rank = _civf_chain(
-        spark, sf_dir, ckpt=frozenset({"ccb"}), recall_carry=True
-    )
-    probes = probe_rank.filter(F.col("prn") <= _CIVF_NPROBE).select(
-        "q_id", "cl", "fxv", "cfx"
-    )
+    # ccb feeds the assignment, the probes and the residuals; the
+    # assignment carries fxv and is read once (by the residual build)
+    e, ccb = _coarse_chain(spark, sf_dir)
+    ccb = _train_once(ccb)
+    assign = _lloyd_assign(e, ccb, _FULLVEC, carry=("fxv",))
+    probes = _probe_rank(e, ccb).filter(
+        F.col("prn") <= _CIVF_NPROBE
+    ).select("q_id", "cl", "fxv", "cfx")
     return _ivfpq_recall_frame(
-        spark, e, ccb, assign, probes, _PQT_C, _PQT_PACK,
+        spark, e, ccb, assign, probes, _PQT_C,
         "ivf_exact_trained", "ivfpq_adc_trained",
         _CIVF_EXACT_FLOOR, _CIVF_ADC_FLOOR,
     )
@@ -2358,9 +2151,7 @@ def q_sim_ivfpq_trained_recall(
 
 # --- production-shaped trained IVF-PQ (round 18, VERDICT r17 #4) ----------
 _PROD_C = 256  # PQ codebook entries per subspace (production scale)
-_PROD_PACK = 512  # packed-argmin base > _PROD_C
-_PROD_CPACK = 1024  # coarse packed-argmin base > the nlist cap
-_PROD_NLIST_CAP = 1023  # keeps d2 * pack inside int64 (see doc)
+_PROD_NLIST_CAP = 1023  # < _PACK; keeps d2 * _PACK inside int64 (see doc)
 # floors set below the values measured at sf0.01 (500 vectors,
 # nlist=22, nprobe=2): exact pruning 0.93@5, raw ADC 0.52@5 (0.20@1),
 # ADC+refine 0.93@5 — see tests/test_llm_ops.py; the
@@ -2383,9 +2174,7 @@ _PROD_PARAMS_CTE = f"""params AS (
 
 _PROD_CTES, _PROD_CCB, _PROD_RCB = _civf_sql_ctes(
     nlist=_PROD_NLIST_SQL,
-    cpack=_PROD_CPACK,
     pq_c=_PROD_C,
-    pq_pack=_PROD_PACK,
     nprobe="(SELECT nprobe FROM params)",
     pre=(_PROD_PARAMS_CTE,),
 )
@@ -2410,9 +2199,9 @@ WITH {_PROD_CTES},
         f"at the 10x fixture), nprobe = max(1, nlist // 8) (a ~12% "
         f"probe fraction), and {_PROD_C}-entry residual PQ codebooks "
         f"(the k=256 single-byte-code point of Jegou et al.'s PQ) "
-        f"with packed-argmin bases widened to match ({_PROD_PACK} "
-        f"subspace / {_PROD_CPACK} coarse; nlist is capped at "
-        f"{_PROD_NLIST_CAP} so d2*pack stays inside int64 — past "
+        f"with the shared packed-argmin base {_PACK} (above every "
+        f"centroid id; nlist is capped at "
+        f"{_PROD_NLIST_CAP} so d2*{_PACK} stays inside int64 — past "
         "that, production swaps the packed MIN for a struct-ordered "
         "min, same semantics). Both engines derive nlist/nprobe from "
         "COUNT(*) — Spark as a broadcast 1-row params table joined "
@@ -2442,9 +2231,7 @@ WITH {_PROD_CTES},
 def q_sim_ivfpq_production_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _fx64(F.col("embedding")).alias("fxv")
-    )
+    e = _fx_embeddings(spark, sf_dir)
     params = (
         e.agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -2465,36 +2252,17 @@ def q_sim_ivfpq_production_recall(
     ccb = e.join(
         F.broadcast(params), F.col("vec_id") < F.col("nlist")
     ).select(F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx"))
-    for _ in range(_CIVF_ITERS):
-        asg = _civf_assign(e, ccb, pack=_PROD_CPACK, carry=("fxv",))
-        ccb = _civf_update(asg)
-    # multi-consumer artifacts only (see _pqt_chain); assign carries
-    # fxv for the res build and stays un-checkpointed — its single
-    # consumer, the residual table, is the checkpointed artifact
-    # (round 20, guide §2.4)
-    ccb = _train_once(ccb)
-    assign = _civf_assign(e, ccb, pack=_PROD_CPACK, carry=("fxv",))
-    qd = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(ccb), F.lit(True))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            "cl",
-            _d2_span("fxv", "cfx", 1, 64).alias(
-                "d2"
-            ),
-            "fxv",
-            "cfx",
-        )
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.asc("d2"), F.asc("cl"))
+    # ccb feeds the assignment, the probes and the residuals; the
+    # assignment carries fxv and is read once (by the residual build)
+    ccb = _train_once(_lloyd(e, ccb, _FULLVEC, _CIVF_ITERS))
+    assign = _lloyd_assign(e, ccb, _FULLVEC, carry=("fxv",))
     probes = (
-        qd.withColumn("prn", F.row_number().over(wp))
+        _probe_rank(e, ccb)
         .join(F.broadcast(params), F.col("prn") <= F.col("nprobe"))
         .select("q_id", "cl", "fxv", "cfx")
     )
     return _ivfpq_recall_frame(
-        spark, e, ccb, assign, probes, _PROD_C, _PROD_PACK,
+        spark, e, ccb, assign, probes, _PROD_C,
         "ivf_exact_prod", "ivfpq_adc_prod",
         _PROD_EXACT_FLOOR, _PROD_ADC_FLOOR,
         rerank=("ivfpq_refine_prod", _PROD_RERANK_R,
@@ -3166,9 +2934,11 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# k-means in offset fixed-point: FLOOR(x * 1e6) + 2_000_000 keeps every
-# quantized coordinate positive, so integer division (Spark `div`,
-# DuckDB `//`) agrees across engines (they differ on negative operands)
+# The k-means oracle works in offset fixed point: FLOOR(x * 1e6) +
+# 2_000_000 keeps every quantized coordinate positive, so DuckDB `//` is
+# a floor division. The Spark side is the shared coarse Lloyd on
+# un-offset _fx64 points; it agrees exactly because the offset cancels
+# in every d2 and floor((S + 2e6 n) / n) = floor(S / n) + 2e6.
 _KM_K = 4
 _KM_Q = (
     "LIST_TRANSFORM(embedding, x -> "
@@ -3213,71 +2983,30 @@ FROM a2 GROUP BY cid
         "diversity sampling: k=4 centroids seeded from the first k "
         "vectors, one full assign->update round, final re-assignment, "
         "reporting per-cluster size, membership checksum, and integer "
-        "inertia. All arithmetic is offset fixed-point (quantized "
-        "coordinates made positive so Spark `div` and DuckDB `//` "
-        "agree), making the ENTIRE iterative pipeline bit-reproducible "
-        "across engines. Shape at 100 TB: assignment is a broadcast "
-        "cross join against k rows (never a shuffle of the points), "
-        "argmin is min(struct(dist, cid)) in one map-side-combinable "
-        "aggregate, and the centroid update shuffles |k x dims| partial "
-        "sums — the same per-round cost profile as Spark MLlib's "
-        "KMeans, expressed declaratively. More Lloyd rounds = repeat "
-        "the same two joins; lineage is cut per round at scale "
-        "(localCheckpoint) exactly as the PageRank key documents.",
+        "inertia. The Spark side is one round of the shared exact "
+        "fixed-point Lloyd that trains every quantizer in this module "
+        "(integer distances, FLOOR-mean update); the oracle is an "
+        "independent offset fixed-point reference (coordinates made "
+        "positive so DuckDB `//` floors), and the offset cancels in "
+        "every distance and mean, so the ENTIRE iterative pipeline is "
+        "bit-reproducible across engines. Shape at 100 TB: assignment "
+        "is a broadcast cross join against k rows (never a shuffle of "
+        "the points), argmin is the packed MIN(d2 * base + cid) in one "
+        "map-side-combinable aggregate, and the centroid update "
+        "shuffles |k x dims| partial sums — the same per-round cost "
+        "profile as Spark MLlib's KMeans, expressed declaratively. "
+        "More Lloyd rounds = repeat the same assign/update pair; "
+        "lineage is cut per round at scale (localCheckpoint) exactly "
+        "as the PageRank key documents.",
 )
 def q_ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1000000).cast("long")
-            + 2000000,
-        ).alias("q"),
-    )
-    cents = pts.filter(F.col("vec_id") < _KM_K).select(
-        F.col("vec_id").alias("cid"), F.col("q").alias("c")
-    )
-
-    def assign(centroids: DataFrame) -> DataFrame:
-        scored = pts.crossJoin(F.broadcast(centroids)).select(
-            "vec_id",
-            "cid",
-            F.aggregate(
-                F.zip_with("q", "c", lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-        )
-        return (
-            scored.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"))
-            .select(
-                "vec_id",
-                F.col("m.cid").alias("cid"),
-                F.col("m.dist").alias("dist"),
-            )
-        )
-
-    a1 = assign(cents)
-    sums = (
-        a1.join(pts, "vec_id")
-        .select("cid", F.posexplode("q"))
-        .toDF("cid", "pos", "qv")
-        .groupBy("cid", "pos")
-        .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("cid", "pos", F.expr("s div n").alias("m"))
-    )
-    c1 = sums.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda t: t["m"],
-        ).alias("c")
-    )
-    a2 = assign(c1)
-    return a2.groupBy("cid").agg(
+    e, cents = _coarse_chain(spark, sf_dir, nlist=_KM_K, iters=1)
+    # the carried d2 is the final packed minimum div _PACK
+    a2 = _lloyd_assign(e, cents, _FULLVEC, carry=("d2",))
+    return a2.groupBy(F.col("cl").alias("cid")).agg(
         F.count(F.lit(1)).alias("n_points"),
         F.sum("vec_id").alias("sum_ids"),
-        F.sum("dist").alias("inertia"),
+        F.sum("d2").alias("inertia"),
     )
 
 

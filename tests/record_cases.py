@@ -2,8 +2,9 @@
 
 Both containers run through one record-container DataSource, so each
 case here takes the format name and runs against that container's
-adapter; ``tests/test_netcdf3.py`` and ``tests/test_hdf5lite.py`` call
-them with their own format.
+adapter. ``tests/test_record_containers.py`` runs the protocol cases
+once per format; ``tests/test_netcdf3.py`` and ``tests/test_hdf5lite.py``
+call the pushdown case inside their own scan tests.
 """
 
 from __future__ import annotations

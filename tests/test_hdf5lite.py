@@ -1668,10 +1668,6 @@ def test_src_netcdf4_multifile_scan_oracle(check):
     assert pdf.loc[0, "t_min"] == 24 and pdf.loc[0, "t_max"] == 103
 
 
-def test_nc4_dir_tail_stream_protocol(tmp_path):
-    record_cases.dir_tail_freeze_and_replay("netcdf4", tmp_path)
-
-
 def test_fixed_string_dataset_roundtrip(tmp_path):
     """Fixed-length string (class 3) datasets round-trip in both
     libvers: S<n> element dtype — the plain-HDF5 encoding a foreign
@@ -2004,10 +2000,6 @@ def test_src_netcdf_string_scan_oracle(check):
     assert pdf["name"].str.startswith("s").all() or True
 
 
-def test_nc4_arrow_tail_protocol(spark, tmp_path):
-    record_cases.arrow_tail_protocol(spark, "netcdf4", tmp_path)
-
-
 def test_src_netcdf4_arrow_tail_oracle(check):
     """The NC4 Arrow tail through a real availableNow streaming query
     matches the DuckDB oracle."""
@@ -2245,10 +2237,6 @@ def test_src_netcdf_vlen_scan_oracle(check):
     pdf = check("src_netcdf_vlen_scan")
     assert list(pdf["n_elems"]) == [0, 1, 2, 3, 4]
     assert int(pdf["n_rec"].sum()) == 48
-
-
-def test_nc4_arrow_dir_tail_protocol(spark, tmp_path):
-    record_cases.arrow_dir_tail_protocol(spark, "netcdf4", tmp_path)
 
 
 def test_vlen_sequence_stream_tail(spark, tmp_path):
@@ -3078,15 +3066,6 @@ def test_src_netcdf4_fill_scan_oracle(check):
     assert pdf.loc[0, "n_cells"] == srcq.GRID_T * srcq.GRID_Y * srcq.GRID_X
     # exactly the deleted chunk's records read as the fill
     assert pdf.loc[0, "n_filled"] == 16 * srcq.GRID_Y * srcq.GRID_X
-
-
-def test_nc4_union_schema_strict_refuses_and_union_reads(spark):
-    from netcdf4_variable_streamer_spark.sources import queries as srcq
-
-    record_cases.union_strict_then_null_fill(
-        spark, "netcdf4", srcq.ensure_nc4_evolving(), "t_idx", 24, 4,
-        "name", "v",
-    )
 
 
 def test_object_reference_dataset_roundtrip(tmp_path):

@@ -2867,3 +2867,92 @@ def test_exact_pairs_block_fits_budget():
         assert blk >= 1
         assert 8 * rows * blk <= _PAIRS_BLOCK_BYTES, (rows, blk)
     assert _pairs_block_rows(256) == 32768  # small batches: one block
+
+
+def _lloyd_case(width: int, seed: int):
+    """Integer points P and centroids C (ids ascending) with three
+    planted cases: point 0 is equidistant from centroids 0 and 1,
+    centroid 2 is too far to attract any point, and both live
+    centroids get negative coordinate sums that do not divide evenly."""
+    import numpy as np
+
+    c = np.zeros((3, width), np.int64)
+    c[1, 0] = 2
+    c[2, :] = 100
+    planted = np.zeros((6, width), np.int64)
+    planted[0, 0] = 1  # d2 = 1 to both centroid 0 and centroid 1
+    planted[1:4, 1] = (-1, -2, -2)  # members of centroid 0
+    planted[4, 0] = 3  # members of centroid 1
+    planted[5, :2] = (2, -1)
+    rng = np.random.default_rng(seed)
+    p = np.vstack([planted, rng.integers(-3, 4, (10, width))])
+    return p, c
+
+
+def _np_lloyd_round(p, c, ids):
+    """One Lloyd round in NumPy: argmin (first index = lowest id on a
+    tie), then the floor mean of each centroid's members."""
+    import numpy as np
+
+    lab = np.argmin(((p[:, None, :] - c[None, :, :]) ** 2).sum(-1), 1)
+    upd = {
+        ids[j]: np.floor_divide(p[lab == j].sum(0), (lab == j).sum())
+        for j in np.unique(lab)
+    }
+    return [ids[j] for j in lab], upd
+
+
+@pytest.mark.parametrize("layout", ["full", "subspace"])
+def test_lloyd_round_matches_numpy(spark, layout):
+    """One round of the shared Lloyd assign/update equals NumPy argmin
+    + floor_divide in both layouts: lowest id wins a tie, a centroid
+    with no members drops out, and negative means floor (not
+    truncate)."""
+    import numpy as np
+
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _FULLVEC,
+        _SUBSPACE,
+        _lloyd_assign,
+        _lloyd_update,
+    )
+
+    ids = [0, 3, 7]
+    shape = _FULLVEC if layout == "full" else _SUBSPACE
+    subspaces = [()] if layout == "full" else [(0,), (5,)]
+    pts, cents, want_lab, want_upd = [], [], {}, {}
+    for k, s in enumerate(subspaces):
+        p, c = _lloyd_case(shape.width, seed=k)
+        lab, upd = _np_lloyd_round(p, c, ids)
+        # the planted cases are exercised: the tie, the empty centroid,
+        # and a negative mean whose floor differs from truncation
+        assert lab[0] == ids[0] and ids[2] not in upd
+        members = {i: p[np.array(lab) == i] for i in upd}
+        trunc = {i: (m.sum(0) / len(m)).astype(np.int64)
+                 for i, m in members.items()}
+        assert any((upd[i] != trunc[i]).any() for i in upd)
+        pts += [(v, *s, [int(x) for x in row]) for v, row in enumerate(p)]
+        cents += [(*s, i, [int(x) for x in row]) for i, row in zip(ids, c)]
+        want_lab.update({(v, *s): i for v, i in enumerate(lab)})
+        want_upd.update(
+            {(*s, i): [int(x) for x in row] for i, row in upd.items()}
+        )
+    part = [f"{n} int" for n in shape.part]
+    pts_df = spark.createDataFrame(
+        pts, ", ".join(["vec_id long", *part, f"{shape.vec} array<long>"])
+    )
+    cents_df = spark.createDataFrame(
+        cents, ", ".join([*part, f"{shape.label} long", "cfx array<long>"])
+    )
+    asg = _lloyd_assign(pts_df, cents_df, shape, carry=(shape.vec,))
+    key = ("vec_id", *shape.part)
+    got_lab = {
+        tuple(r[k] for k in key): r[shape.label] for r in asg.collect()
+    }
+    assert got_lab == want_lab
+    grp = (*shape.part, shape.label)
+    got_upd = {
+        tuple(r[k] for k in grp): list(r["cfx"])
+        for r in _lloyd_update(asg, shape).collect()
+    }
+    assert got_upd == want_upd

@@ -708,10 +708,6 @@ def test_src_netcdf3_cf_cal_scan_oracle(check):
     assert row["first_ts"] == "2004-03-01 06:00:00"
 
 
-def test_dir_tail_stream_protocol(tmp_path):
-    record_cases.dir_tail_freeze_and_replay("netcdf3", tmp_path)
-
-
 def _scan_rows(path: str, columns: list, lo: int, hi: int) -> list:
     """Rows of records [lo, hi) as the batch scan's executors build them."""
     return [
@@ -787,20 +783,12 @@ def test_src_netcdf_char_scan_oracle(check):
     assert len(classic) == len(nc4) == half
 
 
-def test_nc3_arrow_tail_protocol(spark, tmp_path):
-    record_cases.arrow_tail_protocol(spark, "netcdf3", tmp_path)
-
-
 def test_src_netcdf3_arrow_tail_oracle(check):
     """The Arrow tail through a real availableNow streaming query
     matches the DuckDB oracle."""
     pdf = check("src_netcdf3_arrow_tail")
     assert len(pdf) == 64
     assert int(pdf["n_cells"].sum()) == 64 * 32 * 32
-
-
-def test_arrow_dir_tail_protocol(spark, tmp_path):
-    record_cases.arrow_dir_tail_protocol(spark, "netcdf3", tmp_path)
 
 
 def test_src_netcdf3_arrow_dir_tail_oracle(check):
@@ -929,15 +917,6 @@ def test_union_schema_scan_oracle(check):
     # exactly the pre-evolution records carry NULL humidity
     assert (
         pdf.loc[0, "n_hum_null"] == 16 * srcq.GRID_Y * srcq.GRID_X
-    )
-
-
-def test_union_schema_strict_mode_refuses(spark):
-    from netcdf4_variable_streamer_spark.sources import queries as srcq
-
-    record_cases.union_strict_then_null_fill(
-        spark, "netcdf3", srcq.ensure_nc3_evolving(), "time_idx", 32,
-        srcq.GRID_Y * srcq.GRID_X, "humidity", "temperature",
     )
 
 

@@ -289,6 +289,35 @@ def test_semantic_dedup_trained_keeps_posture(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
+# (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin)
+# in the pre-execution formatted plan of every key that trains centroids
+# with the shared Lloyd k-means, recorded before the per-family Lloyd
+# copies were merged. A train-once checkpoint lost or added, or a
+# broadcast demoted, moves these counts.
+_TRAINED_PLAN_SHAPES = {
+    "q_sim_pq_train_codebook": (3, 1, 0, 1),
+    "q_sim_pq_trained_recall": (6, 1, 2, 1),
+    "q_sim_ivf_train_coarse": (3, 0, 1, 1),
+    "q_sim_ivfpq_trained_recall": (10, 5, 1, 2),
+    "q_sim_ivfpq_production_recall": (12, 2, 1, 3),
+    "q_dedup_semantic_trained": (4, 3, 0, 2),
+}
+
+
+def test_trained_quantizer_plan_shapes_pinned(spark):
+    nodes = (
+        "Exchange",
+        "BroadcastHashJoin",
+        "BroadcastNestedLoopJoin",
+        "SortMergeJoin",
+    )
+    got = {}
+    for key in _TRAINED_PLAN_SHAPES:
+        plan = plans.plan_string(build(spark, key))
+        got[key] = tuple(plans.count_nodes(plan, n) for n in nodes)
+    assert got == _TRAINED_PLAN_SHAPES
+
+
 def test_pipeline_pretrain_no_single_partition_exchange(spark):
     # the composed pipeline inherits the packing stage's posture: the
     # global cumsum must not collapse into a one-partition window

@@ -1,8 +1,9 @@
-"""Quick single-key strict-mirror check: python .scratch/check_one.py KEY [SF]"""
+"""Quick single-key strict-mirror check: python tools/check_one.py KEY [SF]"""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import netcdf4_variable_streamer_spark.operators  # noqa: F401
 import netcdf4_variable_streamer_spark.sources  # noqa: F401

@@ -4,10 +4,11 @@ variant). Exits nonzero on any failure."""
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
