@@ -1355,102 +1355,8 @@ ORDER BY d.lang
         "the funnel audit joins are id-keyed and the final output "
         "is |langs| rows.",
 )
-def q_pipeline_curation(
-    spark: SparkSession, sf_dir: str, *, _checkpoint: bool = True
-) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
-    from netcdf4_variable_streamer_spark.operators.text import (
-        perplexity_filter,
-    )
-
-    # _checkpoint=False is the plan-posture test hook: lazy checkpoints
-    # truncate explain() at the materialization boundary, so the tests
-    # build the identical un-checkpointed composition to see the one
-    # end-to-end Catalyst plan the docstring contract describes.
-    ckpt = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if _checkpoint
-        else (lambda df: df)
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    wkeep = Window.partitionBy(F.md5("text"))
-    dedup = ckpt(
-        docs.withColumn("keep_id", F.min("doc_id").over(wkeep))
-        .filter(F.col("doc_id") == F.col("keep_id"))
-        .drop("keep_id")
-    )  # read by the LM train pass, the
-    # scoring pass, the survivors join AND the report join (round 19
-    # train-once contract, guide §5)
-    ppl = (
-        perplexity_filter(dedup, dedup)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    survivors = dedup.join(ppl, "doc_id")
-    toks = (
-        survivors.filter(F.length("text") > 0)
-        .select(
-            "doc_id", "lang",
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang",
-        (_md5_int(F.col("tok"), 7) % 4096).alias("bucket"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    wgt = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    cl = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * wgt).alias("score_q"),
-    )
-    ccut = cl.groupBy("lang").agg(
-        F.sum("score_q").alias("sum_q"),
-        F.sum("n_tokens").alias("sum_n"),
-    )
-    final = (
-        cl.join(F.broadcast(ccut), "lang")
-        .filter(
-            F.col("score_q") * F.col("sum_n")
-            >= F.col("sum_q") * F.col("n_tokens")
-        )
-        .select("doc_id", "n_tokens")
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(
-            dedup.select("doc_id", F.lit(1).alias("in_dedup")),
-            "doc_id", "left",
-        )
-        .join(
-            ppl.select("doc_id", F.lit(1).alias("in_ppl")),
-            "doc_id", "left",
-        )
-        .join(final.withColumnRenamed("n_tokens", "f_tokens"),
-              "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(
-                F.coalesce(F.col("in_dedup"), F.lit(0)).cast("long")
-            ).alias("n_after_dedup"),
-            F.sum(
-                F.coalesce(F.col("in_ppl"), F.lit(0)).cast("long")
-            ).alias("n_after_ppl"),
-            F.sum(
-                F.col("f_tokens").isNotNull().cast("long")
-            ).alias("n_final"),
-            F.coalesce(F.sum("f_tokens"), F.lit(0)).cast("long").alias(
-                "tokens_final"
-            ),
-        )
-        .orderBy("lang")
-    )
+def q_pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _curation_funnel(spark, sf_dir, None)
 
 
 _BUDGET_TOKENS = 2000  # per-language token budget for the fixture
@@ -1508,29 +1414,11 @@ ORDER BY doc_id
         "pattern) before the window.",
 )
 def q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
+    from netcdf4_variable_streamer_spark.operators.text import (
+        hashed_classifier_scores,
+    )
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.filter(F.length("text") > 0)
-        .select(
-            "doc_id", "lang",
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang",
-        (_md5_int(F.col("tok"), 7) % 4096).alias("bucket"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    wgt = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    scored = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * wgt).alias("score_q"),
-    )
+    scored = hashed_classifier_scores(load_table(spark, sf_dir, "documents"))
     w = (
         Window.partitionBy("lang")
         .orderBy(F.desc("score_q"), F.asc("doc_id"))
@@ -1546,8 +1434,9 @@ def q_sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the full-recipe curation composite imports the span-decontamination
-# machinery (pinned tokenizer + split/threshold constants) from dedup
+# the curation funnel's decontam stage and the decontam-aware sampler
+# import the span-decontamination machinery (pinned tokenizer +
+# split/threshold constants) from dedup
 from netcdf4_variable_streamer_spark.operators.dedup import (  # noqa: E402
     _SDR_CUT_CTE_SQL,
     _SDR_MAX_OCC,
@@ -1563,6 +1452,144 @@ from netcdf4_variable_streamer_spark.operators.dedup import (  # noqa: E402
     _span_quarantine,
     _span_table,
 )
+
+
+def _decontam_stage(dedup: DataFrame, mode: str | None):
+    """The curation recipe's middle stage over the dedup survivors.
+    Returns the frame the gates consume and the stage's funnel column
+    as a (doc_id-keyed frame, aggregate) pair; ``mode=None`` is no stage
+    (the dedup frame, no column).
+    ``"quarantine"`` drops crawl docs at or above the span-contamination
+    ppm threshold (funnel: ``n_after_decontam``); ``"rewrite"`` cuts
+    every reference-matching span out of crawl docs under the
+    frequent-n-gram exclusion and keeps them (funnel: ``n_tokens_cut``).
+    Reference-side docs pass through both. The stage's output is
+    materialized once: the LM train pass, the scoring pass, the
+    classifier and the funnel join all read it."""
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _train_once,
+    )
+
+    if mode is None:
+        return dedup, None
+    if mode == "quarantine":
+        spans = _span_table(dedup.select("doc_id", "text"))
+        sref = (
+            spans.filter(F.col("doc_id") < _SXC_SPLIT)
+            .select(F.col("cluster").alias("h"))
+            .distinct()
+            .withColumn("hit", F.lit(1))
+        )
+        quar = _span_quarantine(
+            spans.filter(F.col("doc_id") >= _SXC_SPLIT), sref
+        )
+        decon = _train_once(
+            dedup.join(F.broadcast(quar), "doc_id", "left_anti")
+        )
+        return decon, (
+            decon.select("doc_id", F.lit(1).alias("in_decon")),
+            _marked("in_decon").alias("n_after_decontam"),
+        )
+    ref = dedup.filter(F.col("doc_id") < _SXC_SPLIT)
+    crawl = dedup.filter(F.col("doc_id") >= _SXC_SPLIT)
+    sref = (
+        _span_table(ref.select("doc_id", "text")).select("cluster").distinct()
+    )
+    hits = _span_table(crawl.select("doc_id", "text")).join(
+        F.broadcast(sref), "cluster"
+    )
+    rw = _rewrite_kept(_cap_excluded_cut(hits), crawl, extra_cols=("lang",))
+    surg = _train_once(
+        ref.select(
+            "doc_id", "lang", "text", F.lit(0).cast("long").alias("n_cut")
+        ).unionByName(
+            rw.select(
+                "doc_id",
+                "lang",
+                F.array_join("kept", " ").alias("text"),
+                (F.size("tk") - F.size("kept")).cast("long").alias("n_cut"),
+            )
+        )
+    )
+    return surg, (
+        surg.select("doc_id", "n_cut"),
+        F.coalesce(F.sum("n_cut"), F.lit(0)).cast("long").alias(
+            "n_tokens_cut"
+        ),
+    )
+
+
+def _marked(col: str):
+    """Funnel count of the docs a left join marked with ``col``."""
+    return F.sum(F.coalesce(F.col(col), F.lit(0)).cast("long"))
+
+
+def _curation_funnel(
+    spark: SparkSession, sf_dir: str, mode: str | None
+) -> DataFrame:
+    """The batch curation recipe as one plan: exact dedup (min-id keeper
+    per ``md5(text)``), the :func:`_decontam_stage` named by ``mode``,
+    the perplexity gate, the hashed-classifier gate, then a per-language
+    funnel of docs in, after each stage, and final tokens. Every stage
+    consumes the previous one's frame lazily."""
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _train_once,
+    )
+    from netcdf4_variable_streamer_spark.operators.text import (
+        classifier_keep,
+        hashed_classifier_scores,
+        perplexity_filter,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "text"
+    )
+    wkeep = Window.partitionBy(F.md5("text"))
+    # read by the decontam stage (or the gates) AND the funnel join
+    dedup = _train_once(
+        docs.withColumn("keep_id", F.min("doc_id").over(wkeep))
+        .filter(F.col("doc_id") == F.col("keep_id"))
+        .drop("keep_id")
+    )
+    gated, stage = _decontam_stage(dedup, mode)
+    ppl = (
+        perplexity_filter(gated, gated)
+        .filter(F.col("keep"))
+        .select("doc_id")
+    )
+    final = (
+        classifier_keep(hashed_classifier_scores(gated.join(ppl, "doc_id")))
+        .filter(F.col("keep"))
+        .select("doc_id", F.col("n_tokens").alias("f_tokens"))
+    )
+    funnel = docs.select("doc_id", "lang").join(
+        dedup.select("doc_id", F.lit(1).alias("in_dedup")), "doc_id", "left"
+    )
+    stage_cols = []
+    if stage is not None:
+        funnel = funnel.join(stage[0], "doc_id", "left")
+        stage_cols = [stage[1]]
+    return (
+        funnel.join(
+            ppl.select("doc_id", F.lit(1).alias("in_ppl")), "doc_id", "left"
+        )
+        .join(final, "doc_id", "left")
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_in"),
+            _marked("in_dedup").alias("n_after_dedup"),
+            *stage_cols,
+            _marked("in_ppl").alias("n_after_ppl"),
+            F.sum(F.col("f_tokens").isNotNull().cast("long")).alias(
+                "n_final"
+            ),
+            F.coalesce(F.sum("f_tokens"), F.lit(0)).cast("long").alias(
+                "tokens_final"
+            ),
+        )
+        .orderBy("lang")
+    )
+
 
 _CURF_ORACLE = rf"""
 WITH dedup AS (
@@ -1710,121 +1737,8 @@ ORDER BY d.lang
         "corpora and persistable exactly as the standalone key "
         "documents.",
 )
-def q_pipeline_curation_full(
-    spark: SparkSession, sf_dir: str, *, _checkpoint: bool = True
-) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
-    from netcdf4_variable_streamer_spark.operators.text import (
-        perplexity_filter,
-    )
-
-    # _checkpoint=False: plan-posture test hook (see q_pipeline_curation)
-    ckpt = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if _checkpoint
-        else (lambda df: df)
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    wkeep = Window.partitionBy(F.md5("text"))
-    dedup = ckpt(
-        docs.withColumn("keep_id", F.min("doc_id").over(wkeep))
-        .filter(F.col("doc_id") == F.col("keep_id"))
-        .drop("keep_id")
-    )  # read by the span build, the
-    # decon anti-join AND the report join (round 19 train-once
-    # contract, guide §5)
-    # stage 2: span-level decontamination over the dedup survivors
-    spans = _span_table(dedup.select("doc_id", "text"))
-    sref = (
-        spans.filter(F.col("doc_id") < _SXC_SPLIT)
-        .select(F.col("cluster").alias("h"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    quar = _span_quarantine(
-        spans.filter(F.col("doc_id") >= _SXC_SPLIT), sref
-    )
-    decon = ckpt(
-        dedup.join(F.broadcast(quar), "doc_id", "left_anti")
-    )  # read by the LM train pass, the
-    # scoring pass, the survivors join AND the report join
-    ppl = (
-        perplexity_filter(decon, decon)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    survivors = decon.join(ppl, "doc_id")
-    toks = (
-        survivors.filter(F.length("text") > 0)
-        .select(
-            "doc_id", "lang",
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang",
-        (_md5_int(F.col("tok"), 7) % 4096).alias("bucket"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    wgt = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    cl = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * wgt).alias("score_q"),
-    )
-    ccut = cl.groupBy("lang").agg(
-        F.sum("score_q").alias("sum_q"),
-        F.sum("n_tokens").alias("sum_n"),
-    )
-    final = (
-        cl.join(F.broadcast(ccut), "lang")
-        .filter(
-            F.col("score_q") * F.col("sum_n")
-            >= F.col("sum_q") * F.col("n_tokens")
-        )
-        .select("doc_id", "n_tokens")
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(
-            dedup.select("doc_id", F.lit(1).alias("in_dedup")),
-            "doc_id", "left",
-        )
-        .join(
-            decon.select("doc_id", F.lit(1).alias("in_decon")),
-            "doc_id", "left",
-        )
-        .join(
-            ppl.select("doc_id", F.lit(1).alias("in_ppl")),
-            "doc_id", "left",
-        )
-        .join(final.withColumnRenamed("n_tokens", "f_tokens"),
-              "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(
-                F.coalesce(F.col("in_dedup"), F.lit(0)).cast("long")
-            ).alias("n_after_dedup"),
-            F.sum(
-                F.coalesce(F.col("in_decon"), F.lit(0)).cast("long")
-            ).alias("n_after_decontam"),
-            F.sum(
-                F.coalesce(F.col("in_ppl"), F.lit(0)).cast("long")
-            ).alias("n_after_ppl"),
-            F.sum(
-                F.col("f_tokens").isNotNull().cast("long")
-            ).alias("n_final"),
-            F.coalesce(F.sum("f_tokens"), F.lit(0)).cast("long").alias(
-                "tokens_final"
-            ),
-        )
-        .orderBy("lang")
-    )
+def q_pipeline_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _curation_funnel(spark, sf_dir, "quarantine")
 
 
 # per-language token budget for the decontam-aware sampler fixture —
@@ -1904,10 +1818,7 @@ def q_sample_budget_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") >= _SXC_SPLIT
     )
-    k = _rewrite_kept(
-        spark, sf_dir, _sdr_cut(spark, sf_dir),
-        docs=crawl, extra_cols=("lang",),
-    )
+    k = _rewrite_kept(_sdr_cut(spark, sf_dir), crawl, extra_cols=("lang",))
     # ONE exploded pass computes both the post-rewrite token count
     # and the quality score, so the span/cut subtree plans once and
     # the corpus is scanned once. explode_outer keeps fully-cut docs
@@ -2123,136 +2034,6 @@ ORDER BY d.lang
         "proportional and bounded by the exclusion cap.",
 )
 def q_pipeline_curation_surgical(
-    spark: SparkSession, sf_dir: str, *, _checkpoint: bool = True
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.text import (
-        perplexity_filter,
-    )
-
-    # _checkpoint=False: plan-posture test hook (see q_pipeline_curation)
-    ckpt = (
-        (lambda df: df.localCheckpoint(eager=False))
-        if _checkpoint
-        else (lambda df: df)
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    wkeep = Window.partitionBy(F.md5("text"))
-    dedup = ckpt(
-        docs.withColumn("keep_id", F.min("doc_id").over(wkeep))
-        .filter(F.col("doc_id") == F.col("keep_id"))
-        .drop("keep_id")
-    )  # read by the crawl/ref splits,
-    # the span-ref build AND the report join — materialize the dedup
-    # window once (round 19 train-once contract, guide §5)
-    # stage 2 (surgical): cut every reference-matching span from the
-    # crawl-side dedup survivors; reference docs pass through raw
-    crawl = dedup.filter(F.col("doc_id") >= _SXC_SPLIT)
-    sref = (
-        _span_table(
-            dedup.filter(F.col("doc_id") < _SXC_SPLIT).select(
-                "doc_id", "text"
-            )
-        )
-        .select("cluster")
-        .distinct()
-    )
-    hits = _span_table(crawl.select("doc_id", "text")).join(
-        F.broadcast(sref), "cluster"
-    )
-    cut = _cap_excluded_cut(hits)
-    rw = _rewrite_kept(
-        spark, sf_dir, cut, docs=crawl, extra_cols=("lang",)
-    )
-    surg = (
-        dedup.filter(F.col("doc_id") < _SXC_SPLIT)
-        .select(
-            "doc_id", "lang", "text",
-            F.lit(0).cast("long").alias("n_cut"),
-        )
-        .unionByName(
-            rw.select(
-                "doc_id",
-                "lang",
-                F.array_join("kept", " ").alias("text"),
-                (F.size("tk") - F.size("kept"))
-                .cast("long")
-                .alias("n_cut"),
-            )
-        )
-    )
-    surg = ckpt(surg)  # read by the LM train pass, the
-    # scoring pass, the classifier explode AND the report join
-    ppl = (
-        perplexity_filter(surg, surg)
-        .filter(F.col("keep"))
-        .select("doc_id")
-    )
-    survivors = surg.join(ppl, "doc_id")
-    toks = (
-        survivors.filter(F.length("text") > 0)
-        .select(
-            "doc_id", "lang",
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang",
-        (_md5_int(F.col("tok"), 7) % 4096).alias("bucket"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    wgt = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    cl = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * wgt).alias("score_q"),
-    )
-    ccut = cl.groupBy("lang").agg(
-        F.sum("score_q").alias("sum_q"),
-        F.sum("n_tokens").alias("sum_n"),
-    )
-    final = (
-        cl.join(F.broadcast(ccut), "lang")
-        .filter(
-            F.col("score_q") * F.col("sum_n")
-            >= F.col("sum_q") * F.col("n_tokens")
-        )
-        .select("doc_id", "n_tokens")
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(
-            dedup.select("doc_id", F.lit(1).alias("in_dedup")),
-            "doc_id", "left",
-        )
-        .join(surg.select("doc_id", "n_cut"), "doc_id", "left")
-        .join(
-            ppl.select("doc_id", F.lit(1).alias("in_ppl")),
-            "doc_id", "left",
-        )
-        .join(final.withColumnRenamed("n_tokens", "f_tokens"),
-              "doc_id", "left")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_in"),
-            F.sum(
-                F.coalesce(F.col("in_dedup"), F.lit(0)).cast("long")
-            ).alias("n_after_dedup"),
-            F.coalesce(F.sum("n_cut"), F.lit(0)).cast("long").alias(
-                "n_tokens_cut"
-            ),
-            F.sum(
-                F.coalesce(F.col("in_ppl"), F.lit(0)).cast("long")
-            ).alias("n_after_ppl"),
-            F.sum(
-                F.col("f_tokens").isNotNull().cast("long")
-            ).alias("n_final"),
-            F.coalesce(F.sum("f_tokens"), F.lit(0)).cast("long").alias(
-                "tokens_final"
-            ),
-        )
-        .orderBy("lang")
-    )
+    return _curation_funnel(spark, sf_dir, "rewrite")

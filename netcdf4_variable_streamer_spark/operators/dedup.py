@@ -2197,28 +2197,24 @@ def _keep_first_cut(spans: DataFrame, stats: DataFrame) -> DataFrame:
 
 
 def _rewrite_kept(
-    spark: SparkSession,
-    sf_dir: str,
     cut: DataFrame,
-    docs: DataFrame | None = None,
+    docs: DataFrame,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Shared core of the rewrite keys: merge the CUT occurrences into
     maximal disjoint per-doc ranges (gaps-and-islands), broadcast them
-    into ONE map-side reassembly of the corpus, and return one row per
-    non-NULL-text document (of ``docs`` when given — e.g. the crawl
-    side only — else the whole documents table) with the original
-    token array ``tk``, the post-cut array ``kept``, and ``n_ranges``
-    (NULL for untouched docs). ``extra_cols`` carries additional
-    document columns (e.g. ``lang``) through the map stage so
-    consumers never need a second documents join."""
+    into ONE map-side reassembly of ``docs`` (the whole documents
+    table, the crawl side only, a micro-batch), and return one row per
+    non-NULL-text document with the original token array ``tk``, the
+    post-cut array ``kept``, and ``n_ranges`` (NULL for untouched
+    docs). ``extra_cols`` carries additional document columns (e.g.
+    ``lang``) through the map stage so consumers never need a second
+    documents join."""
     cuts_per_doc = _cut_ranges_per_doc(cut)
     # NULL-text docs are omitted, matching the oracle (whose
     # position CTE yields no rows for a NULL token array and whose
     # inner join then drops the doc); without this pin Spark would
     # emit a row of NULLs where DuckDB emits none.
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
     docs = docs.filter(F.col("text").isNotNull()).select(
         "doc_id", *extra_cols, F.split("text", _SPAN_WS).alias("tk")
     )
@@ -2277,16 +2273,11 @@ def _cut_ranges_per_doc(cut: DataFrame) -> DataFrame:
     )
 
 
-def _rewrite_emit(
-    spark: SparkSession,
-    sf_dir: str,
-    cut: DataFrame,
-    docs: DataFrame | None = None,
-) -> DataFrame:
+def _rewrite_emit(cut: DataFrame, docs: DataFrame) -> DataFrame:
     """The verified-rewrite projection over :func:`_rewrite_kept`:
     before/after token counts, merged-range count, and the rewritten
     text's md5, one row per non-NULL-text document."""
-    return _rewrite_project(_rewrite_kept(spark, sf_dir, cut, docs))
+    return _rewrite_project(_rewrite_kept(cut, docs))
 
 
 def _rewrite_project(kept: DataFrame) -> DataFrame:
@@ -2442,7 +2433,9 @@ def q_dedup_substring_rewrite(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     spans, stats = _substring_span_tables(spark, sf_dir)
-    return _rewrite_emit(spark, sf_dir, _keep_first_cut(spans, stats))
+    return _rewrite_emit(
+        _keep_first_cut(spans, stats), load_table(spark, sf_dir, "documents")
+    )
 
 
 _WINNOW_W = 15  # winnowing window: every W consecutive positions anchor
@@ -2678,14 +2671,10 @@ def q_dedup_substring_rewrite_anchored(
         .select("doc_id")
         .distinct()
     )
-    docs_f = load_table(spark, sf_dir, "documents").join(
-        F.broadcast(flagged), "doc_id"
-    )
-    spans_f = _span_table(docs_f)
+    docs = load_table(spark, sf_dir, "documents")
+    spans_f = _span_table(docs.join(F.broadcast(flagged), "doc_id"))
     stats_f = _cluster_stats(spans_f)
-    return _rewrite_emit(
-        spark, sf_dir, _keep_first_cut(spans_f, stats_f)
-    )
+    return _rewrite_emit(_keep_first_cut(spans_f, stats_f), docs)
 
 
 # frequent-n-gram exclusion for the surgical decontam path: reference
@@ -2796,9 +2785,7 @@ def q_dedup_substring_decontam_rewrite(
     crawl = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") >= _SXC_SPLIT
     )
-    return _rewrite_emit(
-        spark, sf_dir, _sdr_cut(spark, sf_dir), docs=crawl
-    )
+    return _rewrite_emit(_sdr_cut(spark, sf_dir), crawl)
 
 
 def _sxc_anchored_ranges_oracle(
@@ -2943,9 +2930,7 @@ def q_dedup_substring_decontam_anchored(
         .distinct()
     )
     hits = fspans.join(sref, "cluster")
-    return _rewrite_emit(
-        spark, sf_dir, _cap_excluded_cut(hits), docs=crawl
-    )
+    return _rewrite_emit(_cap_excluded_cut(hits), crawl)
 
 
 @register(

@@ -1327,6 +1327,57 @@ def q_text_perplexity_crosstrain(
     ).orderBy("doc_id")
 
 
+def hashed_classifier_scores(docs: DataFrame) -> DataFrame:
+    """The hashed linear quality classifier over a (doc_id, lang, text)
+    frame: tokenize on single spaces, hash each non-empty token into
+    one of 4096 buckets (``md5 % 4096``), weight bucket b by
+    ``md5('w:' || b) % 2001 - 1000`` (the deterministic stand-in for
+    trained weights), and return one row per document with at least
+    one token: ``(doc_id, lang, n_tokens, score_q)``, all int64."""
+    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
+
+    toks = (
+        docs.filter(F.length("text") > 0)
+        .select(
+            "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
+        )
+        .filter(F.col("tok") != "")
+    )
+    feats = toks.groupBy(
+        "doc_id", "lang", (_md5_int(F.col("tok"), 7) % 4096).alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    w = (
+        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
+        - 1000
+    )
+    return feats.groupBy("doc_id", "lang").agg(
+        F.sum("cnt").alias("n_tokens"),
+        F.sum(F.col("cnt") * w).alias("score_q"),
+    )
+
+
+def classifier_keep(scored: DataFrame) -> DataFrame:
+    """Add the classifier gate's ``keep`` column to
+    :func:`hashed_classifier_scores` output: a document passes when its
+    length-normalized score clears its language's mean, decided in
+    int64 by cross-multiplication (``score_q * sum_n >= sum_q *
+    n_tokens``) against the |langs|-row cutoff table, broadcast back."""
+    cut = scored.groupBy("lang").agg(
+        F.sum("score_q").alias("sum_q"),
+        F.sum("n_tokens").alias("sum_n"),
+    )
+    return scored.join(F.broadcast(cut), "lang").select(
+        "doc_id",
+        "lang",
+        "n_tokens",
+        "score_q",
+        (
+            F.col("score_q") * F.col("sum_n")
+            >= F.col("sum_q") * F.col("n_tokens")
+        ).alias("keep"),
+    )
+
+
 @register(
     "q_text_classifier_score",
     oracle="""
@@ -1368,7 +1419,8 @@ ORDER BY s.doc_id
         "vector (weights derived per bucket from the portable md5 "
         "hash — the deterministic stand-in for trained classifier "
         "weights; swapping in real weights is a 1-line change to the "
-        "w() expression or a 4096-row broadcast join), and KEEP docs "
+        "weight expression in hashed_classifier_scores or a 4096-row "
+        "broadcast join), and KEEP docs "
         "whose length-normalized score clears their language's mean "
         "— decided entirely in int64 by cross-multiplication "
         "(score_q * sum_n >= sum_q * n_tokens ⟺ score/n >= "
@@ -1382,47 +1434,8 @@ ORDER BY s.doc_id
 def q_text_classifier_score(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = (
-        docs.filter(F.length("text") > 0)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split("text", " ")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang", (_md5_int(F.col("tok"), 7) % 4096).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    scored = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * w).alias("score_q"),
-    )
-    cut = scored.groupBy("lang").agg(
-        F.sum("score_q").alias("sum_q"),
-        F.sum("n_tokens").alias("sum_n"),
-    )
-    return (
-        scored.join(F.broadcast(cut), "lang")
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "score_q",
-            (
-                F.col("score_q") * F.col("sum_n")
-                >= F.col("sum_q") * F.col("n_tokens")
-            ).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    scored = hashed_classifier_scores(load_table(spark, sf_dir, "documents"))
+    return classifier_keep(scored).orderBy("doc_id")
 
 
 @register(

@@ -20,7 +20,9 @@ Kafka — the transformations never depend on the source.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import tempfile
 import traceback
 import uuid
@@ -667,8 +669,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form: foreachBatch merges each micro-batch into a
     versioned parquet state snapshot; returns the final state."""
-    import shutil
-
     run_dir = tempfile.mkdtemp(
         prefix="upsert_", dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp")
     )
@@ -1165,15 +1165,7 @@ def run_foreachbatch_incremental_dedup(
     the PREPARED index — parquet band + shingle tables — so no text is
     ever re-shingled; the probe itself is _incremental_decisions, the
     same core the batch two-table API uses."""
-    import shutil
-
-    from netcdf4_variable_streamer_spark.operators.dedup import (
-        _INC_SPLIT,
-        MAX_BUCKET,
-        _incremental_decisions,
-        _minhash_band_table,
-        _shingled,
-    )
+    from netcdf4_variable_streamer_spark.operators.dedup import _INC_SPLIT
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
 
     apply_runtime_confs(spark)
@@ -1183,27 +1175,7 @@ def run_foreachbatch_incremental_dedup(
         prefix="crawl_state_", dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp")
     )
     crawl, n_batches = make_crawl_loop(spark, run_dir)
-
-    schema = spark.read.parquet(stream_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(crawl)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(run_dir, "ckpt")
-        )
-        .start()
-    )
-    q.awaitTermination()
-    assert n_batches[0] == 2, f"expected 2 micro-batches, got {n_batches[0]}"
-    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
-    rows = out.collect()  # materialize before the scratch dirs are removed
-    schema_out = out.schema
-    shutil.rmtree(run_dir, ignore_errors=True)
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+    return _drain_feed(spark, stream_dir, run_dir, crawl, n_batches, 2)
 
 
 def make_crawl_loop(spark: SparkSession, run_dir: str):
@@ -1269,6 +1241,41 @@ def read_crawl_decisions(spark: SparkSession, run_dir: str) -> DataFrame:
     if not dec_dirs:
         raise ValueError(f"no crawl decisions under {run_dir}")
     return spark.read.parquet(*dec_dirs)
+
+
+def _drain_feed(
+    spark: SparkSession,
+    feed: str,
+    run_dir: str,
+    body,
+    n_batches: list,
+    expected: int,
+) -> DataFrame:
+    """Run the foreachBatch closure ``body`` over the parquet ``feed``
+    directory, one file per micro-batch (availableNow), check that it
+    saw ``expected`` batches, and return the decisions it committed
+    under ``run_dir`` as a driver-side frame. Removes both
+    directories."""
+    schema = spark.read.parquet(feed).schema
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+        .writeStream.foreachBatch(body)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    assert n_batches[0] == expected, (
+        f"expected {expected} micro-batches, got {n_batches[0]}"
+    )
+    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
+    rows = out.collect()  # materialize before the directories go
+    schema_out = out.schema
+    shutil.rmtree(run_dir, ignore_errors=True)
+    shutil.rmtree(feed, ignore_errors=True)
+    return spark.createDataFrame(rows, schema_out)
 
 
 def _stream_inc_oracle() -> str:
@@ -1365,9 +1372,7 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
                 )
                 hits = fspans.join(idx_spcl, "cluster")
                 frames = {
-                    "dec": _rewrite_emit(
-                        spark, "", _cap_excluded_cut(hits), docs=b
-                    ),
+                    "dec": _rewrite_emit(_cap_excluded_cut(hits), b),
                     "anch": vs.rows(idx_anch, b_anch),
                     # duplicate clusters would double-count hits in
                     # the frequent-n-gram cap
@@ -1390,8 +1395,6 @@ def run_foreachbatch_substring_anchored(
     """Two-micro-batch run of the substring crawl loop split at the
     decontam fixture boundary, so batch 2's decisions must equal the
     batch twin ``q_dedup_substring_decontam_anchored`` exactly."""
-    import shutil
-
     from netcdf4_variable_streamer_spark.operators.dedup import (
         _SXC_SPLIT,
     )
@@ -1406,26 +1409,7 @@ def run_foreachbatch_substring_anchored(
         dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp"),
     )
     crawl, n_batches = make_substring_crawl_loop(spark, run_dir)
-    schema = spark.read.parquet(stream_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(crawl)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    assert n_batches[0] == 2, (
-        f"expected 2 micro-batches, got {n_batches[0]}"
-    )
-    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
-    rows = out.collect()  # materialize before the scratch dirs go
-    schema_out = out.schema
-    shutil.rmtree(run_dir, ignore_errors=True)
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+    return _drain_feed(spark, stream_dir, run_dir, crawl, n_batches, 2)
 
 
 def _stream_sxc_oracle() -> str:
@@ -1491,8 +1475,6 @@ def make_substring_ttl_loop(
     (``anch_b{N}`` / ``spcl_b{N}``, marker-last), probes against the
     union of the last ``ttl`` committed batches only, and EVICTS
     batch indexes older than the horizon (directories deleted)."""
-    import shutil
-
     from netcdf4_variable_streamer_spark.operators.dedup import (
         _cap_excluded_cut,
         _rewrite_emit,
@@ -1546,9 +1528,7 @@ def make_substring_ttl_loop(
                     b.join(F.broadcast(flagged), "doc_id")
                 )
                 hits = fspans.join(idx_spcl, "cluster")
-                dec = _rewrite_emit(
-                    spark, "", _cap_excluded_cut(hits), docs=b
-                )
+                dec = _rewrite_emit(_cap_excluded_cut(hits), b)
                 writes.append(
                     lambda df=dec: df.write.mode("overwrite").parquet(
                         os.path.join(run_dir, f"dec_v{batch_id}")
@@ -1602,8 +1582,6 @@ def run_foreachbatch_substring_ttl(
     {_SXC_TTL_SPLITS}): batch 2 probes batch 1 ONLY (batch 0 evicted
     with ttl=1), so each batch's decisions equal the range-
     parameterized anchored-decontam oracle at its retained window."""
-    import shutil
-
     from netcdf4_variable_streamer_spark.session import (
         apply_runtime_confs,
     )
@@ -1617,26 +1595,7 @@ def run_foreachbatch_substring_ttl(
         dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp"),
     )
     crawl, n_batches = make_substring_ttl_loop(spark, run_dir, ttl=1)
-    schema = spark.read.parquet(stream_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(crawl)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    assert n_batches[0] == 3, (
-        f"expected 3 micro-batches, got {n_batches[0]}"
-    )
-    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
-    rows = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(run_dir, ignore_errors=True)
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+    return _drain_feed(spark, stream_dir, run_dir, crawl, n_batches, 3)
 
 
 def _stream_sxc_ttl_oracle() -> str:
@@ -1788,8 +1747,6 @@ def run_foreachbatch_quality_gate(
     DISK is the restart contract, exactly like the crawl-dedup loop:
     a restarted driver finds the persisted LM and gates without
     retraining."""
-    import shutil
-
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
 
     apply_runtime_confs(spark)
@@ -1801,25 +1758,39 @@ def run_foreachbatch_quality_gate(
         prefix="gate_state_", dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp")
     )
     gate, n_batches = make_quality_gate(spark, run_dir)
+    return _drain_feed(spark, stream_dir, run_dir, gate, n_batches, 2)
 
-    schema = spark.read.parquet(stream_dir).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(gate)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
+
+def _publish_lm(
+    spark: SparkSession, run_dir: str, bgc: DataFrame, vsz: int
+) -> None:
+    """Persist a trained bigram LM under ``run_dir``: the ``bgc`` table,
+    its context table ``ctx``, then ``lm.json`` (the vocab size),
+    published last through tmp + ``os.replace``. ctx is DERIVED from
+    the written bgc — c_u(w1) = Σ_w2 c_bg(w1, w2) by definition (pinned
+    in tests/test_llm_ops.py::test_ctx_derivable_from_bgc) — so it is
+    a vocab-sized aggregate, not a second tokenize pass; it reads bgc
+    back from parquet because persisting bgc and deriving ctx from the
+    cache measured slower than this LM-sized round-trip."""
+    bgc.write.mode("overwrite").parquet(os.path.join(run_dir, "bgc"))
+    spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy("w1").agg(
+        F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
+    ).write.mode("overwrite").parquet(os.path.join(run_dir, "ctx"))
+    lm_meta = os.path.join(run_dir, "lm.json")
+    with open(lm_meta + ".tmp", "w") as f:
+        json.dump({"vsz": vsz}, f)
+    os.replace(lm_meta + ".tmp", lm_meta)
+
+
+def _load_lm(spark: SparkSession, run_dir: str):
+    """The LM :func:`_publish_lm` persisted: ``(bgc, ctx, vsz)``."""
+    with open(os.path.join(run_dir, "lm.json")) as f:
+        vsz = json.load(f)["vsz"]
+    return (
+        spark.read.parquet(os.path.join(run_dir, "bgc")),
+        spark.read.parquet(os.path.join(run_dir, "ctx")),
+        vsz,
     )
-    q.awaitTermination()
-    assert n_batches[0] == 2, f"expected 2 micro-batches, got {n_batches[0]}"
-    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
-    rows = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(run_dir, ignore_errors=True)
-    shutil.rmtree(stream_dir, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
 
 
 def make_quality_gate(spark: SparkSession, run_dir: str):
@@ -1829,8 +1800,6 @@ def make_quality_gate(spark: SparkSession, run_dir: str):
     publish last), and every batch after — in this process or a
     restarted one — loads the persisted LM and writes decisions to a
     versioned per-batch path with overwrite (idempotent replay)."""
-    import json
-
     from netcdf4_variable_streamer_spark.operators.text import (
         perplexity_decisions,
         perplexity_lm,
@@ -1840,50 +1809,21 @@ def make_quality_gate(spark: SparkSession, run_dir: str):
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        lm_meta = os.path.join(run_dir, "lm.json")
         # batch 0 is the reference corpus BY batch id, not by lm.json
         # absence: a crash between the atomic lm.json publish and the
         # checkpoint commit re-delivers batch 0, which must retrain
         # idempotently (overwrite + atomic replace), never score the
-        # reference corpus as if it were a crawl (round 13)
-        if batch_id == 0 or not os.path.exists(lm_meta):
+        # reference corpus as if it were a crawl
+        if batch_id == 0 or not os.path.exists(
+            os.path.join(run_dir, "lm.json")
+        ):
             # reference batch: train + persist the LM (train-linear,
-            # once per corpus — never re-run for later crawls).
-            # ctx is DERIVED from the just-persisted bgc table:
-            # c_u(w1) = Σ_w2 c_bg(w1, w2) by definition (both count
-            # tbg rows grouped by w1; pinned in
-            # tests/test_llm_ops.py::test_ctx_derivable_from_bgc), so
-            # the second corpus-linear tokenize+explode pass becomes
-            # a vocab-sized aggregate of the table just written
-            # (round 19 session 3, guide §2.3/§5). Round 20 tried
-            # VERDICT r19 #3 (persist bgc, derive ctx from the cache,
-            # no read-back) and REVERTED it on measurement: the
-            # columnar-cache materialization costs MORE than the
-            # LM-table parquet round-trip (q_stream_quality_gate
-            # 1.73 -> 2.65 s min-of-3 at sf0.01, controls flat), and
-            # at scale both forms pay one LM-sized round-trip, so the
-            # read-back stays.
+            # once per corpus — never re-run for later crawls)
             bgc, _ctx, vsz = perplexity_lm(batch_df)
-            bgc.write.mode("overwrite").parquet(
-                os.path.join(run_dir, "bgc")
-            )
-            spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy(
-                "w1"
-            ).agg(F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(run_dir, "ctx"))
-            with open(lm_meta + ".tmp", "w") as f:
-                json.dump({"vsz": vsz}, f)
-            os.replace(lm_meta + ".tmp", lm_meta)
+            _publish_lm(spark, run_dir, bgc, vsz)
             return
-        with open(lm_meta) as f:
-            vsz = json.load(f)["vsz"]
-        perplexity_decisions(
-            spark.read.parquet(os.path.join(run_dir, "bgc")),
-            spark.read.parquet(os.path.join(run_dir, "ctx")),
-            vsz,
-            batch_df,
-        ).write.mode("overwrite").parquet(
+        dec = perplexity_decisions(*_load_lm(spark, run_dir), batch_df)
+        dec.write.mode("overwrite").parquet(
             os.path.join(run_dir, f"dec_v{batch_id}")
         )
 
@@ -2084,28 +2024,25 @@ def make_curation_loop(
     gain ``n_tokens_cut`` + ``rewritten_md5`` columns (0 / NULL for
     docs dedup dropped before the stage saw them).
     ``decontam=True`` is an alias for ``"quarantine"``."""
-    import json
-
     from netcdf4_variable_streamer_spark.operators.dedup import (
         _cap_excluded_cut,
-        _md5_int,
         _rewrite_kept,
         _span_quarantine,
         _span_table,
     )
-
-    mode = "quarantine" if decontam is True else decontam
     from netcdf4_variable_streamer_spark.operators.text import (
+        hashed_classifier_scores,
         perplexity_decisions,
         perplexity_lm,
     )
+
+    mode = "quarantine" if decontam is True else decontam
 
     vs = VersionedState(spark, run_dir, ("hashes",), ledgers=("budget",))
     n_batches = [0]
 
     def curate(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        lm_meta = os.path.join(run_dir, "lm.json")
         ledger = (
             batch_df.select("lang")
             .distinct()
@@ -2117,39 +2054,18 @@ def make_curation_loop(
         # and the checkpoint commit: it must re-seed idempotently, never
         # be scored as a crawl (a genuine crawl batch k always has a
         # committed version < k on disk)
-        if not vs.recover(batch_id) or not os.path.exists(lm_meta):
+        if not vs.recover(batch_id) or not os.path.exists(
+            os.path.join(run_dir, "lm.json")
+        ):
             # reference batch: train + persist the LM, seed the hash
             # index and the zeroed per-language budget ledger, all
             # overlapped; lm.json publishes after the LM tables are on
             # disk and the commit marker still lands strictly LAST
             bgc, _ctx, vsz = perplexity_lm(batch_df)
-
-            def _write_lm() -> None:
-                # ONE thunk for both LM tables (the _overlap_jobs
-                # safety rule: they may not share live subtrees with
-                # a concurrent thunk), serial inside. ctx is DERIVED
-                # from the just-written bgc — c_u(w1) = Σ_w2 c_bg(w1,
-                # w2) by definition (pinned in tests/test_llm_ops.py::
-                # test_ctx_derivable_from_bgc), turning a second
-                # corpus-linear tokenize pass into a vocab-sized
-                # aggregate of the persisted table. Persisting bgc and
-                # deriving ctx from the cache instead measured slower
-                # than this LM-sized parquet round-trip.
-                bgc.write.mode("overwrite").parquet(
-                    os.path.join(run_dir, "bgc")
-                )
-                spark.read.parquet(
-                    os.path.join(run_dir, "bgc")
-                ).groupBy("w1").agg(
-                    F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(run_dir, "ctx")
-                )
-                with open(lm_meta + ".tmp", "w") as f:
-                    json.dump({"vsz": vsz}, f)
-                os.replace(lm_meta + ".tmp", lm_meta)
-
-            writes = [_write_lm]
+            # ONE thunk for both LM tables (the _overlap_jobs safety
+            # rule: they may not share live subtrees with a concurrent
+            # thunk), serial inside
+            writes = [lambda: _publish_lm(spark, run_dir, bgc, vsz)]
             if decontam:
                 # the reference span-hash set, persisted ONCE like
                 # the LM (the eval corpus is static; MB-scale)
@@ -2172,10 +2088,7 @@ def make_curation_loop(
                 *writes,
             )
             return
-        with open(lm_meta) as f:
-            vsz = json.load(f)["vsz"]
-        bgc = spark.read.parquet(os.path.join(run_dir, "bgc"))
-        ctx = spark.read.parquet(os.path.join(run_dir, "ctx"))
+        bgc, ctx, vsz = _load_lm(spark, run_dir)
         b = batch_df.select(
             "doc_id", "lang", "text",
             F.md5("text").alias("h"),
@@ -2266,11 +2179,7 @@ def make_curation_loop(
                 ).join(F.broadcast(sref), "cluster")
                 cut = _cap_excluded_cut(hits)
                 rw = _rewrite_kept(
-                    spark,
-                    run_dir,  # unused: docs is passed explicitly
-                    cut,
-                    docs=survivors,
-                    extra_cols=("lang", "n_tokens"),
+                    cut, survivors, extra_cols=("lang", "n_tokens")
                 ).withColumn("rtext", F.array_join("kept", " ")).persist()
                 caches.append(rw)
                 # ^ round 19 (guide §5): the span-cut HOF walk feeds the
@@ -2308,26 +2217,7 @@ def make_curation_loop(
             )
             # stage 3: hashed-classifier score + greedy budget cut against
             # the per-language budget REMAINING from prior batches
-            toks = (
-                kept.filter(F.length("text") > 0)
-                .select(
-                    "doc_id", "lang",
-                    F.explode(F.split("text", " ")).alias("tok"),
-                )
-                .filter(F.col("tok") != "")
-            )
-            feats = toks.groupBy(
-                "doc_id", "lang",
-                (_md5_int(F.col("tok"), 7) % 4096).alias("bucket"),
-            ).agg(F.count(F.lit(1)).alias("cnt"))
-            wgt = (
-                _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-                - 1000
-            )
-            scored = feats.groupBy("doc_id", "lang").agg(
-                F.sum(F.col("cnt") * wgt).alias("score_q"),
-                F.sum("cnt").alias("nt"),
-            )
+            scored = hashed_classifier_scores(kept)
             wcum = (
                 Window.partitionBy("lang")
                 .orderBy(F.desc("score_q"), "doc_id")
@@ -2335,7 +2225,7 @@ def make_curation_loop(
             )
             samp = (
                 scored.join(F.broadcast(used), "lang", "left")
-                .withColumn("cum", F.sum("nt").over(wcum))
+                .withColumn("cum", F.sum("n_tokens").over(wcum))
                 .withColumn(
                     "sampled",
                     F.coalesce(F.col("used"), F.lit(0)) + F.col("cum")
@@ -2400,7 +2290,7 @@ def make_curation_loop(
             batch_used = (
                 samp.filter(F.col("sampled"))
                 .groupBy("lang")
-                .agg(F.sum("nt").alias("bu"))
+                .agg(F.sum("n_tokens").alias("bu"))
             )
             new_used = used.join(batch_used, "lang", "full").select(
                 "lang",
@@ -2431,8 +2321,6 @@ def run_foreachbatch_pipeline_curation(
 ) -> DataFrame:
     """3-micro-batch composed curation stream: reference + two crawl
     batches; returns the union of both crawl batches' decisions."""
-    import shutil
-
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
 
     apply_runtime_confs(spark)
@@ -2446,24 +2334,7 @@ def run_foreachbatch_pipeline_curation(
     curate, n_batches = make_curation_loop(
         spark, run_dir, decontam=decontam
     )
-    schema = spark.read.parquet(feed).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-        .writeStream.foreachBatch(curate)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    assert n_batches[0] == 3, f"expected 3 micro-batches, got {n_batches[0]}"
-    out = read_crawl_decisions(spark, run_dir).orderBy("doc_id")
-    rows = out.collect()
-    schema_out = out.schema
-    shutil.rmtree(run_dir, ignore_errors=True)
-    shutil.rmtree(feed, ignore_errors=True)
-    return spark.createDataFrame(rows, schema_out)
+    return _drain_feed(spark, feed, run_dir, curate, n_batches, 3)
 
 
 _CUR_ORACLE = f"""

@@ -831,6 +831,52 @@ def test_pipeline_curation_posture(spark):
     assert plans.count_nodes(plan, "BroadcastHashJoin") >= 2, plan
 
 
+# (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin,
+# Window) of the keys built on the hashed classifier and the curation
+# funnel: as registered, then (composites) with _train_once replaced by
+# identity so the whole composed plan is counted
+_CURATION_PLAN_SHAPES = {
+    "q_text_classifier_score": (6, 1, 0, 0, 0),
+    "q_sample_token_budget": (4, 0, 0, 0, 1),
+    "q_pipeline_curation": (30, 20, 0, 1, 0),
+    "q_pipeline_curation_full": (30, 21, 0, 1, 0),
+    "q_pipeline_curation_surgical": (30, 21, 0, 1, 0),
+}
+_CURATION_UNMATERIALIZED_SHAPES = {
+    "q_pipeline_curation": (51, 20, 0, 1, 21),
+    "q_pipeline_curation_full": (136, 63, 0, 1, 64),
+    "q_pipeline_curation_surgical": (241, 105, 0, 1, 169),
+}
+
+
+def test_curation_plan_shapes_pinned(spark, monkeypatch):
+    from netcdf4_variable_streamer_spark.operators import similarity
+
+    nodes = (
+        "Exchange",
+        "BroadcastHashJoin",
+        "BroadcastNestedLoopJoin",
+        "SortMergeJoin",
+        "Window",
+    )
+
+    def shapes(keys):
+        return {
+            key: tuple(
+                plans.count_nodes(plans.plan_string(build(spark, key)), n)
+                for n in nodes
+            )
+            for key in keys
+        }
+
+    assert shapes(_CURATION_PLAN_SHAPES) == _CURATION_PLAN_SHAPES
+    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
+    assert (
+        shapes(_CURATION_UNMATERIALIZED_SHAPES)
+        == _CURATION_UNMATERIALIZED_SHAPES
+    )
+
+
 def test_token_budget_single_window(spark):
     """q_sample_token_budget: scoring aggs + exactly one
     lang-partitioned running-sum window; no joins at all."""
@@ -1056,7 +1102,7 @@ def test_substring_winnow_posture(spark):
     assert checked >= 1, plan  # the anchor stats agg
 
 
-def test_curation_full_decontam_posture(spark):
+def test_curation_full_decontam_posture(spark, monkeypatch):
     """q_pipeline_curation_full (round 14): the added span-decontam
     machinery moves hashes and ids only — every Exchange whose input
     touches span/probe columns (span_start, the probe hash h, the
@@ -1064,16 +1110,17 @@ def test_curation_full_decontam_posture(spark):
     reaches the pipeline through a broadcast; no Python, no
     cartesian/nested-loop stage anywhere in the composed plan.
 
-    Built with _checkpoint=False (round 19): the production builder
-    lazily localCheckpoints the dedup/decon frames (train-once), which
-    truncates explain() at the materialization boundary — the posture
-    is asserted on the identical un-checkpointed composition so the
-    whole end-to-end plan is visible."""
+    Built with _train_once replaced by identity: the production
+    builder lazily localCheckpoints the dedup/decon frames (train-once),
+    which truncates explain() at the materialization boundary — the
+    posture is asserted on the identical un-checkpointed composition so
+    the whole end-to-end plan is visible."""
     import re
 
-    df = REGISTRY["q_pipeline_curation_full"].builder(
-        spark, SF, _checkpoint=False
-    )
+    from netcdf4_variable_streamer_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
+    df = build(spark, "q_pipeline_curation_full")
     plan = plans.plan_string(df)
     assert "BatchEvalPython" not in plan, plan
     assert plans.count_nodes(plan, "CartesianProduct") == 0, plan
@@ -1218,7 +1265,7 @@ def test_orc_ingest_filtered_scan_pushdown(spark, tmp_path):
     plans.assert_read_schema_excludes(df, "text", "doc_id", "source")
 
 
-def test_curation_surgical_posture(spark):
+def test_curation_surgical_posture(spark, monkeypatch):
     """q_pipeline_curation_surgical (round 15): the surgical-cut
     machinery moves hashes and ids only — every Exchange whose input
     touches span/cut columns excludes document text and token
@@ -1226,16 +1273,17 @@ def test_curation_surgical_posture(spark):
     no Python, no cartesian/nested-loop stage in the composed
     plan.
 
-    Built with _checkpoint=False (round 19): the production builder
-    lazily localCheckpoints the dedup/surg frames (train-once), which
-    truncates explain() at the materialization boundary — the posture
-    is asserted on the identical un-checkpointed composition so the
-    whole end-to-end plan is visible."""
+    Built with _train_once replaced by identity: the production
+    builder lazily localCheckpoints the dedup/surg frames (train-once),
+    which truncates explain() at the materialization boundary — the
+    posture is asserted on the identical un-checkpointed composition so
+    the whole end-to-end plan is visible."""
     import re
 
-    df = REGISTRY["q_pipeline_curation_surgical"].builder(
-        spark, SF, _checkpoint=False
-    )
+    from netcdf4_variable_streamer_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
+    df = build(spark, "q_pipeline_curation_surgical")
     plan = plans.plan_string(df)
     assert "BatchEvalPython" not in plan, plan
     assert plans.count_nodes(plan, "CartesianProduct") == 0, plan
