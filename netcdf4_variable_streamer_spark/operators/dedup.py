@@ -162,13 +162,137 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle() -> str:
+def _shingled(
+    df: DataFrame, id_col: str, text_col: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(id, *carry, distinct word-3-gram shingle array) for docs with >= 1
+    shingle; ``carry`` columns pass through untouched."""
+    return (
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            *carry,
+            F.split(F.col(text_col), " ").alias("toks"),
+        )
+        .select("doc_id", *carry, _shingles(F.col("toks")).alias("ss"))
+        .filter(F.size("ss") > 0)
+    )
+
+
+def _mh_perm(p: int, h: Column) -> Column:
+    """Universal-hash MinHash permutation ``p`` of a 28-bit base hash."""
+    return (F.lit(MH_A[p]) * h + F.lit(MH_B[p])) % MINHASH_P
+
+
+def _minhash_sigs(shingled: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh31) from a ``_shingled`` frame: md5-int shingle
+    hashes, then all 32 minima in one aggregation keyed by doc_id."""
+    ex = shingled.select("doc_id", F.explode("ss").alias("sh")).withColumn(
+        "h", _md5_int(F.col("sh"), 7)
+    )
+    return ex.groupBy("doc_id").agg(
+        *[
+            F.min(_mh_perm(p, F.col("h"))).alias(f"mh{p}")
+            for p in range(NUM_PERM)
+        ]
+    )
+
+
+def _band_table(mh: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *carry, band, sig) from the mh0..mh31 columns of ``mh``:
+    8 bands of 4 rows, one md5 signature per band — at 100 TB the band
+    signature stays a 16-byte digest, never the raw minhash tuple."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.col(f"mh{b * ROWS_PER_BAND + r}")
+                            for r in range(ROWS_PER_BAND)
+                        ],
+                    )
+                ).alias("sig"),
+            )
+            for b in range(BANDS)
+        ]
+    )
+    exploded = mh.select("doc_id", *carry, F.explode(band_structs).alias("bs"))
+    return exploded.select(
+        "doc_id",
+        *carry,
+        F.col("bs.band").alias("band"),
+        F.col("bs.sig").alias("sig"),
+    )
+
+
+def _minhash_band_table(shingled: DataFrame) -> DataFrame:
+    """(doc_id, band, sig) LSH band table from a ``_shingled`` frame."""
+    return _band_table(_minhash_sigs(shingled))
+
+
+def _capped(bands: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
+    """``bands`` without its buckets wider than ``max_bucket``.
+
+    Skew guard (standard LSH practice): a wider bucket is boilerplate
+    colliding into one signature, not near-duplicates, and it would add
+    O(width^2) candidate pairs; AQE skew-split handles the sub-cap
+    imbalance that remains."""
+    width = F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
+    return (
+        bands.withColumn("w", width)
+        .filter(F.col("w") <= max_bucket)
+        .drop("w")
+    )
+
+
+def _bucket_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (d1 < d2) sharing a (band, sig) bucket."""
+    x, y = bands.alias("x"), bands.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.sig") == F.col("y.sig"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
+        .distinct()
+    )
+
+
+def _shared_shingles(
+    cands: DataFrame, a: str, b: str, a_sh: DataFrame, b_sh: DataFrame
+) -> DataFrame:
+    """(a, b, n_inter): the shingles each candidate pair shares — the
+    exact-Jaccard verify runs on candidates only. Ids in column ``a``
+    resolve in the ``_shingled`` frame ``a_sh``, ids in ``b`` in
+    ``b_sh``."""
+    s1 = a_sh.select("doc_id", F.explode("ss").alias("sh")).alias("s1")
+    s2 = b_sh.select("doc_id", F.explode("ss").alias("sh")).alias("s2")
+    return (
+        cands.join(s1, F.col(a) == F.col("s1.doc_id"))
+        .join(
+            s2,
+            (F.col(b) == F.col("s2.doc_id"))
+            & (F.col("s1.sh") == F.col("s2.sh")),
+        )
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _minhash_bands_sql() -> str:
+    """The ``sh, h, mh, bands`` CTEs over ``documents``: the DuckDB twin
+    of ``_shingled`` -> ``_minhash_sigs`` -> ``_band_table``."""
     mh_cols = ",\n         ".join(
         f"MIN(({MH_A[p]} * h + {MH_B[p]}) % {MINHASH_P}) AS mh{p}"
         for p in range(NUM_PERM)
     )
     band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig FROM mh".format(
+        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig"
+        " FROM mh".format(
             b=b,
             cols=", ".join(
                 f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
@@ -176,8 +300,7 @@ def _minhash_oracle() -> str:
         )
         for b in range(BANDS)
     )
-    return f"""
-WITH sh AS ({_SHINGLES_SQL}),
+    return f"""sh AS ({_SHINGLES_SQL}),
 h AS (SELECT doc_id, {_md5_int_sql('s', 7)} AS h FROM sh),
 mh AS (
   SELECT doc_id,
@@ -186,8 +309,11 @@ mh AS (
 ),
 bands AS (
   {band_selects}
-),
-capped AS (
+)"""
+
+
+# DuckDB twin of _bucket_pairs(_capped(bands)).
+_CANDS_SQL = f"""capped AS (
   SELECT doc_id, band, sig FROM (
     SELECT doc_id, band, sig,
            COUNT(*) OVER (PARTITION BY band, sig) AS w
@@ -197,15 +323,27 @@ cands AS (
   SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
   FROM capped x JOIN capped y
     ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+)"""
+
+
+def _shared_shingles_sql(a: str, b: str) -> str:
+    """The ``sizes`` and ``inter`` CTEs: per-doc shingle counts and the
+    DuckDB twin of ``_shared_shingles`` over ``cands`` (a, b)."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
-  SELECT c.d1, c.d2, COUNT(*) AS n_inter
+  SELECT c.{a}, c.{b}, COUNT(*) AS n_inter
   FROM cands c
-  JOIN sh s1 ON s1.doc_id = c.d1
-  JOIN sh s2 ON s2.doc_id = c.d2 AND s2.s = s1.s
-  GROUP BY c.d1, c.d2
-)
+  JOIN sh s1 ON s1.doc_id = c.{a}
+  JOIN sh s2 ON s2.doc_id = c.{b} AND s2.s = s1.s
+  GROUP BY c.{a}, c.{b}
+)"""
+
+
+def _minhash_oracle() -> str:
+    return f"""
+WITH {_minhash_bands_sql()},
+{_CANDS_SQL},
+{_shared_shingles_sql("d1", "d2")}
 SELECT i.d1, i.d2,
        ROUND(CAST(n_inter AS DOUBLE) / (z1.n_sh + z2.n_sh - n_inter), 4)
          AS jaccard
@@ -227,84 +365,18 @@ WHERE CAST(n_inter AS DOUBLE) / (z1.n_sh + z2.n_sh - n_inter) >= 0.6
         "stays a 16-byte digest, never the raw minhash tuple.",
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", _shingles(F.col("toks")).alias("ss"))
-    )
-    # Round 19 (guide §5, train-once): the shingled frame feeds three
-    # branches (band table, explode-verify, sizes) that diverge BEFORE
-    # any exchange, so each would re-run the O(tokens) shingle HOF over
-    # the full corpus — checkpoint makes shingle-once a plan contract.
-    d = d.filter(F.size("ss") > 0).localCheckpoint(eager=False)
-    ex = d.select("doc_id", F.explode("ss").alias("sh")).withColumn(
-        "h", _md5_int(F.col("sh"), 7)
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _train_once,
     )
 
-    # 32 universal-hash min-aggregations in one shuffle on doc_id
-    mh = ex.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(MH_A[p]) * F.col("h") + F.lit(MH_B[p])) % MINHASH_P)
-            .alias(f"mh{p}")
-            for p in range(NUM_PERM)
-        ]
+    # the shingled frame feeds the band table, the verify explode and
+    # the sizes
+    d = _train_once(
+        _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("sig"),
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = mh.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    # Skew guard (standard LSH practice): a bucket with > MAX_BUCKET members
-    # is boilerplate colliding into one signature, not near-duplicates —
-    # and it would contribute O(width^2) candidate pairs. Cap it before the
-    # self-join so one pathological signature can't quadratically dominate;
-    # AQE skew-split handles the sub-cap imbalance that remains.
-    wb = Window.partitionBy("band", "sig")
-    bands = bands.withColumn(
-        "bucket_width", F.count(F.lit(1)).over(wb)
-    ).filter(F.col("bucket_width") <= MAX_BUCKET).drop("bucket_width")
-    x, y = bands.alias("x"), bands.alias("y")
-    cands = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2")
-        )
-        .distinct()
-    )
-
-    # exact-Jaccard verification of candidates only
+    cands = _bucket_pairs(_capped(_minhash_band_table(d)))
+    inter = _shared_shingles(cands, "d1", "d2", d, d)
     sizes = d.select("doc_id", F.size("ss").alias("n_sh"))
-    sh = d.select("doc_id", F.explode("ss").alias("sh"))
-    inter = (
-        cands.join(sh.alias("s1"), F.col("d1") == F.col("s1.doc_id"))
-        .join(
-            sh.alias("s2"),
-            (F.col("d2") == F.col("s2.doc_id"))
-            & (F.col("s1.sh") == F.col("s2.sh")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return (
         inter.join(sizes.alias("z1"), F.col("d1") == F.col("z1.doc_id"))
         .join(sizes.alias("z2"), F.col("d2") == F.col("z2.doc_id"))
@@ -967,57 +1039,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INC_SPLIT = 400  # doc_id < split = the standing index; >= split = new crawl
 
 
-def _shingled(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, distinct word-3-gram shingle array) for docs with >= 1 shingle."""
-    return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.col(text_col), " ").alias("toks"),
-        )
-        .select("doc_id", _shingles(F.col("toks")).alias("ss"))
-        .filter(F.size("ss") > 0)
-    )
-
-
-def _minhash_band_table(shingled: DataFrame) -> DataFrame:
-    """(doc_id, band, sig) LSH band table from a ``_shingled`` frame:
-    md5-int shingle hashes -> 32-perm universal-hash MinHash -> 8x4
-    banding, one md5 signature per band."""
-    ex = shingled.select("doc_id", F.explode("ss").alias("sh")).withColumn(
-        "h", _md5_int(F.col("sh"), 7)
-    )
-    mh = ex.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(MH_A[p]) * F.col("h") + F.lit(MH_B[p])) % MINHASH_P
-            ).alias(f"mh{p}")
-            for p in range(NUM_PERM)
-        ]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("sig"),
-            )
-            for b in range(BANDS)
-        ]
-    )
-    return mh.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id",
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-    )
-
-
 def incremental_near_dedup(
     index_df: DataFrame,
     batch_df: DataFrame,
@@ -1052,16 +1073,15 @@ def incremental_near_dedup(
     batch's own shingling plus a broadcast-or-shuffle equi-join whose
     output cardinality is proportional to true near-duplicates.
     """
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _train_once,
+    )
+
     qthr = int(round(threshold * 10000))
-    # Round 19 (guide §5, train-once): each shingled frame feeds three
-    # branches of _incremental_decisions (band table, explode-verify,
-    # sizes) — checkpoint so the shingle pass runs once per side.
-    idx_sh = _shingled(index_df, id_col, text_col).localCheckpoint(
-        eager=False
-    )
-    new_sh = _shingled(batch_df, id_col, text_col).localCheckpoint(
-        eager=False
-    )
+    # each shingled frame feeds three branches of _incremental_decisions
+    # (band table, explode-verify, sizes)
+    idx_sh = _train_once(_shingled(index_df, id_col, text_col))
+    new_sh = _train_once(_shingled(batch_df, id_col, text_col))
     return _incremental_decisions(
         _minhash_band_table(idx_sh),
         idx_sh,
@@ -1088,12 +1108,8 @@ def _incremental_decisions(
     best_jaccard). The bucket cap applies to the standing index's band
     table at probe time, so boilerplate signatures accumulated across
     crawls stay capped."""
-    wb = Window.partitionBy("band", "sig")
-    idx = (
-        idx_bands
-        .withColumn("w", F.count(F.lit(1)).over(wb))
-        .filter(F.col("w") <= max_bucket)
-        .select(F.col("doc_id").alias("d_idx"), "band", "sig")
+    idx = _capped(idx_bands, max_bucket).select(
+        F.col("doc_id").alias("d_idx"), "band", "sig"
     )
     probe = _minhash_band_table(new_sh).select(
         F.col("doc_id").alias("d_new"), "band", "sig"
@@ -1101,18 +1117,7 @@ def _incremental_decisions(
     cands = (
         probe.join(idx, ["band", "sig"]).select("d_new", "d_idx").distinct()
     )
-    sh_new = new_sh.select("doc_id", F.explode("ss").alias("sh"))
-    sh_idx = idx_sh.select("doc_id", F.explode("ss").alias("sh"))
-    inter = (
-        cands.join(sh_new.alias("s1"), F.col("d_new") == F.col("s1.doc_id"))
-        .join(
-            sh_idx.alias("s2"),
-            (F.col("d_idx") == F.col("s2.doc_id"))
-            & (F.col("s1.sh") == F.col("s2.sh")),
-        )
-        .groupBy("d_new", "d_idx")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = _shared_shingles(cands, "d_new", "d_idx", new_sh, idx_sh)
     sizes_new = new_sh.select("doc_id", F.size("ss").alias("n_sh"))
     sizes_idx = idx_sh.select("doc_id", F.size("ss").alias("n_sh"))
     # Quantize to 1e-4 with half-up rounding on a double built from the
@@ -1159,30 +1164,8 @@ def _incremental_decisions(
 
 
 def _inc_minhash_oracle() -> str:
-    mh_cols = ",\n         ".join(
-        f"MIN(({MH_A[p]} * h + {MH_B[p]}) % {MINHASH_P}) AS mh{p}"
-        for p in range(NUM_PERM)
-    )
-    band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig FROM mh".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(BANDS)
-    )
     return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {_md5_int_sql('s', 7)} AS h FROM sh),
-mh AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM h GROUP BY doc_id
-),
-bands AS (
-  {band_selects}
-),
+WITH {_minhash_bands_sql()},
 idx AS (
   SELECT doc_id, band, sig FROM (
     SELECT doc_id, band, sig,
@@ -1196,14 +1179,7 @@ cands AS (
   SELECT DISTINCT p.doc_id AS d_new, i.doc_id AS d_idx
   FROM probe p JOIN idx i ON i.band = p.band AND i.sig = p.sig
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.d_new, c.d_idx, COUNT(*) AS n_inter
-  FROM cands c
-  JOIN sh s1 ON s1.doc_id = c.d_new
-  JOIN sh s2 ON s2.doc_id = c.d_idx AND s2.s = s1.s
-  GROUP BY c.d_new, c.d_idx
-),
+{_shared_shingles_sql("d_new", "d_idx")},
 verified AS (
   SELECT i.d_new, i.d_idx,
          CAST(ROUND(CAST(i.n_inter AS DOUBLE) * 10000
@@ -1544,60 +1520,20 @@ def q_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_calibration_oracle() -> str:
-    mh_cols = ",\n         ".join(
-        f"MIN(({MH_A[p]} * h + {MH_B[p]}) % {MINHASH_P}) AS mh{p}"
-        for p in range(NUM_PERM)
-    )
-    band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig"
-        " FROM mh".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(BANDS)
-    )
     est_terms = " + ".join(
         f"CASE WHEN a.mh{p} = b.mh{p} THEN 1 ELSE 0 END"
         for p in range(NUM_PERM)
     )
     return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {_md5_int_sql('s', 7)} AS h FROM sh),
-mh AS (
-  SELECT doc_id,
-         {mh_cols}
-  FROM h GROUP BY doc_id
-),
-bands AS (
-  {band_selects}
-),
-capped AS (
-  SELECT doc_id, band, sig FROM (
-    SELECT doc_id, band, sig,
-           COUNT(*) OVER (PARTITION BY band, sig) AS w
-    FROM bands) WHERE w <= {MAX_BUCKET}
-),
-cands AS (
-  SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-  FROM capped x JOIN capped y
-    ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-),
+WITH {_minhash_bands_sql()},
+{_CANDS_SQL},
 est AS (
   SELECT c.d1, c.d2, ({est_terms}) AS est32
   FROM cands c
   JOIN mh a ON a.doc_id = c.d1
   JOIN mh b ON b.doc_id = c.d2
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.d1, c.d2, COUNT(*) AS n_inter
-  FROM cands c
-  JOIN sh s1 ON s1.doc_id = c.d1
-  JOIN sh s2 ON s2.doc_id = c.d2 AND s2.s = s1.s
-  GROUP BY c.d1, c.d2
-),
+{_shared_shingles_sql("d1", "d2")},
 j AS (
   SELECT e.est32,
          CAST((COALESCE(i.n_inter, 0) * 1000000)
@@ -1638,69 +1574,18 @@ FROM j GROUP BY est32 ORDER BY est32
 def q_dedup_minhash_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", _shingles(F.col("toks")).alias("ss"))
-        .filter(F.size("ss") > 0)
-        # Round 19 (guide §5, train-once): d feeds three branches
-        # (minhash explode, sizes, verify explode), mh feeds three
-        # (band table + both estimator joins) — each divergence is
-        # before an exchange, so without the checkpoints the shingle
-        # HOF and the 32-min aggregation replay per branch.
-        .localCheckpoint(eager=False)
+    from netcdf4_variable_streamer_spark.operators.similarity import (
+        _train_once,
     )
-    ex = d.select("doc_id", F.explode("ss").alias("sh")).withColumn(
-        "h", _md5_int(F.col("sh"), 7)
+
+    # d feeds the minhash explode, the sizes and the verify explode; mh
+    # feeds the band table and both estimator joins; cands feeds est and
+    # inter
+    d = _train_once(
+        _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
-    mh = ex.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(MH_A[p]) * F.col("h") + F.lit(MH_B[p])) % MINHASH_P
-            ).alias(f"mh{p}")
-            for p in range(NUM_PERM)
-        ]
-    ).localCheckpoint(eager=False)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("sig"),
-            )
-            for b in range(BANDS)
-        ]
-    )
-    bands = mh.select(
-        "doc_id", F.explode(band_structs).alias("bs")
-    ).select("doc_id", "bs.band", "bs.sig")
-    wb = Window.partitionBy("band", "sig")
-    bands = (
-        bands.withColumn("w", F.count(F.lit(1)).over(wb))
-        .filter(F.col("w") <= MAX_BUCKET)
-        .drop("w")
-    )
-    x, y = bands.alias("x"), bands.alias("y")
-    cands = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)  # round 19: feeds est AND inter
-    )
+    mh = _train_once(_minhash_sigs(d))
+    cands = _train_once(_bucket_pairs(_capped(_band_table(mh))))
     a, b = mh.alias("a"), mh.alias("b")
     est32 = sum(
         (F.col(f"a.mh{p}") == F.col(f"b.mh{p}")).cast("int")
@@ -1712,19 +1597,7 @@ def q_dedup_minhash_calibration(
         .select("d1", "d2", est32.alias("est32"))
     )
     sizes = d.select("doc_id", F.size("ss").alias("n_sh"))
-    sh = d.select("doc_id", F.explode("ss").alias("sh"))
-    inter = (
-        cands.join(
-            sh.alias("s1"), F.col("d1") == F.col("s1.doc_id")
-        )
-        .join(
-            sh.alias("s2"),
-            (F.col("d2") == F.col("s2.doc_id"))
-            & (F.col("s1.sh") == F.col("s2.sh")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = _shared_shingles(cands, "d1", "d2", d, d)
     j = (
         est.join(inter, ["d1", "d2"], "left")
         .join(

@@ -74,7 +74,10 @@ def _overlap_jobs(*thunks) -> None:
     Shared cached frames (the per-batch ``persist()`` caches) are safe
     under concurrent first use: consumers substitute the
     InMemoryRelation at planning time and the block manager's
-    per-block locking handles concurrent materialization.
+    per-block locking handles concurrent materialization. Safe, but
+    not free: each thunk that reaches an unbuilt cache submits its
+    own build jobs, so how many jobs a batch runs depends on thread
+    timing.
 
     SAFETY RULE (measured, not theoretical): two concurrent thunks
     must NOT share a higher-order-function subtree that is not behind
@@ -820,119 +823,89 @@ def load_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_bands(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """Shared streaming MinHash→LSH band pipeline: per-row higher-order
-    expressions (no pre-aggregation — Structured Streaming allows one
-    aggregation level) mapping (doc_id, text) to one row per
-    (doc_id, band, sig), hash-identical to the batch twin
-    q_dedup_near_minhash. ``carry`` columns (e.g. an event-time column
+    """Streaming MinHash→LSH band table: (doc_id, text) to one row per
+    (doc_id, *carry, band, sig), hash-identical to the batch
+    ``dedup._minhash_band_table``. The 32 minima are per-row
+    ``array_min`` over a ``transform`` rather than the batch groupBy:
+    Structured Streaming allows one aggregation level, and the band
+    bucket count uses it. ``carry`` columns (e.g. an event-time column
     for the watermarked variant) pass through untouched."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
-        BANDS,
-        MH_A,
-        MH_B,
-        MINHASH_P,
         NUM_PERM,
-        ROWS_PER_BAND,
+        _band_table,
         _md5_int,
-        _shingles,
+        _mh_perm,
+        _shingled,
     )
 
-    carry_cols = list(carry)
-    d = (
-        docs.select("doc_id", *carry_cols, F.split("text", " ").alias("toks"))
-        .select("doc_id", *carry_cols, _shingles(F.col("toks")).alias("ss"))
-        .filter(F.size("ss") > 0)
-        .select(
-            "doc_id",
-            *carry_cols,
-            F.transform("ss", lambda s: _md5_int(s, 7)).alias("hs"),
-        )
+    hs = _shingled(docs, "doc_id", "text", carry).select(
+        "doc_id",
+        *carry,
+        F.transform("ss", lambda s: _md5_int(s, 7)).alias("hs"),
     )
 
     def _mh(p: int):
         # one-arg lambda on purpose: a two-arg transform lambda would
         # receive the array INDEX as its second argument
-        return F.array_min(
-            F.transform(
-                "hs",
-                lambda h: (F.lit(MH_A[p]) * h + F.lit(MH_B[p]))
-                % MINHASH_P,
-            )
-        ).alias(f"mh{p}")
+        mins = F.array_min(F.transform("hs", lambda h: _mh_perm(p, h)))
+        return mins.alias(f"mh{p}")
 
-    mh = d.select("doc_id", *carry_cols, *[_mh(p) for p in range(NUM_PERM)])
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("sig"),
-            )
-            for b in range(BANDS)
-        ]
-    )
-    return mh.select(
-        "doc_id", *carry_cols, F.explode(band_structs).alias("bs")
-    ).select(
-        "doc_id",
-        *carry_cols,
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
+    mh = hs.select("doc_id", *carry, *[_mh(p) for p in range(NUM_PERM)])
+    return _band_table(mh, carry)
+
+
+def _bucket_counts(bands: DataFrame, *keys) -> DataFrame:
+    """The one streaming aggregation of both MinHash keys: members and
+    min(doc_id) representative per (*keys, band, sig) bucket."""
+    return bands.groupBy(*keys, "band", "sig").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.min("doc_id").alias("rep"),
     )
 
 
-def _stream_minhash_oracle() -> str:
-    from netcdf4_variable_streamer_spark.operators.dedup import (
-        BANDS,
-        MH_A,
-        MH_B,
-        MINHASH_P,
-        NUM_PERM,
-        ROWS_PER_BAND,
-        _SHINGLES_SQL,
-        _md5_int_sql,
+def _bucket_stats(buckets: DataFrame, *keys) -> DataFrame:
+    """Per-``keys`` LSH collision stats of a drained bucket table:
+    bucket count, multi-member buckets, docs in them, and the least
+    representative of a multi-member bucket."""
+    multi = F.col("n_docs") > 1
+    return buckets.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(multi.cast("long")).alias("n_multi_buckets"),
+        F.sum(
+            F.when(multi, F.col("n_docs")).otherwise(F.lit(0).cast("long"))
+        ).alias("n_docs_in_multi"),
+        F.min(F.when(multi, F.col("rep"))).alias("first_rep"),
     )
 
-    mh_cols = ",\n         ".join(
-        f"MIN(({MH_A[p]} * h + {MH_B[p]}) % {MINHASH_P}) AS mh{p}"
-        for p in range(NUM_PERM)
-    )
-    band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig FROM mh".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(BANDS)
-    )
-    return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {_md5_int_sql('s', 7)} AS h FROM sh),
-mh AS (SELECT doc_id, {mh_cols} FROM h GROUP BY doc_id),
-bands AS (
-  {band_selects}
-),
-buckets AS (
-  SELECT band, sig, COUNT(*) AS n_docs, MIN(doc_id) AS rep
-  FROM bands GROUP BY band, sig
-)
-SELECT band,
+
+def _bucket_stats_sql(keys: list[str]) -> str:
+    """SQL twin of :func:`_bucket_stats` over a ``buckets`` CTE with
+    (n_docs, rep) columns, grouped and ordered by ``keys``."""
+    pos = ", ".join(str(i + 1) for i in range(len(keys)))
+    return f"""SELECT {", ".join(keys)},
        COUNT(*) AS n_buckets,
        CAST(SUM(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_multi_buckets,
        CAST(SUM(CASE WHEN n_docs > 1 THEN n_docs ELSE 0 END) AS BIGINT)
          AS n_docs_in_multi,
        MIN(CASE WHEN n_docs > 1 THEN rep END) AS first_rep
-FROM buckets GROUP BY band ORDER BY band
+FROM buckets
+GROUP BY {pos} ORDER BY {pos}
 """
+
+
+def _stream_minhash_oracle() -> str:
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        _minhash_bands_sql,
+    )
+
+    return f"""
+WITH {_minhash_bands_sql()},
+buckets AS (
+  SELECT band, sig, COUNT(*) AS n_docs, MIN(doc_id) AS rep
+  FROM bands GROUP BY band, sig
+)
+{_bucket_stats_sql(["band"])}"""
 
 
 @register(
@@ -953,34 +926,14 @@ FROM buckets GROUP BY band ORDER BY band
         "replayable). The drained bucket table compacts to per-band "
         "collision stats. At 100 TB the state is one row per occupied "
         "band bucket (bounded by corpus near-dup structure, the same "
-        "Σ|bucket| the batch LSH bounds); production would add state "
-        "TTL/watermark eviction for unbounded feeds.",
+        "Σ|bucket| the batch LSH bounds); for unbounded feeds, "
+        "q_stream_dedup_minhash_ttl evicts finalized event-time "
+        "windows from state under a watermark.",
 )
 def q_stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = _minhash_bands(load_docs_stream(spark, sf_dir))
-    agg = bands.groupBy("band", "sig").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("rep"),
-    )
+    agg = _bucket_counts(_minhash_bands(load_docs_stream(spark, sf_dir)))
     buckets = run_to_completion(agg, output_mode="complete")
-    return (
-        buckets.groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.col("n_docs") > 1).cast("long")).alias(
-                "n_multi_buckets"
-            ),
-            F.sum(
-                F.when(F.col("n_docs") > 1, F.col("n_docs")).otherwise(
-                    F.lit(0).cast("long")
-                )
-            ).alias("n_docs_in_multi"),
-            F.min(F.when(F.col("n_docs") > 1, F.col("rep"))).alias(
-                "first_rep"
-            ),
-        )
-        .orderBy("band")
-    )
+    return _bucket_stats(buckets, "band").orderBy("band")
 
 
 # ---------------------------------------------------------------------------
@@ -1013,38 +966,16 @@ def _mh_ttl_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).withWatermark("ev_ts", f"{_MH_TTL_DELAY_MIN} minutes")
     bands = _minhash_bands(docs, carry=("ev_ts",))
-    return bands.groupBy(
-        F.window("ev_ts", "1 hour").alias("w"), "band", "sig"
-    ).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("rep"),
-    )
+    return _bucket_counts(bands, F.window("ev_ts", "1 hour").alias("w"))
 
 
 def _stream_minhash_ttl_oracle() -> str:
     from netcdf4_variable_streamer_spark.operators.dedup import (
-        BANDS,
-        MH_A,
-        MH_B,
-        MINHASH_P,
-        NUM_PERM,
-        ROWS_PER_BAND,
-        _SHINGLES_SQL,
-        _md5_int_sql,
+        _minhash_bands_sql,
     )
 
-    mh_cols = ",\n         ".join(
-        f"MIN(({MH_A[p]} * h + {MH_B[p]}) % {MINHASH_P}) AS mh{p}"
-        for p in range(NUM_PERM)
-    )
-    band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, MD5(CONCAT_WS(',', {cols})) AS sig FROM mh".format(
-            b=b,
-            cols=", ".join(
-                f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)
-            ),
-        )
-        for b in range(BANDS)
+    stats = _bucket_stats_sql(
+        ["STRFTIME(w_start, '%Y-%m-%d %H:%M:%S') AS window_start", "band"]
     )
     return f"""
 WITH ts_docs AS (
@@ -1056,30 +987,16 @@ WITH ts_docs AS (
 wm AS (
   SELECT MAX(ev_ts) - INTERVAL {_MH_TTL_DELAY_MIN} MINUTE AS w FROM ts_docs
 ),
-sh AS ({_SHINGLES_SQL}),
-h AS (SELECT doc_id, {_md5_int_sql('s', 7)} AS h FROM sh),
-mh AS (SELECT doc_id, {mh_cols} FROM h GROUP BY doc_id),
-bands AS (
-  {band_selects}
-),
+{_minhash_bands_sql()},
 buckets AS (
   SELECT TIME_BUCKET(INTERVAL '1 hour', t.ev_ts) AS w_start,
          b.band, b.sig, COUNT(*) AS n_docs, MIN(b.doc_id) AS rep
   FROM bands b JOIN ts_docs t ON t.doc_id = b.doc_id
+  WHERE TIME_BUCKET(INTERVAL '1 hour', t.ev_ts) + INTERVAL 1 HOUR
+        <= (SELECT w FROM wm)
   GROUP BY 1, 2, 3
 )
-SELECT STRFTIME(w_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-       band,
-       COUNT(*) AS n_buckets,
-       CAST(SUM(CASE WHEN n_docs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_multi_buckets,
-       CAST(SUM(CASE WHEN n_docs > 1 THEN n_docs ELSE 0 END) AS BIGINT)
-         AS n_docs_in_multi,
-       MIN(CASE WHEN n_docs > 1 THEN rep END) AS first_rep
-FROM buckets
-WHERE w_start + INTERVAL 1 HOUR <= (SELECT w FROM wm)
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
+{stats}"""
 
 
 @register(
@@ -1107,26 +1024,9 @@ GROUP BY 1, 2 ORDER BY 1, 2
 def q_stream_dedup_minhash_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = _mh_ttl_stream(spark, sf_dir)
     buckets = run_to_completion(agg, output_mode="append")
-    return (
-        buckets.groupBy(
-            ts_str(F.col("w.start"), _TS_FMT).alias("window_start"),
-            "band",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.col("n_docs") > 1).cast("long")).alias(
-                "n_multi_buckets"
-            ),
-            F.sum(
-                F.when(F.col("n_docs") > 1, F.col("n_docs")).otherwise(
-                    F.lit(0).cast("long")
-                )
-            ).alias("n_docs_in_multi"),
-            F.min(F.when(F.col("n_docs") > 1, F.col("rep"))).alias(
-                "first_rep"
-            ),
-        )
-        .orderBy("window_start", "band")
+    window_start = ts_str(F.col("w.start"), _TS_FMT).alias("window_start")
+    return _bucket_stats(buckets, window_start, "band").orderBy(
+        "window_start", "band"
     )
 
 
@@ -1329,6 +1229,32 @@ def q_stream_dedup_incremental(
 # ---------------------------------------------------------------------------
 
 
+def _substring_probe(
+    b: DataFrame, b_anch: DataFrame, idx_anch: DataFrame, idx_spcl: DataFrame
+) -> DataFrame:
+    """Decision rows of batch ``b`` against an anchor/span-cluster index:
+    the batch anchors ``b_anch`` flag docs sharing an index anchor,
+    exact spans are recomputed over the flagged docs only, and the
+    spans matching ``idx_spcl`` (minus the frequent-n-gram cap) are
+    cut."""
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        _cap_excluded_cut,
+        _rewrite_emit,
+        _span_table,
+    )
+
+    flagged = (
+        b_anch.join(
+            F.broadcast(idx_anch.select("cluster").distinct()), "cluster"
+        )
+        .select("doc_id")
+        .distinct()
+    )
+    fspans = _span_table(b.join(F.broadcast(flagged), "doc_id"))
+    hits = fspans.join(idx_spcl, "cluster")
+    return _rewrite_emit(_cap_excluded_cut(hits), b)
+
+
 def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
     """foreachBatch closure for anchored substring dedup — the
     :func:`make_crawl_loop` protocol (a :class:`VersionedState`, each
@@ -1337,8 +1263,6 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
     ``spcl``. The span-cluster index stays a SET: a batch's ``spcl``
     delta is its clusters minus the index."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
-        _cap_excluded_cut,
-        _rewrite_emit,
         _span_table,
         _winnow_anchors_of,
     )
@@ -1357,22 +1281,8 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
             if vs.recover(batch_id):
                 idx_anch = vs.read("anch", b_anch)
                 idx_spcl = vs.read("spcl", b_spcl)
-                flagged = (
-                    b_anch.join(
-                        F.broadcast(
-                            idx_anch.select("cluster").distinct()
-                        ),
-                        "cluster",
-                    )
-                    .select("doc_id")
-                    .distinct()
-                )
-                fspans = _span_table(
-                    b.join(F.broadcast(flagged), "doc_id")
-                )
-                hits = fspans.join(idx_spcl, "cluster")
                 frames = {
-                    "dec": _rewrite_emit(_cap_excluded_cut(hits), b),
+                    "dec": _substring_probe(b, b_anch, idx_anch, idx_spcl),
                     "anch": vs.rows(idx_anch, b_anch),
                     # duplicate clusters would double-count hits in
                     # the frequent-n-gram cap
@@ -1476,8 +1386,6 @@ def make_substring_ttl_loop(
     union of the last ``ttl`` committed batches only, and EVICTS
     batch indexes older than the horizon (directories deleted)."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
-        _cap_excluded_cut,
-        _rewrite_emit,
         _span_table,
         _winnow_anchors_of,
     )
@@ -1514,21 +1422,7 @@ def make_substring_ttl_loop(
                         for v in retained
                     ]
                 ).distinct()
-                flagged = (
-                    b_anch.join(
-                        F.broadcast(
-                            idx_anch.select("cluster").distinct()
-                        ),
-                        "cluster",
-                    )
-                    .select("doc_id")
-                    .distinct()
-                )
-                fspans = _span_table(
-                    b.join(F.broadcast(flagged), "doc_id")
-                )
-                hits = fspans.join(idx_spcl, "cluster")
-                dec = _rewrite_emit(_cap_excluded_cut(hits), b)
+                dec = _substring_probe(b, b_anch, idx_anch, idx_spcl)
                 writes.append(
                     lambda df=dec: df.write.mode("overwrite").parquet(
                         os.path.join(run_dir, f"dec_v{batch_id}")
@@ -2570,19 +2464,27 @@ _CURF_NEW_JOIN = """JOIN dup d USING (doc_id)
 LEFT JOIN dk USING (doc_id)
 LEFT JOIN ppl p USING (doc_id)"""
 
-for frag in (_CURF_OLD_SURV, _CURF_OLD_SEL, _CURF_OLD_JOIN):
-    # str.replace silently no-ops on a missing fragment, so this guard
-    # must survive `python -O` (where asserts are stripped): a plain
-    # raise, not an assert (ADVICE r14).
-    if frag not in _CUR_ORACLE:
-        raise RuntimeError(
-            "_CUR_ORACLE drifted: surgery fragment not found: "
-            + frag[:80]
-        )
-_CURF_STREAM_ORACLE = (
-    _CUR_ORACLE.replace(_CURF_OLD_SURV, _CURF_NEW_SURV)
-    .replace(_CURF_OLD_SEL, _CURF_NEW_SEL)
-    .replace(_CURF_OLD_JOIN, _CURF_NEW_JOIN)
+
+def _spliced_cur_oracle(new_surv: str, new_sel: str, new_join: str) -> str:
+    """``_CUR_ORACLE`` with its survivor CTE, final select head and
+    final join replaced. str.replace silently no-ops on a missing
+    fragment, so the drift guard is a plain raise, not an assert: it
+    must still run under ``python -O``."""
+    for frag in (_CURF_OLD_SURV, _CURF_OLD_SEL, _CURF_OLD_JOIN):
+        if frag not in _CUR_ORACLE:
+            raise RuntimeError(
+                "_CUR_ORACLE drifted: surgery fragment not found: "
+                + frag[:80]
+            )
+    return (
+        _CUR_ORACLE.replace(_CURF_OLD_SURV, new_surv)
+        .replace(_CURF_OLD_SEL, new_sel)
+        .replace(_CURF_OLD_JOIN, new_join)
+    )
+
+
+_CURF_STREAM_ORACLE = _spliced_cur_oracle(
+    _CURF_NEW_SURV, _CURF_NEW_SEL, _CURF_NEW_JOIN
 )
 
 
@@ -2622,7 +2524,7 @@ def q_stream_pipeline_curation_full(
 # ---------------------------------------------------------------------------
 # Round 15 (VERDICT r14 #5): the SURGICAL decontamination posture run
 # inside the crawl loop — rewrite-out instead of quarantine. Derived
-# from _CUR_ORACLE by the same assert-checked surgery discipline: the
+# from _CUR_ORACLE by the same guarded splice (_spliced_cur_oracle): the
 # dedup survivors become surv0; reference spans + per-batch hit /
 # frequent-n-gram-exclusion / cut CTEs and the shared rewrite-ranges
 # tail (operators/dedup._rewrite_ranges_cte_sql over the survivors'
@@ -2681,18 +2583,8 @@ _CURW_NEW_JOIN = """JOIN dup d USING (doc_id)
 LEFT JOIN rwi r USING (doc_id)
 LEFT JOIN ppl p USING (doc_id)"""
 
-for frag in (_CURF_OLD_SURV, _CURF_OLD_SEL, _CURF_OLD_JOIN):
-    # same -O-proof guard as the quarantine derivation above: a plain
-    # raise, because str.replace silently no-ops on a missing fragment
-    if frag not in _CUR_ORACLE:
-        raise RuntimeError(
-            "_CUR_ORACLE drifted: surgery fragment not found: "
-            + frag[:80]
-        )
-_CURW_STREAM_ORACLE = (
-    _CUR_ORACLE.replace(_CURF_OLD_SURV, _CURW_NEW_SURV)
-    .replace(_CURF_OLD_SEL, _CURW_NEW_SEL)
-    .replace(_CURF_OLD_JOIN, _CURW_NEW_JOIN)
+_CURW_STREAM_ORACLE = _spliced_cur_oracle(
+    _CURW_NEW_SURV, _CURW_NEW_SEL, _CURW_NEW_JOIN
 )
 
 

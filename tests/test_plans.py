@@ -318,6 +318,27 @@ def test_trained_quantizer_plan_shapes_pinned(spark):
     assert got == _TRAINED_PLAN_SHAPES
 
 
+# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
+# pre-execution formatted plan of every batch key built on the shared
+# MinHash-LSH stages, recorded before the per-key copies of the
+# signature, bucket cap, candidate join and verify were merged. A lost
+# train-once checkpoint or a demoted broadcast moves these counts.
+_MINHASH_PLAN_SHAPES = {
+    "q_dedup_near_minhash": (5, 5, 0, 2),
+    "q_dedup_minhash_calibration": (4, 6, 1, 0),
+    "q_dedup_minhash_incremental": (5, 5, 1, 2),
+}
+
+
+def test_minhash_plan_shapes_pinned(spark):
+    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
+    got = {}
+    for key in _MINHASH_PLAN_SHAPES:
+        plan = plans.plan_string(build(spark, key))
+        got[key] = tuple(plans.count_nodes(plan, n) for n in nodes)
+    assert got == _MINHASH_PLAN_SHAPES
+
+
 def test_pipeline_pretrain_no_single_partition_exchange(spark):
     # the composed pipeline inherits the packing stage's posture: the
     # global cumsum must not collapse into a one-partition window

@@ -257,6 +257,29 @@ def test_q_stream_dedup_minhash_oracle(check):
     assert int(pdf["n_multi_buckets"].sum()) > 0
 
 
+def test_minhash_band_tables_agree(spark):
+    """The two MinHash minima paths (batch groupBy aggregate, streaming
+    per-row array_min) give the same (doc_id, band, sig) rows on one
+    documents frame, row for row."""
+    import pandas as pd
+
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        _minhash_band_table,
+        _shingled,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    agg = _minhash_band_table(_shingled(docs, "doc_id", "text")).toPandas()
+    per_row = sq._minhash_bands(docs).toPandas()
+    order = ["doc_id", "band"]
+    assert len(agg) > 0 and len(agg) == len(per_row)
+    assert not agg.duplicated(order).any()
+    pd.testing.assert_frame_equal(
+        per_row.sort_values(order).reset_index(drop=True),
+        agg.sort_values(order).reset_index(drop=True),
+    )
+
+
 def test_q_stream_dedup_minhash_ttl_oracle(check):
     """Per-key driver-contract mirror: finalized-window LSH bucket
     stats hash-match the batch SQL with the identical finalization

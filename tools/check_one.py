@@ -1,7 +1,13 @@
-"""Quick single-key strict-mirror check: python tools/check_one.py KEY [SF]"""
+"""Strict-mirror check of registry keys against their DuckDB oracles in one
+Spark session: python tools/check_one.py KEY [KEY ...] [SF]
+
+SF, the last argument when it is not a registry key, defaults to the test
+suite's fixture directory (``tests/conftest.py`` SF_DIR). Prints MATCH per
+key; exits 1 if any key fails."""
 
 import os
 import sys
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -11,18 +17,30 @@ import netcdf4_variable_streamer_spark.streaming  # noqa: F401
 from netcdf4_variable_streamer_spark import oracle as om
 from netcdf4_variable_streamer_spark.registry import REGISTRY
 from netcdf4_variable_streamer_spark.session import get_spark
+from tests.conftest import SF_DIR
 
-key = sys.argv[1]
-sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+keys = sys.argv[1:]
+sf = keys.pop() if len(keys) > 1 and keys[-1] not in REGISTRY else SF_DIR
 spark = get_spark("check-one")
-spec = REGISTRY[key]
-spdf = spec.builder(spark, sf).toPandas()
-print(f"spark rows={len(spdf)} dtypes:\n{spdf.dtypes}")
-if spec.oracle:
-    con = om.connect(sf)
-    opdf = con.execute(spec.oracle).fetchdf()
-    print(f"oracle rows={len(opdf)} dtypes:\n{opdf.dtypes}")
-    om.compare_frames(spdf, opdf, key)
-    print(f"MATCH {key}")
-else:
-    print("rows-only key")
+con = None
+failed = []
+for key in keys:
+    try:
+        spec = REGISTRY[key]
+        spdf = spec.builder(spark, sf).toPandas()
+        print(f"spark rows={len(spdf)} dtypes:\n{spdf.dtypes}")
+        if not spec.oracle:
+            print(f"rows-only key {key}")
+            continue
+        con = con or om.connect(sf)
+        opdf = con.execute(spec.oracle).fetchdf()
+        print(f"oracle rows={len(opdf)} dtypes:\n{opdf.dtypes}")
+        om.compare_frames(spdf, opdf, key)
+        print(f"MATCH {key}")
+    except Exception:
+        traceback.print_exc()
+        print(f"FAIL {key}")
+        failed.append(key)
+if failed:
+    print(f"{len(failed)} of {len(keys)} keys failed: {' '.join(failed)}")
+    sys.exit(1)
