@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from netcdf4_variable_streamer_spark.registry import register
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import load_table, materialize_once
 
 # ---------------------------------------------------------------------------
 # Shared n-gram-with-position construction (Spark + DuckDB twins). Unlike
@@ -1466,10 +1466,6 @@ def _decontam_stage(dedup: DataFrame, mode: str | None):
     Reference-side docs pass through both. The stage's output is
     materialized once: the LM train pass, the scoring pass, the
     classifier and the funnel join all read it."""
-    from netcdf4_variable_streamer_spark.operators.similarity import (
-        _train_once,
-    )
-
     if mode is None:
         return dedup, None
     if mode == "quarantine":
@@ -1483,7 +1479,7 @@ def _decontam_stage(dedup: DataFrame, mode: str | None):
         quar = _span_quarantine(
             spans.filter(F.col("doc_id") >= _SXC_SPLIT), sref
         )
-        decon = _train_once(
+        decon = materialize_once(
             dedup.join(F.broadcast(quar), "doc_id", "left_anti")
         )
         return decon, (
@@ -1499,7 +1495,7 @@ def _decontam_stage(dedup: DataFrame, mode: str | None):
         F.broadcast(sref), "cluster"
     )
     rw = _rewrite_kept(_cap_excluded_cut(hits), crawl, extra_cols=("lang",))
-    surg = _train_once(
+    surg = materialize_once(
         ref.select(
             "doc_id", "lang", "text", F.lit(0).cast("long").alias("n_cut")
         ).unionByName(
@@ -1532,9 +1528,6 @@ def _curation_funnel(
     the perplexity gate, the hashed-classifier gate, then a per-language
     funnel of docs in, after each stage, and final tokens. Every stage
     consumes the previous one's frame lazily."""
-    from netcdf4_variable_streamer_spark.operators.similarity import (
-        _train_once,
-    )
     from netcdf4_variable_streamer_spark.operators.text import (
         classifier_keep,
         hashed_classifier_scores,
@@ -1546,7 +1539,7 @@ def _curation_funnel(
     )
     wkeep = Window.partitionBy(F.md5("text"))
     # read by the decontam stage (or the gates) AND the funnel join
-    dedup = _train_once(
+    dedup = materialize_once(
         docs.withColumn("keep_id", F.min("doc_id").over(wkeep))
         .filter(F.col("doc_id") == F.col("keep_id"))
         .drop("keep_id")

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from netcdf4_variable_streamer_spark.registry import register
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import load_table, materialize_once
 
 NUM_PERM = 32
 BANDS = 8
@@ -365,13 +365,9 @@ WHERE CAST(n_inter AS DOUBLE) / (z1.n_sh + z2.n_sh - n_inter) >= 0.6
         "stays a 16-byte digest, never the raw minhash tuple.",
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.similarity import (
-        _train_once,
-    )
-
     # the shingled frame feeds the band table, the verify explode and
     # the sizes
-    d = _train_once(
+    d = materialize_once(
         _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
     cands = _bucket_pairs(_capped(_minhash_band_table(d)))
@@ -463,14 +459,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim = sim.bitwiseOR(
             F.shiftleft((F.col(f"b{b}") > 0).cast("long"), b)
         )
-    # Round 19 (guide §5, compute-once): the chunk self-join below
-    # consumes fp on BOTH sides with no reusable exchange between them
-    # (the build side is broadcast), so the expensive token-explode +
-    # 60-column sign aggregate ran twice per execution. fp is one tiny
-    # row per doc — checkpoint it so the fingerprint is built once.
-    fp = bit_sums.select("doc_id", sim.alias("simhash")).localCheckpoint(
-        eager=False
-    )
+    # both sides of the chunk self-join below read fp (the build side
+    # is broadcast, so no exchange is reused between them)
+    fp = materialize_once(bit_sums.select("doc_id", sim.alias("simhash")))
 
     chunks = fp.select(
         "doc_id",
@@ -601,22 +592,13 @@ def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cc_over_pairs(spark, sf_dir, _emb_pairs(spark, sf_dir))
 
 
-def _cc_over_pairs(
-    spark: SparkSession, sf_dir: str, p: DataFrame
-) -> DataFrame:
-    """Connected components over an undirected (v1, v2) pair set by
-    iterative min-label propagation; O(diameter) rounds, lineage cut per
-    round, only a strictly-decreasing label-sum scalar ever reaches the
-    driver (equality = fixpoint)."""
-    # Round 19 (guide §2.2): both edge directions come from ONE pass over
-    # the pair set — explode of a 2-struct array — instead of a union of
-    # two selects. The union form duplicated p's whole subtree (the pair
-    # generator's exact-verify projection, or the quadratic theta-join
-    # itself for cc_clusters) above any reusable exchange, so it executed
-    # twice inside the one edge materialization; a localCheckpoint on p
-    # fixed the duplication but its persist barrier measured net-negative
-    # at sf0.01 (cc_clusters 4.9 -> 5.6 s). The explode needs no state.
-    edges = (
+def _undirected_edges(p: DataFrame) -> DataFrame:
+    """(src, dst) in both directions of an undirected (v1, v2) pair set,
+    from ONE pass over it (explode of a 2-struct array); a union of two
+    selects would run p's subtree twice. Every round of the caller's
+    fixpoint or power iteration reads the edges, so they are
+    materialized once."""
+    return materialize_once(
         p.select(
             F.explode(
                 F.array(
@@ -628,25 +610,33 @@ def _cc_over_pairs(
                     ),
                 )
             ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint()  # edge set reused every iteration
+        ).select("e.src", "e.dst")
     )
-    labels = (
+
+
+def _cc_over_pairs(
+    spark: SparkSession, sf_dir: str, p: DataFrame
+) -> DataFrame:
+    """Connected components over an undirected (v1, v2) pair set by
+    iterative min-label propagation; O(diameter) rounds, lineage cut per
+    round, only a strictly-decreasing label-sum scalar ever reaches the
+    driver (equality = fixpoint)."""
+    edges = _undirected_edges(p)
+    # each round's labels are read by the driver's label-sum probe and
+    # by the next round
+    labels = materialize_once(
         load_table(spark, sf_dir, "embeddings")
         .select(F.col("vec_id"), F.col("vec_id").alias("lab"))
-        .localCheckpoint()
     )
     prev_sum = labels.agg(F.sum("lab")).first()[0]
     for _ in range(50):  # bound >> any realistic near-dup graph diameter
         prop = labels.join(edges, labels.vec_id == edges.src).select(
             F.col("dst").alias("vec_id"), F.col("lab")
         )
-        labels = (
+        labels = materialize_once(
             labels.unionByName(prop)
             .groupBy("vec_id")
             .agg(F.min("lab").alias("lab"))
-            .localCheckpoint()
         )
         cur_sum = labels.agg(F.sum("lab")).first()[0]
         if cur_sum == prev_sum:
@@ -883,14 +873,13 @@ def q_dedup_semantic_trained(
         _coarse_chain,
         _dot,
         _lloyd_assign,
-        _train_once,
         _with_norm,
     )
 
     # the (vec_id, cluster) assignment feeds both sides of the
     # within-cluster self-join; the centroids are read once
     e, ccb = _coarse_chain(spark, sf_dir, nlist=_SEM_NLIST)
-    asg = _train_once(
+    asg = materialize_once(
         _lloyd_assign(e, ccb, _FULLVEC).select(
             "vec_id", F.col("cl").cast("long").alias("cluster_id")
         )
@@ -1073,15 +1062,11 @@ def incremental_near_dedup(
     batch's own shingling plus a broadcast-or-shuffle equi-join whose
     output cardinality is proportional to true near-duplicates.
     """
-    from netcdf4_variable_streamer_spark.operators.similarity import (
-        _train_once,
-    )
-
     qthr = int(round(threshold * 10000))
     # each shingled frame feeds three branches of _incremental_decisions
     # (band table, explode-verify, sizes)
-    idx_sh = _train_once(_shingled(index_df, id_col, text_col))
-    new_sh = _train_once(_shingled(batch_df, id_col, text_col))
+    idx_sh = materialize_once(_shingled(index_df, id_col, text_col))
+    new_sh = materialize_once(_shingled(batch_df, id_col, text_col))
     return _incremental_decisions(
         _minhash_band_table(idx_sh),
         idx_sh,
@@ -1574,18 +1559,14 @@ FROM j GROUP BY est32 ORDER BY est32
 def q_dedup_minhash_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from netcdf4_variable_streamer_spark.operators.similarity import (
-        _train_once,
-    )
-
     # d feeds the minhash explode, the sizes and the verify explode; mh
     # feeds the band table and both estimator joins; cands feeds est and
     # inter
-    d = _train_once(
+    d = materialize_once(
         _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
-    mh = _train_once(_minhash_sigs(d))
-    cands = _train_once(_bucket_pairs(_capped(_band_table(mh))))
+    mh = materialize_once(_minhash_sigs(d))
+    cands = materialize_once(_bucket_pairs(_capped(_band_table(mh))))
     a, b = mh.alias("a"), mh.alias("b")
     est32 = sum(
         (F.col(f"a.mh{p}") == F.col(f"b.mh{p}")).cast("int")

@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 from netcdf4_variable_streamer_spark.operators.dedup import (
     _EMB_PAIRS_CTE,
     _emb_pairs,
+    _undirected_edges,
 )
 from netcdf4_variable_streamer_spark.registry import register
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import load_table, materialize_once
 
 _N_ITER = 3
 _PR0 = 1_000_000  # 1.0 at 1e-6 fixed point
@@ -71,27 +72,11 @@ SELECT vec_id, pr FROM pr3
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select("vec_id")
     pairs = _emb_pairs(spark, sf_dir)
-    # Round 19 (guide §2.2): both edge directions in ONE pass over the
-    # pair set (explode of a 2-struct array) — the union-of-two-selects
-    # form duplicated the quadratic theta-join subtree above any
-    # reusable exchange, so it executed twice inside the one edge
-    # materialization. A localCheckpoint on pairs also fixed the
-    # duplication but its persist barrier measured flat at sf0.01; the
-    # explode needs no state at any scale.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("v1").alias("src"), F.col("v2").alias("dst")),
-                F.struct(F.col("v2").alias("src"), F.col("v1").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst").localCheckpoint(eager=False)
-    # ^ round 19 (guide §5, train-once): every power iteration below
-    # references edges, so without the checkpoint the final plan
-    # replays the quadratic exact-pair join _N_ITER times
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=False)
+    # every power iteration reads edges and deg
+    edges = _undirected_edges(pairs)
+    deg = materialize_once(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
     pr = nodes.withColumn("pr", F.lit(_PR0).cast("long"))
     for _ in range(_N_ITER):
         contrib = (
@@ -182,7 +167,10 @@ def q_graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_threshold_pairs,
     )
 
-    pairs = lsh_threshold_pairs(spark, sf_dir).select("v1", "v2").localCheckpoint()
+    # both edge directions and the final wedge join read the pairs
+    pairs = materialize_once(
+        lsh_threshold_pairs(spark, sf_dir).select("v1", "v2")
+    )
     edges_all = pairs.select(
         F.col("v1").alias("src"), F.col("v2").alias("dst")
     ).unionAll(
@@ -280,10 +268,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_threshold_pairs,
     )
 
-    e = (
-        lsh_threshold_pairs(spark, sf_dir)
-        .select(F.col("v1").alias("a"), F.col("v2").alias("b"))
-        .localCheckpoint()
+    # both sides of the 2-path join and the closing-edge probe read e
+    e = materialize_once(
+        lsh_threshold_pairs(spark, sf_dir).select(
+            F.col("v1").alias("a"), F.col("v2").alias("b")
+        )
     )
     two_path = e.alias("e1").join(
         e.alias("e2"), F.col("e1.b") == F.col("e2.a")
@@ -427,20 +416,8 @@ FROM l2
 def q_graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select("vec_id")
     pairs = _emb_pairs(spark, sf_dir)
-    # Round 19 (guide §2.2): both edge directions in ONE pass over the
-    # pair set (explode of a 2-struct array) — see q_graph_pagerank for
-    # the measured rationale vs union-of-selects / pairs checkpoint.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("v1").alias("src"), F.col("v2").alias("dst")),
-                F.struct(F.col("v2").alias("src"), F.col("v1").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst").localCheckpoint(eager=False)
-    # ^ round 19 (guide §5, train-once): each propagation round joins
-    # edges again — checkpoint so the quadratic exact-pair join runs
-    # once, not _LP_ROUNDS times
+    # each propagation round joins the edges again
+    edges = _undirected_edges(pairs)
     lab = nodes.select(
         F.col("vec_id").alias("v"), F.col("vec_id").alias("lab")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from netcdf4_variable_streamer_spark.registry import register
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import load_table, materialize_once
 
 _FANOUT = 3  # parent(c) = c div 3 — a deterministic ternary tree
 _MAX_ROUNDS = 64  # safety bound >> log_3 of any realistic key domain
@@ -76,15 +76,21 @@ def _closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"c_custkey div {_FANOUT}").alias("parent"),
     )
     edges = nodes.filter(F.col("parent") > 0)
-    frontier = edges.select(
-        "node", F.col("parent").alias("anc"), F.lit(1).alias("depth")
-    ).localCheckpoint()
-    parents = nodes.select(
-        F.col("node").alias("anc"), F.col("parent").alias("next_anc")
-    ).localCheckpoint()  # reused every round
+    # each frontier is read by the driver's emptiness probe, the next
+    # round and the final union; parents by every round
+    frontier = materialize_once(
+        edges.select(
+            "node", F.col("parent").alias("anc"), F.lit(1).alias("depth")
+        )
+    )
+    parents = materialize_once(
+        nodes.select(
+            F.col("node").alias("anc"), F.col("parent").alias("next_anc")
+        )
+    )
     closures = [frontier]
     for _ in range(_MAX_ROUNDS):
-        frontier = (
+        frontier = materialize_once(
             frontier.join(parents, "anc")
             .filter(F.col("next_anc") > 0)
             .select(
@@ -92,7 +98,6 @@ def _closure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("next_anc").alias("anc"),
                 (F.col("depth") + 1).alias("depth"),
             )
-            .localCheckpoint()
         )
         if frontier.isEmpty():  # bounded scalar per round
             break

@@ -35,7 +35,7 @@ from netcdf4_variable_streamer_spark.registry import (
     dsum,
     register,
 )
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import load_table, materialize_once
 
 N_QUERIES = 20
 TOP_K = 5
@@ -461,15 +461,14 @@ def _exact_gt(e: DataFrame):
         F.col("vec_id").alias("q_id"), F.col("fxv").alias("q_fx")
     )
     # one linear pass, read by ground truth AND every exact-rescore
-    # branch (ivf_exact, refine) → train-once (r19, lazy localCheckpoint
-    # — see _train_once below)
-    exact_p = e.join(
-        F.broadcast(qfx), F.col("vec_id") != F.col("q_id")
-    ).select(
-        "q_id",
-        "vec_id",
-        _d2_span("q_fx", "fxv", 1, 64).alias("d2"),
-    ).localCheckpoint(eager=False)
+    # branch (ivf_exact, refine)
+    exact_p = materialize_once(
+        e.join(F.broadcast(qfx), F.col("vec_id") != F.col("q_id")).select(
+            "q_id",
+            "vec_id",
+            _d2_span("q_fx", "fxv", 1, 64).alias("d2"),
+        )
+    )
     wg = Window.partitionBy("q_id").orderBy(
         F.asc("d2"), F.asc("vec_id")
     )
@@ -1195,21 +1194,6 @@ _SUBSPACE = _Shape(("s",), "c", "sfx", 8)  # per-subspace PQ codebooks
 _FULLVEC = _Shape((), "cl", "fxv", 64)  # full-vector coarse quantizer
 
 
-def _train_once(df: DataFrame) -> DataFrame:
-    """Train-once plan contract: lazy ``localCheckpoint`` on a trained
-    artifact (centroid table, codebook, assignment) so every
-    downstream plan branch reads the SAME materialized result instead
-    of re-deriving the Lloyd subtree once per reference.
-    ReusedExchange sometimes dedupes these by luck, but AQE
-    re-planning can and does break it; the checkpoint makes train-once
-    a contract. Apply it only to artifacts consumed more than once: on
-    a single-consumer artifact it is pure overhead (measured +50% on
-    the linear training keys). Lazy, not eager: eager measured slower
-    (an extra blocking materialization per build). Results are
-    bit-identical — identical expressions, materialized once."""
-    return df.localCheckpoint(eager=False)
-
-
 def _d2_sub(a: str, b: str, s: str = "s") -> Column:
     """Integer squared L2 between subspace ``s`` of full-vector ``a``
     (elements s*8+1 .. s*8+8) and the 8-element subvector ``b`` (all
@@ -1316,7 +1300,7 @@ def _pqt_chain(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(fxe, subspace points, trained codebook): the shared DAG of the
     PQ training and trained-recall keys. Nothing is checkpointed; each
-    caller applies :func:`_train_once` to what it reads twice."""
+    caller applies :func:`materialize_once` to what it reads twice."""
     e = _fx_embeddings(spark, sf_dir)
     sub, cb0 = _subspaces(e, "fxv", _PQT_C)
     return e, sub, _lloyd(sub, cb0, _SUBSPACE, _PQT_ITERS)
@@ -1466,7 +1450,7 @@ def q_sim_pq_train_codebook(
 ) -> DataFrame:
     # cb feeds the report join and the codes; codes is read once
     _, sub, cb = _pqt_chain(spark, sf_dir)
-    cb = _train_once(cb)
+    cb = materialize_once(cb)
     codes = _lloyd_assign(sub, cb, _SUBSPACE)
     return _codebook_report(cb, codes, _SUBSPACE)
 
@@ -1562,8 +1546,8 @@ def q_sim_pq_trained_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     e, sub, cb = _pqt_chain(spark, sf_dir)
-    cb = _train_once(cb)  # feeds the codes and the LUT
-    codes = _train_once(_lloyd_assign(sub, cb, _SUBSPACE))
+    cb = materialize_once(cb)  # feeds the codes and the LUT
+    codes = materialize_once(_lloyd_assign(sub, cb, _SUBSPACE))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("fxv").alias("qfx")
     )
@@ -1640,8 +1624,8 @@ def _coarse_chain(
     """(fxe, trained coarse centroids (cl, cfx)): ``iters`` full-vector
     Lloyd rounds from the first ``nlist`` vectors — the trained twin
     of :func:`_ivf_coarse_chain`'s raw first-4-vectors table. Nothing
-    is checkpointed; each caller applies :func:`_train_once` to what
-    it reads twice."""
+    is checkpointed; each caller applies :func:`materialize_once` to
+    what it reads twice."""
     e = _fx_embeddings(spark, sf_dir)
     ccb = e.filter(F.col("vec_id") < nlist).select(
         F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx")
@@ -1765,7 +1749,7 @@ def q_sim_ivf_train_coarse(
 ) -> DataFrame:
     # ccb feeds the report join and the assignment; assign is read once
     e, ccb = _coarse_chain(spark, sf_dir)
-    ccb = _train_once(ccb)
+    ccb = materialize_once(ccb)
     assign = _lloyd_assign(e, ccb, _FULLVEC)
     return _codebook_report(ccb, assign, _FULLVEC)
 
@@ -1942,24 +1926,23 @@ def _ivfpq_recall_frame(
     # probes feeds the ADC LUT build AND the exact-pruning branch;
     # it carries the query vector and probed centroid (fxv, cfx), so
     # the LUT's query residuals need no join back to the corpus
-    # (round 20, guide §2.4)
-    probes = _train_once(probes)
+    probes = materialize_once(probes)
     rfx = F.zip_with(
         F.col("fxv"), F.col("cfx"), lambda x, c: x - c
     )
-    # assign carries the member vector through its argmin (round 20),
-    # so the residual table derives from assign x broadcast(ccb)
-    # directly — no corpus join; assign's single consumer is this
-    # build, so only res is checkpointed (the exact-pruning branch
-    # reads (vec_id, cl) off res below)
-    res = _train_once(
+    # assign carries the member vector through its argmin, so the
+    # residual table derives from assign x broadcast(ccb) directly — no
+    # corpus join; assign's single consumer is this build, so only res
+    # is checkpointed (the exact-pruning branch reads (vec_id, cl) off
+    # res below)
+    res = materialize_once(
         assign.join(F.broadcast(ccb), "cl")
         .select("vec_id", "cl", rfx.alias("rfx"))
     )
     sub, rcb = _subspaces(res, "rfx", pq_c, keep=("cl",))
     # the trained residual codebook feeds the final assign AND the
     # per-query LUT
-    rcb = _train_once(_lloyd(sub, rcb, _SUBSPACE, _PQT_ITERS))
+    rcb = materialize_once(_lloyd(sub, rcb, _SUBSPACE, _PQT_ITERS))
     # cl rides through the argmin instead of a join back to res
     codes = _lloyd_assign(sub, rcb, _SUBSPACE, carry=("cl",))
     qres = probes.select(
@@ -1990,8 +1973,8 @@ def _ivfpq_recall_frame(
     )
     if rerank is not None:
         # scored feeds both the ADC top-k and the refine shortlist —
-        # materialize it once (same train-once contract)
-        scored = _train_once(scored)
+        # materialize it once
+        scored = materialize_once(scored)
     wk = Window.partitionBy("q_id").orderBy(
         F.asc("adc2"), F.asc("vec_id")
     )
@@ -2137,7 +2120,7 @@ def q_sim_ivfpq_trained_recall(
     # ccb feeds the assignment, the probes and the residuals; the
     # assignment carries fxv and is read once (by the residual build)
     e, ccb = _coarse_chain(spark, sf_dir)
-    ccb = _train_once(ccb)
+    ccb = materialize_once(ccb)
     assign = _lloyd_assign(e, ccb, _FULLVEC, carry=("fxv",))
     probes = _probe_rank(e, ccb).filter(
         F.col("prn") <= _CIVF_NPROBE
@@ -2248,13 +2231,13 @@ def q_sim_ivfpq_production_recall(
             ).alias("nprobe"),
         )
     )
-    params = _train_once(params)
+    params = materialize_once(params)
     ccb = e.join(
         F.broadcast(params), F.col("vec_id") < F.col("nlist")
     ).select(F.col("vec_id").alias("cl"), F.col("fxv").alias("cfx"))
     # ccb feeds the assignment, the probes and the residuals; the
     # assignment carries fxv and is read once (by the residual build)
-    ccb = _train_once(_lloyd(e, ccb, _FULLVEC, _CIVF_ITERS))
+    ccb = materialize_once(_lloyd(e, ccb, _FULLVEC, _CIVF_ITERS))
     assign = _lloyd_assign(e, ccb, _FULLVEC, carry=("fxv",))
     probes = (
         _probe_rank(e, ccb)

@@ -936,50 +936,14 @@ SELECT '_corrupt', 3, 0, 0
         "the read parallelizes by byte range at any scale.",
 )
 def src_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import uuid as _uuid
-
-    from netcdf4_variable_streamer_spark.tables import load_table
-
-    dst = os.path.join(SCRATCH, f"jsonl_{_uuid.uuid4().hex[:8]}")
-    try:
-        load_table(spark, sf_dir, "documents").write.mode(
-            "overwrite"
-        ).json(dst)
-        with open(os.path.join(dst, "part-zz-bad.json"), "w") as f:
-            f.write('{"doc_id": 1, "text": "truncated\n')
-            f.write("not json at all\n")
-            f.write('{"doc_id": }\n')
-        schema = (
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long, _bad string"
-        )
-        parsed = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_bad")
-            .json(dst)
-            # caching is required to filter on the corrupt column
-            # (Spark refuses to resolve it against a raw scan)
-            .cache()
-        )
-        good = parsed.filter(F.col("_bad").isNull())
-        out = good.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars_meta"),
-            F.sum(F.length("text")).alias("sum_chars_text"),
-        )
-        rows = out.collect()
-        n_bad = parsed.filter(F.col("_bad").isNotNull()).count()
-        parsed.unpersist()
-        rows.append(("_corrupt", n_bad, 0, 0))
-        return spark.createDataFrame(
-            [tuple(r) for r in rows],
-            "lang string, n_docs long, sum_chars_meta long, "
-            "sum_chars_text long",
-        )
-    finally:
-        shutil.rmtree(dst, ignore_errors=True)
+    return _corrupt_record_ingest(
+        spark, sf_dir, "json", {}, {},
+        [
+            '{"doc_id": 1, "text": "truncated\n',
+            "not json at all\n",
+            '{"doc_id": }\n',
+        ],
+    )
 
 
 @register(
@@ -1009,46 +973,66 @@ SELECT '_corrupt', 2, 0, 0
         "line-splittable format of choice).",
 )
 def src_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _corrupt_record_ingest(
+        spark, sf_dir, "csv",
+        {"quoteAll": True, "escape": '"', "maxRecordsPerFile": 2000},
+        {"multiLine": True, "escape": '"'},
+        [
+            "notanumber,sometext,en,web,alsonotanumber\n",
+            "99999,short,xx,web,notanumber\n",
+        ],
+    )
+
+
+def _corrupt_record_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    write_options: dict,
+    read_options: dict,
+    bad_lines: list[str],
+) -> DataFrame:
+    """The body of the corrupt-record ingest keys: the documents table
+    is written as ``fmt`` files with ``write_options``, a file of
+    ``bad_lines`` is added, and the read-back (explicit schema,
+    PERMISSIVE mode, ``read_options``) quarantines bad lines in a
+    ``_bad`` column. Returns per-lang doc counts and both character
+    sums of the good rows plus a ``_corrupt`` row with the bad count."""
     import shutil
     import uuid as _uuid
 
-    from netcdf4_variable_streamer_spark.tables import load_table
+    from netcdf4_variable_streamer_spark.tables import batch_cache, load_table
 
-    dst = os.path.join(SCRATCH, f"csv_{_uuid.uuid4().hex[:8]}")
+    dst = os.path.join(SCRATCH, f"{fmt}_{_uuid.uuid4().hex[:8]}")
     try:
-        (
-            load_table(spark, sf_dir, "documents")
-            .write.mode("overwrite")
-            .option("quoteAll", True)
-            .option("escape", '"')
-            .option("maxRecordsPerFile", 2000)
-            .csv(dst)
-        )
-        with open(os.path.join(dst, "part-zz-bad.csv"), "w") as f:
-            f.write("notanumber,sometext,en,web,alsonotanumber\n")
-            f.write("99999,short,xx,web,notanumber\n")
+        load_table(spark, sf_dir, "documents").write.mode(
+            "overwrite"
+        ).format(fmt).options(**write_options).save(dst)
+        with open(os.path.join(dst, f"part-zz-bad.{fmt}"), "w") as f:
+            f.writelines(bad_lines)
         schema = (
             "doc_id long, text string, lang string, source string, "
             "n_chars long, _bad string"
         )
-        parsed = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_bad")
-            .option("multiLine", True)
-            .option("escape", '"')
-            .csv(dst)
-            .cache()
-        )
-        good = parsed.filter(F.col("_bad").isNull())
-        out = good.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars_meta"),
-            F.sum(F.length("text")).alias("sum_chars_text"),
-        )
-        rows = out.collect()
-        n_bad = parsed.filter(F.col("_bad").isNotNull()).count()
-        parsed.unpersist()
+        with batch_cache() as cache:
+            # caching is required to filter on the corrupt column
+            # (Spark refuses to resolve it against a raw scan)
+            parsed = cache(
+                spark.read.schema(schema)
+                .option("mode", "PERMISSIVE")
+                .option("columnNameOfCorruptRecord", "_bad")
+                .options(**read_options)
+                .format(fmt)
+                .load(dst)
+            )
+            good = parsed.filter(F.col("_bad").isNull())
+            out = good.groupBy("lang").agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_chars").alias("sum_chars_meta"),
+                F.sum(F.length("text")).alias("sum_chars_text"),
+            )
+            rows = out.collect()
+            n_bad = parsed.filter(F.col("_bad").isNotNull()).count()
         rows.append(("_corrupt", n_bad, 0, 0))
         return spark.createDataFrame(
             [tuple(r) for r in rows],

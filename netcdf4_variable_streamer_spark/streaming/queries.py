@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from netcdf4_variable_streamer_spark.registry import SQL_DSUM, dsum, register, ts_str
-from netcdf4_variable_streamer_spark.tables import load_table
+from netcdf4_variable_streamer_spark.tables import batch_cache, load_table
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -71,8 +71,8 @@ def _overlap_jobs(*thunks) -> None:
     and the version stays invisible — the same crash contract as the
     serial form: which sibling writes completed before a crash is
     immaterial, the replayed batch overwrites every one idempotently).
-    Shared cached frames (the per-batch ``persist()`` caches) are safe
-    under concurrent first use: consumers substitute the
+    Shared cached frames (the per-batch :func:`batch_cache` frames) are
+    safe under concurrent first use: consumers substitute the
     InMemoryRelation at planning time and the block manager's
     per-block locking handles concurrent materialization. Safe, but
     not free: each thunk that reaches an unbuilt cache submits its
@@ -1105,9 +1105,9 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         b = batch_df.select("doc_id", "text")
-        # the shingle pass feeds the probe and both index writes
-        batch_sh = _shingled(b, "doc_id", "text").persist()
-        try:
+        with batch_cache() as cache:
+            # the shingle pass feeds the probe and both index writes
+            batch_sh = cache(_shingled(b, "doc_id", "text"))
             new_bands = _minhash_band_table(batch_sh)
             frames = {"bands": new_bands, "sh": batch_sh}
             if vs.recover(batch_id):
@@ -1122,10 +1122,6 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
                     "sh": vs.rows(idx_sh, batch_sh),
                 }
             vs.commit(frames)
-        finally:
-            # unpersist even on a failed batch: no cache leak across
-            # failed batches in a long-lived session
-            batch_sh.unpersist()
 
     return crawl, n_batches
 
@@ -1273,9 +1269,9 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         b = batch_df.select("doc_id", "text")
-        # the winnow-anchor pass feeds the probe AND the anch write
-        b_anch = _winnow_anchors_of(b).persist()
-        try:
+        with batch_cache() as cache:
+            # the winnow-anchor pass feeds the probe AND the anch write
+            b_anch = cache(_winnow_anchors_of(b))
             b_spcl = _span_table(b).select("cluster").distinct()
             frames = {"anch": b_anch, "spcl": b_spcl}
             if vs.recover(batch_id):
@@ -1292,9 +1288,6 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
                     ),
                 }
             vs.commit(frames)
-        finally:
-            # no cache leak across failed batches
-            b_anch.unpersist()
 
     return crawl, n_batches
 
@@ -1400,14 +1393,11 @@ def make_substring_ttl_loop(
             for v in _versions(run_dir, "commit_b")
             if batch_id - ttl <= v < batch_id
         ]
-        # ONE winnow-anchor pass per batch: it feeds the probe branch
-        # AND the anch_b index write — persist for the batch
-        # (round 19, guide §5; cache only, semantics unchanged)
-        b_anch = _winnow_anchors_of(b).persist()
-        try:
+        with batch_cache() as cache:
+            # the winnow-anchor pass feeds the probe AND the anch_b write
+            b_anch = cache(_winnow_anchors_of(b))
             # independent write actions on independent paths —
-            # overlapped (round 19 session 3, guide §2.6), marker
-            # still strictly last
+            # overlapped, marker still strictly last
             writes = []
             if retained:
                 idx_anch = spark.read.parquet(
@@ -1462,9 +1452,6 @@ def make_substring_ttl_loop(
                             os.path.join(run_dir, f"{t}_b{v}"),
                             ignore_errors=True,
                         )
-        finally:
-            # ADVICE r19: no cache leak across failed batches
-            b_anch.unpersist()
 
     return crawl, n_batches
 
@@ -1995,30 +1982,27 @@ def make_curation_loop(
         # stage 1: exact dedup against the standing index + in-batch
         # min-id keeper (16-byte keys; batch-proportional probe)
         wmin = Window.partitionBy("h")
-        b2 = (
-            b.join(idx.withColumn("in_idx", F.lit(1)), "h", "left")
-            .withColumn("min_id", F.min("doc_id").over(wmin))
-            .withColumn(
-                "is_dup",
-                F.col("in_idx").isNotNull()
-                # h non-null pin (round-15 self-review): md5(NULL) is
-                # NULL and the window groups ALL NULLs into one
-                # partition, so two NULL-text docs in a batch would
-                # mark the later one a "duplicate" of nothing — and
-                # diverge from the oracle, whose equality probe never
-                # matches NULL. Docs without text are never dups.
-                | (
-                    F.col("h").isNotNull()
-                    & (F.col("doc_id") != F.col("min_id"))
-                ),
+        with batch_cache() as cache:
+            # read by the survivors branch, the decisions base and the
+            # new-hash delta
+            b2 = cache(
+                b.join(idx.withColumn("in_idx", F.lit(1)), "h", "left")
+                .withColumn("min_id", F.min("doc_id").over(wmin))
+                .withColumn(
+                    "is_dup",
+                    F.col("in_idx").isNotNull()
+                    # h non-null pin: md5(NULL) is NULL and the window
+                    # groups ALL NULLs into one partition, so two
+                    # NULL-text docs in a batch would mark the later one
+                    # a "duplicate" of nothing — and diverge from the
+                    # oracle, whose equality probe never matches NULL.
+                    # Docs without text are never dups.
+                    | (
+                        F.col("h").isNotNull()
+                        & (F.col("doc_id") != F.col("min_id"))
+                    ),
+                )
             )
-        ).persist()  # read by the survivors branch AND the decisions
-        # base (round 19, guide §5): the standard foreachBatch idiom —
-        # persist what multiple actions/branches of the batch consume,
-        # unpersist at batch end (no leak across batches, unlike a
-        # localCheckpoint). Semantics unchanged: cache only.
-        caches = [b2]
-        try:
             survivors = b2.filter(~F.col("is_dup")).select(
                 "doc_id", "lang", "text", "n_tokens"
             )
@@ -2072,15 +2056,13 @@ def make_curation_loop(
                     survivors.select("doc_id", "text")
                 ).join(F.broadcast(sref), "cluster")
                 cut = _cap_excluded_cut(hits)
-                rw = _rewrite_kept(
-                    cut, survivors, extra_cols=("lang", "n_tokens")
-                ).withColumn("rtext", F.array_join("kept", " ")).persist()
-                caches.append(rw)
-                # ^ round 19 (guide §5): the span-cut HOF walk feeds the
-                # decisions columns (rwi), the gate/classifier/budget
-                # chain (survivors) AND — through them — the dec plan's
-                # replayed branches; persist for the batch like b2/samp
-                # (unpersisted at batch end below; cache only)
+                # the span-cut walk feeds the decisions columns (rwi)
+                # and the gate/classifier/budget chain (survivors)
+                rw = cache(
+                    _rewrite_kept(
+                        cut, survivors, extra_cols=("lang", "n_tokens")
+                    ).withColumn("rtext", F.array_join("kept", " "))
+                )
                 rwi = rw.select(
                     "doc_id",
                     (F.size("tk") - F.size("kept"))
@@ -2098,14 +2080,9 @@ def make_curation_loop(
                 )
             # stage 2: perplexity gate under the persisted LM (per-lang
             # cutoff over THIS batch's survivors — batch-proportional).
-            # Persisted for the batch (round 19 session 3, guide §5): the
-            # scored frame feeds the gate chain (kept -> classifier ->
-            # samp) AND the decisions plan's ppl_keep column — without
-            # the cache the decisions action re-runs the whole bigram
-            # scoring pass (the dominant per-batch compute). Cache only;
-            # unpersisted at batch end with b2/samp
-            ppl = perplexity_decisions(bgc, ctx, vsz, survivors).persist()
-            caches.append(ppl)
+            # The scored frame feeds the gate chain (kept -> classifier
+            # -> samp) and the decisions plan's ppl_keep column
+            ppl = cache(perplexity_decisions(bgc, ctx, vsz, survivors))
             kept = survivors.join(
                 ppl.filter(F.col("keep")).select("doc_id"), "doc_id"
             )
@@ -2117,7 +2094,8 @@ def make_curation_loop(
                 .orderBy(F.desc("score_q"), "doc_id")
                 .rowsBetween(Window.unboundedPreceding, 0)
             )
-            samp = (
+            # read by the decisions write AND the budget-ledger write
+            samp = cache(
                 scored.join(F.broadcast(used), "lang", "left")
                 .withColumn("cum", F.sum("n_tokens").over(wcum))
                 .withColumn(
@@ -2125,10 +2103,7 @@ def make_curation_loop(
                     F.coalesce(F.col("used"), F.lit(0)) + F.col("cum")
                     <= _CUR_BUDGET,
                 )
-            ).persist()  # read by the decisions write AND the budget-
-            # ledger write below — without the cache the second action
-            # re-runs the whole classifier/budget DAG (round 19, guide §5)
-            caches.append(samp)
+            )
             dec = (
                 b2.select("doc_id", "lang", "is_dup", "n_tokens")
                 .join(
@@ -2200,12 +2175,6 @@ def make_curation_loop(
                     "budget": new_used,
                 }
             )
-        finally:
-            # unpersist every per-batch cache even on a
-            # failed batch (ADVICE r19: no executor-cache
-            # leak across failed batches)
-            for c in reversed(caches):
-                c.unpersist()
 
     return curate, n_batches
 

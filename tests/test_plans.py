@@ -304,6 +304,18 @@ _TRAINED_PLAN_SHAPES = {
 }
 
 
+def _plan_shapes(spark, keys, nodes):
+    """{key: count of each of ``nodes``} in the pre-execution formatted
+    plan of every key in ``keys``."""
+    return {
+        key: tuple(
+            plans.count_nodes(plans.plan_string(build(spark, key)), n)
+            for n in nodes
+        )
+        for key in keys
+    }
+
+
 def test_trained_quantizer_plan_shapes_pinned(spark):
     nodes = (
         "Exchange",
@@ -311,10 +323,7 @@ def test_trained_quantizer_plan_shapes_pinned(spark):
         "BroadcastNestedLoopJoin",
         "SortMergeJoin",
     )
-    got = {}
-    for key in _TRAINED_PLAN_SHAPES:
-        plan = plans.plan_string(build(spark, key))
-        got[key] = tuple(plans.count_nodes(plan, n) for n in nodes)
+    got = _plan_shapes(spark, _TRAINED_PLAN_SHAPES, nodes)
     assert got == _TRAINED_PLAN_SHAPES
 
 
@@ -332,11 +341,30 @@ _MINHASH_PLAN_SHAPES = {
 
 def test_minhash_plan_shapes_pinned(spark):
     nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
-    got = {}
-    for key in _MINHASH_PLAN_SHAPES:
-        plan = plans.plan_string(build(spark, key))
-        got[key] = tuple(plans.count_nodes(plan, n) for n in nodes)
+    got = _plan_shapes(spark, _MINHASH_PLAN_SHAPES, nodes)
     assert got == _MINHASH_PLAN_SHAPES
+
+
+# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
+# pre-execution formatted plan of the keys whose compute-once
+# checkpoints (fingerprints, edge sets, exact-distance pass) were
+# written inline before they moved to tables.materialize_once. A
+# dropped checkpoint re-inlines its subtree and grows these counts.
+_MATERIALIZED_PLAN_SHAPES = {
+    "q_dedup_simhash": (1, 1, 0, 0),
+    "q_graph_pagerank": (6, 6, 3, 0),
+    "q_graph_label_prop": (8, 3, 3, 0),
+    "q_graph_jaccard_neighbors": (10, 0, 4, 4),
+    "q_graph_triangles": (8, 0, 2, 0),
+    "q_sim_ivfpq_recall": (16, 13, 1, 6),
+    "q_sim_ivf_nprobe_sweep": (12, 4, 2, 4),
+}
+
+
+def test_materialized_plan_shapes_pinned(spark):
+    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
+    got = _plan_shapes(spark, _MATERIALIZED_PLAN_SHAPES, nodes)
+    assert got == _MATERIALIZED_PLAN_SHAPES
 
 
 def test_pipeline_pretrain_no_single_partition_exchange(spark):
@@ -854,8 +882,8 @@ def test_pipeline_curation_posture(spark):
 
 # (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin,
 # Window) of the keys built on the hashed classifier and the curation
-# funnel: as registered, then (composites) with _train_once replaced by
-# identity so the whole composed plan is counted
+# funnel: as registered, then (composites) with materialize_once replaced
+# by identity so the whole composed plan is counted
 _CURATION_PLAN_SHAPES = {
     "q_text_classifier_score": (6, 1, 0, 0, 0),
     "q_sample_token_budget": (4, 0, 0, 0, 1),
@@ -871,7 +899,7 @@ _CURATION_UNMATERIALIZED_SHAPES = {
 
 
 def test_curation_plan_shapes_pinned(spark, monkeypatch):
-    from netcdf4_variable_streamer_spark.operators import similarity
+    from netcdf4_variable_streamer_spark.operators import corpus
 
     nodes = (
         "Exchange",
@@ -880,22 +908,11 @@ def test_curation_plan_shapes_pinned(spark, monkeypatch):
         "SortMergeJoin",
         "Window",
     )
-
-    def shapes(keys):
-        return {
-            key: tuple(
-                plans.count_nodes(plans.plan_string(build(spark, key)), n)
-                for n in nodes
-            )
-            for key in keys
-        }
-
-    assert shapes(_CURATION_PLAN_SHAPES) == _CURATION_PLAN_SHAPES
-    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
-    assert (
-        shapes(_CURATION_UNMATERIALIZED_SHAPES)
-        == _CURATION_UNMATERIALIZED_SHAPES
-    )
+    got = _plan_shapes(spark, _CURATION_PLAN_SHAPES, nodes)
+    assert got == _CURATION_PLAN_SHAPES
+    monkeypatch.setattr(corpus, "materialize_once", lambda df: df)
+    got = _plan_shapes(spark, _CURATION_UNMATERIALIZED_SHAPES, nodes)
+    assert got == _CURATION_UNMATERIALIZED_SHAPES
 
 
 def test_token_budget_single_window(spark):
@@ -1131,16 +1148,16 @@ def test_curation_full_decontam_posture(spark, monkeypatch):
     reaches the pipeline through a broadcast; no Python, no
     cartesian/nested-loop stage anywhere in the composed plan.
 
-    Built with _train_once replaced by identity: the production
-    builder lazily localCheckpoints the dedup/decon frames (train-once),
-    which truncates explain() at the materialization boundary — the
+    Built with materialize_once replaced by identity: the production
+    builder lazily localCheckpoints the dedup/decon frames, which
+    truncates explain() at the materialization boundary — the
     posture is asserted on the identical un-checkpointed composition so
     the whole end-to-end plan is visible."""
     import re
 
-    from netcdf4_variable_streamer_spark.operators import similarity
+    from netcdf4_variable_streamer_spark.operators import corpus
 
-    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
+    monkeypatch.setattr(corpus, "materialize_once", lambda df: df)
     df = build(spark, "q_pipeline_curation_full")
     plan = plans.plan_string(df)
     assert "BatchEvalPython" not in plan, plan
@@ -1294,16 +1311,16 @@ def test_curation_surgical_posture(spark, monkeypatch):
     no Python, no cartesian/nested-loop stage in the composed
     plan.
 
-    Built with _train_once replaced by identity: the production
-    builder lazily localCheckpoints the dedup/surg frames (train-once),
-    which truncates explain() at the materialization boundary — the
+    Built with materialize_once replaced by identity: the production
+    builder lazily localCheckpoints the dedup/surg frames, which
+    truncates explain() at the materialization boundary — the
     posture is asserted on the identical un-checkpointed composition so
     the whole end-to-end plan is visible."""
     import re
 
-    from netcdf4_variable_streamer_spark.operators import similarity
+    from netcdf4_variable_streamer_spark.operators import corpus
 
-    monkeypatch.setattr(similarity, "_train_once", lambda df: df)
+    monkeypatch.setattr(corpus, "materialize_once", lambda df: df)
     df = build(spark, "q_pipeline_curation_surgical")
     plan = plans.plan_string(df)
     assert "BatchEvalPython" not in plan, plan

@@ -1639,6 +1639,84 @@ def test_overlap_jobs_keeps_cause_and_reports_siblings():
     assert "RuntimeError: second write failed" in notes
 
 
+def _n_cached(spark) -> int:
+    return (
+        spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    )
+
+
+def test_batch_cache_released_on_failure(spark):
+    """Every frame a ``batch_cache`` block cached is unpersisted when the
+    block raises."""
+    from pyspark.sql import functions as F
+
+    from netcdf4_variable_streamer_spark.tables import batch_cache
+
+    before = _n_cached(spark)
+    with pytest.raises(RuntimeError, match="mid-batch"):
+        with batch_cache() as cache:
+            cache(spark.range(10).withColumn("x", F.col("id") * 2))
+            cache(spark.range(20).withColumn("y", F.col("id") + 1))
+            assert _n_cached(spark) == before + 2
+            raise RuntimeError("mid-batch")
+    assert _n_cached(spark) == before
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        sq.make_crawl_loop,
+        sq.make_substring_crawl_loop,
+        lambda spark, run_dir: sq.make_substring_ttl_loop(
+            spark, run_dir, ttl=1
+        ),
+        sq.make_curation_loop,
+        lambda spark, run_dir: sq.make_curation_loop(
+            spark, run_dir, decontam=True
+        ),
+        lambda spark, run_dir: sq.make_curation_loop(
+            spark, run_dir, decontam="rewrite"
+        ),
+    ],
+    ids=[
+        "crawl", "substring", "substring_ttl",
+        "curation", "curation_quarantine", "curation_rewrite",
+    ],
+)
+def test_loop_caches_released_on_failed_batch(
+    spark, tmp_path, monkeypatch, make
+):
+    """A probing batch whose overlapped writes fail propagates the error
+    and leaves no cached frame behind. Batch 0 commits unpatched so that
+    batch 1 probes committed state; the failing writes see the batch's
+    caches live."""
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").to_pandas()
+    docs = docs[["doc_id", "text", "lang"]]
+    b0, b1 = (
+        spark.createDataFrame(docs[(docs.doc_id >= lo) & (docs.doc_id < hi)])
+        for lo, hi in ((0, 200), (200, 300))
+    )
+    body, _n = make(spark, str(tmp_path))
+    body(b0, 0)
+    before = _n_cached(spark)
+    live = []
+
+    def boom(*thunks):
+        live.append(_n_cached(spark))
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(sq, "_overlap_jobs", boom)
+    with pytest.raises(RuntimeError, match="write failed"):
+        body(b1, 1)
+    assert live and live[0] > before
+    assert _n_cached(spark) == before
+
+
 def test_derived_ctx_keeps_non_nullable_schema(spark, tmp_path):
     """Both loops that derive the LM context table from the persisted
     bigram counts write ``c_u`` as a non-nullable column, and the

@@ -6,13 +6,18 @@ first.  Usage:
 
 Timings are per-key wall-clock of ``df.write.format("noop")`` after one
 warm-up execution per key (plan cache + JIT), min of ``n_runs`` (default
-2) — a ranking tool for finding hot keys, not a benchmark.
+2) — a ranking tool for finding hot keys, not a benchmark. Each key's
+line also prints the median and every run, and the JSON carries every
+run per key under ``runs``, so an A/B can read medians and quartiles
+from one command. An optional second argument limits the run to a
+comma-separated list of keys.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 import traceback
@@ -35,6 +40,7 @@ def main() -> None:
     if only:
         q = {k: q[k] for k in only}
     out: dict[str, float] = {}
+    all_runs: dict[str, list[float]] = {}
     loads: dict[str, float] = {}
     errs: dict[str, str] = {}
     for i, (key, builder) in enumerate(q.items()):
@@ -52,7 +58,13 @@ def main() -> None:
                 ).save()
                 runs.append(time.perf_counter() - t0)
             out[key] = round(min(runs), 4)
-            print(f"[{i + 1}/{len(q)}] {key}: {out[key]:.3f}s", flush=True)
+            all_runs[key] = [round(r, 4) for r in runs]
+            print(
+                f"[{i + 1}/{len(q)}] {key}: {out[key]:.3f}s "
+                f"median {statistics.median(runs):.3f}s "
+                f"runs {' '.join(f'{r:.3f}' for r in runs)}",
+                flush=True,
+            )
         except Exception as ex:  # noqa: BLE001
             errs[key] = f"{type(ex).__name__}: {ex}"
             print(f"[{i + 1}/{len(q)}] ERR {key}: {errs[key][:200]}", flush=True)
@@ -62,6 +74,7 @@ def main() -> None:
     print(json.dumps({"sf_dir": sf_dir, "n": len(out), "errors": errs,
                       "total": round(sum(out.values()), 2),
                       "timings": ranked,
+                      "runs": all_runs,
                       "load_1min_at_key_start": loads}))
     spark.stop()
 
