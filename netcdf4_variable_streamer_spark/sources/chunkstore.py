@@ -22,10 +22,10 @@ preserved behind a storage protocol:
   line/block read generators, axis transposition when the streamed dim
   is not axis 0.
 
-The Spark DataSource (netcdf_source.py) rides the same ChunkStore: one
-input partition per storage chunk — the reference's chunk-alignment
-optimization (A3/A6: storage chunks == stream blocks) becomes Spark's
-partition alignment.
+The Spark DataSource (netcdf_source.py) rides the same ChunkStore: its
+partitions are contiguous runs of whole storage chunks, one wave of
+tasks — the reference's chunk-alignment optimization (A3/A6: storage
+chunks == stream blocks) keeps chunk boundaries partition boundaries.
 """
 
 from __future__ import annotations
@@ -237,9 +237,11 @@ class StreamedVariable:
         if store.streamed_dim not in self.dimensions:
             raise ValueError("variable must include the streamed dim")
         self.streamed_axis = self.dimensions.index(store.streamed_dim)
-        # axis order that brings the streamed dim to the front
-        self._to_storage = (self.streamed_axis,) + tuple(
-            i for i in range(len(self.dimensions)) if i != self.streamed_axis
+        # logical axes in storage order (streamed dim, then fixed dims in
+        # store order), and the inverse permutation for reads
+        self._to_storage = tuple(
+            self.dimensions.index(d)
+            for d in (store.streamed_dim, *store.fixed_dims)
         )
         self._from_storage = tuple(np.argsort(self._to_storage))
         if chunk_size_mb is not None:
@@ -262,47 +264,35 @@ class StreamedVariable:
     # -- write path (A4/A5/A6/A7) -----------------------------------------
     def streamline(self, values_by_var: dict[str, np.ndarray]) -> None:
         """Append ONE line along the streamed dim (reference A4)."""
-        for v in self.store.variables:
-            line = self._line_to_storage(np.asarray(values_by_var[v]))
-            self._buffer[v][self._cursor] = line
-        self._cursor += 1
-        if self._cursor == self.lines_per_buffer:
-            self.flush()
+        self.stream_block({v: self._as_block(values_by_var[v])
+                           for v in self.store.variables})
 
-    def _line_to_storage(self, line: np.ndarray) -> np.ndarray:
-        """Transpose one line from logical order to storage order (A10)."""
+    def _as_block(self, line) -> np.ndarray:
+        """A logical (N-1)-d line as a one-line logical block."""
+        line = np.asarray(line)
         if line.ndim != len(self.dimensions) - 1:
             raise ValueError(
                 f"line must have {len(self.dimensions) - 1} dims, got {line.ndim}"
             )
-        # logical line axes = variable dims minus the streamed axis;
-        # storage line axes = fixed dims in store order
-        logical_line_dims = [
-            d for d in self.dimensions if d != self.store.streamed_dim
-        ]
-        perm = [logical_line_dims.index(d) for d in self.store.fixed_dims]
-        return np.transpose(line, perm) if perm else line
+        return np.expand_dims(line, self.streamed_axis)
 
     def stream_block(self, block_by_var: dict[str, np.ndarray]) -> None:
         """Append k lines at once (reference A5): input shaped with the
-        variable's logical axis order, streamed dim at its logical axis."""
-        blocks = {}
-        for v in self.store.variables:
-            b = np.asarray(block_by_var[v])
-            b = np.transpose(b, self._to_storage)  # streamed dim to front
-            # then fixed dims into store order
-            logical_line_dims = [
-                d for d in self.dimensions if d != self.store.streamed_dim
-            ]
-            perm = [0] + [
-                1 + logical_line_dims.index(d) for d in self.store.fixed_dims
-            ]
-            blocks[v] = np.transpose(b, perm) if len(perm) > 1 else b
+        variable's logical axis order, streamed dim at its logical axis.
+        The buffer fills by slice copies and flushes each time it is
+        full."""
+        blocks = {
+            v: np.transpose(np.asarray(block_by_var[v]), self._to_storage)
+            for v in self.store.variables
+        }
         n = next(iter(blocks.values())).shape[0]
-        for i in range(n):
-            for v in self.store.variables:
-                self._buffer[v][self._cursor] = blocks[v][i]
-            self._cursor += 1
+        i = 0
+        while i < n:
+            k = min(n - i, self.lines_per_buffer - self._cursor)
+            for v, b in blocks.items():
+                self._buffer[v][self._cursor: self._cursor + k] = b[i: i + k]
+            self._cursor += k
+            i += k
             if self._cursor == self.lines_per_buffer:
                 self.flush()
 
@@ -321,23 +311,17 @@ class StreamedVariable:
         """Lazily yield (start_line, {var: block}) with blocks in the
         variable's LOGICAL axis order (reference A9; A10 transpose-back).
         Defaults to one yield per storage chunk."""
-        logical_line_dims = [
-            d for d in self.dimensions if d != self.store.streamed_dim
-        ]
-        store_dims = list(self.store.fixed_dims)
-        inv = [0] + [1 + store_dims.index(d) for d in logical_line_dims]
         for chunk in self.store.list_chunks():
             tbl = self.store.read_chunk(chunk)
-            out = {}
-            for v, dt in self.store.variables.items():
-                arr = tbl.column(v).to_numpy(zero_copy_only=False).reshape(
-                    (chunk.n_lines, *self.store.line_shape)
-                ).astype(dt)
-                arr = np.transpose(arr, inv) if len(inv) > 1 else arr
-                # finally move streamed axis back to its logical position
-                arr = np.moveaxis(arr, 0, self.streamed_axis)
-                out[v] = arr
-            yield chunk.start, out
+            yield chunk.start, {
+                v: np.transpose(
+                    tbl.column(v).to_numpy(zero_copy_only=False).reshape(
+                        (chunk.n_lines, *self.store.line_shape)
+                    ).astype(dt),
+                    self._from_storage,
+                )
+                for v, dt in self.store.variables.items()
+            }
 
     def yield_lines(self):
         """Lazily yield (line_idx, {var: (N-1)-d line}) (reference A8)."""

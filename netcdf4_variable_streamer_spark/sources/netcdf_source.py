@@ -3,24 +3,27 @@
 Maps the reference surface (SURVEY.md §2 Table A) onto the PySpark 4.x
 DataSource API:
 
-- A1/A8/A9 chunked scan → ``reader``: one InputPartition per storage
-  chunk (chunk-alignment = partition-alignment), Arrow RecordBatch reads,
-  column pruning via the pushed-down read schema.
+- A1/A8/A9 chunked scan → ``reader``: contiguous chunk runs of about
+  equal line counts, one wave of tasks (chunk boundaries stay partition
+  boundaries), Arrow RecordBatch reads, column pruning via the
+  pushed-down read schema.
 - A11 hyperslab slice  → ``pushFilters``: range predicates on the
   streamed-dim index column prune whole chunks before they are opened
-  (the automatic version of the reference's user-driven `var[a:b]`).
+  (the automatic version of the reference's user-driven `var[a:b]`;
+  the pushdown is ``records_source.IndexRangeReader``, shared with the
+  NetCDF-3/NetCDF-4 record readers).
 - A4-A7 buffered write → ``writer``: each task buffers rows into NumPy
   blocks of `chunk_lines` and emits chunk files; `commit` assigns global
   line offsets and publishes them into the meta sidecar atomically
   (task files are invisible until job commit).
 - A14 append/tail      → ``streamReader``: offset = current extent of
-  the UNLIMITED dim; each microbatch's chunks are read as Arrow batches
-  masked to [start, extent).
+  the UNLIMITED dim; each microbatch's window ``[start, extent)`` is
+  planned and read by the batch scan's run planner and run reader.
 
 100 TB posture: partitions() is O(#chunks) metadata work on the driver;
-data reads are per-chunk Arrow batches on executors; pruned chunks are
-never opened; the writer commits offsets only at job commit so failed
-tasks leave no visible data.
+data reads are Arrow batches of whole chunk runs on executors; pruned
+chunks are never opened; the writer commits offsets only at job commit
+so failed tasks leave no visible data.
 """
 
 from __future__ import annotations
@@ -38,13 +41,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -53,24 +50,71 @@ from netcdf4_variable_streamer_spark.sources.chunkstore import (
     ChunkInfo,
     ChunkStore,
 )
+from netcdf4_variable_streamer_spark.sources.records_source import (
+    IndexRangeReader,
+    _target,
+)
 
 FORMAT_NAME = "netcdf_chunks"
 
 
 @dataclass
-class ChunkPartition(InputPartition):
-    """A contiguous run of storage chunks read by one task.
+class ChunkRunPartition(InputPartition):
+    """A contiguous run of storage chunks read by one task: the run
+    covers lines ``[start, start + n_lines)`` and the task yields only
+    its lines inside the scan window ``[lo, hi)``.
 
     Bundling chunks into runs (instead of one partition per chunk) keeps
     the per-partition cost — task scheduling + one JVM<->Python worker
     round trip — amortized over many chunks: a 100 TB store has millions
-    of chunks but the scan still plans O(cluster-parallelism) tasks.
-    `start`/`n_lines` describe the whole run (used by pruning tests)."""
+    of chunks but the scan still plans O(cluster-parallelism) tasks."""
 
     path: str
     files: list  # chunk filenames in streamed-dim order
     start: int
     n_lines: int
+    lo: int
+    hi: int
+
+
+def _plan_runs(path: str, chunks, lo: int, hi: int, target: int) -> list:
+    """Bundle the chunks that meet ``[lo, hi)`` into contiguous runs of
+    about equal line counts, at most ``target`` of them (one wave)."""
+    survivors = [c for c in chunks if c.start + c.n_lines > lo and c.start < hi]
+    if hi <= lo or not survivors:
+        return []
+    total = sum(c.n_lines for c in survivors)
+    per_run = -(-total // max(1, min(len(survivors), target)))  # ceil
+    out: list[ChunkRunPartition] = []
+    run: list[ChunkInfo] = []
+    n = 0
+    for c in survivors:
+        run.append(c)
+        n += c.n_lines
+        if n >= per_run or c is survivors[-1]:
+            files = [r.file for r in run]
+            out.append(ChunkRunPartition(path, files, run[0].start, n, lo, hi))
+            run, n = [], 0
+    return out
+
+
+def _read_run(part: ChunkRunPartition, columns: list, cells: int):
+    """Concatenate the run's chunk files into large Arrow batches before
+    crossing to the JVM (per-batch ingestion overhead is fixed, so
+    fewer, bigger batches win). Rows are stored line-major, so a run
+    that crosses the window is cut to it with one zero-copy slice; a run
+    inside the window is not touched."""
+    if not part.files:
+        return
+    table = pa.concat_tables(
+        pq.read_table(os.path.join(part.path, f), columns=columns)
+        for f in part.files
+    ).combine_chunks()
+    first = max(part.lo - part.start, 0)
+    stop = min(part.hi - part.start, part.n_lines)
+    if first > 0 or stop < part.n_lines:
+        table = table.slice(first * cells, (stop - first) * cells)
+    yield from table.to_batches(max_chunksize=1 << 20)
 
 
 @dataclass
@@ -89,110 +133,28 @@ def _spark_schema(store: ChunkStore) -> str:
     return ", ".join(parts)
 
 
-class NetCDFChunkReader(DataSourceReader):
+class NetCDFChunkReader(IndexRangeReader):
     def __init__(
         self, path: str, schema: StructType, target_partitions: int | None = None
     ):
         self.path = path
         self.columns = [f.name for f in schema.fields]
-        self.lo = 0  # inclusive lower bound on streamed idx from pushdown
-        self.hi: int | None = None  # exclusive upper bound
         self._store = ChunkStore.open(path)
         self._idx_col = f"{self._store.streamed_dim}_idx"
-        # scan parallelism target: ONE wave of tasks. partitions() bundles
-        # chunks into equal line counts, so there are no stragglers for
-        # extra waves to rebalance — and each Python-DataSource task pays
-        # a fixed JVM<->Python setup cost (~10 ms measured), which made a
-        # 3-wave default 2x slower end-to-end at 4M rows. Overridable
-        # per-read via option("target_partitions").
-        self.target_partitions = target_partitions or int(
-            os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-
-    def pushFilters(self, filters: list[Filter]):
-        """Harvest streamed-dim index ranges to prune whole chunks
-        (reference A11 as automatic pushdown). Every filter is yielded
-        back: chunk pruning is partition-granular, so Spark must still
-        evaluate the predicates row-level inside surviving chunks."""
-        for f in filters:
-            if getattr(f, "attribute", None) == (self._idx_col,) and hasattr(
-                f, "value"
-            ):
-                v = f.value
-                if isinstance(v, (list, tuple, set)):
-                    # In filter (round 12): prune chunks to the value
-                    # envelope; Spark re-checks exact membership
-                    vals = [int(x) for x in v if x is not None]
-                    if vals:
-                        self.lo = max(self.lo, min(vals))
-                        self.hi = min(
-                            self.hi or max(vals) + 1, max(vals) + 1
-                        )
-                    yield f
-                    continue
-                if isinstance(f, EqualTo):
-                    self.lo = max(self.lo, int(v))
-                    self.hi = min(self.hi or int(v) + 1, int(v) + 1)
-                elif isinstance(f, GreaterThan):
-                    self.lo = max(self.lo, int(v) + 1)
-                elif isinstance(f, GreaterThanOrEqual):
-                    self.lo = max(self.lo, int(v))
-                elif isinstance(f, LessThan):
-                    self.hi = min(self.hi or int(v), int(v))
-                elif isinstance(f, LessThanOrEqual):
-                    self.hi = min(self.hi or int(v) + 1, int(v) + 1)
-            yield f  # always re-evaluated row-level by Spark
+        self.lo, self.hi = 0, self._store.extent
+        self.target_partitions = _target(target_partitions)
 
     def partitions(self):
-        survivors = [
-            c
-            for c in self._store.list_chunks()
-            if c.start + c.n_lines > self.lo
-            and (self.hi is None or c.start < self.hi)
-        ]
-        if not survivors:
-            # Spark requires >= 1 partition; an empty run reads nothing
-            return [ChunkPartition(self.path, [], 0, 0)]
-        # bundle contiguous chunk-runs so one task reads ~equal line counts
-        n_bundles = max(1, min(len(survivors), self.target_partitions))
-        total = sum(c.n_lines for c in survivors)
-        per_bundle = -(-total // n_bundles)  # ceil
-        out: list[ChunkPartition] = []
-        run: list[ChunkInfo] = []
-        run_lines = 0
-        for c in survivors:
-            run.append(c)
-            run_lines += c.n_lines
-            if run_lines >= per_bundle:
-                out.append(
-                    ChunkPartition(
-                        self.path, [r.file for r in run], run[0].start, run_lines
-                    )
-                )
-                run, run_lines = [], 0
-        if run:
-            out.append(
-                ChunkPartition(
-                    self.path, [r.file for r in run], run[0].start, run_lines
-                )
-            )
-        return out
+        # Spark requires >= 1 partition; an empty run reads nothing
+        return _plan_runs(
+            self.path, self._store.list_chunks(), self.lo, self.hi,
+            self.target_partitions,
+        ) or [ChunkRunPartition(self.path, [], 0, 0, self.lo, self.hi)]
 
-    def read(self, partition: ChunkPartition):
-        # Coalesce the run's chunk files into large Arrow batches before
-        # crossing to the JVM: per-batch ingestion overhead is fixed, so
-        # fewer/bigger batches win. Memory stays bounded by the bundle
-        # size partitions() chose (~total_lines / target_partitions).
-        tables = [
-            pq.read_table(
-                os.path.join(partition.path, fname), columns=self.columns
-            )
-            for fname in partition.files
-        ]
-        if not tables:
-            return
-        combined = pa.concat_tables(tables).combine_chunks()
-        yield from combined.to_batches(max_chunksize=1 << 20)
+    def read(self, partition: ChunkRunPartition):
+        yield from _read_run(
+            partition, self.columns, self._store.cells_per_line
+        )
 
 
 class NetCDFChunkWriter(DataSourceArrowWriter):
@@ -226,22 +188,28 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
         line_buf: dict[str, list[np.ndarray]] = {v: [] for v in self.var_names}
         n_buffered = 0
 
-        def emit_block():
+        def emit(final: bool):
+            """Cut the buffered lines into pending chunk files of
+            `chunk_lines` (plus, on the final call, the short rest) with
+            one concatenation; keep what is left for the next batch."""
             nonlocal n_buffered
-            if n_buffered == 0:
-                return
-            block = {
-                v: np.concatenate(line_buf[v]).reshape(
-                    (n_buffered, *self.line_shape)
-                )
-                for v in self.var_names
-            }
-            fname = f"pending-{uuid.uuid4().hex}.npz"
-            np.savez(os.path.join(self.path, fname), **block)
-            pending.append((fname, n_buffered))
+            flat = {v: np.concatenate(line_buf[v]) for v in self.var_names}
+            n_out = n_buffered
+            if not final:
+                n_out -= n_buffered % self.chunk_lines
+            for a in range(0, n_out, self.chunk_lines):
+                b = min(a + self.chunk_lines, n_out)
+                fname = f"pending-{uuid.uuid4().hex}.npz"
+                np.savez(os.path.join(self.path, fname), **{
+                    v: flat[v][a * cells: b * cells].reshape(
+                        (b - a, *self.line_shape)
+                    )
+                    for v in self.var_names
+                })
+                pending.append((fname, b - a))
             for v in self.var_names:
-                line_buf[v].clear()
-            n_buffered = 0
+                line_buf[v] = [flat[v][n_out * cells:]]
+            n_buffered -= n_out
 
         def consume(idx: np.ndarray, cols: dict[str, np.ndarray]):
             """Buffer all complete lines in (idx, cols); return the tail."""
@@ -261,22 +229,8 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
                         )
                     )
                 n_buffered += n_lines
-                while n_buffered >= self.chunk_lines:
-                    # split exact chunk multiples out of the buffer
-                    flat = {v: np.concatenate(line_buf[v]) for v in self.var_names}
-                    take = self.chunk_lines * cells
-                    block = {
-                        v: flat[v][:take].reshape(
-                            (self.chunk_lines, *self.line_shape)
-                        )
-                        for v in self.var_names
-                    }
-                    fname = f"pending-{uuid.uuid4().hex}.npz"
-                    np.savez(os.path.join(self.path, fname), **block)
-                    pending.append((fname, self.chunk_lines))
-                    for v in self.var_names:
-                        line_buf[v] = [flat[v][take:]]
-                    n_buffered -= self.chunk_lines
+                if n_buffered >= self.chunk_lines:
+                    emit(final=False)
             tail = len(idx) - n_lines * cells
             return idx[len(idx) - tail:], {
                 v: cols[v][len(idx) - tail:] for v in self.var_names
@@ -297,7 +251,8 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
                 f"task input ended mid-line: {len(carry_idx)} of {cells} "
                 "cells for the final line"
             )
-        emit_block()
+        if n_buffered:
+            emit(final=True)
         return ChunkCommitMessage(files=pending)
 
     def commit(self, messages):
@@ -328,36 +283,19 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
                     pass
 
 
-@dataclass
-class ChunkTailPartition(InputPartition):
-    """One Arrow-tail task: a bundled run of chunk files plus the
-    microbatch's [lo, hi) line window (edge chunks are masked to the
-    window executor-side)."""
-
-    path: str
-    files: list
-    lo: int
-    hi: int
-
-
 class NetCDFChunkArrowStreamReader(DataSourceStreamReader):
     """Partition-planned Arrow tail of a growing chunk store. Offset =
-    UNLIMITED-dim extent; each microbatch's surviving chunks
-    bundle into ~equal-line tasks (the batch scan's one-wave policy)
-    that executors read as Arrow RecordBatches, masked to the offset
-    window. Driver work per trigger is the chunk LISTING — metadata,
-    not data."""
+    UNLIMITED-dim extent; each microbatch's window is planned and read
+    by the batch scan's run planner and run reader. Planning a trigger
+    lists chunk metadata and reads no data."""
 
     def __init__(
         self, path: str, schema: StructType, target_partitions=None
     ):
         self.path = path
         self.columns = [f.name for f in schema.fields]
-        store = ChunkStore.open(path)
-        self._idx_col = f"{store.streamed_dim}_idx"
-        self.target_partitions = target_partitions or int(
-            os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
+        self._cells = ChunkStore.open(path).cells_per_line
+        self.target_partitions = _target(target_partitions)
 
     def initialOffset(self) -> dict:
         return {"line": 0}
@@ -366,54 +304,13 @@ class NetCDFChunkArrowStreamReader(DataSourceStreamReader):
         return {"line": ChunkStore.open(self.path).extent}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = start["line"], end["line"]
-        if hi <= lo:
-            return []
-        store = ChunkStore.open(self.path)
-        survivors = [
-            c
-            for c in store.list_chunks()
-            if c.start + c.n_lines > lo and c.start < hi
-        ]
-        if not survivors:
-            return []
-        n_bundles = max(1, min(len(survivors), self.target_partitions))
-        total = sum(c.n_lines for c in survivors)
-        per_bundle = -(-total // n_bundles)
-        out, run, run_lines = [], [], 0
-        for c in survivors:
-            run.append(c)
-            run_lines += c.n_lines
-            if run_lines >= per_bundle:
-                out.append(
-                    ChunkTailPartition(
-                        self.path, [r.file for r in run], lo, hi
-                    )
-                )
-                run, run_lines = [], 0
-        if run:
-            out.append(
-                ChunkTailPartition(
-                    self.path, [r.file for r in run], lo, hi
-                )
-            )
-        return out
+        return _plan_runs(
+            self.path, ChunkStore.open(self.path).list_chunks(),
+            start["line"], end["line"], self.target_partitions,
+        )
 
-    def read(self, partition: ChunkTailPartition):
-        tables = [
-            pq.read_table(
-                os.path.join(partition.path, fname), columns=self.columns
-            )
-            for fname in partition.files
-        ]
-        if not tables:
-            return
-        combined = pa.concat_tables(tables).combine_chunks()
-        idx = combined.column(self._idx_col).to_numpy()
-        mask = (idx >= partition.lo) & (idx < partition.hi)
-        if not mask.all():
-            combined = combined.filter(pa.array(mask))
-        yield from combined.to_batches(max_chunksize=1 << 20)
+    def read(self, partition: ChunkRunPartition):
+        yield from _read_run(partition, self.columns, self._cells)
 
 
 class NetCDFChunkDataSource(DataSource):

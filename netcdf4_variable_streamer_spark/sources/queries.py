@@ -118,8 +118,9 @@ SELECT COUNT(*) AS n_cells,
 FROM g
 """,
     doc="Chunk-partitioned scan through the custom DataSource (reference "
-        "A1/A8/A9 as a Spark source): full-grid aggregate over one "
-        "partition per storage chunk. Oracle regenerates the closed-form "
+        "A1/A8/A9 as a Spark source): full-grid aggregate over "
+        "partitions that are bundled runs of storage chunks, one wave of "
+        "tasks. Oracle regenerates the closed-form "
         "grid in SQL — a full write(A1-A7)+scan(A8/A9) round-trip check.",
 )
 def src_netcdf_chunked_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,8 @@ numbers, the per-variable Spark type and column builder
 - Pushdown. ``pushFilters`` narrows the record range on comparisons
   and IN lists over the ``<recdim>_idx`` column before partitioning.
   Every filter is handed back, so Spark still evaluates it row by row.
+  The chunk-store reader (``netcdf_source``) shares it
+  (:class:`IndexRangeReader`).
 - Arrow batches. Executors read each selected variable with one
   record-range read and explode it with NumPy to long form: record
   index, fixed-dimension indexes, variables. Pruned variables are never
@@ -396,7 +398,46 @@ def _split(ranges, target: int) -> list:
     ]
 
 
-class RecordReader(DataSourceReader):
+class IndexRangeReader(DataSourceReader):
+    """Index-range pushdown shared by the record and chunk-store readers.
+
+    A subclass sets ``_idx_col`` (the streamed-dim index column) and the
+    window ``[lo, hi)`` to the whole extent; ``pushFilters`` narrows the
+    window on comparisons and IN lists over that column, so planning can
+    skip what lies outside it. Every filter is handed back: pruning is
+    partition-granular, and Spark re-evaluates the predicates row by
+    row."""
+
+    def pushFilters(self, filters: list[Filter]):
+        for f in filters:
+            if getattr(f, "attribute", None) == (self._idx_col,) and hasattr(
+                f, "value"
+            ):
+                v = f.value
+                if isinstance(v, (list, tuple, set)):
+                    # In filter (time_idx.isin(...)): prune to the
+                    # value envelope; Spark re-checks membership
+                    vals = [int(x) for x in v if x is not None]
+                    if vals:
+                        self.lo = max(self.lo, min(vals))
+                        self.hi = min(self.hi, max(vals) + 1)
+                    yield f
+                    continue
+                v = int(v)
+                if isinstance(f, EqualTo):
+                    self.lo, self.hi = max(self.lo, v), min(self.hi, v + 1)
+                elif isinstance(f, GreaterThan):
+                    self.lo = max(self.lo, v + 1)
+                elif isinstance(f, GreaterThanOrEqual):
+                    self.lo = max(self.lo, v)
+                elif isinstance(f, LessThan):
+                    self.hi = min(self.hi, v)
+                elif isinstance(f, LessThanOrEqual):
+                    self.hi = min(self.hi, v + 1)
+            yield f  # Spark re-evaluates row-level
+
+
+class RecordReader(IndexRangeReader):
     """Batch scan of one file or one directory dataset."""
 
     def __init__(
@@ -438,34 +479,6 @@ class RecordReader(DataSourceReader):
         self.lo = 0
         self.hi = sum(n for _p, n, _off in self.members)
         self.target_partitions = _target(target_partitions)
-
-    def pushFilters(self, filters: list[Filter]):
-        for f in filters:
-            if getattr(f, "attribute", None) == (self._idx_col,) and hasattr(
-                f, "value"
-            ):
-                v = f.value
-                if isinstance(v, (list, tuple, set)):
-                    # In filter (time_idx.isin(...)): prune to the
-                    # value envelope; Spark re-checks membership
-                    vals = [int(x) for x in v if x is not None]
-                    if vals:
-                        self.lo = max(self.lo, min(vals))
-                        self.hi = min(self.hi, max(vals) + 1)
-                    yield f
-                    continue
-                v = int(v)
-                if isinstance(f, EqualTo):
-                    self.lo, self.hi = max(self.lo, v), min(self.hi, v + 1)
-                elif isinstance(f, GreaterThan):
-                    self.lo = max(self.lo, v + 1)
-                elif isinstance(f, GreaterThanOrEqual):
-                    self.lo = max(self.lo, v)
-                elif isinstance(f, LessThan):
-                    self.hi = min(self.hi, v)
-                elif isinstance(f, LessThanOrEqual):
-                    self.hi = min(self.hi, v + 1)
-            yield f  # Spark re-evaluates row-level
 
     def partitions(self):
         ranges = [

@@ -484,6 +484,24 @@ def test_a10_transposed_axis_roundtrip(tmp_path):
     assert total.shape == (Y, T + 1, X)
     np.testing.assert_array_equal(total[:, -1, :], extra)
 
+    # the fixed dims in the other logical order: reads come back
+    # transposed, and a logical (x, y) line lands at (y, x) in storage
+    ds3 = StreamedDataset(path, "a")
+    var3 = ds3.variable(("x", "time", "y"))
+    swapped = np.concatenate(
+        [b["v"] for _s, b in var3.yield_blocks()], axis=1
+    )
+    assert swapped.shape == (X, T + 1, Y)
+    np.testing.assert_array_equal(swapped, total.transpose(2, 1, 0))
+    line_xy = rng.rand(X, Y).astype(np.float32)
+    var3.streamline({"v": line_xy})
+    ds3.close()
+    back3 = StreamedDataset(path, "r").variable(("y", "time", "x"))
+    last = np.concatenate([b["v"] for _s, b in back3.yield_blocks()], axis=1)
+    np.testing.assert_array_equal(last[:, -1, :], line_xy.T)
+    with pytest.raises(ValueError, match="line must have 2 dims"):
+        var3.streamline({"v": line_xy[0]})
+
 
 def test_arrow_stream_tail_protocol(spark):
     """Chunk-store Arrow tail: extent offsets, chunk-bundled
@@ -590,6 +608,167 @@ def test_in_filter_prunes_record_range(spark):
     assert len(list(r3.pushFilters([In(("time_idx",), (12, 7))]))) == 1
     assert (r3.lo, r3.hi) == (7, 13)
 
+    pc = srcq.ensure_grid()
+    spark.dataSource.register(NetCDFChunkDataSource)
+    schemac = spark.read.format(FORMAT_NAME).option("path", pc).load().schema
+    rc = NetCDFChunkReader(pc, schemac)
+    assert len(list(rc.pushFilters([In(("time_idx",), (9, 4, 30))]))) == 1
+    assert (rc.lo, rc.hi) == (4, 31)
+
     df = spark.read.format(FORMAT4_NAME).option("path", p4).load()
     got = df.filter(df.time_idx.isin([4, 9, 30])).count()
     assert got == 3 * srcq.GRID_Y * srcq.GRID_X
+
+
+# ---------------------------------------------------------------------------
+# One chunk-run scan: the batch reader and the Arrow tail share the run
+# planner and the run reader; the pushdown is the record readers' one.
+# No Spark session: readers are driven in process.
+# ---------------------------------------------------------------------------
+
+_CELLS = 6  # y=2 x x=3
+
+
+def _ragged_store(path, n_lines=38, chunk_lines=4) -> list[str]:
+    """A store of `chunk_lines`-line chunks whose last chunk is partial;
+    v counts cells in storage order. Returns the chunk files in order."""
+    store = ChunkStore.create(
+        path, {"time": None, "y": 2, "x": 3}, "time", chunk_lines,
+        {"v": "float32"},
+    )
+    for a in range(0, n_lines, chunk_lines):
+        b = min(a + chunk_lines, n_lines)
+        store.append_block({"v": np.arange(
+            a * _CELLS, b * _CELLS, dtype=np.float32
+        ).reshape(b - a, 2, 3)})
+    return [c.file for c in store.list_chunks()]
+
+
+def _schema():
+    from pyspark.sql.types import (
+        FloatType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    return StructType([
+        StructField("time_idx", LongType()),
+        StructField("y_idx", IntegerType()),
+        StructField("x_idx", IntegerType()),
+        StructField("v", FloatType()),
+    ])
+
+
+def _read_all(reader, parts) -> list[int]:
+    return [int(t) for p in parts for b in reader.read(p)
+            for t in b.column("time_idx").to_numpy()]
+
+
+def test_pushdown_is_filter_order_free(tmp_path):
+    """An upper bound of 0 is a bound: either order of [< 0, < 10]
+    plans the one empty partition."""
+    from pyspark.sql.datasource import LessThan
+
+    path = str(tmp_path / "s")
+    _ragged_store(path, n_lines=16)
+    for order in ([0, 10], [10, 0]):
+        r = NetCDFChunkReader(path, _schema())
+        list(r.pushFilters([LessThan(("time_idx",), v) for v in order]))
+        parts = r.partitions()
+        assert len(parts) == 1 and parts[0].files == []
+        assert _read_all(r, parts) == []
+
+
+@pytest.mark.parametrize("lo,hi", [(6, 23), (1, 37), (37, 38), (0, 38),
+                                   (9, 10)])
+def test_chunk_scan_and_tail_cut_edge_chunks(tmp_path, lo, hi):
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from netcdf4_variable_streamer_spark.sources.netcdf_source import (
+        NetCDFChunkArrowStreamReader,
+    )
+
+    path = str(tmp_path / "s")
+    _ragged_store(path)
+    want = [t for t in range(lo, hi) for _ in range(_CELLS)]
+    for tp in (1, 3, 32):
+        r = NetCDFChunkReader(path, _schema(), tp)
+        list(r.pushFilters([GreaterThanOrEqual(("time_idx",), lo),
+                            LessThan(("time_idx",), hi)]))
+        assert _read_all(r, r.partitions()) == want
+        tail = NetCDFChunkArrowStreamReader(path, _schema(), tp)
+        got = _read_all(
+            tail, tail.partitions({"line": lo}, {"line": hi})
+        )
+        assert got == want
+    # values travel with their indexes through the slice
+    tail = NetCDFChunkArrowStreamReader(path, _schema(), 2)
+    v = [x for p in tail.partitions({"line": lo}, {"line": hi})
+         for b in tail.read(p) for x in b.column("v").to_numpy()]
+    assert v == list(range(lo * _CELLS, hi * _CELLS))
+
+
+@pytest.mark.parametrize("tp,full,slab", [
+    (4, [[0, 1, 2], [3, 4, 5], [6, 7, 8], [9]], [[1, 2], [3, 4], [5]]),
+    (32, [[i] for i in range(10)], [[1], [2], [3], [4], [5]]),
+])
+def test_chunk_run_plans_pinned(tmp_path, tp, full, slab):
+    """Runs (chunk numbers per partition) of a full scan and of the
+    pushed slab [6, 23) on 9 four-line chunks plus a two-line one."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    path = str(tmp_path / "s")
+    files = _ragged_store(path)
+
+    def runs(parts):
+        return [[files.index(f) for f in p.files] for p in parts]
+
+    r = NetCDFChunkReader(path, _schema(), tp)
+    assert runs(r.partitions()) == full
+    assert sum(p.n_lines for p in r.partitions()) == 38
+    r = NetCDFChunkReader(path, _schema(), tp)
+    list(r.pushFilters([GreaterThanOrEqual(("time_idx",), 6),
+                        LessThan(("time_idx",), 23)]))
+    assert runs(r.partitions()) == slab
+
+
+def test_writer_cuts_whole_chunks_from_one_batch(tmp_path):
+    """One Arrow batch of 3.5 chunks of lines plus half a line, then a
+    batch that completes that line: pending files hold [c, c, c, rest]
+    lines and commit appends one store chunk per pending file."""
+    import pyarrow as pa
+
+    from netcdf4_variable_streamer_spark.sources.netcdf_source import (
+        NetCDFChunkWriter,
+    )
+
+    c = 4
+    path = str(tmp_path / "s")
+    ChunkStore.create(
+        path, {"time": None, "y": 2, "x": 3}, "time", c, {"v": "float32"}
+    )
+    n_lines = 3 * c + c // 2 + 1
+    n = n_lines * _CELLS
+    t = np.repeat(np.arange(n_lines, dtype=np.int64), _CELLS)
+    cols = {
+        "time_idx": t,
+        "y_idx": np.tile(np.repeat(np.arange(2, dtype=np.int32), 3), n_lines),
+        "x_idx": np.tile(np.arange(3, dtype=np.int32), 2 * n_lines),
+        "v": np.arange(n, dtype=np.float32),
+    }
+    table = pa.table(cols)
+    cut = n - 3  # the first batch ends mid-line
+    batches = [table.slice(0, cut).to_batches()[0],
+               table.slice(cut).to_batches()[0]]
+    w = NetCDFChunkWriter(path, _schema(), overwrite=False)
+    msg = w.write(iter(batches))
+    assert [k for _f, k in msg.files] == [c, c, c, c // 2 + 1]
+    w.commit([msg])
+    store = ChunkStore.open(path)
+    assert [ch.n_lines for ch in store.list_chunks()] == [c, c, c, c // 2 + 1]
+    got = np.concatenate([store.read_chunk(ch).column("v").to_numpy()
+                          for ch in store.list_chunks()])
+    np.testing.assert_array_equal(got, cols["v"])
+    assert not [f for f in os.listdir(path) if f.startswith("pending-")]
