@@ -178,9 +178,11 @@ def _shingled(
     )
 
 
-def _mh_perm(p: int, h: Column) -> Column:
-    """Universal-hash MinHash permutation ``p`` of a 28-bit base hash."""
-    return (F.lit(MH_A[p]) * h + F.lit(MH_B[p])) % MINHASH_P
+def _mh_perm_sql(p: int, h: str) -> str:
+    """Universal-hash MinHash permutation ``p`` of the 28-bit base hash
+    ``h``, as SQL text (one expression string crosses to the JVM, not a
+    tree of Column calls)."""
+    return f"({MH_A[p]} * {h} + {MH_B[p]}) % {MINHASH_P}"
 
 
 def _minhash_sigs(shingled: DataFrame) -> DataFrame:
@@ -191,7 +193,7 @@ def _minhash_sigs(shingled: DataFrame) -> DataFrame:
     )
     return ex.groupBy("doc_id").agg(
         *[
-            F.min(_mh_perm(p, F.col("h"))).alias(f"mh{p}")
+            F.expr(f"min({_mh_perm_sql(p, 'h')}) AS mh{p}")
             for p in range(NUM_PERM)
         ]
     )
@@ -199,32 +201,20 @@ def _minhash_sigs(shingled: DataFrame) -> DataFrame:
 
 def _band_table(mh: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(doc_id, *carry, band, sig) from the mh0..mh31 columns of ``mh``:
-    8 bands of 4 rows, one md5 signature per band — at 100 TB the band
-    signature stays a 16-byte digest, never the raw minhash tuple."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * ROWS_PER_BAND + r}")
-                            for r in range(ROWS_PER_BAND)
-                        ],
-                    )
-                ).alias("sig"),
-            )
-            for b in range(BANDS)
-        ]
+    8 bands of 4 rows, one md5 signature per band. ``sig`` is the
+    32-character md5 hex string (about 16 bytes once compressed), never
+    the raw minhash tuple."""
+    rows = [
+        ", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        for b in range(BANDS)
+    ]
+    bands = ", ".join(
+        f"struct({b} AS band, md5(concat_ws(',', {cols})) AS sig)"
+        for b, cols in enumerate(rows)
     )
-    exploded = mh.select("doc_id", *carry, F.explode(band_structs).alias("bs"))
-    return exploded.select(
-        "doc_id",
-        *carry,
-        F.col("bs.band").alias("band"),
-        F.col("bs.sig").alias("sig"),
-    )
+    return mh.selectExpr(
+        "doc_id", *carry, f"explode(array({bands})) AS bs"
+    ).selectExpr("doc_id", *carry, "bs.band AS band", "bs.sig AS sig")
 
 
 def _minhash_band_table(shingled: DataFrame) -> DataFrame:
@@ -262,25 +252,49 @@ def _bucket_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-def _shared_shingles(
-    cands: DataFrame, a: str, b: str, a_sh: DataFrame, b_sh: DataFrame
+def _with_shingles(
+    pairs: DataFrame, key: str, side: DataFrame, name: str
 ) -> DataFrame:
-    """(a, b, n_inter): the shingles each candidate pair shares — the
-    exact-Jaccard verify runs on candidates only. Ids in column ``a``
-    resolve in the ``_shingled`` frame ``a_sh``, ids in ``b`` in
-    ``b_sh``."""
-    s1 = a_sh.select("doc_id", F.explode("ss").alias("sh")).alias("s1")
-    s2 = b_sh.select("doc_id", F.explode("ss").alias("sh")).alias("s2")
-    return (
-        cands.join(s1, F.col(a) == F.col("s1.doc_id"))
-        .join(
-            s2,
-            (F.col(b) == F.col("s2.doc_id"))
-            & (F.col("s1.sh") == F.col("s2.sh")),
+    """``pairs`` plus the shingle array ``name`` of the doc its column
+    ``key`` names in ``side``. A ``_shingled`` side (doc_id, ss) joins
+    its arrays; a text side (doc_id, text) joins its text and shingles
+    it after the join, so only candidate partners are ever shingled."""
+    if "ss" in side.columns:
+        return pairs.join(
+            side.select(F.col("doc_id").alias(key), F.col("ss").alias(name)),
+            key,
         )
-        .groupBy(a, b)
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    toks = f"{name}_toks"
+    return (
+        pairs.join(
+            side.select(
+                F.col("doc_id").alias(key), F.split("text", " ").alias(toks)
+            ),
+            key,
+        )
+        .withColumn(name, _shingles(F.col(toks)))
+        .drop(toks)
     )
+
+
+def _pair_overlap(
+    cands: DataFrame, a: str, b: str, a_side: DataFrame, b_side: DataFrame
+) -> DataFrame:
+    """``cands`` plus (n_inter, n1, n2): the shingles each candidate pair
+    shares and each doc's shingle count — the exact-Jaccard verify runs
+    on candidates only, one pair at a time. Ids in column ``a`` resolve
+    in ``a_side``, ids in ``b`` in ``b_side`` (see ``_with_shingles``).
+    Both arrays are distinct, so the intersection size is the shared
+    shingle count."""
+    j = _with_shingles(cands, a, a_side, "s1")
+    j = _with_shingles(j, b, b_side, "s2")
+    return j.withColumns(
+        {
+            "n_inter": F.size(F.array_intersect("s1", "s2")).cast("long"),
+            "n1": F.size("s1"),
+            "n2": F.size("s2"),
+        }
+    ).drop("s1", "s2")
 
 
 def _minhash_bands_sql() -> str:
@@ -328,7 +342,8 @@ cands AS (
 
 def _shared_shingles_sql(a: str, b: str) -> str:
     """The ``sizes`` and ``inter`` CTEs: per-doc shingle counts and the
-    DuckDB twin of ``_shared_shingles`` over ``cands`` (a, b)."""
+    shingles each ``cands`` pair (a, b) shares — the reference the
+    per-pair ``_pair_overlap`` verify is checked against."""
     return f"""sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.{a}, c.{b}, COUNT(*) AS n_inter
@@ -361,26 +376,24 @@ WHERE CAST(n_inter AS DOUBLE) / (z1.n_sh + z2.n_sh - n_inter) >= 0.6
         "(universal-hash permutations over a 28-bit md5-derived base hash "
         "— portable to DuckDB, so the WHOLE pipeline is oracle-checked) → "
         "8 bands × 4 rows → bucket join for candidates → exact Jaccard "
-        "≥ 0.6 verify on candidates only. At 100 TB the band signature "
-        "stays a 16-byte digest, never the raw minhash tuple.",
+        "≥ 0.6 verify on candidates only, one shingle-array "
+        "intersection per pair. The band signature is the 32-character "
+        "md5 hex string (about 16 bytes compressed), never the raw "
+        "minhash tuple.",
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the shingled frame feeds the band table, the verify explode and
-    # the sizes
+    # the shingled frame feeds the band table and both verify sides
     d = materialize_once(
         _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
     cands = _bucket_pairs(_capped(_minhash_band_table(d)))
-    inter = _shared_shingles(cands, "d1", "d2", d, d)
-    sizes = d.select("doc_id", F.size("ss").alias("n_sh"))
     return (
-        inter.join(sizes.alias("z1"), F.col("d1") == F.col("z1.doc_id"))
-        .join(sizes.alias("z2"), F.col("d2") == F.col("z2.doc_id"))
+        _pair_overlap(cands, "d1", "d2", d, d)
         .withColumn(
             "jaccard",
             F.round(
                 F.col("n_inter").cast("double")
-                / (F.col("z1.n_sh") + F.col("z2.n_sh") - F.col("n_inter")),
+                / (F.col("n1") + F.col("n2") - F.col("n_inter")),
                 4,
             ),
         )
@@ -1060,16 +1073,18 @@ def incremental_near_dedup(
     100 TB posture: compute the index band table ONCE, persist it, and
     pass the same ``index_df`` every crawl; per-batch cost is then the
     batch's own shingling plus a broadcast-or-shuffle equi-join whose
-    output cardinality is proportional to true near-duplicates.
+    output cardinality is proportional to true near-duplicates. Only
+    the index docs a candidate pair names are shingled for the verify.
     """
     qthr = int(round(threshold * 10000))
-    # each shingled frame feeds three branches of _incremental_decisions
-    # (band table, explode-verify, sizes)
-    idx_sh = materialize_once(_shingled(index_df, id_col, text_col))
+    # the batch's shingled frame feeds the probe band table and the
+    # verify
     new_sh = materialize_once(_shingled(batch_df, id_col, text_col))
     return _incremental_decisions(
-        _minhash_band_table(idx_sh),
-        idx_sh,
+        _minhash_band_table(_shingled(index_df, id_col, text_col)),
+        index_df.select(
+            F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+        ),
         new_sh,
         batch_df.select(F.col(id_col).alias("doc_id")),
         qthr,
@@ -1079,7 +1094,7 @@ def incremental_near_dedup(
 
 def _incremental_decisions(
     idx_bands: DataFrame,
-    idx_sh: DataFrame,
+    idx_side: DataFrame,
     new_sh: DataFrame,
     batch_ids: DataFrame,
     qthr: int,
@@ -1087,12 +1102,14 @@ def _incremental_decisions(
 ) -> DataFrame:
     """Probe core shared by the batch API and the foreachBatch crawl
     loop: takes PREPARED index state — ``idx_bands`` (doc_id, band, sig)
-    and ``idx_sh`` (doc_id, ss) — so a standing index persisted across
-    micro-batches is never recomputed from text. Returns one decision
-    row per ``batch_ids`` row (columns doc_id, is_dup, best_match,
-    best_jaccard). The bucket cap applies to the standing index's band
-    table at probe time, so boilerplate signatures accumulated across
-    crawls stay capped."""
+    and ``idx_side``, the index docs as (doc_id, text) or as their
+    shingle arrays (doc_id, ss) — so a standing index persisted across
+    micro-batches never recomputes its bands, and a text index is
+    shingled only for the docs a candidate pair names. Returns one
+    decision row per ``batch_ids`` row (columns doc_id, is_dup,
+    best_match, best_jaccard). The bucket cap applies to the standing
+    index's band table at probe time, so boilerplate signatures
+    accumulated across crawls stay capped."""
     idx = _capped(idx_bands, max_bucket).select(
         F.col("doc_id").alias("d_idx"), "band", "sig"
     )
@@ -1102,27 +1119,17 @@ def _incremental_decisions(
     cands = (
         probe.join(idx, ["band", "sig"]).select("d_new", "d_idx").distinct()
     )
-    inter = _shared_shingles(cands, "d_new", "d_idx", new_sh, idx_sh)
-    sizes_new = new_sh.select("doc_id", F.size("ss").alias("n_sh"))
-    sizes_idx = idx_sh.select("doc_id", F.size("ss").alias("n_sh"))
     # Quantize to 1e-4 with half-up rounding on a double built from the
     # same IEEE ops in both engines (CAST(n AS DOUBLE)*10000 / union) —
     # the emitted double is then qint/10000 on both sides, bit-identical.
     verified = (
-        inter.join(
-            sizes_new.alias("z1"), F.col("d_new") == F.col("z1.doc_id")
-        )
-        .join(sizes_idx.alias("z2"), F.col("d_idx") == F.col("z2.doc_id"))
+        _pair_overlap(cands, "d_new", "d_idx", new_sh, idx_side)
         .withColumn(
             "q",
             F.round(
                 F.col("n_inter").cast("double")
                 * 10000
-                / (
-                    F.col("z1.n_sh")
-                    + F.col("z2.n_sh")
-                    - F.col("n_inter")
-                )
+                / (F.col("n1") + F.col("n2") - F.col("n_inter"))
             ).cast("long"),
         )
         .filter(F.col("q") >= qthr)
@@ -1550,56 +1557,37 @@ FROM j GROUP BY est32 ORDER BY est32
         "true Jaccard) is bucketed against the EXACT shingle Jaccard "
         "in integer ppm — per estimator value: pair count, mean/min/"
         "max true Jaccard. Zero-intersection candidates (pure band "
-        "collisions) stay in the curve via the LEFT join — they are "
-        "exactly the false-positive mass the threshold must cut. "
+        "collisions) stay in the curve with an empty intersection — "
+        "they are exactly the false-positive mass the threshold must "
+        "cut. "
         "Cost is candidate-bounded (bucket-capped, never corpus²): "
-        "two doc-keyed mh joins + the shingle-intersection join the "
-        "verify stage already pays.",
+        "two doc-keyed mh joins + the per-pair shingle-array "
+        "intersection the verify stage already pays.",
 )
 def q_dedup_minhash_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # d feeds the minhash explode, the sizes and the verify explode; mh
-    # feeds the band table and both estimator joins; cands feeds est and
-    # inter
+    # d feeds the minhash explode and both verify sides; mh feeds the
+    # band table and both estimator joins
     d = materialize_once(
         _shingled(load_table(spark, sf_dir, "documents"), "doc_id", "text")
     )
     mh = materialize_once(_minhash_sigs(d))
-    cands = materialize_once(_bucket_pairs(_capped(_band_table(mh))))
+    cands = _bucket_pairs(_capped(_band_table(mh)))
     a, b = mh.alias("a"), mh.alias("b")
-    est32 = sum(
-        (F.col(f"a.mh{p}") == F.col(f"b.mh{p}")).cast("int")
-        for p in range(NUM_PERM)
+    est32 = " + ".join(
+        f"CAST(a.mh{p} = b.mh{p} AS INT)" for p in range(NUM_PERM)
     )
     est = (
         cands.join(a, F.col("d1") == F.col("a.doc_id"))
         .join(b, F.col("d2") == F.col("b.doc_id"))
-        .select("d1", "d2", est32.alias("est32"))
+        .selectExpr("d1", "d2", f"{est32} AS est32")
     )
-    sizes = d.select("doc_id", F.size("ss").alias("n_sh"))
-    inter = _shared_shingles(cands, "d1", "d2", d, d)
-    j = (
-        est.join(inter, ["d1", "d2"], "left")
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("d1"), F.col("n_sh").alias("n1")
-            ),
-            "d1",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("d2"), F.col("n_sh").alias("n2")
-            ),
-            "d2",
-        )
-        .select(
-            "est32",
-            F.expr(
-                "(COALESCE(n_inter, 0) * 1000000)"
-                " div (n1 + n2 - COALESCE(n_inter, 0))"
-            ).alias("jac_ppm"),
-        )
+    j = _pair_overlap(est, "d1", "d2", d, d).select(
+        "est32",
+        F.expr("(n_inter * 1000000) div (n1 + n2 - n_inter)").alias(
+            "jac_ppm"
+        ),
     )
     return (
         j.groupBy(F.col("est32").cast("long").alias("est32"))

@@ -307,10 +307,10 @@ class StreamedVariable:
         self._cursor = 0
 
     # -- read path (A8/A9/A10) --------------------------------------------
-    def yield_blocks(self, lines: int | None = None):
-        """Lazily yield (start_line, {var: block}) with blocks in the
-        variable's LOGICAL axis order (reference A9; A10 transpose-back).
-        Defaults to one yield per storage chunk."""
+    def yield_blocks(self):
+        """Lazily yield (start_line, {var: block}), one block per storage
+        chunk, with blocks in the variable's LOGICAL axis order
+        (reference A9; A10 transpose-back)."""
         for chunk in self.store.list_chunks():
             tbl = self.store.read_chunk(chunk)
             yield chunk.start, {

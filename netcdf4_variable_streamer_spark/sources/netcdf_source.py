@@ -137,24 +137,25 @@ class NetCDFChunkReader(IndexRangeReader):
     def __init__(
         self, path: str, schema: StructType, target_partitions: int | None = None
     ):
+        # Spark pickles the reader into every task, so it keeps what
+        # reading needs, not the store's chunk index (O(chunks) bytes)
         self.path = path
         self.columns = [f.name for f in schema.fields]
-        self._store = ChunkStore.open(path)
-        self._idx_col = f"{self._store.streamed_dim}_idx"
-        self.lo, self.hi = 0, self._store.extent
+        store = ChunkStore.open(path)
+        self._idx_col = f"{store.streamed_dim}_idx"
+        self._cells = store.cells_per_line
+        self.lo, self.hi = 0, store.extent
         self.target_partitions = _target(target_partitions)
 
     def partitions(self):
         # Spark requires >= 1 partition; an empty run reads nothing
         return _plan_runs(
-            self.path, self._store.list_chunks(), self.lo, self.hi,
-            self.target_partitions,
+            self.path, ChunkStore.open(self.path).list_chunks(), self.lo,
+            self.hi, self.target_partitions,
         ) or [ChunkRunPartition(self.path, [], 0, 0, self.lo, self.hi)]
 
     def read(self, partition: ChunkRunPartition):
-        yield from _read_run(
-            partition, self.columns, self._store.cells_per_line
-        )
+        yield from _read_run(partition, self.columns, self._cells)
 
 
 class NetCDFChunkWriter(DataSourceArrowWriter):

@@ -149,6 +149,15 @@ def _versions(run_dir: str, prefix: str) -> list[int]:
     )
 
 
+def _write_table(df: DataFrame, path: str) -> None:
+    """Write one loop table to ``path`` with overwrite (a replayed batch
+    rewrites it idempotently), zstd-compressed: loop state is mostly
+    text, hex digests and small integers, which zstd packs far tighter
+    than parquet's default snappy. Parquet records the codec per file,
+    so readers take old snappy and new zstd versions together."""
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+
+
 # Once this many committed deltas lie after a loop's newest base, the
 # next batch writes a new base instead of a delta (compaction), so a
 # state read lists at most _COMPACT_AFTER + 1 directories.
@@ -256,8 +265,8 @@ class VersionedState:
         _overlap_jobs(
             *thunks,
             *(
-                lambda t=t, df=df: df.write.mode("overwrite").parquet(
-                    self._path(t, self.batch_id)
+                lambda t=t, df=df: _write_table(
+                    df, self._path(t, self.batch_id)
                 )
                 for t, df in frames.items()
             ),
@@ -684,7 +693,7 @@ def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             prev = spark.read.parquet(versions[-1])
             cur = _merge_user_state(prev, cur)
         dst = os.path.join(run_dir, f"state_v{batch_id}")
-        cur.write.mode("overwrite").parquet(dst)
+        _write_table(cur, dst)
         versions.append(dst)
 
     q = (
@@ -834,7 +843,7 @@ def _minhash_bands(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         NUM_PERM,
         _band_table,
         _md5_int,
-        _mh_perm,
+        _mh_perm_sql,
         _shingled,
     )
 
@@ -843,14 +852,14 @@ def _minhash_bands(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
         *carry,
         F.transform("ss", lambda s: _md5_int(s, 7)).alias("hs"),
     )
-
-    def _mh(p: int):
-        # one-arg lambda on purpose: a two-arg transform lambda would
-        # receive the array INDEX as its second argument
-        mins = F.array_min(F.transform("hs", lambda h: _mh_perm(p, h)))
-        return mins.alias(f"mh{p}")
-
-    mh = hs.select("doc_id", *carry, *[_mh(p) for p in range(NUM_PERM)])
+    mh = hs.selectExpr(
+        "doc_id",
+        *carry,
+        *[
+            f"array_min(transform(hs, h -> {_mh_perm_sql(p, 'h')})) AS mh{p}"
+            for p in range(NUM_PERM)
+        ],
+    )
     return _band_table(mh, carry)
 
 
@@ -1034,7 +1043,7 @@ def q_stream_dedup_minhash_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # foreachBatch incremental near-dedup — the production crawl loop
 # (VERDICT r10 "Next round" #4): each micro-batch PROBES the standing
 # LSH index built from every previous batch, emits its decision rows,
-# then APPENDS its own bands/shingles to the index state. Composes the
+# then APPENDS its own bands and docs to the index state. Composes the
 # two-table API (operators.dedup.incremental_near_dedup) with the
 # foreachBatch upsert pattern above — end-to-end, this is the recurring
 # crawl pipeline whose per-batch cost is proportional to the batch.
@@ -1062,9 +1071,10 @@ def run_foreachbatch_incremental_dedup(
     """Run the crawl loop over a 2-micro-batch documents stream and
     return the decision rows of every batch that probed existing state
     (i.e. batch 2's crawl-vs-index decisions). State between batches is
-    the PREPARED index — parquet band + shingle tables — so no text is
-    ever re-shingled; the probe itself is _incremental_decisions, the
-    same core the batch two-table API uses."""
+    the index — parquet band + doc-text tables — so the index bands are
+    never recomputed and only the index docs a candidate pair names are
+    shingled again; the probe itself is _incremental_decisions, the same
+    core the batch two-table API uses."""
     from netcdf4_variable_streamer_spark.operators.dedup import _INC_SPLIT
     from netcdf4_variable_streamer_spark.session import apply_runtime_confs
 
@@ -1080,11 +1090,15 @@ def run_foreachbatch_incremental_dedup(
 
 def make_crawl_loop(spark: SparkSession, run_dir: str):
     """The foreachBatch crawl closure + its batch counter. State is
-    the ``bands``/``sh`` index pair in a :class:`VersionedState`: each
-    batch probes the index committed by every earlier batch, then
-    writes only its own bands and shingles, so the bytes a batch writes
-    are proportional to the batch, not to the stream's age (apart from
-    a compacting batch every _COMPACT_AFTER + 1). RESTART-SAFE: nothing
+    the ``bands``/``docs`` index pair in a :class:`VersionedState`: the
+    LSH band table and the docs' own (doc_id, text). Each batch probes
+    the index committed by every earlier batch, shingling only the
+    index docs its candidate pairs name, then writes only its own bands
+    and docs, so the bytes a batch writes are proportional to the
+    batch, not to the stream's age (apart from a compacting batch every
+    _COMPACT_AFTER + 1). A run_dir that already holds ``sh_v*`` tables
+    keeps that older layout: the index docs as their shingle arrays
+    (``sh``), which enter the verify as arrays. RESTART-SAFE: nothing
     is cached in memory — every call recovers the committed state
     strictly older than its batch from disk, so a restarted driver (or
     a fresh closure) resumes with exactly the state the failed run had
@@ -1099,27 +1113,30 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
         _shingled,
     )
 
-    vs = VersionedState(spark, run_dir, ("bands", "sh"))
+    doc_table = "sh" if _versions(run_dir, "sh_v") else "docs"
+    vs = VersionedState(spark, run_dir, ("bands", doc_table))
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         b = batch_df.select("doc_id", "text")
         with batch_cache() as cache:
-            # the shingle pass feeds the probe and both index writes
+            # the shingle pass feeds the probe, the verify and the bands
+            # write (and the sh write of the older layout)
             batch_sh = cache(_shingled(b, "doc_id", "text"))
             new_bands = _minhash_band_table(batch_sh)
-            frames = {"bands": new_bands, "sh": batch_sh}
+            new_docs = batch_sh if doc_table == "sh" else b
+            frames = {"bands": new_bands, doc_table: new_docs}
             if vs.recover(batch_id):
                 idx_bands = vs.read("bands", new_bands)
-                idx_sh = vs.read("sh", batch_sh)
+                idx_docs = vs.read(doc_table, new_docs)
                 frames = {
                     "dec": _incremental_decisions(
-                        idx_bands, idx_sh, batch_sh, b.select("doc_id"),
+                        idx_bands, idx_docs, batch_sh, b.select("doc_id"),
                         qthr=6000, max_bucket=MAX_BUCKET,
                     ),
                     "bands": vs.rows(idx_bands, new_bands),
-                    "sh": vs.rows(idx_sh, batch_sh),
+                    doc_table: vs.rows(idx_docs, new_docs),
                 }
             vs.commit(frames)
 
@@ -1190,9 +1207,10 @@ def _stream_inc_oracle() -> str:
         "documents stream (batch 1 = the standing corpus, batch 2 = "
         "the new crawl) drives a foreachBatch loop in which every "
         "batch probes the PERSISTED index state (the parquet band + "
-        "shingle tables every prior batch committed) through the same "
+        "doc-text tables every prior batch committed; only candidate "
+        "partners are re-shingled, per pair) through the same "
         "_incremental_decisions core as the batch two-table API, then "
-        "appends only its own bands and shingles as a new delta. "
+        "appends only its own bands and docs as a new delta. "
         "Batch 2's decisions must therefore equal the batch twin "
         "q_dedup_minhash_incremental exactly — the oracle IS that "
         "query's SQL. Per-batch compute AND per-batch writes are "
@@ -1219,9 +1237,10 @@ def q_stream_dedup_incremental(
 # recomputes exact spans over the flagged subset only, and cuts spans
 # matching the persisted span-cluster index — batch-proportional by
 # construction. State = two parquet tables appended per batch exactly
-# like the minhash loop's bands/shingles: `anch_vN` (the winnowed
-# anchor index) and `spcl_vN` (the distinct span-cluster set, the
-# exact-side index — the `sh` analogue), in the same VersionedState.
+# like the minhash loop's bands/docs: `anch_vN` (the winnowed anchor
+# index, the `bands` analogue) and `spcl_vN` (the distinct span-cluster
+# set, the exact-side index the probe matches spans against), in the
+# same VersionedState.
 # ---------------------------------------------------------------------------
 
 
@@ -1414,19 +1433,19 @@ def make_substring_ttl_loop(
                 ).distinct()
                 dec = _substring_probe(b, b_anch, idx_anch, idx_spcl)
                 writes.append(
-                    lambda df=dec: df.write.mode("overwrite").parquet(
-                        os.path.join(run_dir, f"dec_v{batch_id}")
+                    lambda df=dec: _write_table(
+                        df, os.path.join(run_dir, f"dec_v{batch_id}")
                     )
                 )
             writes.append(
-                lambda df=b_anch: df.write.mode("overwrite").parquet(
-                    os.path.join(run_dir, f"anch_b{batch_id}")
+                lambda df=b_anch: _write_table(
+                    df, os.path.join(run_dir, f"anch_b{batch_id}")
                 )
             )
             b_spcl = _span_table(b).select("cluster").distinct()
             writes.append(
-                lambda df=b_spcl: df.write.mode("overwrite").parquet(
-                    os.path.join(run_dir, f"spcl_b{batch_id}")
+                lambda df=b_spcl: _write_table(
+                    df, os.path.join(run_dir, f"spcl_b{batch_id}")
                 )
             )
             _overlap_jobs(*writes)
@@ -1653,10 +1672,13 @@ def _publish_lm(
     a vocab-sized aggregate, not a second tokenize pass; it reads bgc
     back from parquet because persisting bgc and deriving ctx from the
     cache measured slower than this LM-sized round-trip."""
-    bgc.write.mode("overwrite").parquet(os.path.join(run_dir, "bgc"))
-    spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy("w1").agg(
-        F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
-    ).write.mode("overwrite").parquet(os.path.join(run_dir, "ctx"))
+    _write_table(bgc, os.path.join(run_dir, "bgc"))
+    _write_table(
+        spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy("w1").agg(
+            F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
+        ),
+        os.path.join(run_dir, "ctx"),
+    )
     lm_meta = os.path.join(run_dir, "lm.json")
     with open(lm_meta + ".tmp", "w") as f:
         json.dump({"vsz": vsz}, f)
@@ -1704,9 +1726,7 @@ def make_quality_gate(spark: SparkSession, run_dir: str):
             _publish_lm(spark, run_dir, bgc, vsz)
             return
         dec = perplexity_decisions(*_load_lm(spark, run_dir), batch_df)
-        dec.write.mode("overwrite").parquet(
-            os.path.join(run_dir, f"dec_v{batch_id}")
-        )
+        _write_table(dec, os.path.join(run_dir, f"dec_v{batch_id}"))
 
     return gate, n_batches
 
@@ -1951,13 +1971,12 @@ def make_curation_loop(
                 # the reference span-hash set, persisted ONCE like
                 # the LM (the eval corpus is static; MB-scale)
                 writes.append(
-                    lambda: _span_table(
-                        batch_df.select("doc_id", "text")
+                    lambda: _write_table(
+                        _span_table(batch_df.select("doc_id", "text"))
+                        .select("cluster")
+                        .distinct(),
+                        os.path.join(run_dir, "spanref"),
                     )
-                    .select("cluster")
-                    .distinct()
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(run_dir, "spanref"))
                 )
             vs.commit(
                 {

@@ -666,6 +666,30 @@ def _read_all(reader, parts) -> list[int]:
             for t in b.column("time_idx").to_numpy()]
 
 
+def test_chunk_reader_pickle_size_is_chunk_count_free(tmp_path):
+    """Spark pickles the reader into every task: its size must not grow
+    with the store's chunk index. Only the meta sidecar is read, so the
+    chunk entries need no files behind them."""
+    import pickle
+
+    from netcdf4_variable_streamer_spark.sources.chunkstore import ChunkInfo
+
+    sizes = []
+    for n in (16, 2048):
+        path = str(tmp_path / f"s{n}")
+        store = ChunkStore.create(
+            path, {"time": None, "y": 2, "x": 3}, "time", 4,
+            {"v": "float32"},
+        )
+        store.chunks = [
+            ChunkInfo(i, 4 * i, 4, f"chunk_{i:06d}.parquet")
+            for i in range(n)
+        ]
+        store._save_meta()
+        sizes.append(len(pickle.dumps(NetCDFChunkReader(path, _schema()))))
+    assert abs(sizes[1] - sizes[0]) <= 64, sizes
+
+
 def test_pushdown_is_filter_order_free(tmp_path):
     """An upper bound of 0 is a bound: either order of [< 0, < 10]
     plans the one empty partition."""

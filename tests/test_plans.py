@@ -329,13 +329,16 @@ def test_trained_quantizer_plan_shapes_pinned(spark):
 
 # (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
 # pre-execution formatted plan of every batch key built on the shared
-# MinHash-LSH stages, recorded before the per-key copies of the
-# signature, bucket cap, candidate join and verify were merged. A lost
-# train-once checkpoint or a demoted broadcast moves these counts.
+# MinHash-LSH stages, recorded after the verify became one shingle-
+# array intersection per candidate pair (the exploded shingle join and
+# the two size joins are gone; calibration's candidate set has one
+# consumer left, so it is no longer checkpointed and its bucket-cap
+# window shows). A lost train-once checkpoint or a demoted broadcast
+# moves these counts.
 _MINHASH_PLAN_SHAPES = {
-    "q_dedup_near_minhash": (5, 5, 0, 2),
-    "q_dedup_minhash_calibration": (4, 6, 1, 0),
-    "q_dedup_minhash_incremental": (5, 5, 1, 2),
+    "q_dedup_near_minhash": (5, 3, 0, 2),
+    "q_dedup_minhash_calibration": (5, 5, 0, 2),
+    "q_dedup_minhash_incremental": (5, 3, 1, 2),
 }
 
 
@@ -343,6 +346,30 @@ def test_minhash_plan_shapes_pinned(spark):
     nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
     got = _plan_shapes(spark, _MINHASH_PLAN_SHAPES, nodes)
     assert got == _MINHASH_PLAN_SHAPES
+
+
+def test_minhash_band_table_build_round_trips(spark, monkeypatch):
+    """Building (not running) one band table crosses to the JVM a few
+    hundred times: the 32 minima and the 8 band structs are SQL text,
+    one call each, not trees of Column calls (thousands of round
+    trips)."""
+    from netcdf4_variable_streamer_spark.operators import dedup
+
+    d = dedup._shingled(
+        spark.read.parquet(f"{SF}/documents.parquet"), "doc_id", "text"
+    )
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    calls = [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    dedup._minhash_band_table(d)
+    monkeypatch.setattr(client, "send_command", send)
+    assert 0 < calls[0] <= 400, calls[0]
 
 
 # (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the

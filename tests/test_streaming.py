@@ -1089,11 +1089,11 @@ def test_crawl_loop_recovery_ignores_uncommitted_version(
     """Round 15: the commit-marker protocol extended to the
     incremental-dedup crawl loop (the same ADVICE r13 #3 class the
     curation loop fixed): a crash AFTER bands_v1 lands but BEFORE
-    sh_v1 finishes leaves a torn state version. Recovery keyed on
+    docs_v1 finishes leaves a torn state version. Recovery keyed on
     markers must make a fresh closure fall back to version 0 and
     recompute the replayed batch — the old bands_v*-keyed scan
     selected the torn v1 and died (or silently read a partial
-    shingle table under a v2 committer). Pre-marker run_dirs
+    docs table under a v2 committer). Pre-marker run_dirs
     backfill markers for complete pairs, so old state keeps
     working."""
     import os
@@ -1123,9 +1123,9 @@ def test_crawl_loop_recovery_ignores_uncommitted_version(
     assert os.path.exists(os.path.join(run_dir, "commit_v0"))
     crawl(batches[1], 1)
     assert os.path.exists(os.path.join(run_dir, "commit_v1"))
-    # simulate the crash: sh_v1 never finished, marker never written
+    # simulate the crash: docs_v1 never finished, marker never written
     os.remove(os.path.join(run_dir, "commit_v1"))
-    shutil.rmtree(os.path.join(run_dir, "sh_v1"))
+    shutil.rmtree(os.path.join(run_dir, "docs_v1"))
     # fresh closure (restart): the checkpoint replays batch 1 — it
     # must recover v0, not the torn v1
     crawl2, _n2 = sq.make_crawl_loop(spark, run_dir)
@@ -2014,11 +2014,103 @@ def test_crawl_loop_resumes_full_snapshot_layout(spark, crawl20, tmp_path):
             obj=f"batch {k}",
         )
     assert not os.path.exists(os.path.join(run_dir, sq._DELTA_LAYOUT))
-    # batch 3 wrote the whole index: the deltas of batches 0-3
-    for t in ("bands", "sh"):
-        whole = spark.read.parquet(
-            *(os.path.join(crawl20.run_dir, f"{t}_v{v}") for v in range(4))
-        )
+    # batch 3 wrote the whole index: the band deltas of batches 0-3 and
+    # the shingled docs of their files (a fresh run_dir keeps docs, not
+    # sh, so the uninterrupted run has no sh deltas to compare with)
+    wholes = {
+        "bands": spark.read.parquet(
+            *(os.path.join(crawl20.run_dir, f"bands_v{v}") for v in range(4))
+        ),
+        "sh": _shingled(spark.read.parquet(*files[:4]), "doc_id", "text"),
+    }
+    for t, whole in wholes.items():
         assert spark.read.parquet(
             os.path.join(run_dir, f"{t}_v3")
         ).count() == whole.count() > 0
+
+
+def test_crawl_loop_fresh_run_dir_keeps_doc_text(spark, crawl20):
+    """A fresh run_dir stores the index docs as (doc_id, text), never as
+    shingle arrays: no sh_v* table, and the docs deltas hold exactly the
+    feed's docs once."""
+    import os
+
+    run_dir = crawl20.run_dir
+    assert not any(p.startswith("sh_v") for p in os.listdir(run_dir))
+    docs = spark.read.parquet(
+        *(os.path.join(run_dir, f"docs_v{v}") for v in range(17))
+    )
+    feed = spark.read.parquet(*crawl20.files[:17])
+    assert docs.count() == feed.count()
+    assert docs.exceptAll(feed.select("doc_id", "text")).count() == 0
+
+
+def test_crawl_probe_batch_writes_under_twice_its_input(spark, tmp_path):
+    """The probing batch of the two-batch crawl writes at most twice the
+    bytes of its own input file: its bands, its doc text and its
+    decisions, zstd-compressed. Shingle-array state wrote about 4.8x."""
+    import os
+    import shutil
+
+    from netcdf4_variable_streamer_spark.operators.dedup import _INC_SPLIT
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    feed = sq._docs_two_batch_stream_dir(spark, SF_DIR, _INC_SPLIT)
+    run_dir = str(tmp_path / "state")
+    os.makedirs(run_dir)
+    crawl, _n = sq.make_crawl_loop(spark, run_dir)
+    for k, name in enumerate(("0_index.parquet", "1_crawl.parquet")):
+        before = _tree_bytes(run_dir)
+        crawl(spark.read.parquet(os.path.join(feed, name)), k)
+    written = _tree_bytes(run_dir) - before
+    fed = os.path.getsize(os.path.join(feed, "1_crawl.parquet"))
+    assert os.path.isdir(os.path.join(run_dir, "dec_v1"))
+    assert written <= 2 * fed, (written, fed)
+    shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_loop_state_is_zstd(spark, tmp_path):
+    """Every parquet column chunk the crawl, substring, substring-TTL,
+    quality-gate and curation loops write under their run_dirs is
+    zstd-compressed (read from the parquet footers)."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
+
+    apply_runtime_confs(spark)
+    feed = sq._docs_two_batch_stream_dir(
+        spark, SF_DIR, sq._GATE_SPLIT, columns=("doc_id", "text", "lang")
+    )
+    batches = [
+        spark.read.parquet(os.path.join(feed, name))
+        for name in ("0_index.parquet", "1_crawl.parquet")
+    ]
+    makers = {
+        "crawl": lambda d: sq.make_crawl_loop(spark, d),
+        "substring": lambda d: sq.make_substring_crawl_loop(spark, d),
+        "substring_ttl": lambda d: sq.make_substring_ttl_loop(spark, d),
+        "gate": lambda d: sq.make_quality_gate(spark, d),
+        "curation": lambda d: sq.make_curation_loop(spark, d, decontam=True),
+    }
+    for loop, make in makers.items():
+        run_dir = str(tmp_path / loop)
+        os.makedirs(run_dir)
+        body, _n = make(run_dir)
+        for k, b in enumerate(batches):
+            body(b, k)
+        codecs = {
+            (os.path.relpath(d, run_dir), rg.column(c).compression)
+            for d, _, fs in os.walk(run_dir)
+            for f in fs
+            if f.endswith(".parquet")
+            for meta in [pq.ParquetFile(os.path.join(d, f)).metadata]
+            for rg in (meta.row_group(i) for i in range(meta.num_row_groups))
+            for c in range(rg.num_columns)
+        }
+        assert {c for _t, c in codecs} == {"ZSTD"}, (loop, codecs)
+        assert any(t.startswith("dec_v1") for t, _c in codecs), loop
+    shutil.rmtree(feed, ignore_errors=True)
