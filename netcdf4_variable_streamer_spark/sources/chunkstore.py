@@ -57,7 +57,19 @@ class ChunkInfo:
 
 @dataclass
 class ChunkStore:
-    """Directory-of-parquet-chunks backend (long form, C order)."""
+    """Directory-of-parquet-chunks backend (long form, C order).
+
+    Reference A15, storage encoding: the codec (``compression``, level)
+    comes from the meta sidecar. Float variables are written PLAIN,
+    without a dictionary: a chunk of measured floats holds about as many
+    distinct values as cells, so a dictionary page plus its indices
+    stores ~1.5x the raw bytes, and pyarrow drops a dictionary only past
+    1 MiB, which a chunk column never reaches. Index columns and integer
+    variables keep the dictionary, which RLE shrinks to a few hundred
+    bytes per chunk. BYTE_STREAM_SPLIT would store floats smaller still
+    but is not used: Spark's vectorized parquet reader rejects it, and
+    ``netcdf_source.read_native`` scans chunks with that reader.
+    """
 
     path: str
     dims: dict[str, int | None]  # name -> extent; None = UNLIMITED/streamed
@@ -170,17 +182,6 @@ class ChunkStore:
     def list_chunks(self) -> list[ChunkInfo]:
         return list(self.chunks)
 
-    def truncate(self) -> None:
-        """Drop all committed chunks (overwrite-mode reset, A7 inverse):
-        delete the chunk files, clear the index, republish meta."""
-        for c in self.chunks:
-            try:
-                os.remove(os.path.join(self.path, c.file))
-            except OSError:
-                pass
-        self.chunks = []
-        self._save_meta()
-
     def read_chunk(self, chunk: ChunkInfo, columns: list[str] | None = None
                    ) -> pa.Table:
         return pq.read_table(
@@ -190,8 +191,17 @@ class ChunkStore:
     def append_block(self, block_by_var: dict[str, np.ndarray]) -> ChunkInfo:
         """Append a (n_lines, *line_shape) block per variable as ONE chunk
         file — one hyperslab write per buffer fill (reference A6)."""
+        info = self._write_chunk(block_by_var, len(self.chunks), self.extent)
+        self.chunks.append(info)
+        self._save_meta()
+        return info
+
+    def _write_chunk(self, block_by_var: dict[str, np.ndarray],
+                     chunk_id: int, start: int) -> ChunkInfo:
+        """Write one block as chunk file `chunk_id` holding lines from
+        `start` on. The file stays invisible until the caller lists it
+        in the meta sidecar."""
         n_lines = next(iter(block_by_var.values())).shape[0]
-        start = self.extent
         idx_grids = np.meshgrid(
             np.arange(start, start + n_lines, dtype=np.int64),
             *[np.arange(n, dtype=np.int32) for n in self.line_shape],
@@ -208,18 +218,22 @@ class ChunkStore:
                     f"{v}: block shape {arr.shape} != {(n_lines, *self.line_shape)}"
                 )
             cols[v] = arr.reshape(-1)
-        fname = f"chunk-{len(self.chunks):05d}-{uuid.uuid4().hex[:8]}.parquet"
+        fname = f"chunk-{chunk_id:05d}-{uuid.uuid4().hex[:8]}.parquet"
         table = pa.Table.from_pydict(cols, schema=self.arrow_schema())
         pq.write_table(
             table,
             os.path.join(self.path, fname),
             compression=self.compression,
             compression_level=self.compression_level,
+            # not BYTE_STREAM_SPLIT for floats: Spark 4.1's vectorized
+            # reader fails on it ("Unsupported encoding:
+            # BYTE_STREAM_SPLIT"), which would break read_native
+            use_dictionary=names + [
+                v for v, dt in self.variables.items()
+                if not dt.startswith("float")
+            ],
         )
-        info = ChunkInfo(len(self.chunks), start, n_lines, fname)
-        self.chunks.append(info)
-        self._save_meta()
-        return info
+        return ChunkInfo(chunk_id, start, n_lines, fname)
 
 
 class StreamedVariable:

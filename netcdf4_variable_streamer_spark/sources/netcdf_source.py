@@ -28,6 +28,7 @@ so failed tasks leave no visible data.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import uuid
 from dataclasses import dataclass
@@ -262,15 +263,23 @@ class NetCDFChunkWriter(DataSourceArrowWriter):
         meta atomically (reference A6/A7 flush+close). In overwrite mode
         the existing chunks are dropped HERE, not in write(): tasks may
         retry/speculate, and the store must stay intact if the job fails
-        before commit."""
+        before commit. Every new chunk file is written before the one
+        meta save that lists it; replaced chunk files are removed only
+        after it, so a reader sees the old store or the new one."""
         store = ChunkStore.open(self.path)
+        replaced: list[ChunkInfo] = []
         if self.overwrite:
-            store.truncate()
-        for msg in messages:
-            for fname, _n in msg.files:
-                with np.load(os.path.join(self.path, fname)) as z:
-                    block = {v: z[v] for v in self.var_names}
-                store.append_block(block)
+            replaced, store.chunks = store.chunks, []
+        pending = [fname for msg in messages for fname, _n in msg.files]
+        for fname in pending:
+            with np.load(os.path.join(self.path, fname)) as z:
+                block = {v: z[v] for v in self.var_names}
+            store.chunks.append(
+                store._write_chunk(block, len(store.chunks), store.extent)
+            )
+        store._save_meta()
+        for fname in [c.file for c in replaced] + pending:
+            with contextlib.suppress(FileNotFoundError):
                 os.remove(os.path.join(self.path, fname))
 
     def abort(self, messages):

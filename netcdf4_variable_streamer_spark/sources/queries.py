@@ -78,7 +78,7 @@ g AS (
 def ensure_grid(path: str | None = None, t_total: int = GRID_T) -> str:
     """Materialize the grid store through the reference-parity write path
     (A1-A7): DDL, block-streamed writes, flush-on-close."""
-    path = path or os.path.join(SCRATCH, f"grid_v2_{t_total}")
+    path = path or os.path.join(SCRATCH, f"grid_v3_{t_total}")
     meta = os.path.join(path, "meta.json")
     if os.path.exists(meta):
         return path

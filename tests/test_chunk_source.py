@@ -9,11 +9,14 @@ import shutil
 import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from netcdf4_variable_streamer_spark.sources.chunkstore import (
+    _DTYPES,
     ChunkStore,
     StreamedDataset,
 )
@@ -21,6 +24,7 @@ from netcdf4_variable_streamer_spark.sources.netcdf_source import (
     FORMAT_NAME,
     NetCDFChunkDataSource,
     NetCDFChunkReader,
+    NetCDFChunkWriter,
 )
 from netcdf4_variable_streamer_spark.sources import queries as srcq
 from tests import record_cases
@@ -400,8 +404,6 @@ def test_stream_write_foreachbatch_roundtrip(spark):
 def test_compression_passthrough():
     """Reference A15: codec settings forwarded to storage and recorded in
     the meta sidecar; round-trip is byte-identical across codecs."""
-    import pyarrow.parquet as pq
-
     for codec, level in (("zstd", 7), ("gzip", 6), ("snappy", None)):
         path = _tmp()
         try:
@@ -758,32 +760,35 @@ def test_chunk_run_plans_pinned(tmp_path, tp, full, slab):
     assert runs(r.partitions()) == slab
 
 
+def _line_table(n_lines: int, v0: int = 0) -> pa.Table:
+    """Writer input of `n_lines` lines of the y=2 x x=3 store, sorted by
+    (time, y, x); v counts cells from `v0`."""
+    return pa.table({
+        "time_idx": np.repeat(np.arange(n_lines, dtype=np.int64), _CELLS),
+        "y_idx": np.tile(np.repeat(np.arange(2, dtype=np.int32), 3), n_lines),
+        "x_idx": np.tile(np.arange(3, dtype=np.int32), 2 * n_lines),
+        "v": np.arange(v0, v0 + n_lines * _CELLS, dtype=np.float32),
+    })
+
+
+def _store_values(path: str) -> np.ndarray:
+    store = ChunkStore.open(path)
+    return np.concatenate([store.read_chunk(ch).column("v").to_numpy()
+                           for ch in store.list_chunks()])
+
+
 def test_writer_cuts_whole_chunks_from_one_batch(tmp_path):
     """One Arrow batch of 3.5 chunks of lines plus half a line, then a
     batch that completes that line: pending files hold [c, c, c, rest]
     lines and commit appends one store chunk per pending file."""
-    import pyarrow as pa
-
-    from netcdf4_variable_streamer_spark.sources.netcdf_source import (
-        NetCDFChunkWriter,
-    )
-
     c = 4
     path = str(tmp_path / "s")
     ChunkStore.create(
         path, {"time": None, "y": 2, "x": 3}, "time", c, {"v": "float32"}
     )
     n_lines = 3 * c + c // 2 + 1
-    n = n_lines * _CELLS
-    t = np.repeat(np.arange(n_lines, dtype=np.int64), _CELLS)
-    cols = {
-        "time_idx": t,
-        "y_idx": np.tile(np.repeat(np.arange(2, dtype=np.int32), 3), n_lines),
-        "x_idx": np.tile(np.arange(3, dtype=np.int32), 2 * n_lines),
-        "v": np.arange(n, dtype=np.float32),
-    }
-    table = pa.table(cols)
-    cut = n - 3  # the first batch ends mid-line
+    table = _line_table(n_lines)
+    cut = n_lines * _CELLS - 3  # the first batch ends mid-line
     batches = [table.slice(0, cut).to_batches()[0],
                table.slice(cut).to_batches()[0]]
     w = NetCDFChunkWriter(path, _schema(), overwrite=False)
@@ -792,7 +797,161 @@ def test_writer_cuts_whole_chunks_from_one_batch(tmp_path):
     w.commit([msg])
     store = ChunkStore.open(path)
     assert [ch.n_lines for ch in store.list_chunks()] == [c, c, c, c // 2 + 1]
-    got = np.concatenate([store.read_chunk(ch).column("v").to_numpy()
-                          for ch in store.list_chunks()])
-    np.testing.assert_array_equal(got, cols["v"])
+    np.testing.assert_array_equal(
+        _store_values(path), table.column("v").to_numpy()
+    )
     assert not [f for f in os.listdir(path) if f.startswith("pending-")]
+
+
+@pytest.mark.parametrize("overwrite", [False, True])
+def test_commit_publishes_once_after_every_chunk_file(
+    tmp_path, monkeypatch, overwrite
+):
+    """Job commit of 8 task messages saves the meta sidecar once, when
+    every chunk file it lists and every chunk file it replaces are on
+    disk, so a concurrent reader sees the old store or the new one."""
+    c = 4
+    path = str(tmp_path / "s")
+    old = _ragged_store(path, n_lines=2 * c, chunk_lines=c)
+    w = NetCDFChunkWriter(path, _schema(), overwrite=overwrite)
+    v0 = 2 * c * _CELLS
+    msgs = [w.write(iter(_line_table(c, v0 + k * c * _CELLS).to_batches()))
+            for k in range(8)]
+    assert all(f.startswith("pending-") for m in msgs for f, _n in m.files)
+
+    saves = []
+    save_meta = ChunkStore._save_meta
+
+    def spy(store):
+        listed = [ch.file for ch in store.chunks]
+        saves.append(all(os.path.exists(os.path.join(path, f))
+                         for f in listed + old))
+        save_meta(store)
+
+    monkeypatch.setattr(ChunkStore, "_save_meta", spy)
+    w.commit(msgs)
+    assert saves == [True]
+
+    store = ChunkStore.open(path)
+    assert store.extent == (8 if overwrite else 10) * c
+    want = np.arange(v0 if overwrite else 0, v0 + 8 * c * _CELLS,
+                     dtype=np.float32)
+    np.testing.assert_array_equal(_store_values(path), want)
+    t = np.concatenate([store.read_chunk(ch).column("time_idx").to_numpy()
+                        for ch in store.list_chunks()])
+    np.testing.assert_array_equal(
+        t, np.repeat(np.arange(store.extent), _CELLS)
+    )
+    # replaced chunk files and staging files are gone after the publish
+    assert sorted(os.listdir(path)) == sorted(
+        [ch.file for ch in store.list_chunks()] + ["meta.json"]
+    )
+
+
+# ---------------------------------------------------------------------------
+# Chunk encoding: float variables PLAIN without a dictionary, index columns
+# and integer variables dictionary-encoded, nothing Spark's vectorized
+# parquet reader rejects; old dictionary-encoded chunks still read.
+# ---------------------------------------------------------------------------
+
+_SPARK_ENCODINGS = {"PLAIN", "RLE", "RLE_DICTIONARY", "PLAIN_DICTIONARY"}
+_DICT_ENCODINGS = {"RLE_DICTIONARY", "PLAIN_DICTIONARY"}
+
+
+def _encodings(file: str) -> dict[str, set[str]]:
+    """Column name -> the encodings of its column chunks in `file`."""
+    md = pq.ParquetFile(file).metadata
+    out: dict[str, set[str]] = {}
+    for rg in range(md.num_row_groups):
+        for i in range(md.num_columns):
+            col = md.row_group(rg).column(i)
+            out.setdefault(col.path_in_schema, set()).update(col.encodings)
+    return out
+
+
+def _dtype_store(path: str, n_chunks: int) -> dict[str, np.ndarray]:
+    """A store with one variable per supported dtype and `n_chunks`
+    three-line chunks; returns each variable's values in storage order."""
+    rng = np.random.default_rng(7)
+    store = ChunkStore.create(
+        path, {"time": None, "y": 2, "x": 3}, "time", 3,
+        {f"v_{dt}": dt for dt in _DTYPES},
+    )
+    blocks = []
+    for _ in range(n_chunks):
+        block = {}
+        for dt in _DTYPES:
+            if dt.startswith("float"):
+                a = rng.normal(0, 1e3, (3, 2, 3))
+            else:
+                info = np.iinfo(dt)
+                a = rng.integers(info.min, info.max, (3, 2, 3),
+                                 endpoint=True)
+            block[f"v_{dt}"] = a.astype(dt)
+        store.append_block(block)
+        blocks.append(block)
+    return {v: np.concatenate([b[v] for b in blocks]).reshape(-1)
+            for v in blocks[0]}
+
+
+def test_chunk_encoding_floats_plain_index_dictionary(tmp_path):
+    path = str(tmp_path / "s")
+    _dtype_store(path, 1)
+    store = ChunkStore.open(path)
+    enc = _encodings(os.path.join(path, store.list_chunks()[0].file))
+    for col, used in enc.items():
+        assert used <= _SPARK_ENCODINGS, (col, used)
+        if col.startswith("v_float"):
+            assert not used & _DICT_ENCODINGS, (col, used)
+        else:  # index columns and integer variables
+            assert "RLE_DICTIONARY" in used, (col, used)
+    assert set(enc) == set(store.index_columns()) | set(store.variables)
+
+
+def test_noisy_float_chunk_stores_near_raw(tmp_path):
+    """64 records of a 32x32 float32 grid of Gaussian noise, default
+    codec: the chunk file (index columns and footer included) stays
+    within 5% of the variable's raw bytes."""
+    path = str(tmp_path / "s")
+    store = ChunkStore.create(
+        path, {"time": None, "y": 32, "x": 32}, "time", 64,
+        {"v": "float32"},
+    )
+    block = np.random.default_rng(101).normal(size=(64, 32, 32))
+    block = block.astype(np.float32)
+    info = store.append_block({"v": block})
+    on_disk = os.path.getsize(os.path.join(path, info.file))
+    assert on_disk <= 1.05 * block.nbytes, on_disk / block.nbytes
+
+
+def test_mixed_encoding_store_reads_exactly(spark, tmp_path):
+    """Every supported dtype round-trips exactly through read_chunk, the
+    Python DataSource and read_native, on a store whose first chunks were
+    written with pyarrow's default (dictionary) encoding and whose later
+    chunks come from append_block."""
+    from netcdf4_variable_streamer_spark.sources.netcdf_source import (
+        read_native,
+    )
+
+    path = str(tmp_path / "s")
+    want = _dtype_store(path, 4)
+    store = ChunkStore.open(path)
+    for ch in store.list_chunks()[:2]:
+        f = os.path.join(path, ch.file)
+        pq.write_table(pq.read_table(f), f)
+        assert _encodings(f)["v_float32"] & _DICT_ENCODINGS
+    for v, a in want.items():
+        got = np.concatenate([store.read_chunk(ch).column(v).to_numpy()
+                              for ch in store.list_chunks()])
+        assert got.dtype == a.dtype, v
+        np.testing.assert_array_equal(got, a, err_msg=v)
+
+    spark.dataSource.register(NetCDFChunkDataSource)
+    order = store.index_columns()
+    for df in (spark.read.format(FORMAT_NAME).option("path", path).load(),
+               read_native(spark, path)):
+        pdf = df.orderBy(*order).toPandas()
+        for v, a in want.items():
+            got = pdf[v].to_numpy()
+            assert got.dtype == a.dtype, v
+            np.testing.assert_array_equal(got, a, err_msg=v)
