@@ -1407,7 +1407,7 @@ ORDER BY doc_id
         "priority is the raw int64 score (no normalization division "
         "anywhere near the ORDER BY, so the cut is bit-identical "
         "cross-engine), the budget test is a running SUM window. "
-        "100 TB: two keyed aggs for scoring + ONE lang-partitioned "
+        "100 TB: per-row scoring + ONE lang-partitioned "
         "window — per-language sort parallelism is the lang "
         "cardinality; for a skewed single-language corpus, "
         "pre-bucket by score range (the q_curriculum_order two-level "

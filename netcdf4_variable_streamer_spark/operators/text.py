@@ -20,6 +20,13 @@ from netcdf4_variable_streamer_spark.registry import register
 from netcdf4_variable_streamer_spark.tables import load_table
 
 
+# The non-empty single-space tokens of a text column, and the md5
+# integer hash of an expression (``_md5_int`` as SQL text), both for
+# ``.format(expr)``.
+_TOKENS_SQL = "filter(split({0}, ' '), t -> t != '')"
+_MD5_INT_SQL = "CAST(conv(substring(md5({0}), 1, 7), 16, 10) AS BIGINT)"
+
+
 def _tokens(df: DataFrame) -> DataFrame:
     return df.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
@@ -1078,21 +1085,13 @@ def q_text_hashed_ngram_features(
 def _doc_bigrams(docs: DataFrame, id_cols: list[str]) -> DataFrame:
     """Adjacent-token pairs per document (whitespace tokens, empties
     dropped), one row per bigram occurrence, carrying ``id_cols``."""
-    toks = docs.select(
+    toks = docs.selectExpr(*id_cols, f"{_TOKENS_SQL.format('text')} AS w")
+    tail = "greatest(size(w) - 1, 0)"
+    return toks.selectExpr(
         *id_cols,
-        F.filter(F.split("text", " "), lambda t: t != "").alias("w"),
-    )
-    n = F.size("w")
-    return toks.select(
-        *id_cols,
-        F.explode(
-            F.zip_with(
-                F.slice("w", 1, F.greatest(n - 1, F.lit(0))),
-                F.slice("w", 2, F.greatest(n - 1, F.lit(0))),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p"),
-    ).select(*id_cols, "p.w1", "p.w2")
+        f"explode(zip_with(slice(w, 1, {tail}), slice(w, 2, {tail}), "
+        "(a, b) -> named_struct('w1', a, 'w2', b))) AS p",
+    ).selectExpr(*id_cols, "p.w1", "p.w2")
 
 
 def perplexity_filter(
@@ -1175,49 +1174,41 @@ def perplexity_decisions(
     id_col: str = "doc_id",
     lang_col: str = "lang",
     text_col: str = "text",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Score ``score_df`` under a prepared :func:`perplexity_lm` and
     decide keep/drop against each language's mean over the scored set
     — the batch-proportional half of :func:`perplexity_filter` (see
-    there for the backoff and fixed-point exactness story)."""
-    score = score_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(lang_col).alias("lang"),
-        F.col(text_col).alias("text"),
+    there for the backoff and fixed-point exactness story). ``carry``
+    columns are functions of the document; they pass through as extra
+    group keys, so a frame already hash-partitioned by one of them is
+    scored without an Exchange."""
+    keys = ["doc_id", "lang", *carry]
+    score = score_df.selectExpr(
+        f"{id_col} AS doc_id", f"{lang_col} AS lang", *carry,
+        f"{text_col} AS text",
     )
-    bg = _doc_bigrams(score, ["doc_id", "lang"])
-    lpq = F.floor(
-        F.log(
-            (F.coalesce(F.col("c_bg"), F.lit(0)) + 1).cast("double")
-            / (F.coalesce(F.col("c_u"), F.lit(0)) + F.lit(int(vsz)))
-        )
-        * 1000000
-    ).cast("long")
+    lpq = (
+        "CAST(FLOOR(LN(CAST(coalesce(c_bg, 0) + 1 AS DOUBLE)"
+        f" / (coalesce(c_u, 0) + {int(vsz)})) * 1000000) AS BIGINT)"
+    )
     scored = (
-        bg.join(ctx, "w1", "left")
+        _doc_bigrams(score, keys)
+        .join(ctx, "w1", "left")
         .join(bgc, ["w1", "w2"], "left")
-        .select("doc_id", "lang", lpq.alias("lpq"))
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.sum("lpq").alias("s"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            F.expr("-((-s) DIV cnt)").alias("q"),
-        )
+        .groupBy(*keys)
+        .agg(F.expr(f"sum({lpq}) AS s"), F.expr("count(1) AS cnt"))
+        .selectExpr(*keys, "-((-s) DIV cnt) AS q")
     )
     cut = scored.groupBy("lang").agg(
-        F.sum("q").alias("sum_q"), F.count(F.lit(1)).alias("n_docs")
+        F.expr("sum(q) AS sum_q"), F.expr("count(1) AS n_docs")
     )
-    return scored.join(F.broadcast(cut), "lang").select(
-        F.col("doc_id").alias(id_col),
-        F.col("lang").alias(lang_col),
-        (F.col("q").cast("double") / 1000000).alias(
-            "avg_bigram_logprob"
-        ),
-        (F.col("q") * F.col("n_docs") >= F.col("sum_q")).alias("keep"),
+    return scored.join(F.broadcast(cut), "lang").selectExpr(
+        f"doc_id AS {id_col}",
+        f"lang AS {lang_col}",
+        *carry,
+        "CAST(q AS DOUBLE) / 1000000 AS avg_bigram_logprob",
+        "q * n_docs >= sum_q AS keep",
     )
 
 
@@ -1327,33 +1318,33 @@ def q_text_perplexity_crosstrain(
     ).orderBy("doc_id")
 
 
-def hashed_classifier_scores(docs: DataFrame) -> DataFrame:
-    """The hashed linear quality classifier over a (doc_id, lang, text)
-    frame: tokenize on single spaces, hash each non-empty token into
-    one of 4096 buckets (``md5 % 4096``), weight bucket b by
-    ``md5('w:' || b) % 2001 - 1000`` (the deterministic stand-in for
-    trained weights), and return one row per document with at least
-    one token: ``(doc_id, lang, n_tokens, score_q)``, all int64."""
-    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
+def hashed_classifier_sql(text: str) -> tuple[str, str]:
+    """The hashed linear quality classifier as two per-row SQL
+    expressions over the text column ``text``: ``(n_tokens,
+    score_q)``, both int64. Tokens split on single spaces, empties
+    dropped; token t falls in bucket ``md5(t) % 4096``, and bucket b
+    weighs ``md5('w:' || b) % 2001 - 1000`` (the deterministic
+    stand-in for trained weights). score_q sums the weight of every
+    token, which is the bucket-count dot product in exact integers,
+    with no explode and no aggregation."""
+    toks = _TOKENS_SQL.format(text)
+    bucket = f"{_MD5_INT_SQL.format('t')} % 4096"
+    wkey = f"concat('w:', {bucket})"
+    weight = f"{_MD5_INT_SQL.format(wkey)} % 2001 - 1000"
+    return (
+        f"CAST(size({toks}) AS BIGINT)",
+        f"aggregate({toks}, 0L, (acc, t) -> acc + {weight})",
+    )
 
-    toks = (
-        docs.filter(F.length("text") > 0)
-        .select(
-            "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
-    )
-    feats = toks.groupBy(
-        "doc_id", "lang", (_md5_int(F.col("tok"), 7) % 4096).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    return feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.col("cnt") * w).alias("score_q"),
-    )
+
+def hashed_classifier_scores(docs: DataFrame) -> DataFrame:
+    """:func:`hashed_classifier_sql` over a (doc_id, lang, text) frame:
+    one row per document with at least one token, ``(doc_id, lang,
+    n_tokens, score_q)``. A per-row projection: no shuffle."""
+    n_tokens, score_q = hashed_classifier_sql("text")
+    return docs.selectExpr(
+        "doc_id", "lang", f"{n_tokens} AS n_tokens", f"{score_q} AS score_q"
+    ).filter("n_tokens > 0")
 
 
 def classifier_keep(scored: DataFrame) -> DataFrame:
@@ -1427,9 +1418,11 @@ ORDER BY s.doc_id
         "sum_q/sum_n), no float anywhere. Capacity: |w| <= 1000, "
         "cnt*|w| summed over a doc < 1e9 per 1e6 tokens; the "
         "cross-product terms stay < 2^62 for corpora to ~4e14 "
-        "weighted tokens per language. 100 TB: explode + two keyed "
-        "aggs (doc, then |langs|-row cutoff broadcast back) — "
-        "corpus-linear, no vocabulary table, no collect.",
+        "weighted tokens per language. 100 TB: scoring is a per-row "
+        "projection (one aggregate() fold over each document's "
+        "tokens, no explode, no shuffle); the only aggregation is "
+        "the |langs|-row cutoff, broadcast back — corpus-linear, no "
+        "vocabulary table, no collect.",
 )
 def q_text_classifier_score(
     spark: SparkSession, sf_dir: str

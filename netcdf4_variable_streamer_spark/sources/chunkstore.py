@@ -184,16 +184,26 @@ class ChunkStore:
 
     def read_chunk(self, chunk: ChunkInfo, columns: list[str] | None = None
                    ) -> pa.Table:
-        return pq.read_table(
-            os.path.join(self.path, chunk.file), columns=columns
-        )
+        # ParquetFile, not pq.read_table: read_table goes through
+        # pyarrow.dataset, which imports pandas (~0.13 s on the first
+        # read in a fresh Python worker)
+        return pq.ParquetFile(
+            os.path.join(self.path, chunk.file)
+        ).read(columns=columns)
 
     def append_block(self, block_by_var: dict[str, np.ndarray]) -> ChunkInfo:
         """Append a (n_lines, *line_shape) block per variable as ONE chunk
-        file — one hyperslab write per buffer fill (reference A6)."""
+        file — one hyperslab write per buffer fill (reference A6) — and
+        publish it in the meta sidecar."""
+        info = self._append_chunk(block_by_var)
+        self._save_meta()
+        return info
+
+    def _append_chunk(self, block_by_var: dict[str, np.ndarray]) -> ChunkInfo:
+        """Write the next chunk file and add it to the in-memory index;
+        readers see it once the caller saves the meta sidecar."""
         info = self._write_chunk(block_by_var, len(self.chunks), self.extent)
         self.chunks.append(info)
-        self._save_meta()
         return info
 
     def _write_chunk(self, block_by_var: dict[str, np.ndarray],
@@ -293,13 +303,15 @@ class StreamedVariable:
     def stream_block(self, block_by_var: dict[str, np.ndarray]) -> None:
         """Append k lines at once (reference A5): input shaped with the
         variable's logical axis order, streamed dim at its logical axis.
-        The buffer fills by slice copies and flushes each time it is
-        full."""
+        The buffer fills by slice copies and is written as a chunk file
+        each time it is full; the meta sidecar that lists the new chunks
+        is saved once, after the last of them is on disk."""
         blocks = {
             v: np.transpose(np.asarray(block_by_var[v]), self._to_storage)
             for v in self.store.variables
         }
         n = next(iter(blocks.values())).shape[0]
+        n_chunks = len(self.store.chunks)
         i = 0
         while i < n:
             k = min(n - i, self.lines_per_buffer - self._cursor)
@@ -308,15 +320,23 @@ class StreamedVariable:
             self._cursor += k
             i += k
             if self._cursor == self.lines_per_buffer:
-                self.flush()
+                self._write_buffer()
+        if len(self.store.chunks) > n_chunks:
+            self.store._save_meta()
 
     def flush(self) -> None:
-        """One hyperslab write of buffer[0:cursor] (reference A6)."""
+        """One hyperslab write of buffer[0:cursor] (reference A6),
+        published in the meta sidecar."""
         if self._cursor == 0:
             return
-        self.store.append_block(
-            {v: self._buffer[v][: self._cursor].copy()
-             for v in self.store.variables}
+        self._write_buffer()
+        self.store._save_meta()
+
+    def _write_buffer(self) -> None:
+        # the chunk file is written before this returns, so the buffer
+        # is free for reuse without a copy
+        self.store._append_chunk(
+            {v: self._buffer[v][: self._cursor] for v in self.store.variables}
         )
         self._cursor = 0
 

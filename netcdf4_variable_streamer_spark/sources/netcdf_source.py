@@ -108,7 +108,7 @@ def _read_run(part: ChunkRunPartition, columns: list, cells: int):
     if not part.files:
         return
     table = pa.concat_tables(
-        pq.read_table(os.path.join(part.path, f), columns=columns)
+        pq.ParquetFile(os.path.join(part.path, f)).read(columns=columns)
         for f in part.files
     ).combine_chunks()
     first = max(part.lo - part.start, 0)

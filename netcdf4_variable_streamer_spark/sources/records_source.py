@@ -355,6 +355,28 @@ def _numeric(x, flat: np.ndarray, decode_cf_time: bool, mask_and_scale: bool):
     return flat.astype(wdt, copy=False), mask
 
 
+def _to_arrow(values, mask) -> pa.Array:
+    """``pa.array(values, mask=mask)``, built straight from the buffers
+    of an integer or float ndarray (``mask`` True = NULL, packed into a
+    little-endian validity bitmap). ``pa.array`` on an ndarray goes
+    through pyarrow's pandas shim, which imports pandas: about 0.13 s
+    on the first read in a fresh Python worker. Other kinds (strings,
+    times, lists) take ``pa.array``."""
+    if not (isinstance(values, np.ndarray) and values.ndim == 1
+            and values.dtype.kind in "iuf"):
+        return pa.array(values, mask=mask)
+    values = np.ascontiguousarray(
+        values, dtype=values.dtype.newbyteorder("=")
+    )
+    validity = None
+    if mask is not None and mask.any():
+        validity = pa.py_buffer(np.packbits(~mask, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.from_numpy_dtype(values.dtype), len(values),
+        [validity, pa.py_buffer(values)],
+    )
+
+
 def _arrow_types(schema: StructType) -> dict:
     """Arrow type per column, computed on the driver: executors cannot
     parse Spark types without a session, and the union scan needs them
@@ -832,7 +854,7 @@ class RecordDataSource(DataSource):
                     arrays[c] = pa.nulls(n * cells, type=col_pa[c])
         cols = [
             a if isinstance(a := arrays[c], pa.Array)
-            else pa.array(a, mask=masks.get(c))
+            else _to_arrow(a, masks.get(c))
             for c in columns
         ]
         # uint64 values are delivered as Arrow decimal128(20,0) — the

@@ -1661,6 +1661,12 @@ def run_foreachbatch_quality_gate(
     return _drain_feed(spark, stream_dir, run_dir, gate, n_batches, 2)
 
 
+# The persisted LM tables' schemas: reading them with the schema given
+# launches no schema-inference job.
+_BGC_SCHEMA = "w1 STRING, w2 STRING, c_bg BIGINT"
+_CTX_SCHEMA = "w1 STRING, c_u BIGINT"
+
+
 def _publish_lm(
     spark: SparkSession, run_dir: str, bgc: DataFrame, vsz: int
 ) -> None:
@@ -1674,7 +1680,10 @@ def _publish_lm(
     cache measured slower than this LM-sized round-trip."""
     _write_table(bgc, os.path.join(run_dir, "bgc"))
     _write_table(
-        spark.read.parquet(os.path.join(run_dir, "bgc")).groupBy("w1").agg(
+        spark.read.schema(_BGC_SCHEMA)
+        .parquet(os.path.join(run_dir, "bgc"))
+        .groupBy("w1")
+        .agg(
             F.coalesce(F.sum("c_bg"), F.lit(0)).alias("c_u")
         ),
         os.path.join(run_dir, "ctx"),
@@ -1690,8 +1699,8 @@ def _load_lm(spark: SparkSession, run_dir: str):
     with open(os.path.join(run_dir, "lm.json")) as f:
         vsz = json.load(f)["vsz"]
     return (
-        spark.read.parquet(os.path.join(run_dir, "bgc")),
-        spark.read.parquet(os.path.join(run_dir, "ctx")),
+        spark.read.schema(_BGC_SCHEMA).parquet(os.path.join(run_dir, "bgc")),
+        spark.read.schema(_CTX_SCHEMA).parquet(os.path.join(run_dir, "ctx")),
         vsz,
     )
 
@@ -1907,48 +1916,59 @@ def make_curation_loop(
     writes are proportional to the batch; the budget ledger has one
     row per language and is rewritten whole every batch.
 
-    ``decontam=True`` (round 14) inserts the span-level eval-
-    decontamination stage between dedup and the quality gate: batch 0
-    additionally persists the reference corpus's DISTINCT span-hash
-    set (once, like the LM — eval sets are static), and every crawl
-    batch probes its dedup survivors' spans against it, quarantining
-    docs at or above the contamination-ppm threshold before the gate
-    sees them; decisions gain a ``decon_keep`` column.
+    A crawl batch is ONE frame with one row per document, and every
+    per-document decision is a flag column on it: nothing is filtered
+    out and joined back by doc_id. Exact dedup (index probe + min-id
+    window over ``h = md5(text)``) leaves the frame hash-partitioned by
+    ``h``; the perplexity gate scores the survivors grouped by ``(h,
+    doc_id, lang)`` and joins back on ``h`` alone (survivors are unique
+    per non-NULL h), so neither adds an Exchange; the hashed classifier
+    is a per-row projection; the budget cut is one ``lang`` window over
+    all documents in which only eligible ones add tokens. The frame is
+    cached once; the decisions, the new hashes and the ledger are
+    projections of it. A stage only ever adds columns.
 
-    ``decontam="rewrite"`` (round 15, VERDICT r14 #5) is the surgical
-    posture instead: rather than dropping a contaminated document,
-    every survivor span matching the persisted reference set is CUT
-    (no keep-first — eval text must all go), under the same per-batch
-    frequent-n-gram exclusion the batch key
-    ``q_dedup_substring_decontam_rewrite`` applies, and the gate /
-    classifier / budget stages all score the REWRITTEN text; decisions
-    gain ``n_tokens_cut`` + ``rewritten_md5`` columns (0 / NULL for
-    docs dedup dropped before the stage saw them).
-    ``decontam=True`` is an alias for ``"quarantine"``."""
+    ``decontam=True`` (alias ``"quarantine"``) adds the span-level
+    eval-decontamination stage between dedup and the quality gate:
+    batch 0 additionally persists the reference corpus's DISTINCT
+    span-hash set (once, like the LM — eval sets are static), every
+    crawl batch probes its dedup survivors' spans against it, and docs
+    at or above the contamination-ppm threshold lose the ``decon_keep``
+    flag before the gate sees them.
+
+    ``decontam="rewrite"`` is the surgical posture instead: rather
+    than dropping a contaminated document, every survivor span matching
+    the persisted reference set is CUT (no keep-first — eval text must
+    all go), under the same per-batch frequent-n-gram exclusion the
+    batch key ``q_dedup_substring_decontam_rewrite`` applies, and the
+    gate / classifier / budget stages all score the REWRITTEN text
+    ``rtext``; decisions gain ``n_tokens_cut`` + ``rewritten_md5``
+    (0 / NULL for docs dedup dropped before the stage saw them), while
+    ``n_tokens`` stays the batch text's count and the budget counts the
+    classifier's tokens of the rewritten text."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
+        _SPAN_WS,
         _cap_excluded_cut,
-        _rewrite_kept,
+        _cut_ranges_per_doc,
+        _kept_expr,
         _span_quarantine,
         _span_table,
     )
     from netcdf4_variable_streamer_spark.operators.text import (
-        hashed_classifier_scores,
+        hashed_classifier_sql,
         perplexity_decisions,
         perplexity_lm,
     )
 
     mode = "quarantine" if decontam is True else decontam
+    spanref = os.path.join(run_dir, "spanref")
 
     vs = VersionedState(spark, run_dir, ("hashes",), ledgers=("budget",))
     n_batches = [0]
 
     def curate(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        ledger = (
-            batch_df.select("lang")
-            .distinct()
-            .withColumn("used", F.lit(0).cast("long"))
-        )
+        ledger = batch_df.selectExpr("lang", "0L AS used").distinct()
         # reference path iff no state version strictly older than this
         # batch exists OR the LM is unpublished — the former catches a
         # REPLAYED batch 0 after a crash between the lm.json publish
@@ -1975,223 +1995,128 @@ def make_curation_loop(
                         _span_table(batch_df.select("doc_id", "text"))
                         .select("cluster")
                         .distinct(),
-                        os.path.join(run_dir, "spanref"),
+                        spanref,
                     )
                 )
             vs.commit(
                 {
-                    "hashes": batch_df.select(
-                        F.md5("text").alias("h")
-                    ).distinct(),
+                    "hashes": batch_df.selectExpr("md5(text) AS h").distinct(),
                     "budget": ledger,
                 },
                 *writes,
             )
             return
         bgc, ctx, vsz = _load_lm(spark, run_dir)
-        b = batch_df.select(
-            "doc_id", "lang", "text",
-            F.md5("text").alias("h"),
-            F.expr(
-                "size(filter(split(text, ' '), t -> t != ''))"
-            ).cast("long").alias("n_tokens"),
+        n_sql, _ = hashed_classifier_sql("text")
+        b = batch_df.selectExpr(
+            "doc_id", "lang", "text", "md5(text) AS h", f"{n_sql} AS n_tokens"
         )
         idx = vs.read("hashes", b.select("h"))
         used = vs.read("budget", ledger)
         # stage 1: exact dedup against the standing index + in-batch
-        # min-id keeper (16-byte keys; batch-proportional probe)
-        wmin = Window.partitionBy("h")
+        # min-id keeper (16-byte keys; batch-proportional probe). The
+        # h-non-null pin: md5(NULL) is NULL and the window groups ALL
+        # NULLs into one partition, so two NULL-text docs in a batch
+        # would mark the later one a "duplicate" of nothing — and
+        # diverge from the oracle, whose equality probe never matches
+        # NULL. Docs without text are never dups.
+        wide = b.join(
+            idx.selectExpr("h", "true AS in_idx"), "h", "left"
+        ).selectExpr(
+            "*",
+            "in_idx IS NOT NULL OR (h IS NOT NULL AND doc_id != "
+            "min(doc_id) OVER (PARTITION BY h)) AS is_dup",
+        )
+        surv, stext, extra = "NOT is_dup", "text", []
+        if mode:
+            spans = _span_table(wide.filter(surv).select("doc_id", "text"))
+            sref = spark.read.schema("cluster STRING").parquet(spanref)
+        if mode == "quarantine":
+            # stage 1b: span-level eval decontamination — the survivors'
+            # span hashes probed against the persisted reference set;
+            # only (doc_id, 16-byte hash) shuffles, and the quarantine
+            # list is duplication-sized and broadcast back
+            quar = _span_quarantine(
+                spans, sref.selectExpr("cluster AS h", "1 AS hit")
+            ).selectExpr("doc_id", "true AS quar")
+            wide = wide.join(F.broadcast(quar), "doc_id", "left").selectExpr(
+                "*", "NOT is_dup AND quar IS NULL AS decon_keep"
+            )
+            surv, extra = "decon_keep", ["decon_keep"]
+        elif mode == "rewrite":
+            # stage 1b (surgical): CUT every survivor span matching the
+            # persisted reference set, the frequent-n-gram exclusion
+            # evaluated over THIS batch's hits; the merged cut ranges
+            # are contamination-sized and broadcast back
+            cuts = _cut_ranges_per_doc(
+                _cap_excluded_cut(spans.join(F.broadcast(sref), "cluster"))
+            )
+            wide = (
+                wide.join(F.broadcast(cuts), "doc_id", "left")
+                .withColumn("tk", F.split("text", _SPAN_WS))
+                .withColumn("kept", _kept_expr())
+                .selectExpr(
+                    "*",
+                    "CASE WHEN NOT is_dup THEN array_join(kept, ' ') END"
+                    " AS rtext",
+                    "CAST(coalesce(size(tk) - size(kept), 0) AS BIGINT)"
+                    " AS n_tokens_cut",
+                )
+                .selectExpr("*", "md5(rtext) AS rewritten_md5")
+            )
+            stext, extra = "rtext", ["n_tokens_cut", "rewritten_md5"]
+        # stage 2: perplexity gate under the persisted LM (per-lang
+        # cutoff over THIS batch's survivors — batch-proportional)
+        ppl = perplexity_decisions(
+            bgc, ctx, vsz, wide.filter(surv), text_col=stext, carry=("h",)
+        ).selectExpr("h", "doc_id AS p_id", "keep AS p_keep")
+        # stage 3: hashed-classifier score of the scored text + greedy
+        # budget cut against the per-language budget REMAINING from
+        # prior batches; docs the gate dropped add no tokens
+        c_tok, c_score = hashed_classifier_sql(stext)
+        cols = ["doc_id", "lang", "h", "in_idx", "is_dup", *extra,
+                "ppl_keep", "n_tokens"]
         with batch_cache() as cache:
-            # read by the survivors branch, the decisions base and the
-            # new-hash delta
-            b2 = cache(
-                b.join(idx.withColumn("in_idx", F.lit(1)), "h", "left")
-                .withColumn("min_id", F.min("doc_id").over(wmin))
-                .withColumn(
-                    "is_dup",
-                    F.col("in_idx").isNotNull()
-                    # h non-null pin: md5(NULL) is NULL and the window
-                    # groups ALL NULLs into one partition, so two
-                    # NULL-text docs in a batch would mark the later one
-                    # a "duplicate" of nothing — and diverge from the
-                    # oracle, whose equality probe never matches NULL.
-                    # Docs without text are never dups.
-                    | (
-                        F.col("h").isNotNull()
-                        & (F.col("doc_id") != F.col("min_id"))
-                    ),
+            wide = cache(
+                wide.join(ppl, "h", "left")
+                .selectExpr(
+                    "*", "coalesce(p_id = doc_id AND p_keep, false) AS ppl_keep"
+                )
+                .join(F.broadcast(used), "lang", "left")
+                .selectExpr(
+                    *cols,
+                    f"CASE WHEN ppl_keep THEN {c_tok} ELSE 0 END AS n_tok",
+                    f"CASE WHEN ppl_keep THEN {c_score} END AS score_q",
+                    "coalesce(used, 0) AS used",
+                )
+                .selectExpr(
+                    *cols,
+                    "n_tok",
+                    "n_tok > 0 AND used + sum(n_tok) OVER (PARTITION BY "
+                    "lang ORDER BY score_q DESC, doc_id ROWS BETWEEN "
+                    f"UNBOUNDED PRECEDING AND CURRENT ROW) <= {_CUR_BUDGET}"
+                    " AS sampled",
                 )
             )
-            survivors = b2.filter(~F.col("is_dup")).select(
-                "doc_id", "lang", "text", "n_tokens"
-            )
-            dkeep = None
-            rwi = None
-            if mode == "quarantine":
-                # stage 1b: span-level eval decontamination — probe the
-                # survivors' span hashes against the persisted reference
-                # set; quarantine at the contamination-ppm threshold.
-                # Only (doc_id, 16-byte hash) shuffles; the quarantine
-                # list is duplication-sized and broadcast.
-                sref = (
-                    spark.read.parquet(os.path.join(run_dir, "spanref"))
-                    .withColumnRenamed("cluster", "h")
-                    .withColumn("hit", F.lit(1))
-                )
-                # ONE broadcast frame feeds both consumers below, so the
-                # span-probe aggregation plans (and broadcasts) once —
-                # ReuseExchange needs the two subplans canonically equal
-                quar = F.broadcast(
-                    _span_quarantine(
-                        _span_table(survivors.select("doc_id", "text")),
-                        sref,
-                    ).withColumn("qflag", F.lit(1))
-                )
-                dkeep = (
-                    survivors.select("doc_id")
-                    .join(quar, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.col("qflag").isNull().alias("decon_keep"),
-                    )
-                )
-                survivors = survivors.join(quar, "doc_id", "left_anti")
-            elif mode == "rewrite":
-                # stage 1b (surgical): CUT every survivor span matching
-                # the persisted reference set — the batch decontam-rewrite
-                # key's semantics run per micro-batch. The frequent-n-gram
-                # exclusion is evaluated over THIS batch's hits (batch-
-                # proportional, like every other stage); the cut table is
-                # contamination-sized and bounded by the exclusion, so the
-                # broadcast inside _rewrite_kept is defensible by
-                # construction. Both downstream consumers (survivors +
-                # the decisions columns) derive from the ONE rw frame, so
-                # the cut subtree's exchanges are canonically equal and
-                # reused rather than recomputed.
-                sref = spark.read.parquet(
-                    os.path.join(run_dir, "spanref")
-                ).select("cluster")
-                hits = _span_table(
-                    survivors.select("doc_id", "text")
-                ).join(F.broadcast(sref), "cluster")
-                cut = _cap_excluded_cut(hits)
-                # the span-cut walk feeds the decisions columns (rwi)
-                # and the gate/classifier/budget chain (survivors)
-                rw = cache(
-                    _rewrite_kept(
-                        cut, survivors, extra_cols=("lang", "n_tokens")
-                    ).withColumn("rtext", F.array_join("kept", " "))
-                )
-                rwi = rw.select(
-                    "doc_id",
-                    (F.size("tk") - F.size("kept"))
-                    .cast("long")
-                    .alias("n_tokens_cut"),
-                    F.md5("rtext").alias("rewritten_md5"),
-                )
-                # the gate, classifier and budget all score the REWRITTEN
-                # text from here on (the whole point of the posture)
-                survivors = rw.select(
-                    "doc_id",
-                    "lang",
-                    F.col("rtext").alias("text"),
-                    "n_tokens",
-                )
-            # stage 2: perplexity gate under the persisted LM (per-lang
-            # cutoff over THIS batch's survivors — batch-proportional).
-            # The scored frame feeds the gate chain (kept -> classifier
-            # -> samp) and the decisions plan's ppl_keep column
-            ppl = cache(perplexity_decisions(bgc, ctx, vsz, survivors))
-            kept = survivors.join(
-                ppl.filter(F.col("keep")).select("doc_id"), "doc_id"
-            )
-            # stage 3: hashed-classifier score + greedy budget cut against
-            # the per-language budget REMAINING from prior batches
-            scored = hashed_classifier_scores(kept)
-            wcum = (
-                Window.partitionBy("lang")
-                .orderBy(F.desc("score_q"), "doc_id")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            # read by the decisions write AND the budget-ledger write
-            samp = cache(
-                scored.join(F.broadcast(used), "lang", "left")
-                .withColumn("cum", F.sum("n_tokens").over(wcum))
-                .withColumn(
-                    "sampled",
-                    F.coalesce(F.col("used"), F.lit(0)) + F.col("cum")
-                    <= _CUR_BUDGET,
-                )
-            )
-            dec = (
-                b2.select("doc_id", "lang", "is_dup", "n_tokens")
-                .join(
-                    ppl.select(
-                        "doc_id", F.col("keep").alias("ppl_keep")
-                    ),
-                    "doc_id", "left",
-                )
-                .join(samp.select("doc_id", "sampled"), "doc_id", "left")
-            )
-            if mode == "quarantine":
-                dec = dec.join(dkeep, "doc_id", "left")
-            elif mode == "rewrite":
-                dec = dec.join(rwi, "doc_id", "left")
-            dec_out = dec.select(
-                "doc_id", "lang",
-                F.lit(batch_id).cast("long").alias("batch"),
-                "is_dup",
-                *(
-                    [
-                        F.coalesce(
-                            F.col("decon_keep"), F.lit(False)
-                        ).alias("decon_keep")
-                    ]
-                    if mode == "quarantine"
-                    else []
-                ),
-                *(
-                    [
-                        F.coalesce(F.col("n_tokens_cut"), F.lit(0))
-                        .cast("long")
-                        .alias("n_tokens_cut"),
-                        F.col("rewritten_md5"),
-                    ]
-                    if mode == "rewrite"
-                    else []
-                ),
-                F.coalesce(F.col("ppl_keep"), F.lit(False)).alias(
-                    "ppl_keep"
-                ),
-                "n_tokens",
-                F.coalesce(F.col("sampled"), F.lit(False)).alias(
-                    "sampled"
-                ),
-            )
-            # the hashes the probe found no match for, from the
-            # persisted b2: the index stays a set with no extra scan
             new_h = (
-                b2.filter(F.col("in_idx").isNull() & F.col("h").isNotNull())
+                wide.filter("in_idx IS NULL AND h IS NOT NULL")
                 .select("h")
                 .distinct()
             )
-            batch_used = (
-                samp.filter(F.col("sampled"))
-                .groupBy("lang")
-                .agg(F.sum("n_tokens").alias("bu"))
-            )
-            new_used = used.join(batch_used, "lang", "full").select(
-                "lang",
-                (
-                    F.coalesce(F.col("used"), F.lit(0))
-                    + F.coalesce(F.col("bu"), F.lit(0))
-                ).alias("used"),
-            )
             vs.commit(
                 {
-                    "dec": dec_out,
+                    "dec": wide.selectExpr(
+                        "doc_id", "lang", f"{batch_id}L AS batch", "is_dup",
+                        *extra, "ppl_keep", "n_tokens", "sampled",
+                    ),
                     "hashes": vs.rows(idx, new_h),
-                    "budget": new_used,
+                    "budget": used.unionByName(
+                        wide.filter("sampled").selectExpr(
+                            "lang", "n_tok AS used"
+                        )
+                    )
+                    .groupBy("lang")
+                    .agg(F.expr("sum(used) AS used")),
                 }
             )
 

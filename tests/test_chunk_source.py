@@ -955,3 +955,135 @@ def test_mixed_encoding_store_reads_exactly(spark, tmp_path):
             got = pdf[v].to_numpy()
             assert got.dtype == a.dtype, v
             np.testing.assert_array_equal(got, a, err_msg=v)
+
+
+# ---------------------------------------------------------------------------
+# Python workers read every container without importing pandas, and the
+# streamed writer publishes the meta sidecar once per stream_block call.
+# ---------------------------------------------------------------------------
+
+_WORKER_READ = """
+import pickle, sys
+import pyspark.worker  # noqa: F401  (what a Spark Python worker has loaded)
+with open(sys.argv[1], "rb") as f:
+    jobs = pickle.load(f)
+read = [list(reader.read(part)) for reader, part in jobs]
+pandas_loaded = "pandas" in sys.modules
+# as raw bytes: converting Arrow columns to NumPy may import pandas
+out = [{n: [(b.column(n).type.to_pandas_dtype().__name__,
+             b.column(n).buffers()[1].to_pybytes()) for b in batches]
+        for n in batches[0].schema.names} for batches in read]
+with open(sys.argv[2], "wb") as f:
+    pickle.dump((out, pandas_loaded), f)
+"""
+
+
+def test_worker_reads_containers_without_pandas(spark, tmp_path):
+    """A fresh process with ``pyspark.worker`` imported unpickles the
+    chunk-store, NetCDF-3 and NetCDF-4 readers, reads one partition of
+    each, gets the closed-form grid exactly, and never imports pandas
+    (about 0.13 s on a worker's first read)."""
+    import pickle
+    import subprocess
+    import sys
+
+    from netcdf4_variable_streamer_spark.sources.netcdf3_source import (
+        FORMAT3_NAME,
+        NetCDF3DataSource,
+    )
+    from netcdf4_variable_streamer_spark.sources.netcdf4_source import (
+        FORMAT4_NAME,
+        NetCDF4DataSource,
+    )
+
+    jobs = []
+    for ds, name, path in (
+        (NetCDFChunkDataSource, FORMAT_NAME, srcq.ensure_grid()),
+        (NetCDF3DataSource, FORMAT3_NAME, srcq.ensure_nc3()),
+        (NetCDF4DataSource, FORMAT4_NAME, srcq.ensure_nc4()),
+    ):
+        spark.dataSource.register(ds)
+        schema = spark.read.format(name).option("path", path).load().schema
+        reader = ds({"path": path}).reader(schema)
+        jobs.append((reader, reader.partitions()[0]))
+    src, dst = tmp_path / "jobs.pkl", tmp_path / "out.pkl"
+    src.write_bytes(pickle.dumps(jobs))
+    subprocess.run([sys.executable, "-c", _WORKER_READ, str(src), str(dst)],
+                   check=True, cwd=os.path.dirname(os.path.dirname(
+                       os.path.abspath(__file__))))
+    out, pandas_loaded = pickle.loads(dst.read_bytes())
+    cells = srcq.GRID_Y * srcq.GRID_X
+    for raw in out:
+        cols = {n: [np.frombuffer(b, dtype=dt) for dt, b in parts]
+                for n, parts in raw.items()}
+        t = np.concatenate(cols["time_idx"])
+        t0, n = int(t[0]), len(t) // cells
+        assert n > 0
+        np.testing.assert_array_equal(
+            t, np.repeat(np.arange(t0, t0 + n), cells))
+        want = srcq.grid_values(t0, n)
+        for v in ("temperature", "humidity"):
+            np.testing.assert_array_equal(
+                np.concatenate(cols[v]), want[v].reshape(-1), err_msg=v)
+    assert not pandas_loaded
+
+
+def test_to_arrow_matches_pa_array():
+    """The buffer-built Arrow column equals ``pa.array(values, mask)``
+    for integer and float kinds, with and without NULLs, and takes
+    big-endian input by value; other kinds fall back to ``pa.array``."""
+    from netcdf4_variable_streamer_spark.sources.records_source import (
+        _to_arrow,
+    )
+
+    mask = np.arange(13) % 3 == 0
+    for dt in ("<i2", ">i4", "<i8", "<u4", ">f4", "<f8"):
+        a = np.arange(13).astype(dt)
+        for m in (None, mask, np.zeros(13, bool)):
+            got = _to_arrow(a, m)
+            want = pa.array(a.astype(a.dtype.newbyteorder("=")), mask=m)
+            assert got.equals(want), (dt, m)
+    t = np.arange(3).astype("datetime64[us]")
+    assert _to_arrow(t, None).equals(pa.array(t))
+
+
+def test_stream_block_saves_meta_once(tmp_path, monkeypatch):
+    """One multi-chunk ``stream_block`` call writes its chunk files and
+    then saves the meta sidecar once, listing only files already on
+    disk; ``close`` saves once more for the remainder, and the data
+    reads back exactly."""
+    from netcdf4_variable_streamer_spark.sources.chunkstore import (
+        StreamedDataset,
+    )
+
+    path = str(tmp_path / "s")
+    saves = []
+    save_meta = ChunkStore._save_meta
+
+    def spy(store):
+        saves.append(all(os.path.exists(os.path.join(path, ch.file))
+                         for ch in store.chunks))
+        save_meta(store)
+
+    ds = StreamedDataset(path, "w")
+    ds.create_dimension("time", None)
+    ds.create_dimension("y", 2)
+    ds.create_dimension("x", 3)
+    var = ds.create_streamed_variables(
+        {"v": "float32"}, ("time", "y", "x"), chunk_size_mb=4 * 24 / 2**20)
+    assert var.lines_per_buffer == 4
+    monkeypatch.setattr(ChunkStore, "_save_meta", spy)
+    data = np.arange(38 * 6, dtype=np.float32).reshape(38, 2, 3)
+    var.stream_block({"v": data[:30]})  # 7 chunks + 2 buffered lines
+    assert saves == [True]
+    var.stream_block({"v": data[30:31]})  # fills no chunk: no save
+    assert saves == [True]
+    var.stream_block({"v": data[31:]})
+    ds.close()
+    assert saves == [True, True, True]
+    store = ChunkStore.open(path)
+    assert [c.n_lines for c in store.list_chunks()] == [4] * 9 + [2]
+    got = np.concatenate(
+        [b["v"] for _, b in StreamedDataset(path, "r").variable(
+            ("time", "y", "x")).yield_blocks()])
+    np.testing.assert_array_equal(got, data)

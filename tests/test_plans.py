@@ -910,18 +910,20 @@ def test_pipeline_curation_posture(spark):
 # (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin,
 # Window) of the keys built on the hashed classifier and the curation
 # funnel: as registered, then (composites) with materialize_once replaced
-# by identity so the whole composed plan is counted
+# by identity so the whole composed plan is counted. The classifier is a
+# per-row projection (no explode, no aggregation), so each use of it
+# plans no Exchange of its own.
 _CURATION_PLAN_SHAPES = {
-    "q_text_classifier_score": (6, 1, 0, 0, 0),
-    "q_sample_token_budget": (4, 0, 0, 0, 1),
-    "q_pipeline_curation": (30, 20, 0, 1, 0),
-    "q_pipeline_curation_full": (30, 21, 0, 1, 0),
-    "q_pipeline_curation_surgical": (30, 21, 0, 1, 0),
+    "q_text_classifier_score": (2, 1, 0, 0, 0),
+    "q_sample_token_budget": (2, 0, 0, 0, 1),
+    "q_pipeline_curation": (26, 20, 0, 1, 0),
+    "q_pipeline_curation_full": (26, 21, 0, 1, 0),
+    "q_pipeline_curation_surgical": (26, 21, 0, 1, 0),
 }
 _CURATION_UNMATERIALIZED_SHAPES = {
-    "q_pipeline_curation": (51, 20, 0, 1, 21),
-    "q_pipeline_curation_full": (136, 63, 0, 1, 64),
-    "q_pipeline_curation_surgical": (241, 105, 0, 1, 169),
+    "q_pipeline_curation": (47, 20, 0, 1, 21),
+    "q_pipeline_curation_full": (132, 63, 0, 1, 64),
+    "q_pipeline_curation_surgical": (237, 105, 0, 1, 169),
 }
 
 
@@ -942,8 +944,46 @@ def test_curation_plan_shapes_pinned(spark, monkeypatch):
     assert got == _CURATION_UNMATERIALIZED_SHAPES
 
 
+def test_hashed_classifier_per_row_equals_explode_form(spark):
+    """hashed_classifier_scores is a per-row projection now; it returns
+    exactly what the token explode + (doc, bucket) count + weighted doc
+    sum returned, on the documents plus a NULL text, an all-space text
+    and a one-token text (the first two score no row)."""
+    from pyspark.sql import functions as F
+
+    from netcdf4_variable_streamer_spark.operators.dedup import _md5_int
+    from netcdf4_variable_streamer_spark.operators.text import (
+        hashed_classifier_scores,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "lang", "text"
+    ).unionByName(spark.createDataFrame(
+        [(-1, "en", None), (-2, "en", "   "), (-3, "de", "word")],
+        "doc_id long, lang string, text string",
+    ))
+    toks = (
+        docs.filter(F.length("text") > 0)
+        .select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
+        .filter(F.col("tok") != "")
+    )
+    feats = toks.groupBy(
+        "doc_id", "lang", (_md5_int(F.col("tok"), 7) % 4096).alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    w = _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001 - 1000
+    want = feats.groupBy("doc_id", "lang").agg(
+        F.sum("cnt").alias("n_tokens"),
+        F.sum(F.col("cnt") * w).alias("score_q"),
+    )
+    got = hashed_classifier_scores(docs)
+    assert got.dtypes == want.dtypes
+    got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+    assert got_rows == want_rows
+    assert [r.doc_id for r in got_rows if r.doc_id < 0] == [-3]
+
+
 def test_token_budget_single_window(spark):
-    """q_sample_token_budget: scoring aggs + exactly one
+    """q_sample_token_budget: per-row scoring + exactly one
     lang-partitioned running-sum window; no joins at all."""
     df = build(spark, "q_sample_token_budget")
     plan = plans.plan_string(df)

@@ -130,6 +130,15 @@ def test_datasource_builders_apply_runtime_confs():
     )
 
 
+def test_codegen_cache_holds_a_loop_of_plans():
+    """The static codegen class cache is sized so that a streaming
+    loop's repeated micro-batch plans stay compiled (the default 100
+    evicts them between batches)."""
+    from netcdf4_variable_streamer_spark.session import BUILD_CONFS
+
+    assert int(BUILD_CONFS["spark.sql.codegen.cache.maxEntries"]) >= 1024
+
+
 def test_driver_memory_sized_to_box(tmp_path):
     """spark.driver.memory is half the box's MemTotal, capped at 16g:
     the session never asks for more heap than the box has."""

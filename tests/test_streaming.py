@@ -1154,6 +1154,81 @@ def test_crawl_loop_recovery_ignores_uncommitted_version(
     shutil.rmtree(feed, ignore_errors=True)
 
 
+def _curation_run_dir(spark, tmp_path):
+    """A curation run_dir past its reference batch, the documents frame,
+    and the loop closure."""
+    import os
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text", "lang"
+    )
+    run_dir = str(tmp_path / "cur")
+    os.makedirs(run_dir)
+    curate, _n = sq.make_curation_loop(spark, run_dir)
+    curate(docs.filter(f"doc_id < {sq._CUR_REF_SPLIT}"), 0)
+    return run_dir, docs, curate
+
+
+def test_curation_crawl_batch_jobs_and_round_trips(
+    spark, tmp_path, monkeypatch
+):
+    """A curation crawl batch is one wide frame cached once: it runs at
+    most 20 Spark jobs, and building its plan (everything before the
+    commit writes start) crosses to the JVM at most 500 times — its
+    expressions are SQL text, not trees of Column calls."""
+    import threading
+
+    _run_dir, docs, curate = _curation_run_dir(spark, tmp_path)
+    curate(docs.filter(
+        f"doc_id >= {sq._CUR_REF_SPLIT} AND doc_id < {sq._CUR_BATCH_SPLIT}"
+    ), 1)
+    client = type(spark.sparkContext._gateway._gateway_client)
+    send = client.send_command
+    me, calls, building = threading.get_ident(), [0], [True]
+
+    def counting(self, *args, **kwargs):
+        if building[0] and threading.get_ident() == me:
+            calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    overlap = sq._overlap_jobs
+
+    def writes(*thunks):
+        building[0] = False
+        overlap(*thunks)
+
+    sc = spark.sparkContext
+    group = "curation_crawl_batch"
+    monkeypatch.setattr(client, "send_command", counting)
+    monkeypatch.setattr(sq, "_overlap_jobs", writes)
+    sc.setJobGroup(group, group)
+    try:
+        curate(docs.filter(f"doc_id >= {sq._CUR_BATCH_SPLIT}"), 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.setattr(client, "send_command", send)
+    assert 0 < calls[0] <= 500, calls[0]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 20, len(jobs)
+
+
+def test_load_lm_launches_no_job(spark, tmp_path):
+    """The persisted LM is read with its known schema: building the
+    frames :func:`_load_lm` returns runs no schema-inference job."""
+    run_dir, _docs, _curate = _curation_run_dir(spark, tmp_path)
+    sc = spark.sparkContext
+    group = "load_lm"
+    sc.setJobGroup(group, group)
+    try:
+        bgc, ctx, _vsz = sq._load_lm(spark, run_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert bgc.dtypes == [("w1", "string"), ("w2", "string"),
+                          ("c_bg", "bigint")]
+    assert ctx.dtypes == [("w1", "string"), ("c_u", "bigint")]
+
+
 def test_curation_null_text_docs_never_dedup(spark, tmp_path):
     """Round-15 self-review regression: md5(NULL) is NULL and the
     in-batch keeper window groups every NULL into ONE partition, so
