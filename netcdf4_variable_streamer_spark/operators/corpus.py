@@ -1444,7 +1444,6 @@ from netcdf4_variable_streamer_spark.operators.dedup import (  # noqa: E402
     _SPAN_CTE_SQL,
     _SXC_QUARANTINE_PPM,
     _SXC_SPLIT,
-    _md5_int,
     _rewrite_kept,
     _rewrite_ranges_cte_sql,
     _sdr_cut,
@@ -1799,65 +1798,41 @@ ORDER BY doc_id
         "doc_id tie-break) keeps the cut bit-identical cross-engine. "
         "100 TB: the cut table is bounded by the _SDR_MAX_OCC "
         "frequent-n-gram exclusion and broadcasts into ONE map-side "
-        "reassembly (shared with the rewrite keys); scoring shuffles "
-        "only (doc_id, bucket, cnt) partial aggregates — document "
-        "text enters the scan and the map stage, never an Exchange "
+        "reassembly (shared with the rewrite keys); scoring is a "
+        "per-row fold over the kept tokens — document text enters "
+        "the scan and the map stage, never an Exchange "
         "[plan-enforced]; the budget window is the same lang-"
         "partitioned running SUM as q_sample_token_budget (per-"
         "language sort parallelism = lang cardinality; pre-bucket by "
         "score range for a skewed single-language corpus).",
 )
 def q_sample_budget_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from netcdf4_variable_streamer_spark.operators.text import (
+        hashed_classifier_sql,
+    )
+
     crawl = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") >= _SXC_SPLIT
     )
     k = _rewrite_kept(_sdr_cut(spark, sf_dir), crawl, extra_cols=("lang",))
-    # ONE exploded pass computes both the post-rewrite token count
-    # and the quality score, so the span/cut subtree plans once and
-    # the corpus is scanned once. explode_outer keeps fully-cut docs
-    # (kept = []) as a single NULL-token row; empty-string split
-    # artifacts share the NULL bucket (excluded from scoring, like
-    # the oracle's tok <> '') but count(tok) counts them toward
-    # n_tokens_after while skipping the outer NULL row — exactly
-    # size(kept), the rewrite keys' accounting.
-    ex = k.select(
-        "doc_id", "lang", F.explode_outer("kept").alias("tok")
-    )
-    feats = ex.groupBy(
-        "doc_id", "lang",
-        F.when(
-            F.col("tok").isNotNull() & (F.col("tok") != ""),
-            _md5_int(F.col("tok"), 7) % 4096,
-        ).alias("bucket"),
-    ).agg(F.count("tok").alias("cnt"))
-    wgt = (
-        _md5_int(F.concat(F.lit("w:"), F.col("bucket")), 7) % 2001
-        - 1000
-    )
-    scored = feats.groupBy("doc_id", "lang").agg(
-        F.sum("cnt").cast("long").alias("n_tokens_after"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("bucket").isNotNull(),
-                    F.col("cnt") * wgt,
-                )
-            ),
-            F.lit(0),
-        ).cast("long").alias("score_q"),
-    )
-    w = (
-        Window.partitionBy("lang")
-        .orderBy(F.desc("score_q"), F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # scored per row over the kept tokens (no token contains a space,
+    # so splitting their join gives them back); n_tokens_after is
+    # size(kept), which also counts the empty-string split artifacts
+    # the classifier drops — the rewrite keys' accounting. A fully-cut
+    # document keeps its row with 0 tokens and score 0.
+    _, score_q = hashed_classifier_sql("array_join(kept, ' ')")
+    scored = k.selectExpr(
+        "doc_id", "lang", "CAST(size(kept) AS BIGINT) AS n_tokens_after",
+        f"{score_q} AS score_q",
     )
     return (
-        scored.withColumn("cum_tokens", F.sum("n_tokens_after").over(w))
-        .select(
-            "doc_id", "lang", "n_tokens_after", "score_q",
-            "cum_tokens",
-            (F.col("cum_tokens") <= _BDC_BUDGET).alias("kept"),
+        scored.selectExpr(
+            "*",
+            "sum(n_tokens_after) OVER (PARTITION BY lang ORDER BY score_q "
+            "DESC, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT "
+            "ROW) AS cum_tokens",
         )
+        .selectExpr("*", f"cum_tokens <= {_BDC_BUDGET} AS kept")
         .orderBy("doc_id")
     )
 

@@ -162,10 +162,6 @@ def _write_table(df: DataFrame, path: str) -> None:
 # next batch writes a new base instead of a delta (compaction), so a
 # state read lists at most _COMPACT_AFTER + 1 directories.
 _COMPACT_AFTER = 16
-# Written into a loop's run_dir when the loop first opens it empty: its
-# versions are bases and deltas. A run_dir without it holds full
-# snapshots only.
-_DELTA_LAYOUT = "delta_layout"
 
 
 class VersionedState:
@@ -188,41 +184,24 @@ class VersionedState:
     that every batch rewrites whole; they are read from the newest
     committed version alone.
 
-    A run_dir opened empty gets the _DELTA_LAYOUT file. A run_dir
-    without it holds full snapshots, written before deltas existed:
-    every committed version is a base and every batch writes one, so
-    it resumes with the same decisions. A run_dir with state tables but
-    no marker at all comes from the pre-marker protocol; a marker is
-    minted for every version whose tables are all complete (parquet
-    ``_SUCCESS`` present). That scan never runs once any marker exists:
-    a newer version whose tables completed while a sibling write tore
-    must stay invisible."""
+    With ``ttl``, the state is a retention horizon instead: batch N
+    reads the committed versions in ``[N - ttl, N)`` and never writes a
+    base, and once its marker is on disk it deletes the state tables of
+    every version older than ``N - ttl``. Decisions (``dec_v*``) and
+    markers stay."""
 
     def __init__(
-        self, spark: SparkSession, run_dir: str, tables: tuple,
-        ledgers: tuple = (),
+        self, spark: SparkSession, run_dir: str, ledgers: tuple = (),
+        ttl: int | None = None,
     ):
-        self.spark, self.run_dir, self.ledgers = spark, run_dir, ledgers
-        layout = os.path.join(run_dir, _DELTA_LAYOUT)
-        if not _versions(run_dir, "commit_v"):
-            old = _versions(run_dir, f"{tables[0]}_v")
-            if not old:
-                open(layout, "w").close()
-            for v in old:
-                if all(
-                    os.path.exists(self._path(t, v, "_SUCCESS"))
-                    for t in (*tables, *ledgers)
-                ):
-                    open(self._path("commit", v), "w").close()
-        self.deltas = os.path.exists(layout)
+        self.spark, self.run_dir = spark, run_dir
+        self.ledgers, self.ttl = ledgers, ttl
         self.batch_id, self.read_versions, self.base = -1, [], True
 
     def _path(self, table: str, version: int, *more: str) -> str:
         return os.path.join(self.run_dir, f"{table}_v{version}", *more)
 
     def _is_base(self, version: int) -> bool:
-        if not self.deltas:
-            return True
         with open(self._path("commit", version)) as f:
             return f.read() == "base"
 
@@ -232,16 +211,17 @@ class VersionedState:
         done = [
             v for v in _versions(self.run_dir, "commit_v") if v < batch_id
         ]
+        self.batch_id = batch_id
+        if self.ttl is not None:
+            self.read_versions = [v for v in done if v >= batch_id - self.ttl]
+            self.base = False
+            return bool(self.read_versions)
         start = next(
             (i for i in reversed(range(len(done))) if self._is_base(done[i])),
             0,
         )
-        self.batch_id, self.read_versions = batch_id, done[start:]
-        self.base = (
-            not self.deltas
-            or not done
-            or len(self.read_versions) > _COMPACT_AFTER
-        )
+        self.read_versions = done[start:]
+        self.base = not done or len(self.read_versions) > _COMPACT_AFTER
         return bool(done)
 
     def read(self, table: str, like: DataFrame) -> DataFrame:
@@ -261,7 +241,8 @@ class VersionedState:
 
     def commit(self, frames: dict, *thunks) -> None:
         """Write each ``{table: frame}`` to this batch's version,
-        overlapped with ``thunks``, then the marker."""
+        overlapped with ``thunks``, then the marker; with ``ttl``, then
+        evict the versions behind the horizon."""
         _overlap_jobs(
             *thunks,
             *(
@@ -276,6 +257,17 @@ class VersionedState:
         with open(marker + ".tmp", "w") as f:
             f.write("base" if self.base else "")
         os.replace(marker + ".tmp", marker)
+        if self.ttl is None:
+            return
+        # The horizon keeps ttl + 1 versions, one more than the next
+        # batch probes: a checkpoint replay of batch N (a crash between
+        # foreachBatch returning and the checkpoint commit) must still
+        # find its [N - ttl, N) probe window on disk.
+        for v in _versions(self.run_dir, "commit_v"):
+            if v >= self.batch_id - self.ttl:
+                break
+            for t in frames.keys() - {"dec"}:
+                shutil.rmtree(self._path(t, v), ignore_errors=True)
 
 
 def run_to_completion(
@@ -1096,16 +1088,13 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
     index docs its candidate pairs name, then writes only its own bands
     and docs, so the bytes a batch writes are proportional to the
     batch, not to the stream's age (apart from a compacting batch every
-    _COMPACT_AFTER + 1). A run_dir that already holds ``sh_v*`` tables
-    keeps that older layout: the index docs as their shingle arrays
-    (``sh``), which enter the verify as arrays. RESTART-SAFE: nothing
-    is cached in memory — every call recovers the committed state
-    strictly older than its batch from disk, so a restarted driver (or
-    a fresh closure) resumes with exactly the state the failed run had
-    committed. Decisions write to ``dec_v{N}`` with overwrite, so a
-    replayed micro-batch is idempotent; the exactly-once story is
-    versioned paths + overwrite + marker last, not the checkpoint
-    alone."""
+    _COMPACT_AFTER + 1). RESTART-SAFE: nothing is cached in memory —
+    every call recovers the committed state strictly older than its
+    batch from disk, so a restarted driver (or a fresh closure) resumes
+    with exactly the state the failed run had committed. Decisions
+    write to ``dec_v{N}`` with overwrite, so a replayed micro-batch is
+    idempotent; the exactly-once story is versioned paths + overwrite
+    + marker last, not the checkpoint alone."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
         MAX_BUCKET,
         _incremental_decisions,
@@ -1113,8 +1102,7 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
         _shingled,
     )
 
-    doc_table = "sh" if _versions(run_dir, "sh_v") else "docs"
-    vs = VersionedState(spark, run_dir, ("bands", doc_table))
+    vs = VersionedState(spark, run_dir)
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
@@ -1122,21 +1110,20 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
         b = batch_df.select("doc_id", "text")
         with batch_cache() as cache:
             # the shingle pass feeds the probe, the verify and the bands
-            # write (and the sh write of the older layout)
+            # write
             batch_sh = cache(_shingled(b, "doc_id", "text"))
             new_bands = _minhash_band_table(batch_sh)
-            new_docs = batch_sh if doc_table == "sh" else b
-            frames = {"bands": new_bands, doc_table: new_docs}
+            frames = {"bands": new_bands, "docs": b}
             if vs.recover(batch_id):
                 idx_bands = vs.read("bands", new_bands)
-                idx_docs = vs.read(doc_table, new_docs)
+                idx_docs = vs.read("docs", b)
                 frames = {
                     "dec": _incremental_decisions(
                         idx_bands, idx_docs, batch_sh, b.select("doc_id"),
                         qthr=6000, max_bucket=MAX_BUCKET,
                     ),
                     "bands": vs.rows(idx_bands, new_bands),
-                    doc_table: vs.rows(idx_docs, new_docs),
+                    "docs": vs.rows(idx_docs, b),
                 }
             vs.commit(frames)
 
@@ -1144,13 +1131,14 @@ def make_crawl_loop(spark: SparkSession, run_dir: str):
 
 
 def read_crawl_decisions(spark: SparkSession, run_dir: str) -> DataFrame:
-    """Union of every versioned decision directory the crawl loop
-    committed under ``run_dir``."""
-    dec_dirs = sorted(
-        os.path.join(run_dir, p)
-        for p in os.listdir(run_dir)
-        if p.startswith("dec_v")
-    )
+    """Union of the ``dec_v{N}`` of every version a loop committed under
+    ``run_dir``, in version order. A torn version's decisions (no
+    ``commit_v{N}`` marker) are not read."""
+    dec_dirs = [
+        p
+        for v in _versions(run_dir, "commit_v")
+        if os.path.isdir(p := os.path.join(run_dir, f"dec_v{v}"))
+    ]
     if not dec_dirs:
         raise ValueError(f"no crawl decisions under {run_dir}")
     return spark.read.parquet(*dec_dirs)
@@ -1282,7 +1270,7 @@ def make_substring_crawl_loop(spark: SparkSession, run_dir: str):
         _winnow_anchors_of,
     )
 
-    vs = VersionedState(spark, run_dir, ("anch", "spcl"))
+    vs = VersionedState(spark, run_dir)
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
@@ -1358,7 +1346,7 @@ def _stream_sxc_oracle() -> str:
         "anchors and its clusters new to the index as a delta of the "
         "versioned parquet state under the commit-marker-last "
         "protocol (idempotent decision "
-        "overwrite; pre-marker backfill; restart re-proven with the "
+        "overwrite; restart re-proven with the "
         "stage armed in tests/test_streaming.py::"
         "test_substring_crawl_loop_restart). Per-batch probe cost is "
         "proportional to the BATCH (batch anchors x broadcast index "
@@ -1393,84 +1381,34 @@ _SXC_TTL_SPLITS = (150, 400)  # 3 batches: [0,150), [150,400), [400,…)
 def make_substring_ttl_loop(
     spark: SparkSession, run_dir: str, ttl: int = 1
 ):
-    """foreachBatch closure: per-batch anchor/cluster index tables
-    (``anch_b{N}`` / ``spcl_b{N}``, marker-last), probes against the
-    union of the last ``ttl`` committed batches only, and EVICTS
-    batch indexes older than the horizon (directories deleted)."""
+    """foreachBatch closure: the :func:`make_substring_crawl_loop` index
+    pair kept per batch (each batch writes its own ``anch_v{N}`` /
+    ``spcl_v{N}``) in a :class:`VersionedState` with retention horizon
+    ``ttl``: a batch probes the union of the last ``ttl`` committed
+    batches only, and its commit deletes the batch indexes older than
+    the horizon."""
     from netcdf4_variable_streamer_spark.operators.dedup import (
         _span_table,
         _winnow_anchors_of,
     )
 
+    vs = VersionedState(spark, run_dir, ttl=ttl)
     n_batches = [0]
 
     def crawl(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
         b = batch_df.select("doc_id", "text")
-        retained = [
-            v
-            for v in _versions(run_dir, "commit_b")
-            if batch_id - ttl <= v < batch_id
-        ]
         with batch_cache() as cache:
-            # the winnow-anchor pass feeds the probe AND the anch_b write
+            # the winnow-anchor pass feeds the probe AND the anch write
             b_anch = cache(_winnow_anchors_of(b))
-            # independent write actions on independent paths —
-            # overlapped, marker still strictly last
-            writes = []
-            if retained:
-                idx_anch = spark.read.parquet(
-                    *[
-                        os.path.join(run_dir, f"anch_b{v}")
-                        for v in retained
-                    ]
-                )
-                idx_spcl = spark.read.parquet(
-                    *[
-                        os.path.join(run_dir, f"spcl_b{v}")
-                        for v in retained
-                    ]
-                ).distinct()
-                dec = _substring_probe(b, b_anch, idx_anch, idx_spcl)
-                writes.append(
-                    lambda df=dec: _write_table(
-                        df, os.path.join(run_dir, f"dec_v{batch_id}")
-                    )
-                )
-            writes.append(
-                lambda df=b_anch: _write_table(
-                    df, os.path.join(run_dir, f"anch_b{batch_id}")
-                )
-            )
             b_spcl = _span_table(b).select("cluster").distinct()
-            writes.append(
-                lambda df=b_spcl: _write_table(
-                    df, os.path.join(run_dir, f"spcl_b{batch_id}")
+            frames = {"anch": b_anch, "spcl": b_spcl}
+            if vs.recover(batch_id):
+                frames["dec"] = _substring_probe(
+                    b, b_anch, vs.read("anch", b_anch),
+                    vs.read("spcl", b_spcl).distinct(),
                 )
-            )
-            _overlap_jobs(*writes)
-            with open(
-                os.path.join(run_dir, f"commit_b{batch_id}"), "w"
-            ):
-                pass
-            # TTL eviction: batch indexes older than the horizon are
-            # REMOVED from disk — state is bounded by ttl+1 batch
-            # indexes. The horizon deliberately keeps ONE batch beyond
-            # what the NEXT batch will probe: a checkpoint replay of
-            # batch N (crash between foreachBatch returning and the
-            # checkpoint commit) must still find its [N-ttl, N) probe
-            # window on disk — evicting up to batch_id-ttl+1 here
-            # would delete exactly that and make the restart
-            # unrecoverable (round-16 code-review finding,
-            # replay-pinned in
-            # tests/test_streaming.py::test_substring_ttl_replay_safe).
-            for v in _versions(run_dir, "commit_b"):
-                if v < batch_id - ttl:
-                    for t in ("anch", "spcl"):
-                        shutil.rmtree(
-                            os.path.join(run_dir, f"{t}_b{v}"),
-                            ignore_errors=True,
-                        )
+            vs.commit(frames)
 
     return crawl, n_batches
 
@@ -1520,9 +1458,12 @@ ORDER BY doc_id
         "the bounded-state twin of q_stream_dedup_substring_anchored, "
         "mirroring what the minhash loop's TTL key proves for "
         "document-level dedup: the winnow-anchor/span-cluster index "
-        "is kept PER BATCH, each batch probes only the last ttl=1 "
-        "committed batches, and older batch indexes are DELETED from "
-        "disk (eviction asserted on the real directories in "
+        "is kept PER BATCH as the versions of a VersionedState with "
+        "a retention horizon: each batch probes only the last ttl=1 "
+        "committed versions, and its commit DELETES the indexes of "
+        "older versions from disk, keeping ttl+1 so a replayed batch "
+        "still finds its probe window (eviction asserted on the real "
+        "directories in "
         "tests/test_streaming.py::test_substring_ttl_loop_evicts). "
         "State is bounded by the TTL horizon's corpus slice — "
         "independent of total feed length, the freshness-windowed "
@@ -1711,31 +1652,34 @@ def make_quality_gate(spark: SparkSession, run_dir: str):
     run_dir ever sees trains + persists the LM (atomic lm.json
     publish last), and every batch after — in this process or a
     restarted one — loads the persisted LM and writes decisions to a
-    versioned per-batch path with overwrite (idempotent replay)."""
+    versioned per-batch path with overwrite (idempotent replay), both
+    committed through a :class:`VersionedState`."""
     from netcdf4_variable_streamer_spark.operators.text import (
         perplexity_decisions,
         perplexity_lm,
     )
 
+    vs = VersionedState(spark, run_dir)
     n_batches = [0]
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         n_batches[0] += 1
-        # batch 0 is the reference corpus BY batch id, not by lm.json
-        # absence: a crash between the atomic lm.json publish and the
-        # checkpoint commit re-delivers batch 0, which must retrain
-        # idempotently (overwrite + atomic replace), never score the
-        # reference corpus as if it were a crawl
-        if batch_id == 0 or not os.path.exists(
+        # reference path iff no version older than this batch is
+        # committed OR the LM is unpublished: a replayed batch 0 (a
+        # crash between the lm.json publish and the checkpoint commit)
+        # retrains idempotently, never scores the reference corpus as a
+        # crawl
+        if not vs.recover(batch_id) or not os.path.exists(
             os.path.join(run_dir, "lm.json")
         ):
             # reference batch: train + persist the LM (train-linear,
             # once per corpus — never re-run for later crawls)
             bgc, _ctx, vsz = perplexity_lm(batch_df)
-            _publish_lm(spark, run_dir, bgc, vsz)
+            vs.commit({}, lambda: _publish_lm(spark, run_dir, bgc, vsz))
             return
-        dec = perplexity_decisions(*_load_lm(spark, run_dir), batch_df)
-        _write_table(dec, os.path.join(run_dir, f"dec_v{batch_id}"))
+        vs.commit(
+            {"dec": perplexity_decisions(*_load_lm(spark, run_dir), batch_df)}
+        )
 
     return gate, n_batches
 
@@ -1963,7 +1907,7 @@ def make_curation_loop(
     mode = "quarantine" if decontam is True else decontam
     spanref = os.path.join(run_dir, "spanref")
 
-    vs = VersionedState(spark, run_dir, ("hashes",), ledgers=("budget",))
+    vs = VersionedState(spark, run_dir, ledgers=("budget",))
     n_batches = [0]
 
     def curate(batch_df: DataFrame, batch_id: int) -> None:

@@ -352,7 +352,11 @@ def test_minhash_band_table_build_round_trips(spark, monkeypatch):
     """Building (not running) one band table crosses to the JVM a few
     hundred times: the 32 minima and the 8 band structs are SQL text,
     one call each, not trees of Column calls (thousands of round
-    trips)."""
+    trips). Only this thread's commands count: py4j's finalizer thread
+    sends the detach commands of garbage-collected JVM objects through
+    the same client at any moment."""
+    import threading
+
     from netcdf4_variable_streamer_spark.operators import dedup
 
     d = dedup._shingled(
@@ -360,10 +364,11 @@ def test_minhash_band_table_build_round_trips(spark, monkeypatch):
     )
     client = type(spark.sparkContext._gateway._gateway_client)
     send = client.send_command
-    calls = [0]
+    me, calls = threading.get_ident(), [0]
 
     def counting(self, *args, **kwargs):
-        calls[0] += 1
+        if threading.get_ident() == me:
+            calls[0] += 1
         return send(self, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
@@ -1292,12 +1297,11 @@ def test_substring_decontam_rewrite_posture(spark):
 
 
 def test_budget_decontam_posture(spark):
-    """q_sample_budget_decontam (round 15): text/token arrays and the
-    exploded tokens appear in NO Exchange — the cut ranges reach the
-    crawl scan via broadcast, token scoring shuffles only (doc_id,
-    lang, bucket, cnt) partial aggregates, and the cut-table subtree
-    plans ONCE (one gaps-and-islands window pass feeds both the token
-    accounting and the score through a single exploded pass)."""
+    """q_sample_budget_decontam (round 15): text and token arrays
+    appear in NO Exchange — the cut ranges reach the crawl scan via
+    broadcast, the kept tokens are scored per row, and the cut-table
+    subtree plans ONCE (one gaps-and-islands window pass feeds both
+    the token accounting and the score)."""
     import re
 
     df = build(spark, "q_sample_budget_decontam")

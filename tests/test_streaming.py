@@ -762,67 +762,10 @@ def test_curation_recovery_ignores_uncommitted_version(spark, tmp_path):
     # simulate the crash: budget_v1 never finished, marker never written
     os.remove(os.path.join(run_dir, "commit_v1"))
     shutil.rmtree(os.path.join(run_dir, "budget_v1"))
+    lm_mtime = os.path.getmtime(os.path.join(run_dir, "lm.json"))
     # fresh closure (restart): the checkpoint replays batch 1
     curate2, _n2 = sq.make_curation_loop(spark, run_dir)
     curate2(batches[1], 1)  # must recover v0, not the torn v1
-    curate2(batches[2], 2)
-    got = (
-        sq.read_crawl_decisions(spark, run_dir)
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    con = oracle_mod.connect(SF_DIR)
-    want = con.execute(sq._CUR_ORACLE).df()
-    assert len(got) == len(want)
-    for col in ("doc_id", "batch", "is_dup", "ppl_keep", "sampled"):
-        assert list(got[col]) == list(want[col]), col
-    shutil.rmtree(feed, ignore_errors=True)
-
-
-def test_curation_backfills_premarker_run_dir(spark, tmp_path):
-    """ADVICE r14 regression: a run_dir persisted by the PRE-marker
-    protocol (complete hashes_v*/budget_v* pairs, no commit_v*) must
-    not look version-less to the marker-keyed recovery — that would
-    send the replayed crawl batch down the reference path and retrain
-    the LM (and spanref) from crawl text. make_curation_loop now
-    backfills a commit marker on first open for every version whose
-    hashes/budget pair is complete (_SUCCESS on both), so the old
-    run_dir restarts exactly like a marker-era one."""
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from netcdf4_variable_streamer_spark.session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-    feed = sq._docs_multi_batch_stream_dir(
-        spark, SF_DIR, (sq._CUR_REF_SPLIT, sq._CUR_BATCH_SPLIT),
-        columns=("doc_id", "text", "lang"),
-    )
-    run_dir = str(tmp_path / "state")
-    os.makedirs(run_dir)
-    batches = [
-        spark.createDataFrame(
-            pq.read_table(os.path.join(feed, b)).to_pandas()
-        )
-        for b in ("0_part.parquet", "1_part.parquet", "2_part.parquet")
-    ]
-    curate, _n = sq.make_curation_loop(spark, run_dir)
-    curate(batches[0], 0)
-    curate(batches[1], 1)
-    # simulate a pre-marker-era run_dir: state tables complete,
-    # no commit markers anywhere
-    for p in list(os.listdir(run_dir)):
-        if p.startswith("commit_v"):
-            os.remove(os.path.join(run_dir, p))
-    lm_mtime = os.path.getmtime(os.path.join(run_dir, "lm.json"))
-    # fresh closure (restart): must backfill v0/v1 markers, recover
-    # v1, and treat the replayed batch as a CRAWL batch
-    curate2, _n2 = sq.make_curation_loop(spark, run_dir)
-    assert os.path.exists(os.path.join(run_dir, "commit_v0"))
-    assert os.path.exists(os.path.join(run_dir, "commit_v1"))
-    curate2(batches[1], 1)
     curate2(batches[2], 2)
     assert os.path.getmtime(
         os.path.join(run_dir, "lm.json")
@@ -1093,9 +1036,7 @@ def test_crawl_loop_recovery_ignores_uncommitted_version(
     markers must make a fresh closure fall back to version 0 and
     recompute the replayed batch — the old bands_v*-keyed scan
     selected the torn v1 and died (or silently read a partial
-    docs table under a v2 committer). Pre-marker run_dirs
-    backfill markers for complete pairs, so old state keeps
-    working."""
+    docs table under a v2 committer)."""
     import os
     import shutil
 
@@ -1143,14 +1084,6 @@ def test_crawl_loop_recovery_ignores_uncommitted_version(
     pd.testing.assert_frame_equal(
         stream.reset_index(drop=True), batch.reset_index(drop=True)
     )
-    # backfill path: a pre-marker run_dir (markers stripped) is
-    # recognized on next open — complete pairs get their markers back
-    for p in list(os.listdir(run_dir)):
-        if p.startswith("commit_v"):
-            os.remove(os.path.join(run_dir, p))
-    crawl3, _n3 = sq.make_crawl_loop(spark, run_dir)
-    assert os.path.exists(os.path.join(run_dir, "commit_v0"))
-    assert os.path.exists(os.path.join(run_dir, "commit_v1"))
     shutil.rmtree(feed, ignore_errors=True)
 
 
@@ -1372,81 +1305,13 @@ def test_substring_crawl_loop_restart(spark, tmp_path):
     shutil.rmtree(feed, ignore_errors=True)
 
 
-def test_curation_backfill_skips_partial_newer_pair(spark, tmp_path):
-    """Fuzz round 9 (VERDICT r15 #5): the pre-marker BACKFILL branch
-    against a TORN run_dir — a COMPLETE older hashes/budget pair (v0)
-    plus a PARTIAL newer pair (v1's budget table missing its
-    _SUCCESS, the shape a crash mid-pair-write leaves). Backfill must
-    mint a marker for v0 ONLY; the torn v1 stays invisible, recovery
-    resumes from v0, the replayed batch 1 rewrites v1 idempotently,
-    the LM is not retrained, and the final decisions equal the
-    oracle."""
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from netcdf4_variable_streamer_spark.session import (
-        apply_runtime_confs,
-    )
-
-    apply_runtime_confs(spark)
-    feed = sq._docs_multi_batch_stream_dir(
-        spark, SF_DIR, (sq._CUR_REF_SPLIT, sq._CUR_BATCH_SPLIT),
-        columns=("doc_id", "text", "lang"),
-    )
-    run_dir = str(tmp_path / "state")
-    os.makedirs(run_dir)
-    batches = [
-        spark.createDataFrame(
-            pq.read_table(os.path.join(feed, b)).to_pandas()
-        )
-        for b in ("0_part.parquet", "1_part.parquet", "2_part.parquet")
-    ]
-    curate, _n = sq.make_curation_loop(spark, run_dir)
-    curate(batches[0], 0)
-    curate(batches[1], 1)
-    # pre-marker era + torn v1: markers gone, v1's budget _SUCCESS gone
-    for p in list(os.listdir(run_dir)):
-        if p.startswith("commit_v"):
-            os.remove(os.path.join(run_dir, p))
-    os.remove(os.path.join(run_dir, "budget_v1", "_SUCCESS"))
-    lm_mtime = os.path.getmtime(os.path.join(run_dir, "lm.json"))
-    curate2, _n2 = sq.make_curation_loop(spark, run_dir)
-    assert os.path.exists(os.path.join(run_dir, "commit_v0"))
-    assert not os.path.exists(os.path.join(run_dir, "commit_v1")), (
-        "backfill minted a marker for a torn pair"
-    )
-    curate2(batches[1], 1)  # checkpoint replay of the torn batch
-    curate2(batches[2], 2)
-    assert os.path.exists(os.path.join(run_dir, "commit_v1"))
-    assert os.path.exists(
-        os.path.join(run_dir, "budget_v1", "_SUCCESS")
-    )
-    assert os.path.getmtime(
-        os.path.join(run_dir, "lm.json")
-    ) == lm_mtime, "LM must not be retrained from crawl text"
-    got = (
-        sq.read_crawl_decisions(spark, run_dir)
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    con = oracle_mod.connect(SF_DIR)
-    want = con.execute(sq._CUR_ORACLE).df()
-    assert len(got) == len(want)
-    for col in ("doc_id", "batch", "is_dup", "ppl_keep", "sampled"):
-        assert list(got[col]) == list(want[col]), col
-    shutil.rmtree(feed, ignore_errors=True)
-
-
-def test_substring_loop_backfill_skips_partial_newer_pair(
+def test_substring_loop_recovery_ignores_uncommitted_version(
     spark, tmp_path
 ):
-    """The same torn-backfill shape for the round-16 substring crawl
-    loop: complete anch/spcl pair at v0, torn v1 (spcl missing
-    _SUCCESS) — backfill mints v0's marker only, recovery resumes
-    from v0, and the replayed crawl batch reproduces the batch twin
-    exactly."""
+    """A torn version of the substring crawl loop: batch 1's marker
+    was never written and its spcl table is missing _SUCCESS. A fresh
+    closure recovers from v0 alone, and the replayed crawl batch
+    reproduces the batch twin exactly."""
     import os
     import shutil
 
@@ -1474,13 +1339,9 @@ def test_substring_loop_backfill_skips_partial_newer_pair(
     crawl, _n = sq.make_substring_crawl_loop(spark, run_dir)
     crawl(b0, 0)
     crawl(b1, 1)
-    for p in list(os.listdir(run_dir)):
-        if p.startswith("commit_v"):
-            os.remove(os.path.join(run_dir, p))
+    os.remove(os.path.join(run_dir, "commit_v1"))
     os.remove(os.path.join(run_dir, "spcl_v1", "_SUCCESS"))
     crawl2, _n2 = sq.make_substring_crawl_loop(spark, run_dir)
-    assert os.path.exists(os.path.join(run_dir, "commit_v0"))
-    assert not os.path.exists(os.path.join(run_dir, "commit_v1"))
     crawl2(b1, 1)  # replay the torn batch
     assert os.path.exists(os.path.join(run_dir, "commit_v1"))
     stream = (
@@ -1540,9 +1401,9 @@ def test_substring_ttl_loop_evicts(spark, tmp_path):
     # the final batch AND one replay-horizon batch survive (ttl=1
     # keeps ttl+1 indexes so a checkpoint replay of the last batch
     # can still probe); everything older is gone
-    assert "anch_b2" in names and "spcl_b2" in names
-    assert "anch_b1" in names and "spcl_b1" in names
-    for gone in ("anch_b0", "spcl_b0"):
+    assert "anch_v2" in names and "spcl_v2" in names
+    assert "anch_v1" in names and "spcl_v1" in names
+    for gone in ("anch_v0", "spcl_v0"):
         assert gone not in names, gone
     ttl_dec = (
         spark.read.parquet(os.path.join(run_dir, "dec_v2"))
@@ -1605,14 +1466,14 @@ def test_substring_ttl_restart(spark, tmp_path):
         return n[0]
 
     assert run_once() == 2  # batches 0 and 1
-    assert os.path.exists(os.path.join(run_dir, "anch_b1"))
-    # b0 stays within the replay horizon after batch 1 (ttl+1 kept)
-    assert os.path.exists(os.path.join(run_dir, "anch_b0"))
+    assert os.path.exists(os.path.join(run_dir, "anch_v1"))
+    # v0 stays within the replay horizon after batch 1 (ttl+1 kept)
+    assert os.path.exists(os.path.join(run_dir, "anch_v0"))
     shutil.move(held, last)
     assert run_once() == 1  # restarted query: exactly batch 2
     names = set(os.listdir(run_dir))
-    assert "anch_b2" in names and "anch_b1" in names
-    assert "anch_b0" not in names
+    assert "anch_v2" in names and "anch_v1" in names
+    assert "anch_v0" not in names
     got = (
         spark.read.parquet(os.path.join(run_dir, "dec_v2"))
         .orderBy("doc_id")
@@ -1687,6 +1548,77 @@ def test_substring_ttl_replay_safe(spark, tmp_path):
     import shutil
 
     shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_substring_ttl_horizon_two(spark, tmp_path):
+    """The retention horizon at ttl=2 over four batches: after batch N
+    exactly the anch/spcl tables of versions [N-2, N] are on disk, every
+    probing batch's decisions and marker stay, and the last batch, which
+    probes batches 1-2 only, equals the range-parameterized oracle."""
+    import os
+    import re
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from netcdf4_variable_streamer_spark.operators.dedup import (
+        _sxc_anchored_ranges_oracle,
+    )
+    from netcdf4_variable_streamer_spark.session import (
+        apply_runtime_confs,
+    )
+
+    apply_runtime_confs(spark)
+    feed = sq._docs_multi_batch_stream_dir(
+        spark, SF_DIR, (150, 300, 400), columns=("doc_id", "text")
+    )
+    run_dir = str(tmp_path / "state")
+    os.makedirs(run_dir)
+    crawl, _n = sq.make_substring_ttl_loop(spark, run_dir, ttl=2)
+    for n in range(4):
+        pdf = pq.read_table(os.path.join(feed, f"{n}_part.parquet"))
+        crawl(spark.createDataFrame(pdf.to_pandas()), n)
+        on_disk = {
+            (m[1], int(m[2]))
+            for p in os.listdir(run_dir)
+            if (m := re.fullmatch(r"(anch|spcl|dec|commit)_v(\d+)", p))
+        }
+        kept = range(max(0, n - 2), n + 1)
+        assert on_disk == {
+            *((t, v) for t in ("anch", "spcl") for v in kept),
+            *(("dec", v) for v in range(1, n + 1)),
+            *(("commit", v) for v in range(n + 1)),
+        }, (n, sorted(on_disk))
+    got = (
+        spark.read.parquet(os.path.join(run_dir, "dec_v3"))
+        .orderBy("doc_id")
+        .toPandas()
+    )
+    want = (
+        oracle_mod.connect(SF_DIR)
+        .execute(_sxc_anchored_ranges_oracle((150, 400), (400, 1 << 40)))
+        .df()
+    )
+    assert len(got) == len(want) > 0
+    for col in ("doc_id", "n_tokens_cut", "rewritten_md5"):
+        assert list(got[col]) == list(want[col]), col
+    shutil.rmtree(feed, ignore_errors=True)
+
+
+def test_read_crawl_decisions_skips_uncommitted_version(spark, tmp_path):
+    """Decisions are read only for committed versions: a dec_v2 whose
+    commit_v2 marker was never written (a torn batch) is not output."""
+    import os
+
+    run_dir = str(tmp_path)
+    for v in (1, 2):
+        spark.createDataFrame(
+            [(10 * v + i, v) for i in range(3)], "doc_id LONG, batch LONG"
+        ).write.parquet(os.path.join(run_dir, f"dec_v{v}"))
+    for v in (0, 1):
+        open(os.path.join(run_dir, f"commit_v{v}"), "w").close()
+    got = sq.read_crawl_decisions(spark, run_dir).orderBy("doc_id").collect()
+    assert [(r.doc_id, r.batch) for r in got] == [(10, 1), (11, 1), (12, 1)]
 
 
 def test_overlap_jobs_keeps_cause_and_reports_siblings():
@@ -1981,7 +1913,6 @@ def test_crawl_loop_state_writes_flat(spark, crawl20):
 
     run_dir, files, written = crawl20.run_dir, crawl20.files, crawl20.written
     compacting = sq._COMPACT_AFTER + 1
-    assert os.path.exists(os.path.join(run_dir, sq._DELTA_LAYOUT))
     for v in range(len(files)):
         with open(os.path.join(run_dir, f"commit_v{v}")) as f:
             assert (f.read() == "base") == (v in (0, compacting)), v
@@ -2057,51 +1988,6 @@ def test_crawl_loop_replays_every_batch(
             _dec(spark, run_dir, k), _dec(spark, crawl20.run_dir, k),
             obj=f"batch {k}",
         )
-
-
-def test_crawl_loop_resumes_full_snapshot_layout(spark, crawl20, tmp_path):
-    """A run_dir in the full-snapshot layout (every committed version the
-    whole index, no layout file), built here by hand, resumes with the
-    same decisions and keeps writing full snapshots."""
-    import os
-
-    import pandas as pd
-
-    from netcdf4_variable_streamer_spark.operators.dedup import (
-        _minhash_band_table,
-        _shingled,
-    )
-
-    run_dir, files = str(tmp_path / "state"), crawl20.files
-    os.makedirs(run_dir)
-    for v in range(2):
-        sh = _shingled(spark.read.parquet(*files[: v + 1]), "doc_id", "text")
-        sh.write.parquet(os.path.join(run_dir, f"sh_v{v}"))
-        _minhash_band_table(sh).write.parquet(
-            os.path.join(run_dir, f"bands_v{v}")
-        )
-        open(os.path.join(run_dir, f"commit_v{v}"), "w").close()
-    crawl, _n = sq.make_crawl_loop(spark, run_dir)
-    for k in (2, 3):
-        crawl(spark.read.parquet(files[k]), k)
-        pd.testing.assert_frame_equal(
-            _dec(spark, run_dir, k), _dec(spark, crawl20.run_dir, k),
-            obj=f"batch {k}",
-        )
-    assert not os.path.exists(os.path.join(run_dir, sq._DELTA_LAYOUT))
-    # batch 3 wrote the whole index: the band deltas of batches 0-3 and
-    # the shingled docs of their files (a fresh run_dir keeps docs, not
-    # sh, so the uninterrupted run has no sh deltas to compare with)
-    wholes = {
-        "bands": spark.read.parquet(
-            *(os.path.join(crawl20.run_dir, f"bands_v{v}") for v in range(4))
-        ),
-        "sh": _shingled(spark.read.parquet(*files[:4]), "doc_id", "text"),
-    }
-    for t, whole in wholes.items():
-        assert spark.read.parquet(
-            os.path.join(run_dir, f"{t}_v3")
-        ).count() == whole.count() > 0
 
 
 def test_crawl_loop_fresh_run_dir_keeps_doc_text(spark, crawl20):
