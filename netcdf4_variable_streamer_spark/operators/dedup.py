@@ -714,6 +714,42 @@ def q_dedup_cc_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEM_NLIST = 16
 
 
+def _semantic_dups(va: DataFrame) -> DataFrame:
+    """SemDeDup's pair stage over ``va`` (vec_id, embedding, nrm,
+    cluster_id): a within-cluster self-join (equi-join on cluster_id),
+    exact cosine >= TAU_EMB, and the lowest-id canonical per vector."""
+    from netcdf4_variable_streamer_spark.operators.similarity import _dot
+
+    a = va.select(
+        F.col("vec_id").alias("v1"),
+        F.col("embedding").alias("emb1"),
+        F.col("nrm").alias("n1"),
+        "cluster_id",
+    )
+    b = va.select(
+        F.col("vec_id").alias("v2"),
+        F.col("embedding").alias("emb2"),
+        F.col("nrm").alias("n2"),
+        "cluster_id",
+    )
+    cos = _dot("emb1", "emb2") / (F.col("n1") * F.col("n2"))
+    p = (
+        a.join(b, "cluster_id")
+        .filter(F.col("v1") < F.col("v2"))
+        .filter(cos >= TAU_EMB)
+        .select("v1", "v2")
+    )
+    return (
+        va.select("vec_id", "cluster_id")
+        .join(p, va.vec_id == p.v2, "left")
+        .groupBy("vec_id", "cluster_id")
+        .agg(
+            F.coalesce(F.min("v1"), F.first("vec_id")).alias("canonical_id"),
+            (F.count("v1") > 0).cast("long").alias("is_dup"),
+        )
+    )
+
+
 @register(
     "q_dedup_semantic",
     oracle=f"""
@@ -788,35 +824,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vec_id", F.col("c_id").alias("cluster_id"))
     )
-    va = v.join(assign, "vec_id")
-    a = va.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("emb1"),
-        F.col("nrm").alias("n1"),
-        "cluster_id",
-    )
-    b = va.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("emb2"),
-        F.col("nrm").alias("n2"),
-        "cluster_id",
-    )
-    cos = _dot("emb1", "emb2") / (F.col("n1") * F.col("n2"))
-    p = (
-        a.join(b, "cluster_id")
-        .filter(F.col("v1") < F.col("v2"))
-        .filter(cos >= TAU_EMB)
-        .select("v1", "v2")
-    )
-    return (
-        va.select("vec_id", "cluster_id")
-        .join(p, va.vec_id == p.v2, "left")
-        .groupBy("vec_id", "cluster_id")
-        .agg(
-            F.coalesce(F.min("v1"), F.first("vec_id")).alias("canonical_id"),
-            (F.count("v1") > 0).cast("long").alias("is_dup"),
-        )
-    )
+    return _semantic_dups(v.join(assign, "vec_id"))
 
 
 def _sem_trained_oracle() -> str:
@@ -884,7 +892,6 @@ def q_dedup_semantic_trained(
     from netcdf4_variable_streamer_spark.operators.similarity import (
         _FULLVEC,
         _coarse_chain,
-        _dot,
         _lloyd_assign,
         _with_norm,
     )
@@ -902,39 +909,7 @@ def q_dedup_semantic_trained(
             "vec_id", "embedding"
         )
     )
-    va = v.join(asg, "vec_id")
-    a = va.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("emb1"),
-        F.col("nrm").alias("n1"),
-        "cluster_id",
-    )
-    b = va.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("emb2"),
-        F.col("nrm").alias("n2"),
-        "cluster_id",
-    )
-    cos = _dot("emb1", "emb2") / (
-        F.col("n1") * F.col("n2")
-    )
-    p = (
-        a.join(b, "cluster_id")
-        .filter(F.col("v1") < F.col("v2"))
-        .filter(cos >= TAU_EMB)
-        .select("v1", "v2")
-    )
-    return (
-        va.select("vec_id", "cluster_id")
-        .join(p, va.vec_id == p.v2, "left")
-        .groupBy("vec_id", "cluster_id")
-        .agg(
-            F.coalesce(F.min("v1"), F.first("vec_id")).alias(
-                "canonical_id"
-            ),
-            (F.count("v1") > 0).cast("long").alias("is_dup"),
-        )
-    )
+    return _semantic_dups(v.join(asg, "vec_id"))
 
 
 @register(

@@ -2692,6 +2692,43 @@ def q_sim_threshold_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_threshold_pairs(spark, sf_dir)
 
 
+def _ann_recall(
+    spark: SparkSession, sf_dir: str, e: DataFrame, cand: DataFrame
+) -> DataFrame:
+    """The quality row of an approximate kNN key: exact cosine rerank of
+    its ``(q_id, vec_id)`` candidates to the top-k, joined to the exact
+    top-k of q_sim_knn_cosine; ``recall_ok`` iff mean recall@k >= 0.7.
+    ``e`` is the (vec_id, embedding) table the candidates index."""
+    eb = _with_norm(e)
+    q = eb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+    pairs = (
+        cand.join(eb, "vec_id")
+        .join(F.broadcast(q), "q_id")
+        .withColumn(
+            "cos_sim",
+            F.round(
+                _dot("q_emb", "embedding")
+                / (F.col("q_nrm") * F.col("nrm")),
+                4,
+            ),
+        )
+        .select("q_id", "vec_id", "cos_sim")
+    )
+    ann_topk = _topk(pairs).select("q_id", "vec_id")
+    exact_topk = q_sim_knn_cosine(spark, sf_dir).select("q_id", "vec_id")
+    hits = ann_topk.join(exact_topk, ["q_id", "vec_id"])
+    return hits.agg(
+        F.lit(N_QUERIES).cast("long").alias("n_queries"),
+        (
+            F.count(F.lit(1)) >= F.lit(0.7 * N_QUERIES * TOP_K)
+        ).alias("recall_ok"),
+    )
+
+
 @register(
     "q_sim_lsh_ann",
     oracle=f"""
@@ -2743,7 +2780,6 @@ def q_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     buckets = e.mapInArrow(bucketize, "vec_id long, tbl long, bucket long")
-    eb = _with_norm(e)
     # multi-probe: each query probes its own bucket plus the n_bits
     # buckets at hamming distance 1 — 7 probe rows per (query, table)
     q_buckets = (
@@ -2771,33 +2807,7 @@ def q_sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
         .distinct()
     )
-    q = eb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    pairs = (
-        cand.join(eb, "vec_id")
-        .join(F.broadcast(q), "q_id")
-        .withColumn(
-            "cos_sim",
-            F.round(
-                _dot("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")),
-                4,
-            ),
-        )
-        .select("q_id", "vec_id", "cos_sim")
-    )
-    lsh_topk = _topk(pairs).select("q_id", "vec_id")
-    exact_topk = q_sim_knn_cosine(spark, sf_dir).select("q_id", "vec_id")
-    hits = lsh_topk.join(exact_topk, ["q_id", "vec_id"])
-    return hits.agg(
-        F.lit(N_QUERIES).cast("long").alias("n_queries"),
-        (
-            F.count(F.lit(1)) >= F.lit(0.7 * N_QUERIES * TOP_K)
-        ).alias("recall_ok"),
-    )
+    return _ann_recall(spark, sf_dir, e, cand)
 
 
 @register(
@@ -2887,34 +2897,7 @@ def q_sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id")
     )
-    eb = _with_norm(e)
-    q = eb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    pairs = (
-        cand.join(eb, "vec_id")
-        .join(F.broadcast(q), "q_id")
-        .withColumn(
-            "cos_sim",
-            F.round(
-                _dot("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")),
-                4,
-            ),
-        )
-        .select("q_id", "vec_id", "cos_sim")
-    )
-    ivf_topk = _topk(pairs).select("q_id", "vec_id")
-    exact_topk = q_sim_knn_cosine(spark, sf_dir).select("q_id", "vec_id")
-    hits = ivf_topk.join(exact_topk, ["q_id", "vec_id"])
-    return hits.agg(
-        F.lit(N_QUERIES).cast("long").alias("n_queries"),
-        (
-            F.count(F.lit(1)) >= F.lit(0.7 * N_QUERIES * TOP_K)
-        ).alias("recall_ok"),
-    )
+    return _ann_recall(spark, sf_dir, e, cand)
 
 
 # The k-means oracle works in offset fixed point: FLOOR(x * 1e6) +

@@ -9,6 +9,7 @@ not only as a slower BENCH number.
 """
 
 from netcdf4_variable_streamer_spark.plans.inspect import (  # noqa: F401
+    SHAPE_NODES,
     analyzed_plan_string,
     assert_broadcast_joins,
     assert_max_shuffles,
@@ -19,4 +20,5 @@ from netcdf4_variable_streamer_spark.plans.inspect import (  # noqa: F401
     count_nodes,
     executed_plan_string,
     plan_string,
+    shape_table,
 )

@@ -15,8 +15,11 @@ been stable across Spark 3.x/4.x (``Exchange``, ``BroadcastHashJoin``,
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from netcdf4_variable_streamer_spark.registry import REGISTRY
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -56,6 +59,37 @@ def count_nodes(plan: str, node: str) -> int:
     if headers:
         return sum(1 for h in headers if h == node)
     return len(re.findall(rf"\b{re.escape(node)}\b", plan))
+
+
+# The plan nodes the committed shape table counts per key: every shuffle,
+# every join strategy Spark can choose for an equi or non-equi join, and
+# every window pass.
+SHAPE_NODES = (
+    "Exchange",
+    "BroadcastHashJoin",
+    "BroadcastNestedLoopJoin",
+    "SortMergeJoin",
+    "Window",
+)
+
+
+def shape_table(
+    spark: SparkSession, sf_dir: str, keys: Iterable[str] | None = None
+) -> dict[str, list[int]]:
+    """{key: [count of each SHAPE_NODES]} in the pre-execution formatted
+    plan of each registry key built at ``sf_dir``. ``keys`` defaults to
+    every batch key: all registered keys but the streaming (``q_stream_``),
+    source (``src_``) and sink (``snk_``) ones, whose plans only exist
+    inside a started query or a write."""
+    if keys is None:
+        keys = sorted(
+            k for k in REGISTRY if not k.startswith(("q_stream_", "src_", "snk_"))
+        )
+    table = {}
+    for key in keys:
+        plan = plan_string(REGISTRY[key].builder(spark, sf_dir))
+        table[key] = [count_nodes(plan, node) for node in SHAPE_NODES]
+    return table
 
 
 def assert_pushed_filters(df: DataFrame, *needles: str) -> None:

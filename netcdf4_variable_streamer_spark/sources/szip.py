@@ -258,17 +258,6 @@ def _se_pairs(vals) -> np.ndarray:
     return t * (t + 1) // 2 + v[1::2]
 
 
-def _se_unpair(gamma: int) -> tuple[int, int]:
-    # largest t with t(t+1)/2 <= gamma
-    t = int((2 * gamma) ** 0.5)
-    while t * (t + 1) // 2 > gamma:
-        t -= 1
-    while (t + 1) * (t + 2) // 2 <= gamma:
-        t += 1
-    d1 = gamma - t * (t + 1) // 2
-    return t - d1, d1
-
-
 def _encode_block(
     w: _BitWriter,
     vals: np.ndarray,

@@ -670,34 +670,51 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _present_user_state(_batch_user_state(ev))
 
 
+def make_upsert_loop(spark: SparkSession, run_dir: str):
+    """The foreachBatch upsert closure + its batch counter. The per-user
+    state is the ``state`` ledger of a :class:`VersionedState`: each
+    batch recovers the state committed strictly before it, merges its
+    own per-user reduction into it and commits the merged table whole.
+    RESTART-SAFE like the crawl loop: a fresh closure on the same
+    ``run_dir`` merges into what the failed run committed."""
+    vs = VersionedState(spark, run_dir, ledgers=("state",))
+    n_batches = [0]
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        n_batches[0] += 1
+        cur = _batch_user_state(batch_df)
+        if vs.recover(batch_id):
+            cur = _merge_user_state(vs.read("state", cur), cur)
+        vs.commit({"state": cur})
+
+    return upsert, n_batches
+
+
+def read_upsert_state(spark: SparkSession, run_dir: str) -> DataFrame:
+    """The newest committed state of an upsert loop, presented."""
+    last = _versions(run_dir, "commit_v")[-1]
+    return _present_user_state(
+        spark.read.parquet(os.path.join(run_dir, f"state_v{last}"))
+    )
+
+
 def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming form: foreachBatch merges each micro-batch into a
-    versioned parquet state snapshot; returns the final state."""
+    """Streaming form: the upsert loop over the events stream; returns
+    the final state."""
     run_dir = tempfile.mkdtemp(
         prefix="upsert_", dir=os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp")
     )
-    ckpt = os.path.join(run_dir, "ckpt")
-    versions: list[str] = []
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _batch_user_state(batch_df)
-        if versions:
-            prev = spark.read.parquet(versions[-1])
-            cur = _merge_user_state(prev, cur)
-        dst = os.path.join(run_dir, f"state_v{batch_id}")
-        _write_table(cur, dst)
-        versions.append(dst)
-
+    upsert, n_batches = make_upsert_loop(spark, run_dir)
     q = (
         load_events_stream(spark, sf_dir)
         .writeStream.foreachBatch(upsert)
         .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .start()
     )
     q.awaitTermination()
-    assert versions, "foreachBatch never ran"
-    out = _present_user_state(spark.read.parquet(versions[-1]))
+    assert n_batches[0], "foreachBatch never ran"
+    out = read_upsert_state(spark, run_dir)
     # materialize before the scratch dir is removed
     rows = out.collect()
     shutil.rmtree(run_dir, ignore_errors=True)

@@ -90,15 +90,3 @@ def batch_cache() -> Iterator[Callable[[DataFrame], DataFrame]]:
     finally:
         for df in reversed(cached):
             df.unpersist()
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so `spark.sql` queries run too."""
-    for n, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(n)

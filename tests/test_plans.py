@@ -6,6 +6,9 @@ These fail on posture regressions that sf0.01 timing would never notice.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from netcdf4_variable_streamer_spark import plans
@@ -289,63 +292,23 @@ def test_semantic_dedup_trained_keeps_posture(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-# (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin)
-# in the pre-execution formatted plan of every key that trains centroids
-# with the shared Lloyd k-means, recorded before the per-family Lloyd
-# copies were merged. A train-once checkpoint lost or added, or a
-# broadcast demoted, moves these counts.
-_TRAINED_PLAN_SHAPES = {
-    "q_sim_pq_train_codebook": (3, 1, 0, 1),
-    "q_sim_pq_trained_recall": (6, 1, 2, 1),
-    "q_sim_ivf_train_coarse": (3, 0, 1, 1),
-    "q_sim_ivfpq_trained_recall": (10, 5, 1, 2),
-    "q_sim_ivfpq_production_recall": (12, 2, 1, 3),
-    "q_dedup_semantic_trained": (4, 3, 0, 2),
-}
-
-
-def _plan_shapes(spark, keys, nodes):
-    """{key: count of each of ``nodes``} in the pre-execution formatted
-    plan of every key in ``keys``."""
-    return {
-        key: tuple(
-            plans.count_nodes(plans.plan_string(build(spark, key)), n)
-            for n in nodes
-        )
-        for key in keys
+def test_plan_shapes_match_committed(spark):
+    """Every batch key's plan shape equals its line in plans/shape.json
+    (regenerate with tools/plan_shapes.py). A train-once checkpoint lost
+    or added, a broadcast demoted or a window pass added moves a count;
+    a new or removed key shows as a missing line."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "plans", "shape.json")) as f:
+        committed = json.load(f)
+    assert committed["sf"] == os.path.basename(SF)
+    assert committed["nodes"] == list(plans.SHAPE_NODES)
+    got = plans.shape_table(spark, SF)
+    diff = {
+        k: {"committed": committed["keys"].get(k), "now": got.get(k)}
+        for k in sorted(got.keys() | committed["keys"].keys())
+        if got.get(k) != committed["keys"].get(k)
     }
-
-
-def test_trained_quantizer_plan_shapes_pinned(spark):
-    nodes = (
-        "Exchange",
-        "BroadcastHashJoin",
-        "BroadcastNestedLoopJoin",
-        "SortMergeJoin",
-    )
-    got = _plan_shapes(spark, _TRAINED_PLAN_SHAPES, nodes)
-    assert got == _TRAINED_PLAN_SHAPES
-
-
-# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
-# pre-execution formatted plan of every batch key built on the shared
-# MinHash-LSH stages, recorded after the verify became one shingle-
-# array intersection per candidate pair (the exploded shingle join and
-# the two size joins are gone; calibration's candidate set has one
-# consumer left, so it is no longer checkpointed and its bucket-cap
-# window shows). A lost train-once checkpoint or a demoted broadcast
-# moves these counts.
-_MINHASH_PLAN_SHAPES = {
-    "q_dedup_near_minhash": (5, 3, 0, 2),
-    "q_dedup_minhash_calibration": (5, 5, 0, 2),
-    "q_dedup_minhash_incremental": (5, 3, 1, 2),
-}
-
-
-def test_minhash_plan_shapes_pinned(spark):
-    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
-    got = _plan_shapes(spark, _MINHASH_PLAN_SHAPES, nodes)
-    assert got == _MINHASH_PLAN_SHAPES
+    assert not diff, diff
 
 
 def test_minhash_band_table_build_round_trips(spark, monkeypatch):
@@ -375,28 +338,6 @@ def test_minhash_band_table_build_round_trips(spark, monkeypatch):
     dedup._minhash_band_table(d)
     monkeypatch.setattr(client, "send_command", send)
     assert 0 < calls[0] <= 400, calls[0]
-
-
-# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
-# pre-execution formatted plan of the keys whose compute-once
-# checkpoints (fingerprints, edge sets, exact-distance pass) were
-# written inline before they moved to tables.materialize_once. A
-# dropped checkpoint re-inlines its subtree and grows these counts.
-_MATERIALIZED_PLAN_SHAPES = {
-    "q_dedup_simhash": (1, 1, 0, 0),
-    "q_graph_pagerank": (6, 6, 3, 0),
-    "q_graph_label_prop": (8, 3, 3, 0),
-    "q_graph_jaccard_neighbors": (10, 0, 4, 4),
-    "q_graph_triangles": (8, 0, 2, 0),
-    "q_sim_ivfpq_recall": (16, 13, 1, 6),
-    "q_sim_ivf_nprobe_sweep": (12, 4, 2, 4),
-}
-
-
-def test_materialized_plan_shapes_pinned(spark):
-    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
-    got = _plan_shapes(spark, _MATERIALIZED_PLAN_SHAPES, nodes)
-    assert got == _MATERIALIZED_PLAN_SHAPES
 
 
 def test_pipeline_pretrain_no_single_partition_exchange(spark):
@@ -912,40 +853,23 @@ def test_pipeline_curation_posture(spark):
     assert plans.count_nodes(plan, "BroadcastHashJoin") >= 2, plan
 
 
-# (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin,
-# Window) of the keys built on the hashed classifier and the curation
-# funnel: as registered, then (composites) with materialize_once replaced
-# by identity so the whole composed plan is counted. The classifier is a
+# plans.SHAPE_NODES counts of the curation composites with
+# materialize_once replaced by identity, so the whole composed plan is
+# counted (plans/shape.json pins them as registered). The classifier is a
 # per-row projection (no explode, no aggregation), so each use of it
 # plans no Exchange of its own.
-_CURATION_PLAN_SHAPES = {
-    "q_text_classifier_score": (2, 1, 0, 0, 0),
-    "q_sample_token_budget": (2, 0, 0, 0, 1),
-    "q_pipeline_curation": (26, 20, 0, 1, 0),
-    "q_pipeline_curation_full": (26, 21, 0, 1, 0),
-    "q_pipeline_curation_surgical": (26, 21, 0, 1, 0),
-}
 _CURATION_UNMATERIALIZED_SHAPES = {
-    "q_pipeline_curation": (47, 20, 0, 1, 21),
-    "q_pipeline_curation_full": (132, 63, 0, 1, 64),
-    "q_pipeline_curation_surgical": (237, 105, 0, 1, 169),
+    "q_pipeline_curation": [47, 20, 0, 1, 21],
+    "q_pipeline_curation_full": [132, 63, 0, 1, 64],
+    "q_pipeline_curation_surgical": [237, 105, 0, 1, 169],
 }
 
 
 def test_curation_plan_shapes_pinned(spark, monkeypatch):
     from netcdf4_variable_streamer_spark.operators import corpus
 
-    nodes = (
-        "Exchange",
-        "BroadcastHashJoin",
-        "BroadcastNestedLoopJoin",
-        "SortMergeJoin",
-        "Window",
-    )
-    got = _plan_shapes(spark, _CURATION_PLAN_SHAPES, nodes)
-    assert got == _CURATION_PLAN_SHAPES
     monkeypatch.setattr(corpus, "materialize_once", lambda df: df)
-    got = _plan_shapes(spark, _CURATION_UNMATERIALIZED_SHAPES, nodes)
+    got = plans.shape_table(spark, SF, _CURATION_UNMATERIALIZED_SHAPES)
     assert got == _CURATION_UNMATERIALIZED_SHAPES
 
 

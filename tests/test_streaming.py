@@ -232,6 +232,24 @@ def test_upsert_merge_two_batches(spark):
     oracle_mod.compare_frames(merged, single, "upsert-merge-2batch")
 
 
+def test_upsert_loop_restart_resumes_state(spark, check, tmp_path):
+    """Batch 0 runs through one upsert closure, batch 1 through a fresh
+    closure on the same run_dir (a restarted driver): the fresh closure
+    merges into the committed state, so the final state equals the
+    batch twin over both batches."""
+    from pyspark.sql import functions as F
+
+    from netcdf4_variable_streamer_spark.tables import load_table
+
+    ev = load_table(spark, SF_DIR, "events")
+    run_dir = str(tmp_path)
+    for k in (0, 1):
+        upsert, _n = sq.make_upsert_loop(spark, run_dir)
+        upsert(ev.filter(F.col("event_id") % 2 == k), k)
+    got = sq.read_upsert_state(spark, run_dir).toPandas()
+    oracle_mod.compare_frames(got, check("q_stream_upsert"), "upsert-restart")
+
+
 def test_streaming_dim_join_equals_batch(spark):
     """Stream-static broadcast join: streaming result == batch twin."""
     from netcdf4_variable_streamer_spark.tables import load_table

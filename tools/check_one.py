@@ -1,9 +1,12 @@
 """Strict-mirror check of registry keys against their DuckDB oracles in one
-Spark session: python tools/check_one.py KEY [KEY ...] [SF]
+Spark session: python tools/check_one.py [KEY ...] [SF]
 
-SF, the last argument when it is not a registry key, defaults to the test
-suite's fixture directory (``tests/conftest.py`` SF_DIR). Prints MATCH per
-key; exits 1 if any key fails."""
+With no key, every registry key is checked, in ``ordered_registry()``
+order. SF, the last argument when it is a directory, defaults to the
+test suite's fixture directory (``tests/conftest.py`` SF_DIR). A key
+without an oracle gets the driver's rows-only check: its first 50 rows
+must canonicalize (no array cells). Prints MATCH (or ROWS-OK) per key;
+exits 1 if any key fails."""
 
 import os
 import sys
@@ -15,12 +18,13 @@ import netcdf4_variable_streamer_spark.operators  # noqa: F401
 import netcdf4_variable_streamer_spark.sources  # noqa: F401
 import netcdf4_variable_streamer_spark.streaming  # noqa: F401
 from netcdf4_variable_streamer_spark import oracle as om
-from netcdf4_variable_streamer_spark.registry import REGISTRY
+from netcdf4_variable_streamer_spark.registry import REGISTRY, ordered_registry
 from netcdf4_variable_streamer_spark.session import get_spark
 from tests.conftest import SF_DIR
 
 keys = sys.argv[1:]
-sf = keys.pop() if len(keys) > 1 and keys[-1] not in REGISTRY else SF_DIR
+sf = keys.pop() if keys and os.path.isdir(keys[-1]) else SF_DIR
+keys = keys or list(ordered_registry())
 spark = get_spark("check-one")
 con = None
 failed = []
@@ -30,7 +34,8 @@ for key in keys:
         spdf = spec.builder(spark, sf).toPandas()
         print(f"spark rows={len(spdf)} dtypes:\n{spdf.dtypes}")
         if not spec.oracle:
-            print(f"rows-only key {key}")
+            om.canon_rows(spdf.head(50))
+            print(f"ROWS-OK {key}")
             continue
         con = con or om.connect(sf)
         opdf = con.execute(spec.oracle).fetchdf()
