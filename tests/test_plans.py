@@ -311,6 +311,82 @@ def test_plan_shapes_match_committed(spark):
     assert not diff, diff
 
 
+def _plan_shapes(spark, keys, nodes):
+    """{key: count of each of ``nodes``} (a subset of plans.SHAPE_NODES)
+    in the pre-execution formatted plan of every key in ``keys``."""
+    at = [plans.SHAPE_NODES.index(n) for n in nodes]
+    return {
+        key: tuple(row[i] for i in at)
+        for key, row in plans.shape_table(spark, SF, keys).items()
+    }
+
+
+# (Exchange, BroadcastHashJoin, BroadcastNestedLoopJoin, SortMergeJoin)
+# in the pre-execution formatted plan of every key that trains centroids
+# with the shared Lloyd k-means, recorded before the per-family Lloyd
+# copies were merged. A train-once checkpoint lost or added, or a
+# broadcast demoted, moves these counts.
+_TRAINED_PLAN_SHAPES = {
+    "q_sim_pq_train_codebook": (3, 1, 0, 1),
+    "q_sim_pq_trained_recall": (6, 1, 2, 1),
+    "q_sim_ivf_train_coarse": (3, 0, 1, 1),
+    "q_sim_ivfpq_trained_recall": (10, 5, 1, 2),
+    "q_sim_ivfpq_production_recall": (12, 2, 1, 3),
+    "q_dedup_semantic_trained": (4, 3, 0, 2),
+}
+
+
+def test_trained_quantizer_plan_shapes_pinned(spark):
+    nodes = (
+        "Exchange",
+        "BroadcastHashJoin",
+        "BroadcastNestedLoopJoin",
+        "SortMergeJoin",
+    )
+    got = _plan_shapes(spark, _TRAINED_PLAN_SHAPES, nodes)
+    assert got == _TRAINED_PLAN_SHAPES
+
+
+# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
+# pre-execution formatted plan of every batch key built on the shared
+# MinHash-LSH stages, recorded after the verify became one shingle-
+# array intersection per candidate pair. A lost train-once checkpoint
+# or a demoted broadcast moves these counts.
+_MINHASH_PLAN_SHAPES = {
+    "q_dedup_near_minhash": (5, 3, 0, 2),
+    "q_dedup_minhash_calibration": (5, 5, 0, 2),
+    "q_dedup_minhash_incremental": (5, 3, 1, 2),
+}
+
+
+def test_minhash_plan_shapes_pinned(spark):
+    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
+    got = _plan_shapes(spark, _MINHASH_PLAN_SHAPES, nodes)
+    assert got == _MINHASH_PLAN_SHAPES
+
+
+# (Exchange, BroadcastHashJoin, SortMergeJoin, Window) in the
+# pre-execution formatted plan of the keys whose compute-once
+# checkpoints (fingerprints, edge sets, exact-distance pass) were
+# written inline before they moved to tables.materialize_once. A
+# dropped checkpoint re-inlines its subtree and grows these counts.
+_MATERIALIZED_PLAN_SHAPES = {
+    "q_dedup_simhash": (1, 1, 0, 0),
+    "q_graph_pagerank": (6, 6, 3, 0),
+    "q_graph_label_prop": (8, 3, 3, 0),
+    "q_graph_jaccard_neighbors": (10, 0, 4, 4),
+    "q_graph_triangles": (8, 0, 2, 0),
+    "q_sim_ivfpq_recall": (16, 13, 1, 6),
+    "q_sim_ivf_nprobe_sweep": (12, 4, 2, 4),
+}
+
+
+def test_materialized_plan_shapes_pinned(spark):
+    nodes = ("Exchange", "BroadcastHashJoin", "SortMergeJoin", "Window")
+    got = _plan_shapes(spark, _MATERIALIZED_PLAN_SHAPES, nodes)
+    assert got == _MATERIALIZED_PLAN_SHAPES
+
+
 def test_minhash_band_table_build_round_trips(spark, monkeypatch):
     """Building (not running) one band table crosses to the JVM a few
     hundred times: the 32 minima and the 8 band structs are SQL text,
